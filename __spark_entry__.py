@@ -73,7 +73,7 @@ def _clips_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top_rules(result.violations, k=None)
 
 
-# Queries the driver has already hash-verified green in CORRECTNESS_r01-r04.
+# Queries the driver has already hash-verified green in CORRECTNESS_r01-r05.
 # If the driver samples a subset of the registry, dict order decides what it
 # sees — so never-yet-driver-checked entries go FIRST (registry order), the
 # already-green ones after, and the rows-only-by-design entries (no DuckDB
@@ -81,8 +81,13 @@ def _clips_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # KMeans quantizer) LAST, since rows-only is already their max achievable
 # check and r01 recorded it. COVERAGE.md is the per-query ledger. After
 # CORRECTNESS_r04 (50/50 green, incl. the 5 r03 HUGEINT hash-reds) every
-# oracle-backed entry is driver-green: 144/144.
+# oracle-backed entry registered through round 4 was driver-green; with the
+# five round-5 additions green in CORRECTNESS_r05 that is 149/149.
 _DRIVER_GREEN: frozenset[str] = frozenset({
+    # r05 green (CORRECTNESS_r05.json):
+    "ivf_incremental_embeddings", "streaming_dedup_events",
+    "streaming_row_rules_events", "streaming_sessions_events",
+    "streaming_window_counts_events",
     # r04 green (CORRECTNESS_r04.json):
     "agg_sla_orders", "augmentation_plan_documents", "autocorr_documents",
     "benford_orders", "bpe_merges_documents", "bpe_segment_documents",

@@ -12,7 +12,8 @@ once into .bench_cache/ parquet so the measured section is exactly
 timings cover the oracle-checked TPC-H-ish queries at the same sf dir.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32),
+     SPARK_GRAFT_CPUS (default: the cores this process may run on),
+     SPARK_GRAFT_DRIVER_MEM (default: sized from physical RAM, session.py),
      BENCH_CLIP_ROWS (override clip-row count),
      BENCH_SKIP_QUERIES=1 (headline only).
 """
@@ -358,11 +359,11 @@ def _unpersist_except(spark, keep: frozenset[int]) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from data_check_spark.session import get_spark, host_cores
+
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cores())
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else 0.1
-
-    from data_check_spark.session import get_spark
 
     spark = get_spark("bench", master=f"local[{cpus}]", shuffle_partitions=max(cpus, 8))
 

@@ -131,12 +131,13 @@ def suggest_rules(
 
     numeric = [c for c in cols if dtypes[c].startswith(_NUMERIC_PREFIXES)]
     # The profile already carries min/max, rendered to strings. For int and
-    # decimal types the rendering is EXACT (cast-to-string), so parsing it
-    # back reproduces precisely what collecting the native value gives and
-    # those columns can skip the verify aggregate below. float/double render
-    # %.2f (lossy — a max of 0.994 would come back 0.99, a TIGHTER bound
-    # that fails rows the profile saw), so they keep their exact min/max in
-    # the verify pass.
+    # decimal types the rendering is exact (cast-to-string), so those columns
+    # skip the verify aggregate below: ints parse back to the same value, and
+    # a decimal parses to its nearest double — the value the rule's double
+    # bound is compared at — while the rule name keeps the rendered string
+    # ('100.00', not 100.0). float/double render %.2f (lossy — a max of
+    # 0.994 would come back 0.99, a TIGHTER bound that fails rows the
+    # profile saw), so they keep their exact min/max in the verify pass.
     def _exact_rendered(c: str) -> bool:
         return not dtypes[c].startswith(("float", "double"))
 
@@ -184,16 +185,18 @@ def suggest_rules(
                               name=f"{c} was a candidate key when profiled"))
         if c in numeric and p["n_distinct"]:
             if _exact_rendered(c):
-                lo = None if p["min_value"] is None else _parse_back(c, p["min_value"])
-                hi = None if p["max_value"] is None else _parse_back(c, p["max_value"])
+                lo_s, hi_s = p["min_value"], p["max_value"]
+                lo = None if lo_s is None else _parse_back(c, lo_s)
+                hi = None if hi_s is None else _parse_back(c, hi_s)
             else:
-                lo, hi = extremes[f"_min_{c}"], extremes[f"_max_{c}"]
+                lo_s = lo = extremes[f"_min_{c}"]
+                hi_s = hi = extremes[f"_max_{c}"]
             if lo is not None and hi is not None:
                 rules.append(Rule(
                     f"{uc}_RANGE", "range", c,
                     {"min": lo if isinstance(lo, int) else float(lo),
                      "max": hi if isinstance(hi, int) else float(hi)},
-                    name=f"{c} observed envelope [{lo}, {hi}]"))
+                    name=f"{c} observed envelope [{lo_s}, {hi_s}]"))
         if c in enum_cand:
             allowed = sorted(str(v) for v in extremes[f"_set_{c}"])
             rules.append(Rule(f"{uc}_SET", "value_in_set", c,

@@ -118,27 +118,30 @@ def main(argv: list[str] | None = None) -> int:
     # (driver-side Catalyst analysis only, no jobs) and keep what resolves;
     # dropped rule ids are reported in the summary so the narrowing is
     # visible, and the micro-batch engine path still runs the full catalog
-    # (the batch engine owns its own schema handling).
+    # (the batch engine owns its own schema handling). Only an analysis
+    # error means "not applicable to this schema": a spec error (a {run_ts}
+    # rule without --run-ts, an unparseable expression) is raised by the
+    # compile step outside the probe and fails the job.
+    from pyspark.errors import AnalysisException
+
     from data_check_spark.rules.compiler import apply_row_rules, compile_row_rules
     from data_check_spark.rules.spec import RuleCatalog
 
     probe = spark.createDataFrame([], schema)
-    keep, dropped = [], []
+    keep, dropped = [], {}
     for r in catalog.rules:
-        if not r.is_row_local:
-            keep.append(r)
-            continue
-        try:
-            apply_row_rules(
-                probe, compile_row_rules([r], run_ts), partition_col="partition"
-            )
-            keep.append(r)
-        except Exception:
-            dropped.append(r.rule_id)
+        if r.is_row_local:
+            compiled = compile_row_rules([r], run_ts)
+            try:
+                apply_row_rules(probe, compiled, partition_col="partition")
+            except AnalysisException as exc:
+                dropped[r.rule_id] = str(exc).splitlines()[0][:300]
+                continue
+        keep.append(r)
     stream_catalog = RuleCatalog(keep)
-    if dropped:
-        # report the narrowing immediately (daemon mode has no summary line)
-        print(f"row rules skipped for stream schema: {sorted(dropped)}",
+    # report the narrowing immediately (daemon mode has no summary line)
+    for rule_id, cause in sorted(dropped.items()):
+        print(f"row rule {rule_id} skipped for stream schema: {cause}",
               file=sys.stderr)
 
     # Before starting anything: in a reused session a PREVIOUSLY-terminated

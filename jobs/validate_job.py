@@ -20,7 +20,8 @@ JSON summary to stdout. ``--resume`` anti-joins partitions already marked
 complete in the checkpoint (engine.run_validation resume path).
 
 Sizing note: JVM heap cannot be set after launch, so pass ``--driver-memory``
-(local smoke runs: 16g to match the library session) / ``--executor-memory``
+(local smoke runs: at most the heap ``session.host_fit`` derives for the
+host, about 9g on a 4-core 16 GiB host) / ``--executor-memory``
 on the spark-submit line — session.py's in-process defaults only apply when
 the library itself builds the JVM.
 """

@@ -542,3 +542,36 @@ def test_stream_validate_job_once_survives_query_failure(spark, tmp_path, capsys
     summary = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert summary["errors"] and not summary["drained"]
     assert summary["queries"] == 2  # both queries were started and awaited
+
+
+def test_stream_validate_job_spec_error_is_not_skipped(spark, tmp_path, capsys):
+    """The stream-schema probe drops only rules whose columns the stream
+    lacks (an analysis error), and says why; a ``{run_ts}`` rule without
+    --run-ts is a spec error and fails the job instead of being reported
+    as "skipped for stream schema"."""
+    import datetime as dt
+    import json as _json
+
+    from jobs.stream_validate_job import main as job_main
+
+    in_dir = str(tmp_path / "in")
+    _write_batch(spark, in_dir,
+                 [("c1", 16000, 1000, "flac", "t", "p0", dt.datetime(2027, 1, 1))], 1)
+    rules = str(tmp_path / "rules.json")
+    RuleCatalog([
+        Rule("S_FUTURE_TS", "cross_column", params={"expr": "event_ts > {run_ts}"}),
+        Rule("S_NO_SUCH_COL", "cross_column", params={"expr": "bytes_len < 0"}),
+    ]).save(rules)
+    args = ["--input", in_dir, "--rules", rules, "--output-dir", str(tmp_path / "out"),
+            "--checkpoint-dir", str(tmp_path / "ckpt"), "--once", "--timeout-sec", "120"]
+
+    with pytest.raises(ValueError, match="S_FUTURE_TS needs run_ts"):
+        job_main(list(args))
+
+    assert job_main([*args, "--run-ts", "2026-01-01 00:00:00"]) == 0
+    captured = capsys.readouterr()
+    summary = _json.loads(captured.out.strip().splitlines()[-1])
+    assert summary["rules_skipped_for_schema"] == ["S_NO_SUCH_COL"]
+    assert "row rule S_NO_SUCH_COL skipped for stream schema: [UNRESOLVED_COLUMN" in captured.err
+    viol = spark.read.parquet(str(tmp_path / "out" / "row_violations")).collect()
+    assert [r["rule_id"] for r in viol] == ["S_FUTURE_TS"]

@@ -121,3 +121,22 @@ def test_suggest_then_curate_preflight_integration(spark, tmp_path, capsys):
     m2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert m2["dropped"]["rule_violation"] == 1
     assert m2["rule_violations"].get("LANG_SET") == 1
+
+
+def test_suggest_decimal_range_keeps_rendered_bounds(spark):
+    from decimal import Decimal
+
+    from data_check_spark.rules.compiler import apply_row_rules, compile_row_rules
+    from data_check_spark.rules.suggest import suggest_rules
+
+    df = spark.createDataFrame(
+        [(i, Decimal(v)) for i, v in enumerate(["100.00", "0.10", "250.50", "42.00"])],
+        "id bigint, price decimal(10,2)",
+    )
+    cat = suggest_rules(df)
+    rng = cat.get("PRICE_RANGE")
+    assert rng.name == "price observed envelope [0.10, 250.50]"
+    assert rng.params == {"min": 0.1, "max": 250.5}
+    assert apply_row_rules(
+        df, compile_row_rules([rng]), id_col="id", partition_col=None
+    ).count() == 0

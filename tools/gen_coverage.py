@@ -13,10 +13,12 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 HEADER = """# COVERAGE — driver-verification ledger
 
@@ -35,9 +37,9 @@ registry (149 oracle-backed + 4 rows-only, including the six round-5
 additions — four streaming replays, the session-window replay, and
 incremental IVF) value-checked green under `tools/check_oracle.py` at
 BOTH sf0.01 and sf0.1. Cumulative driver evidence: every oracle-backed
-entry registered through round 4 has a hash-green CORRECTNESS row
-(144/144); the round-5 entries ride FIRST in `queries()` order for the
-round-5 driver run.
+entry has a hash-green CORRECTNESS row (149/149 after
+CORRECTNESS_r05.json), so `queries()` has no never-checked entries left
+to put first.
 
 | query | oracle | last driver-green | builder harness |
 |---|---|---|---|
@@ -50,7 +52,7 @@ def main() -> None:
 
     # round -> {name: hash_match(bool) | None(rows-only check)}
     history: dict[int, dict[str, bool | None]] = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
         rnd = int(re.search(r"_r(\d+)", path).group(1))
         data = json.load(open(path))
         history[rnd] = {
@@ -97,7 +99,7 @@ def main() -> None:
         "  tests/test_golden_multiset.py (exact violation multiset) and the\n"
         "  expected-violation sentinels (CLAUDE.md).\n"
     )
-    with open("/root/repo/COVERAGE.md", "w") as f:
+    with open(os.path.join(REPO, "COVERAGE.md"), "w") as f:
         f.writelines(lines)
     print(f"COVERAGE.md regenerated: {len(lines) - 1} rows")
 

@@ -31,10 +31,13 @@ sys.path.insert(0, REPO)
 
 
 def main() -> None:
+    from data_check_spark.session import get_spark, host_cores
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--rows", type=int, default=1_000_000)
     ap.add_argument("--repeats", type=int, default=3)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int,
+                    default=int(os.environ.get("SPARK_GRAFT_CPUS") or host_cores()))
     args = ap.parse_args()
 
     import bench
@@ -42,7 +45,6 @@ def main() -> None:
 
     from data_check_spark.engine import run_validation
     from data_check_spark.rules.catalog_audio import audio_catalog
-    from data_check_spark.session import get_spark
 
     spark = get_spark(
         "reliable_cache_bench", master=f"local[{args.cpus}]",
