@@ -23,7 +23,10 @@ Plan shape (scale rationale):
   regardless of rule count.
 - Set-oriented rules each contribute their own (shuffle-bearing) subplan:
   salted two-phase uniqueness, broadcast/SMJ referential joins, sketch-only
-  drift shuffle — all reading the narrow cache, never the wide scan.
+  drift shuffle — all reading the narrow cache, never the wide scan. What
+  each kind emits, how it takes its gate, its resume/batch grain, its slot
+  in the fused dim join and the dims it reads live in ONE table,
+  ``SET_RULE_KINDS``; ``run_validation`` derives everything from it.
 - ``violations`` is persisted before the verdict aggregation so the verdict
   job and any caller action (count, write) execute the rule plans once.
 - Run timestamp is pinned once per run for deterministic date rules
@@ -34,6 +37,7 @@ from __future__ import annotations
 
 import time
 import uuid
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from functools import reduce
 
@@ -43,26 +47,34 @@ from pyspark.sql import functions as F
 from data_check_spark import checkpoint as cp
 from data_check_spark.operators.audio import (
     SNR_COL,
-    audio_snr_violations,
     prepare_clips,
     snr_column_violations,
     transcript_match_violations,
+    transcript_wer_violations,
 )
 from data_check_spark.operators.drift import (
     categorical_drift_violations,
-    drift_violations,
+    drift_violations_multi,
     rate_drift_violations,
     volume_drift_violations,
 )
+from data_check_spark.operators.funcdep import func_dep_violations
+from data_check_spark.operators.profile import (
+    agg_threshold_violations,
+    column_profile,
+    outlier_violations,
+)
 from data_check_spark.operators.referential import (
     anti_join_violations,
+    cardinality_rule_violations,
+    fused_dim_checks,
     orphan_violations,
     reconcile_violations,
     semi_join_violations,
 )
-from data_check_spark.operators.funcdep import func_dep_violations
 from data_check_spark.operators.uniqueness import (
     aggregate_unique_violations,
+    duplicate_keys,
     unique_violations,
 )
 from data_check_spark.rules.compiler import (
@@ -72,6 +84,8 @@ from data_check_spark.rules.compiler import (
 )
 from data_check_spark.rules.spec import Rule, RuleCatalog
 from data_check_spark.schemas import CLIPS_SCHEMA, validate_schema
+
+_VIOLATION_SCHEMA = "rule_id string, clip_id string, partition string, observed string"
 
 
 @dataclass
@@ -94,147 +108,171 @@ class ValidationResult:
         return {"total": sum(counts.values()), "per_rule": counts, "top5": top5}
 
 
-def _dispatch_set_rule(
-    rule: Rule,
-    clips: DataFrame,
-    dims: dict[str, DataFrame],
-    *,
-    partition_col: str,
-    shared_dups: DataFrame | None = None,
-    run_ts: str | None = None,
-) -> DataFrame:
+# --- set-oriented rule kinds -------------------------------------------------
+# How a rule's ``gate`` reaches its operator:
+GATE_SCOPE = "scope"        # the engine filters the input to the gate first
+GATE_OPERATOR = "operator"  # the operator applies the gate itself
+GATE_NONE = "none"          # the kind cannot honour a gate: a gated rule is a RULE_ERROR
+
+
+def _always(value):
+    return lambda *_: value
+
+
+def _opts(rule: Rule, *names: str) -> dict:
+    """The named params the rule sets; the rest keep the operator's default."""
+    return {n: rule.params[n] for n in names if n in rule.params}
+
+
+def _mode(rule: Rule) -> str:
+    return rule.params.get("mode", "anti")
+
+
+def _ref_key(rule: Rule) -> tuple[str, str, str]:
+    return rule.params["dim"], rule.column or "clip_id", rule.params.get("dim_key", "clip_id")
+
+
+def _text_key(rule: Rule) -> tuple[str, str, str]:
+    # params["dim_key"] is the join key on BOTH sides, fused or standalone
+    key = rule.params.get("dim_key", "clip_id")
+    return rule.params["dim"], key, key
+
+
+def _text_cols(rule: Rule) -> tuple[str, str]:
+    return rule.column or "transcript", rule.params.get("ref_column", "transcript_ref")
+
+
+def _uniq_key(rule: Rule) -> str:
+    return rule.column or "clip_id"
+
+
+def _child_keys(rule: Rule) -> dict:
     p = rule.params
-    gate = gate_condition(rule.gate, run_ts, rule.rule_id) if rule.gate else None
-    if rule.kind == "unique":
-        scoped = clips.filter(gate) if gate is not None else clips
-        return unique_violations(scoped, rule.rule_id, rule.column or "clip_id",
-                                 partition_col=partition_col, dups=shared_dups)
-    if rule.kind == "aggregate_unique":
-        scoped = clips.filter(gate) if gate is not None else clips
-        return aggregate_unique_violations(scoped, rule.rule_id, rule.column or "clip_id",
-                                           dups=shared_dups)
-    if rule.kind == "referential":
-        dim = dims[p["dim"]]
-        mode = p.get("mode", "anti")
-        kwargs = dict(fact_key=rule.column or "clip_id", dim_key=p.get("dim_key", "clip_id"))
-        if mode == "anti":
-            return anti_join_violations(clips, dim, rule.rule_id, gate=gate,
-                                        partition_col=partition_col, **kwargs)
-        if mode == "semi":
-            return semi_join_violations(clips, dim, rule.rule_id, gate=gate,
-                                        partition_col=partition_col, **kwargs)
-        if mode == "orphan":
-            return orphan_violations(clips, dim, rule.rule_id, **kwargs)
-        raise ValueError(f"unknown referential mode {mode!r} ({rule.rule_id})")
-    if rule.kind == "drift":
-        baseline = dims["baseline_stats"]
-        return drift_violations(
-            clips, baseline, rule.rule_id, rule.column,
-            threshold=p.get("threshold", 0.25), partition_col=partition_col,
-        )
-    if rule.kind == "cat_drift":
-        return categorical_drift_violations(
-            clips, rule.rule_id, rule.column or "codec",
-            threshold_bp=p.get("threshold_bp", 2500),
-            min_rows=p.get("min_rows", 100), partition_col=partition_col,
-        )
-    if rule.kind == "rate_drift":
-        return rate_drift_violations(
-            clips, rule.rule_id, p["predicate"],
-            threshold_bp=p.get("threshold_bp", 500),
-            min_rows=p.get("min_rows", 100), partition_col=partition_col,
-        )
-    if rule.kind == "volume_drift":
-        return volume_drift_violations(
-            clips, rule.rule_id,
-            threshold_bp=p.get("threshold_bp", 5000), partition_col=partition_col,
-        )
-    if rule.kind == "audio_decode":
-        if SNR_COL in clips.columns:  # precomputed in the single wide pass
-            return snr_column_violations(
-                clips, rule.rule_id, snr_col=SNR_COL,
-                snr_db_min=p.get("snr_db_min", 30.0),
-                gate=gate, partition_col=partition_col,
-            )
-        return audio_snr_violations(
-            clips, rule.rule_id,
-            snr_db_min=p.get("snr_db_min", 30.0), cap_ms=p.get("cap_ms", 100),
-            gate=gate, partition_col=partition_col,
-        )
-    if rule.kind == "agg_threshold":
-        from data_check_spark.operators.profile import agg_threshold_violations
+    return dict(parent_key=p.get("fact_key", "clip_id"), child_key=p.get("dim_key", "clip_id"))
 
-        scoped = clips.filter(gate) if gate is not None else clips
-        return agg_threshold_violations(
-            scoped, rule.rule_id, p["metric_expr"],
-            min_value=p.get("min_value"), max_value=p.get("max_value"),
-        )
-    if rule.kind == "outlier":
-        from data_check_spark.operators.profile import outlier_violations
 
-        scoped = clips.filter(gate) if gate is not None else clips
-        return outlier_violations(
-            scoped, rule.rule_id, rule.column,
-            partition_col=partition_col,
-            group_col=p.get("group_by"),
-            scale=p.get("scale", 100),
-        )
-    if rule.kind == "func_dep":
-        scoped = clips.filter(gate) if gate is not None else clips
-        return func_dep_violations(
-            scoped, rule.rule_id, p["determinant"], rule.column,
-            partition_col=partition_col,
-            count_null_dependent=p.get("count_null_dependent", False),
-            grain=p.get("grain", "row"),
-        )
-    if rule.kind == "reconcile":
-        scoped = clips.filter(gate) if gate is not None else clips
-        return reconcile_violations(
-            scoped, dims[p["dim"]], rule.rule_id,
-            parent_key=p.get("fact_key", "clip_id"),
-            child_key=p.get("dim_key", "clip_id"),
-            total_col=rule.column,
-            amount_col=p["amount_col"],
-            tolerance_cents=p.get("tolerance_cents", 0),
-            partition_col=partition_col,
-        )
-    if rule.kind == "cardinality":
-        from data_check_spark.operators.referential import cardinality_rule_violations
+@dataclass(frozen=True)
+class SetKind:
+    """What the engine knows about one set-oriented rule kind.
 
-        scoped = clips.filter(gate) if gate is not None else clips
-        return cardinality_rule_violations(
-            scoped, dims[p["dim"]], rule.rule_id,
-            parent_key=p.get("fact_key", "clip_id"),
-            child_key=p.get("dim_key", "clip_id"),
-            min_children=p.get("min_children", 1),
-            max_children=p.get("max_children"),
-            partition_col=partition_col,
-        )
-    if rule.kind == "transcript_match":
-        # Mirror the fused path exactly (fused_dim_checks call below): the
-        # join key is params["dim_key"] on BOTH sides and the compared fact
-        # column is rule.column — a standalone dispatch (e.g. any resume run,
-        # where fusion is disabled) must not fall back to the operator's
-        # defaults for them.
-        return transcript_match_violations(
-            clips, dims[p["dim"]], rule.rule_id,
-            fact_key=p.get("dim_key", "clip_id"), dim_key=p.get("dim_key", "clip_id"),
-            fact_text=rule.column or "transcript",
-            ref_text=p.get("ref_column", "transcript_ref"),
-            partition_col=partition_col,
-        )
-    if rule.kind == "transcript_wer":
-        from data_check_spark.operators.audio import transcript_wer_violations
+    ``emit(rule, clips, dims, gate, partition_col, dups)`` builds the
+    violations (None: the kind runs in a shared pass of its own);
+    ``gate(rule)`` is one of the GATE_* values above; ``global_grain(rule,
+    partition_col)``: the result depends on rows outside a partition, so a
+    resume run evaluates it over the full table and member batches skip it;
+    ``fuse(rule)``: (slot, (dim, fact_key, dim_key)) in the one full-outer
+    join per dim (``fused_dim_checks``); ``dims(rule)``: dimensions read;
+    ``dup_key(rule)``: key column whose duplicate-key set siblings share."""
 
-        return transcript_wer_violations(
-            clips, dims[p["dim"]], rule.rule_id,
-            fact_key=p.get("dim_key", "clip_id"), dim_key=p.get("dim_key", "clip_id"),
-            fact_text=rule.column or "transcript",
-            ref_text=p.get("ref_column", "transcript_ref"),
-            max_wer_bp=p.get("max_wer_bp", 2500),
-            partition_col=partition_col,
-        )
-    raise ValueError(f"unhandled set rule kind {rule.kind!r}")
+    emit: Callable[..., DataFrame] | None
+    gate: Callable[[Rule], str] = _always(GATE_SCOPE)
+    global_grain: Callable[[Rule, str], bool] = _always(False)
+    fuse: Callable[[Rule], tuple[str, tuple[str, str, str]] | None] = _always(None)
+    dims: Callable[[Rule], set[str]] = lambda r: {r.params["dim"]} if "dim" in r.params else set()
+    dup_key: Callable[[Rule], str | None] = _always(None)
+
+
+def _referential(rule, clips, dims, gate, partition_col, dups):
+    dim, fact_key, dim_key = _ref_key(rule)
+    keys = dict(fact_key=fact_key, dim_key=dim_key)
+    if _mode(rule) == "orphan":
+        return orphan_violations(clips, dims[dim], rule.rule_id, **keys)
+    join = {"anti": anti_join_violations, "semi": semi_join_violations}.get(_mode(rule))
+    if join is None:
+        raise ValueError(f"unknown referential mode {_mode(rule)!r} ({rule.rule_id})")
+    return join(clips, dims[dim], rule.rule_id, gate=gate, partition_col=partition_col, **keys)
+
+
+def _transcript(operator, *names):
+    def emit(rule, clips, dims, gate, partition_col, dups):
+        dim, fact_key, dim_key = _text_key(rule)
+        fact_text, ref_text = _text_cols(rule)
+        return operator(clips, dims[dim], rule.rule_id, fact_key=fact_key, dim_key=dim_key,
+                        fact_text=fact_text, ref_text=ref_text, partition_col=partition_col,
+                        **_opts(rule, *names))
+
+    return emit
+
+
+SET_RULE_KINDS: dict[str, SetKind] = {
+    "unique": SetKind(
+        lambda r, c, d, g, pc, dups: unique_violations(
+            c, r.rule_id, _uniq_key(r), partition_col=pc, dups=dups),
+        global_grain=_always(True), dup_key=_uniq_key),
+    # one NULL-partition row per duplicated value
+    "aggregate_unique": SetKind(
+        lambda r, c, d, g, pc, dups: aggregate_unique_violations(
+            c, r.rule_id, _uniq_key(r), dups=dups),
+        global_grain=_always(True), dup_key=_uniq_key),
+    # orphan: dim rows no fact row references — NULL partition, judged
+    # against the whole fact key set, and no fact row to gate
+    "referential": SetKind(
+        _referential,
+        gate=lambda r: GATE_NONE if _mode(r) == "orphan" else GATE_OPERATOR,
+        global_grain=lambda r, pc: _mode(r) == "orphan",
+        fuse=lambda r: (_mode(r), _ref_key(r)) if _mode(r) in ("anti", "orphan") else None),
+    # all drift rules share ONE sketch pass (drift_violations_multi) against
+    # a fixed baseline snapshot, so each partition is judged on its own
+    "drift": SetKind(None, gate=_always(GATE_NONE), dims=_always({"baseline_stats"})),
+    # cat/rate/volume drift compare a partition with the CURRENT table (mix,
+    # rate, mean size), which a resume run must compute over all partitions
+    "cat_drift": SetKind(
+        lambda r, c, d, g, pc, dups: categorical_drift_violations(
+            c, r.rule_id, r.column or "codec", partition_col=pc,
+            **_opts(r, "threshold_bp", "min_rows")),
+        gate=_always(GATE_NONE), global_grain=_always(True)),
+    "rate_drift": SetKind(
+        lambda r, c, d, g, pc, dups: rate_drift_violations(
+            c, r.rule_id, r.params["predicate"], partition_col=pc,
+            **_opts(r, "threshold_bp", "min_rows")),
+        gate=_always(GATE_NONE), global_grain=_always(True)),
+    "volume_drift": SetKind(
+        lambda r, c, d, g, pc, dups: volume_drift_violations(
+            c, r.rule_id, partition_col=pc, **_opts(r, "threshold_bp")),
+        gate=_always(GATE_NONE), global_grain=_always(True)),
+    # SNR is precomputed by the single wide pass (prepare_clips)
+    "audio_decode": SetKind(
+        lambda r, c, d, g, pc, dups: snr_column_violations(
+            c, r.rule_id, gate=g, partition_col=pc, **_opts(r, "snr_db_min")),
+        gate=_always(GATE_OPERATOR)),
+    # a whole-table aggregate: one NULL-partition row on breach
+    "agg_threshold": SetKind(
+        lambda r, c, d, g, pc, dups: agg_threshold_violations(
+            c, r.rule_id, r.params["metric_expr"], **_opts(r, "min_value", "max_value")),
+        global_grain=_always(True)),
+    # fences are per group: grouped by the partition column (the default)
+    # each partition's fence is its own; grouped by anything else a fence
+    # spans partitions and must be learnt over the whole table
+    "outlier": SetKind(
+        lambda r, c, d, g, pc, dups: outlier_violations(
+            c, r.rule_id, r.column, partition_col=pc, group_col=r.params.get("group_by"),
+            **_opts(r, "scale")),
+        global_grain=lambda r, pc: r.params.get("group_by") not in (None, pc)),
+    # the violating determinant set depends on the whole table
+    "func_dep": SetKind(
+        lambda r, c, d, g, pc, dups: func_dep_violations(
+            c, r.rule_id, r.params["determinant"], r.column, partition_col=pc,
+            **_opts(r, "count_null_dependent", "grain")),
+        global_grain=_always(True)),
+    # orphan child totals have no parent row, hence no partition
+    "reconcile": SetKind(
+        lambda r, c, d, g, pc, dups: reconcile_violations(
+            c, d[r.params["dim"]], r.rule_id, total_col=r.column,
+            amount_col=r.params["amount_col"], partition_col=pc, **_child_keys(r),
+            **_opts(r, "tolerance_cents")),
+        global_grain=_always(True)),
+    # child counts are a property of the whole child table
+    "cardinality": SetKind(
+        lambda r, c, d, g, pc, dups: cardinality_rule_violations(
+            c, d[r.params["dim"]], r.rule_id, partition_col=pc, **_child_keys(r),
+            **_opts(r, "min_children", "max_children")),
+        global_grain=_always(True)),
+    "transcript_match": SetKind(
+        _transcript(transcript_match_violations),
+        gate=_always(GATE_NONE), fuse=lambda r: ("match", _text_key(r))),
+    "transcript_wer": SetKind(_transcript(transcript_wer_violations, "max_wer_bp"),
+                              gate=_always(GATE_NONE)),
+}
 
 
 def _partition_violation_counts(violations: DataFrame, warning_ids: list[str]) -> DataFrame:
@@ -319,31 +357,37 @@ def run_validation(
     run_ts = run_ts or time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime())
     t0 = time.monotonic()
 
-    import os as _os
-    import sys as _sys
-
-    _debug = _os.environ.get("DATA_CHECK_DEBUG_TIMING") == "1"
-
-    def _mark(label: str, since: float) -> None:
-        if _debug:
-            print(f"[timing] {label}: {time.monotonic() - since:.1f}s", file=_sys.stderr, flush=True)
-
     schema_problems = validate_schema(clips, CLIPS_SCHEMA)
 
     # --- pre-flight: rules whose dimension is missing or empty are skipped
     # and replaced by synthetic violations (reference: aux-file-missing
     # early return with placeholder rows, dekispart.py:1316-1328).
     synthetic: list[tuple[str, str, str | None, str]] = []
-    if not batch_member:
+
+    def run_level(rule_id: str, observed: str) -> None:
         # Run-level findings belong to the global-state-owning run: in
         # batched mode only batch 0 reports them, or the batched union
-        # would repeat each schema problem once per batch.
-        for prob in schema_problems:
-            synthetic.append(("SCHEMA_MISMATCH", "N/A", None, prob))
+        # would repeat each once per batch. Rule errors are plan-time,
+        # identical in every batch: members still skip the broken rule,
+        # they just don't re-report it.
+        if not batch_member:
+            synthetic.append((rule_id, "N/A", None, observed))
+
+    def rule_error(rule: Rule, e: Exception | str) -> None:
+        run_level(f"RULE_ERROR_{rule.rule_id}", str(e).splitlines()[0][:200])
+
+    for prob in schema_problems:
+        run_level("SCHEMA_MISMATCH", prob)
+    # A gate the kind cannot honour would silently widen the rule's scope.
+    ungateable = [
+        r for r in catalog.set_oriented if r.gate and SET_RULE_KINDS[r.kind].gate(r) == GATE_NONE
+    ]
+    for r in ungateable:
+        mode = f" (mode={r.params['mode']})" if "mode" in r.params else ""
+        rule_error(r, f"a {r.kind} rule{mode} cannot honour a gate")
+    catalog = RuleCatalog([r for r in catalog if r not in ungateable])
     unavailable_dims: set[str] = set()
-    needed_dims = {
-        r.params["dim"] for r in catalog.set_oriented if "dim" in r.params
-    } | ({"baseline_stats"} if any(r.kind == "drift" for r in catalog.set_oriented) else set())
+    needed_dims = set().union(*(SET_RULE_KINDS[r.kind].dims(r) for r in catalog.set_oriented))
     # One Spark job probes ALL dims for emptiness (a per-dim isEmpty() is a
     # tiny job per dimension per run — they fold into a single union scan of
     # one row each).
@@ -358,17 +402,14 @@ def run_validation(
     for name in sorted(needed_dims):
         if name not in dims:
             unavailable_dims.add(name)
-            if not batch_member:  # run-level finding: batch 0 owns
-                synthetic.append((f"AUX_MISSING_{name.upper()}", "N/A", None, f"dimension {name} not provided"))
+            run_level(f"AUX_MISSING_{name.upper()}", f"dimension {name} not provided")
         elif name not in nonempty:
             unavailable_dims.add(name)
-            if not batch_member:
-                synthetic.append((f"AUX_EMPTY_{name.upper()}", "N/A", None, f"dimension {name} is empty"))
+            run_level(f"AUX_EMPTY_{name.upper()}", f"dimension {name} is empty")
     if unavailable_dims:
         skipped = [
             r for r in catalog.set_oriented
-            if r.params.get("dim") in unavailable_dims
-            or (r.kind == "drift" and "baseline_stats" in unavailable_dims)
+            if SET_RULE_KINDS[r.kind].dims(r) & unavailable_dims
         ]
         catalog = RuleCatalog([r for r in catalog if r not in skipped])
 
@@ -422,7 +463,6 @@ def run_validation(
         # writes the narrow table to the cluster checkpoint dir instead
         # (HDFS/S3) so a 10^12-row run survives executor loss at the cost of
         # one distributed write — the right default on a real cluster.
-        _t = time.monotonic()
         if reliable_cache:
             sc = spark.sparkContext
             if sc.getCheckpointDir() is None:
@@ -441,7 +481,6 @@ def run_validation(
         n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
         if prepared.rdd.getNumPartitions() > 2 * n_parts:
             prepared = prepared.coalesce(2 * n_parts)
-        _mark("wide_pass_checkpoint", _t)
 
     # --- per-rule isolation (reference: a crashing per-row check degrades to
     # UNEXPECTED_ERROR_<fn> violation rows, dekispart.py:1151-1157). Each
@@ -458,13 +497,7 @@ def run_validation(
                     spark._jvm.java.util.regex.Pattern.compile(pat)
             candidates.append((r, compile_rule_many(r, run_ts)))
         except Exception as e:  # noqa: BLE001 — degrade, don't die
-            if not batch_member:
-                # Analysis errors are plan-time, identical in every batch:
-                # run-level findings the owner reports once (members still
-                # skip the broken rule, they just don't re-report it).
-                synthetic.append(
-                    (f"RULE_ERROR_{r.rule_id}", "N/A", None, str(e).splitlines()[0][:200])
-                )
+            rule_error(r, e)
     # analysis-only probe (resolves columns/types, runs no job): ONE batched
     # analysis on the healthy path; only when something is broken fall back
     # to per-rule probes to attribute the failure — a per-rule .schema costs
@@ -490,10 +523,7 @@ def run_validation(
                     prepared.select(c.predicate.cast("boolean"), c.observed).schema
                 compiled.extend(rule_compiled)
             except Exception as e:  # noqa: BLE001 — degrade, don't die
-                if not batch_member:  # run-level finding: batch 0 owns
-                    synthetic.append(
-                        (f"RULE_ERROR_{r.rule_id}", "N/A", None, str(e).splitlines()[0][:200])
-                    )
+                rule_error(r, e)
     if compiled:
         parts.append(apply_row_rules(prepared, compiled, partition_col=partition_col))
 
@@ -501,9 +531,6 @@ def run_validation(
     # shuffle regardless of how many columns are monitored).
     drift_rules = [r for r in catalog.set_oriented if r.kind == "drift"]
     if drift_rules:
-        from data_check_spark.operators.drift import drift_violations_multi
-
-        _t = time.monotonic()
         parts.append(
             drift_violations_multi(
                 prepared,
@@ -512,7 +539,6 @@ def run_validation(
                 partition_col=partition_col,
             )
         )
-        _mark("dispatch drift (fused)", _t)
 
     # Fuse FK-anti + orphan + byte-match rules that target the same dim into
     # ONE full-outer join (3 joins -> 1). Resume runs keep the per-rule path
@@ -521,21 +547,16 @@ def run_validation(
     if not done:
         by_dim: dict[tuple[str, str, str], dict[str, Rule]] = {}
         for r in catalog.set_oriented:
-            if r.kind == "referential" and r.params.get("mode") in ("anti", "orphan"):
-                key = (r.params["dim"], r.column or "clip_id", r.params.get("dim_key", "clip_id"))
-                by_dim.setdefault(key, {})[r.params["mode"]] = r
-            elif r.kind == "transcript_match":
-                key = (r.params["dim"], r.params.get("dim_key", "clip_id"), r.params.get("dim_key", "clip_id"))
-                by_dim.setdefault(key, {})["match"] = r
+            if fused := SET_RULE_KINDS[r.kind].fuse(r):
+                slot, key = fused
+                by_dim.setdefault(key, {})[slot] = r
         for (dim_name, fact_key, dim_key), group in by_dim.items():
             if len(group) < 2:
                 continue
-            from data_check_spark.operators.referential import fused_dim_checks
-
-            _t = time.monotonic()
             anti = group.get("anti")
             orphan = group.get("orphan")
             match = group.get("match")
+            fact_text, ref_text = _text_cols(match) if match else (None, None)
             parts.append(
                 fused_dim_checks(
                     prepared,
@@ -548,61 +569,30 @@ def run_validation(
                     if anti and anti.gate else None,
                     orphan_rule=orphan.rule_id if orphan else None,
                     match_rule=match.rule_id if match else None,
-                    fact_text=match.column if match else None,
-                    ref_text=match.params.get("ref_column") if match else None,
+                    fact_text=fact_text,
+                    ref_text=ref_text,
                 )
             )
             fused_ids.update(r.rule_id for r in group.values())
-            _mark(f"dispatch fused dim checks ({dim_name})", _t)
 
     # Row-grain and value-grain uniqueness on the same column share ONE
     # duplicate-key computation (lazily checkpointed: computed by the first
-    # consumer, reused by the second).
-    from data_check_spark.operators.uniqueness import duplicate_keys
-
+    # consumer, reused by the second). Gated rules keep their own.
+    dup_cols = [
+        k for r in catalog.set_oriented
+        if not r.gate and (k := SET_RULE_KINDS[r.kind].dup_key(r))
+    ]
     uniq_src = clips_full if done else prepared
-
-    def _ungated_uniq(col: str) -> int:
-        return sum(
-            1 for r in catalog.set_oriented
-            if r.kind in ("unique", "aggregate_unique") and (r.column or "clip_id") == col
-            and not r.gate
-        )
-
     shared_dups = {
         col: duplicate_keys(uniq_src, col).localCheckpoint(eager=False)
-        for col in {r.column or "clip_id" for r in catalog.set_oriented
-                    if r.kind in ("unique", "aggregate_unique") and not r.gate}
-        if _ungated_uniq(col) > 1
+        for col in set(dup_cols) if dup_cols.count(col) > 1
     }
 
     for rule in catalog.set_oriented:
-        if rule.kind == "drift" or rule.rule_id in fused_ids:
+        kind = SET_RULE_KINDS[rule.kind]
+        if kind.emit is None or rule.rule_id in fused_ids:
             continue
-        # cat_drift / rate_drift / volume_drift are global-grain too: their
-        # baseline is the CURRENT table (mix / rate / mean size), which a
-        # resume run must compute over all partitions, not just the
-        # remaining ones.
-        # func_dep too: the violating-key set depends on the whole table.
-        # reconcile: orphan child totals are not partition-scoped (no parent
-        # row), so like referential/orphan a resume run must see all keys.
-        # cardinality: child counts are a global property of the child
-        # table — a resume run must count over all children.
-        # outlier: fences are per-group — when grouped by the partition
-        # column (the default) each partition's fence is self-contained, so
-        # partition grain; grouped by anything else, the fence spans
-        # partitions and a resume run must learn it over the whole table.
-        global_grain = rule.kind in (
-            "unique", "aggregate_unique", "cat_drift", "rate_drift", "volume_drift",
-            "func_dep", "reconcile", "cardinality",
-        ) or (
-            rule.kind == "referential" and rule.params.get("mode") == "orphan"
-        ) or (
-            rule.kind == "outlier"
-            and rule.params.get("group_by") not in (None, partition_col)
-        )
-        dups = None if rule.gate else shared_dups.get(rule.column or "clip_id")
-        _t = time.monotonic()
+        global_grain = kind.global_grain(rule, partition_col)
         if global_grain and batch_member:
             # Member batches never run global-grain rules: the owner batch
             # scans the full key set ONCE and emits every partition's rows
@@ -611,47 +601,28 @@ def run_validation(
             # exclusions and an empty checkpoint must still skip, or it
             # double-reports against the owner.
             continue
+        # Full-table key scan (column-pruned; never touches bytes).
+        src = clips_full if done and global_grain else prepared
+        dups = None if rule.gate else shared_dups.get(kind.dup_key(rule))
         try:
-            if done and global_grain:
-                # Full-table key scan (column-pruned; never touches bytes).
-                v = _dispatch_set_rule(rule, clips_full, dims, partition_col=partition_col,
-                                       shared_dups=dups, run_ts=run_ts)
-                if cp_done and rule.kind in (
-                    "unique", "cat_drift", "rate_drift", "volume_drift",
-                    "func_dep", "outlier", "reconcile", "cardinality",
-                ):
-                    # Partition-attributed output: rows in partitions a
-                    # PREVIOUS attempt checkpointed were already reported
-                    # by that attempt. Keep NULL-partition rows — ~isin is
-                    # three-valued and would silently drop them.
-                    v = v.filter(
-                        ~F.col("partition").isin(cp_done)
-                        | F.col("partition").isNull()
-                    )
-                parts.append(v)
-            else:
-                parts.append(_dispatch_set_rule(rule, prepared, dims, partition_col=partition_col,
-                                                shared_dups=dups, run_ts=run_ts))
+            gate = gate_condition(rule.gate, run_ts, rule.rule_id) if rule.gate else None
+            if gate is not None and kind.gate(rule) == GATE_SCOPE:
+                src, gate = src.filter(gate), None
+            v = kind.emit(rule, src, dims, gate, partition_col, dups)
+            if cp_done and global_grain:
+                # Partition-attributed output: rows in partitions a
+                # PREVIOUS attempt checkpointed were already reported by
+                # that attempt. Keep NULL-partition rows — ~isin is
+                # three-valued and would silently drop them.
+                v = v.filter(~F.col("partition").isin(cp_done) | F.col("partition").isNull())
+            parts.append(v)
         except Exception as e:  # noqa: BLE001 — same per-rule degradation
-            if not batch_member:  # run-level finding: batch 0 owns
-                synthetic.append(
-                    (f"RULE_ERROR_{rule.rule_id}", "N/A", None, str(e).splitlines()[0][:200])
-                )
-        _mark(f"dispatch {rule.rule_id}", _t)
+            rule_error(rule, e)
 
-    if synthetic:
-        parts.append(
-            spark.createDataFrame(synthetic, "rule_id string, clip_id string, partition string, observed string")
-        )
-
-    if not parts:
-        # Legal but empty catalog (no rules, no synthetic rows): an empty
-        # violations frame, not a reduce() over an empty iterable.
-        parts.append(
-            spark.createDataFrame(
-                [], "rule_id string, clip_id string, partition string, observed string"
-            )
-        )
+    if synthetic or not parts:
+        # Without parts (legal but empty catalog, no synthetic rows) this is
+        # an empty violations frame, not a reduce() over an empty iterable.
+        parts.append(spark.createDataFrame(synthetic, _VIOLATION_SCHEMA))
     # localCheckpoint (lazy) rather than persist: a persisted plan compiles
     # non-adaptively (no runtime broadcast conversion) and measured 5x
     # slower; the checkpoint materializes through the normal AQE path on the
@@ -680,11 +651,9 @@ def run_validation(
             F.coalesce(F.col("_viols"), F.lit(0)).alias("violations"),
         )
     )
-    _t = time.monotonic()
     # Same AQE-preserving materialization rule as the violations frame.
     verdicts = verdicts.localCheckpoint(eager=False)
     rows_scanned = verdicts.agg(F.sum("rows_scanned")).collect()[0][0] or 0
-    _mark("rule_plans_and_verdicts", _t)
     wall_ms = int((time.monotonic() - t0) * 1000)
     # Spark can't attribute wall-time to a logical partition inside one job;
     # the checkpoint stores the run-level wall time on each row (documented).
@@ -701,8 +670,7 @@ def run_validation(
         fresh_run = not (resume and checkpoint_dir) and not exclude_partitions
         if fresh_run or not clips_full.select(partition_col).take(1):
             empty_row = spark.createDataFrame(
-                [("EMPTY_INPUT", "N/A", None, "fact table has no rows")],
-                "rule_id string, clip_id string, partition string, observed string",
+                [("EMPTY_INPUT", "N/A", None, "fact table has no rows")], _VIOLATION_SCHEMA
             )
             violations = violations.unionByName(empty_row)
 
@@ -716,8 +684,6 @@ def run_validation(
     # multiply every row by len(profile_columns) before the shuffle).
     profile = None
     if profile_columns:
-        from data_check_spark.operators.profile import column_profile
-
         profile = column_profile(
             prepared, profile_columns, approx=True, group_by=partition_col
         )
@@ -747,9 +713,7 @@ def run_series_validations(
     here each series gets its own run_validation and the outputs gain a
     ``series`` column. run_ts is pinned ONCE across all series so
     date-sensitive rules agree."""
-    import time as _time
-
-    run_ts = run_ts or _time.strftime("%Y-%m-%d %H:%M:%S", _time.gmtime())
+    run_ts = run_ts or time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime())
     results: dict[str, ValidationResult] = {}
     v_parts: list[DataFrame] = []
     d_parts: list[DataFrame] = []
@@ -816,8 +780,6 @@ def reconcile_outputs(
     (repair owner-batch partitions via a fresh checkpoint dir) instead of
     returning a silently-duplicated view. Member-batch partitions reconcile
     correctly through the same mark_failed workflow."""
-    from data_check_spark import checkpoint as cp
-
     cpdf = cp.read_checkpoint(spark, checkpoint_dir)
     if cpdf is None:
         raise ValueError(f"no checkpoint at {checkpoint_dir!r} — nothing to reconcile")

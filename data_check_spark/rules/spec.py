@@ -82,7 +82,20 @@ Set-oriented kinds (dispatched to operators, not the projection):
                             learned bounds where ``range`` hard-codes them.
                             ``params["group_by"]`` (default: the partition
                             column), ``params["scale"]`` quantization
-                            (default 100)
+                            (default 100). Grouped by anything but the
+                            partition column, it is whole-table (see below)
+- ``agg_threshold``       — whole-table SLA: the integer aggregate
+                            ``params["metric_expr"]`` must lie inside
+                            [``min_value``, ``max_value``]; a breach is one
+                            NULL-partition row. Always whole-table
+
+Whole-table rules in resume and batched runs: a rule whose result depends on
+rows outside a partition runs once over the FULL input table, not over the
+wide pass's output, so its expressions cannot read the wide-pass columns
+(``byte_len``, the SNR column, the decoded-audio features). An
+``agg_threshold`` metric or a cross-partition ``outlier`` column over them
+works in a single fresh run and is a RULE_ERROR row in resume and batched
+runs.
 """
 
 from __future__ import annotations
@@ -133,6 +146,11 @@ class Rule:
     params: dict[str, Any] = field(default_factory=dict, hash=False)
     # SQL boolean expr; rule only applies where gate is TRUE (reference's
     # "active member" gates, e.g. stdKaiyaku==False, dekispart.py:154).
+    # Every row-local kind honours it, and so do unique, aggregate_unique,
+    # referential anti/semi, audio_decode, agg_threshold, outlier, func_dep,
+    # reconcile and cardinality. drift, cat_drift, rate_drift, volume_drift,
+    # transcript_match, transcript_wer and referential orphan cannot: a
+    # gated rule of those kinds is a RULE_ERROR row and does not run.
     gate: str | None = None
     severity: str = "error"  # error | warning
     name: str = ""

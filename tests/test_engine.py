@@ -209,6 +209,28 @@ def test_broken_rule_degrades_to_violation_row(spark):
             "RULE_ERROR_BAD_DIM_KEY"} <= rules
 
 
+def test_gate_on_ungateable_kind_is_rule_error(spark):
+    """A kind that cannot honour a gate (cat_drift, referential orphan, ...)
+    must not silently run ungated: the gated rule becomes a RULE_ERROR row
+    and the rest of the catalog still runs."""
+    df = spark.createDataFrame(
+        [("a", -1, "flac", "p0"), ("b", 1, "wav", "p1")],
+        "clip_id string, x int, codec string, partition string",
+    )
+    dims = {"d": spark.createDataFrame([("a",), ("orphan",)], "clip_id string")}
+    catalog = RuleCatalog([
+        Rule("X_NEGATIVE", "range", "x", {"min": 0}),
+        Rule("MIX", "cat_drift", "codec", {"min_rows": 1}, gate="x > 0"),
+        Rule("ORPHAN", "referential", "clip_id", {"dim": "d", "mode": "orphan"},
+             gate="x > 0"),
+        Rule("ORPHAN_ANY", "referential", "clip_id", {"dim": "d", "mode": "orphan"}),
+    ])
+    res = run_validation(spark, df, dims, catalog, run_ts="2026-01-01 00:00:00")
+    rules = {r["rule_id"] for r in res.violations.collect()}
+    assert {"X_NEGATIVE", "ORPHAN_ANY", "RULE_ERROR_MIX", "RULE_ERROR_ORPHAN"} <= rules
+    assert not rules & {"MIX", "ORPHAN"}
+
+
 def test_transcript_match_standalone_honors_column_and_key(spark):
     """A lone transcript_match rule (not fused — no sibling referential rule)
     must compare rule.column joined on params['dim_key'], exactly like the

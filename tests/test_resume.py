@@ -1,9 +1,12 @@
 """Checkpoint/resume semantics: pruning, global-grain rules, re-emission."""
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
 from data_check_spark.engine import run_validation
+from data_check_spark.operators.drift import make_baseline
 from data_check_spark.rules.spec import Rule, RuleCatalog
 
 CATALOG = RuleCatalog(
@@ -291,8 +294,6 @@ def batch_data(spark):
 
 
 def _vset(df):
-    from collections import Counter
-
     return Counter(
         (r["rule_id"], r["clip_id"], r["partition"], r["observed"])
         for r in df.collect()
@@ -326,6 +327,91 @@ def test_batched_union_equals_single_run(spark, batch_data, tmp_path):
     from data_check_spark import checkpoint as cp
 
     assert set(cp.completed_partitions(spark, ckpt)) == {"p0", "p1", "p2"}
+
+
+# One rule of every set-oriented kind (referential in each mode, outlier
+# grouped both ways): the batched union must equal the single run, which
+# pins each kind's grain — a global-grain kind the engine treated as
+# partition grain would report batch 0's partitions only.
+KIND_CASES = {
+    "unique": Rule("K", "unique", "clip_id"),
+    "aggregate_unique": Rule("K", "aggregate_unique", "clip_id"),
+    "referential_anti": Rule("K", "referential", "clip_id",
+                             {"dim": "transcripts", "mode": "anti"}),
+    "referential_semi": Rule("K", "referential", "clip_id",
+                             {"dim": "transcripts", "mode": "semi"}),
+    "referential_orphan": Rule("K", "referential", "clip_id",
+                               {"dim": "transcripts", "mode": "orphan"}),
+    "drift": Rule("K", "drift", "dur_ms", {"threshold": 0.25}),
+    "cat_drift": Rule("K", "cat_drift", "codec", {"threshold_bp": 1000, "min_rows": 1}),
+    "rate_drift": Rule("K", "rate_drift", None,
+                       {"predicate": "sr_hz < 0", "threshold_bp": 100, "min_rows": 1}),
+    "volume_drift": Rule("K", "volume_drift", None, {"threshold_bp": 2000}),
+    "audio_decode": Rule("K", "audio_decode", "bytes", {"snr_db_min": 30.0}),
+    "agg_threshold": Rule("K", "agg_threshold", None,
+                          {"metric_expr": "count(1)", "max_value": 1}),
+    "outlier_by_partition": Rule("K", "outlier", "dur_ms"),
+    "outlier_by_codec": Rule("K", "outlier", "dur_ms", {"group_by": "codec"}),
+    "func_dep": Rule("K", "func_dep", "sr_hz", {"determinant": ["codec"]}),
+    "reconcile": Rule("K", "reconcile", "total",
+                      {"dim": "transcripts", "amount_col": "amount"}),
+    "cardinality": Rule("K", "cardinality", None,
+                        {"dim": "transcripts", "min_children": 1, "max_children": 1}),
+    "transcript_match": Rule("K", "transcript_match", "transcript",
+                             {"dim": "transcripts", "ref_column": "transcript_ref"}),
+    "transcript_wer": Rule("K", "transcript_wer", "transcript",
+                           {"dim": "transcripts", "max_wer_bp": 1000}),
+}
+
+
+@pytest.fixture(scope="module")
+def kinds_data(spark):
+    clips = spark.createDataFrame(
+        [
+            ("a", 16000, 100, "flac", "t", 10, "p0"),
+            ("dup", 16000, 120, "flac", "t", 5, "p0"),
+            ("b", 16000, 9000, "flac", "t x", 7, "p0"),
+            ("e", 16000, 110, "wav", "t", 0, "p0"),
+            ("dup", -1, 100, "mp3", "t", 5, "p1"),
+            ("c", 8000, 105, "flac", "t", 3, "p1"),
+            ("f", 16000, 100, "mp3", "t", 1, "p1"),
+            ("g", 16000, 95, "mp3", "t", 1, "p1"),
+            ("nofk", 16000, 100, "wav", "t", 2, "p2"),
+            ("nullrow", -5, 100, "flac", "t", 0, None),
+        ],
+        "clip_id string, sr_hz int, dur_ms int, codec string, transcript string, "
+        "total int, partition string",
+    )
+    tr = spark.createDataFrame(
+        [("a", "t", 10), ("dup", "t", 5), ("b", "t y", 7), ("e", "t", 1), ("c", "t", 2),
+         ("c", "t", 1), ("f", "t", 1), ("g", "u", 1), ("orphan_row", "t", 4)],
+        "clip_id string, transcript_ref string, amount int",
+    )
+    baseline = make_baseline(
+        spark, clips.select("partition", F.lit(100).alias("dur_ms")), ["dur_ms"]
+    )
+    return clips, {"transcripts": tr, "baseline_stats": baseline}
+
+
+@pytest.mark.parametrize("case", sorted(KIND_CASES))
+def test_batched_union_equals_single_run_every_kind(spark, kinds_data, tmp_path, case):
+    clips, dims = kinds_data
+    catalog = RuleCatalog([KIND_CASES[case]])
+    single = _vset(run_validation(spark, clips, dims, catalog, run_ts="2026-01-01 00:00:00")
+                   .violations)
+    if case != "audio_decode":  # a bytes-free table has no SNR to breach
+        assert any(k[0] == "K" for k in single), single
+    chunks = [["p0"], ["p1", "p2"]]
+    got = sum(
+        (_vset(run_validation(
+            spark, clips, dims, catalog, run_ts="2026-01-01 00:00:00",
+            checkpoint_dir=str(tmp_path / "ckpt"), resume=True,
+            exclude_partitions=[p for c in chunks if c is not chunk for p in c],
+            batch_member=(i > 0),
+        ).violations) for i, chunk in enumerate(chunks)),
+        Counter(),
+    )
+    assert got == single
 
 
 def test_batched_relaunch_skips_completed_batches(spark, batch_data, tmp_path):

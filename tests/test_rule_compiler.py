@@ -346,6 +346,10 @@ def test_every_rule_kind_round_trips_through_json(tmp_path):
     assert [r.to_dict() for r in loaded] == [r.to_dict() for r in cat]
     # and the file itself is plain JSON a deployment tool can lint
     assert len(json.load(open(path))) == len(rules)
+    # and the engine knows how to run every set-oriented kind the spec names
+    from data_check_spark.engine import SET_RULE_KINDS
+
+    assert set(SET_RULE_KINDS) == SET_KINDS
 
 
 def test_corpus_catalog_on_documents_shape(spark):
