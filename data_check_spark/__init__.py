@@ -18,7 +18,7 @@ Architecture (Spark-first, NOT a port):
 - ``operators``   — set-oriented rules that need more than a projection:
                     salted two-phase uniqueness, broadcast/sort-merge
                     referential joins, t-digest distribution drift, vectorized
-                    audio decode/SNR pandas UDFs, plus training-data-pipeline
+                    audio decode/SNR (one mapInPandas pass), plus training-data-pipeline
                     operators (dedup, similarity search, text analysis).
 - ``engine``      — orchestrates a full validation run: violations DataFrame,
                     per-partition pass/fail verdicts, summary, checkpoint.

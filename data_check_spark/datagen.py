@@ -267,15 +267,6 @@ def transcripts_df(spark: SparkSession, n_rows: int, orphan_frac: float = 0.02) 
     )
 
 
-def codec_whitelist_df(spark: SparkSession) -> DataFrame:
-    rows = [(c, True) for c in CODECS] + [("wav", False), ("wma", False)]
-    return spark.createDataFrame(rows, "codec string, allowed boolean")
-
-
-def rows_for_sf(sf: float) -> int:
-    return max(int(sf * 10_000_000), 1000)
-
-
 # ---------------------------------------------------------------------------
 # Synthetic documents (LLM-pipeline scaling workloads)
 # ---------------------------------------------------------------------------

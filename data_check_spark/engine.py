@@ -59,11 +59,7 @@ from data_check_spark.operators.drift import (
     volume_drift_violations,
 )
 from data_check_spark.operators.funcdep import func_dep_violations
-from data_check_spark.operators.profile import (
-    agg_threshold_violations,
-    column_profile,
-    outlier_violations,
-)
+from data_check_spark.operators.profile import agg_threshold_violations, outlier_violations
 from data_check_spark.operators.referential import (
     anti_join_violations,
     cardinality_rule_violations,
@@ -77,6 +73,7 @@ from data_check_spark.operators.uniqueness import (
     duplicate_keys,
     unique_violations,
 )
+from data_check_spark.reporting import top_rules
 from data_check_spark.rules.compiler import (
     apply_row_rules,
     compile_rule_many,
@@ -96,15 +93,12 @@ class ValidationResult:
     wall_time_ms: int = 0
     rows_scanned: int = 0
     schema_problems: list[str] = field(default_factory=list)
-    # per-partition column stats (lazy; None unless profile_columns was set)
-    profile: DataFrame | None = None
 
     def summary(self) -> dict:
         """Reference-style summary: total, per-rule counts, top-5 rule ids."""
-        per_rule = self.violations.groupBy("rule_id").agg(F.count(F.lit(1)).alias("n"))
-        rows = per_rule.collect()
+        rows = top_rules(self.violations, k=None).collect()
         counts = {r["rule_id"]: r["n"] for r in rows}
-        top5 = [rid for rid, _ in sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:5]]
+        top5 = [r["rule_id"] for r in rows[:5]]
         return {"total": sum(counts.values()), "per_rule": counts, "top5": top5}
 
 
@@ -306,7 +300,6 @@ def run_validation(
     resume: bool = False,
     cache_input: bool = True,
     reliable_cache: bool = False,
-    profile_columns: list[str] | None = None,
     exclude_partitions: list[str] | None = None,
     batch_member: bool = False,
     defer_checkpoint: bool = False,
@@ -677,17 +670,6 @@ def run_validation(
     if checkpoint_dir and not defer_checkpoint:
         cp.write_checkpoint(verdicts, checkpoint_dir, run_id)
 
-    # Optional per-partition column stats (north-rule "column stats"
-    # family): one extra aggregation over the NARROW checkpointed table —
-    # never the wide scan. approx distinct (HLL++) keeps the per-group plan
-    # a plain partial+final aggregate (the exact path's Expand would
-    # multiply every row by len(profile_columns) before the shuffle).
-    profile = None
-    if profile_columns:
-        profile = column_profile(
-            prepared, profile_columns, approx=True, group_by=partition_col
-        )
-
     return ValidationResult(
         violations=violations,
         verdicts=verdicts,
@@ -695,40 +677,7 @@ def run_validation(
         wall_time_ms=wall_ms,
         rows_scanned=int(rows_scanned),
         schema_problems=schema_problems,
-        profile=profile,
     )
-
-
-def run_series_validations(
-    spark: SparkSession,
-    jobs: dict[str, tuple[DataFrame, dict[str, DataFrame], "RuleCatalog"]],
-    *,
-    run_ts: str | None = None,
-    partition_col: str = "partition",
-) -> tuple[DataFrame, DataFrame, dict[str, ValidationResult]]:
-    """Validate several fact tables ("series") and union the results.
-
-    The reference dispatches one checker module per series and concatenates
-    their result frames under a series column (data_check.py:1050-1094);
-    here each series gets its own run_validation and the outputs gain a
-    ``series`` column. run_ts is pinned ONCE across all series so
-    date-sensitive rules agree."""
-    run_ts = run_ts or time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime())
-    results: dict[str, ValidationResult] = {}
-    v_parts: list[DataFrame] = []
-    d_parts: list[DataFrame] = []
-    for series, (clips, dims, catalog) in jobs.items():
-        res = run_validation(
-            spark, clips, dims, catalog, run_ts=run_ts, partition_col=partition_col
-        )
-        results[series] = res
-        v_parts.append(res.violations.select(F.lit(series).alias("series"), "*"))
-        d_parts.append(
-            res.verdicts.select(F.lit(series).alias("series"), "*")
-        )
-    violations = reduce(DataFrame.unionByName, v_parts)
-    verdicts = reduce(DataFrame.unionByName, d_parts)
-    return violations, verdicts, results
 
 
 def reconcile_outputs(

@@ -132,62 +132,6 @@ def snr_column_violations(
     )
 
 
-def snr_udf(cap_ms: int = 100):
-    """pandas UDF: (bytes, clip_id, sr_hz, dur_ms) → SNR in dB (double).
-
-    NaN = undecodable (empty/odd-length payload or length mismatch).
-    """
-
-    @F.pandas_udf("double")
-    def _snr(payload: pd.Series, clip_id: pd.Series, sr_hz: pd.Series, dur_ms: pd.Series) -> pd.Series:
-        out = np.full(len(payload), np.nan, dtype=np.float64)
-        for i, (b, cid, sr, dur) in enumerate(zip(payload, clip_id, sr_hz, dur_ms)):
-            if b is None or pd.isna(sr) or pd.isna(dur):
-                continue
-            if len(b) % 2 != 0:
-                continue
-            decoded = np.frombuffer(b, dtype=np.int16)
-            ref = synth_wave(cid, int(sr), int(dur), cap_ms)
-            val = snr_db(ref, decoded)
-            out[i] = val if np.isfinite(val) else (1e9 if val > 0 else -1e9)
-        return pd.Series(out)
-
-    return _snr
-
-
-def audio_snr_violations(
-    df: DataFrame,
-    rule_id: str,
-    *,
-    snr_db_min: float = 30.0,
-    cap_ms: int = 100,
-    gate: Column | None = None,
-    id_col: str = "clip_id",
-    partition_col: str | None = "partition",
-) -> DataFrame:
-    """Violations for clips whose decoded PCM misses the SNR gate."""
-    scoped = df.filter(gate) if gate is not None else df
-    snr = snr_udf(cap_ms)(F.col("bytes"), F.col("clip_id"), F.col("sr_hz"), F.col("dur_ms"))
-    part = F.col(partition_col) if partition_col else F.lit(None).cast("string")
-    return (
-        scoped.select(
-            F.col(id_col).cast("string").alias("clip_id"),
-            part.alias("partition"),
-            snr.alias("_snr"),
-        )
-        .filter(F.col("_snr").isNull() | (F.col("_snr") < F.lit(snr_db_min)))
-        .select(
-            F.lit(rule_id).alias("rule_id"),
-            "clip_id",
-            "partition",
-            F.concat(
-                F.lit("snr_db="),
-                F.coalesce(F.format_string("%.2f", F.col("_snr")), F.lit("null")),
-            ).alias("observed"),
-        )
-    )
-
-
 def transcript_match_violations(
     df: DataFrame,
     transcripts: DataFrame,
@@ -1235,92 +1179,3 @@ def augmentation_plan(
         .alias("noise_snr_db"),
     )
 
-
-# --- Spectral features (log-mel + centroid) ---------------------------------
-
-def _mel_filterbank(n_mels: int, n_fft: int, sr: int) -> np.ndarray:
-    """Triangular mel filterbank (n_mels, n_fft//2 + 1) — the standard
-    HTK-style construction from public formulas (mel = 2595·log10(1+f/700))."""
-    f_max = sr / 2.0
-    mel_max = 2595.0 * np.log10(1.0 + f_max / 700.0)
-    mel_pts = np.linspace(0.0, mel_max, n_mels + 2)
-    hz_pts = 700.0 * (10.0 ** (mel_pts / 2595.0) - 1.0)
-    bins = np.floor((n_fft + 1) * hz_pts / sr).astype(int)
-    fb = np.zeros((n_mels, n_fft // 2 + 1))
-    for m in range(1, n_mels + 1):
-        lo, ctr, hi = bins[m - 1], bins[m], bins[m + 1]
-        for k in range(lo, ctr):
-            if ctr > lo:
-                fb[m - 1, k] = (k - lo) / (ctr - lo)
-        for k in range(ctr, hi):
-            if hi > ctr:
-                fb[m - 1, k] = (hi - k) / (hi - ctr)
-    return fb
-
-
-def spectral_features(
-    df: DataFrame,
-    *,
-    n_mels: int = 16,
-    n_fft: int = 512,
-    bytes_col: str = "bytes",
-    keep: list[str] | None = None,
-) -> DataFrame:
-    """Per-clip spectral summary through the real int16 decode: mean log-mel
-    energy per band (the pooled acoustic front-end feature) plus spectral
-    centroid in Hz — the inputs to ASR data triage (bandwidth checks: a clip
-    resampled from 8 kHz masquerading as 16 kHz has no energy above 4 kHz;
-    centroid drift across a corpus slice flags a recording-chain change).
-
-    Spark shape: ONE mapInPandas stage, same contract as ``prepare_clips``
-    (bytes read once, Arrow-batched, per-row numpy — CLAUDE.md: small
-    per-row arrays beat one big concatenation on this host). Frames are
-    non-overlapping ``n_fft`` windows (rectangular — deterministic and
-    sufficient for pooled statistics; a production front-end would window
-    and hop, same plumbing). Clips shorter than one frame yield NULLs.
-    """
-    keep_cols = keep or [f.name for f in df.schema.fields if f.name != bytes_col]
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-        if f.name in keep_cols
-    )
-    schema += ", n_frames long, centroid_hz double, log_mel array<double>"
-
-    def run(batches):
-        fb_cache: dict[int, np.ndarray] = {}
-        for pdf in batches:
-            n = len(pdf)
-            n_frames = np.zeros(n, dtype=np.int64)
-            centroid = np.full(n, np.nan, dtype=np.float64)
-            mels: list = [None] * n
-            payloads = pdf[bytes_col].to_numpy(dtype=object)
-            srs = pdf["sr_hz"].to_numpy(dtype=object)
-            for i in range(n):
-                b, sr = payloads[i], srs[i]
-                if b is None or pd.isna(sr) or len(b) % 2 != 0 or int(sr) <= 0:
-                    continue
-                x = np.frombuffer(b, dtype=np.int16).astype(np.float64)
-                frames = x.size // n_fft
-                n_frames[i] = frames
-                if frames == 0:
-                    continue
-                sr = int(sr)
-                spec = np.abs(
-                    np.fft.rfft(x[: frames * n_fft].reshape(frames, n_fft), axis=1)
-                ) ** 2
-                pooled = spec.mean(axis=0)  # mean power per bin
-                freqs = np.fft.rfftfreq(n_fft, d=1.0 / sr)
-                tot = pooled.sum()
-                if tot > 0:
-                    centroid[i] = float((freqs * pooled).sum() / tot)
-                if sr not in fb_cache:
-                    fb_cache[sr] = _mel_filterbank(n_mels, n_fft, sr)
-                mel = fb_cache[sr] @ pooled
-                mels[i] = np.log10(mel + 1.0).tolist()
-            out = pdf[keep_cols].copy()
-            out["n_frames"] = n_frames
-            out["centroid_hz"] = centroid
-            out["log_mel"] = mels
-            yield out
-
-    return df.mapInPandas(run, schema=schema)

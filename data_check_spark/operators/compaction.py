@@ -1,4 +1,4 @@
-"""Storage-layout ops: small-files inventory + compaction planning.
+"""Storage-layout ops: small-files compaction planning.
 
 At 100 TB the classic failure mode is not wrong data but wrong LAYOUT:
 streaming ingest and over-parallel writes leave millions of KB-sized
@@ -7,9 +7,6 @@ parquet files, and every downstream scan pays task-per-file overhead
 Iceberg/parquet deployment of this engine does; SURVEY §2.1's fact-scan
 row is where this belongs).
 
-- ``file_inventory``   — (file, size, rows) per physical file from the
-  Spark ``_metadata`` struct: ONE column-pruned scan, no driver-side
-  filesystem listing, works on any parquet path the engine can read.
 - ``compaction_plan``  — deterministic merge groups for the small files:
   within each hive partition dir, files are laid on a byte number line in
   file-name order and ``group_id = offset div target_bytes`` (the same
@@ -27,24 +24,9 @@ never read by the planner.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-
-def file_inventory(spark: SparkSession, path: str) -> DataFrame:
-    """Per-file (file_path, file_name, file_size, n_rows) for a parquet
-    dataset — one metadata-column scan (all data columns pruned)."""
-    df = spark.read.parquet(path)
-    return (
-        df.select(
-            F.col("_metadata.file_path").alias("file_path"),
-            F.col("_metadata.file_name").alias("file_name"),
-            F.col("_metadata.file_size").alias("file_size"),
-        )
-        .groupBy("file_path", "file_name", "file_size")
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-    )
 
 
 def compaction_plan(

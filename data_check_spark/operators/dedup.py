@@ -604,21 +604,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def stop_shingles(
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    k: int = SHINGLE_K,
-    max_df: int = MAX_SHINGLE_DF,
-) -> DataFrame:
-    """(shingle, df) rows EXCLUDED from candidate generation — callers log
-    this (small) set so truncation is visible, not silent."""
-    sh = df.select(F.explode(_shingles_expr(text_col, k)).alias("s"))
-    return (
-        sh.groupBy("s").agg(F.count(F.lit(1)).alias("df")).filter(F.col("df") > max_df)
-    )
-
-
 def edit_distance_verify(
     pairs: DataFrame,
     docs: DataFrame,

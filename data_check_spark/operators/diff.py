@@ -125,36 +125,6 @@ def snapshot_diff(
     )
 
 
-def diff_summary(diff: DataFrame) -> DataFrame:
-    """Counts per change_type over :func:`snapshot_diff` output."""
-    return diff.groupBy("change_type").agg(F.count(F.lit(1)).alias("n_keys"))
-
-
-def schema_diff(old: DataFrame, new: DataFrame) -> list[dict]:
-    """Column-level schema changes between two snapshots (driver-side).
-
-    Returns one dict per changed column: ``{"column", "change",
-    "old_type", "new_type"}`` with ``change`` ∈ {'added', 'removed',
-    'type_changed'} — the pre-flight a re-certification run does before
-    row-level diffing (a type change invalidates fingerprint comparison).
-    Zero Spark jobs: schemas live on the driver.
-    """
-    o = {f.name: f.dataType.simpleString() for f in old.schema.fields}
-    n = {f.name: f.dataType.simpleString() for f in new.schema.fields}
-    out: list[dict] = []
-    for c in sorted(o.keys() | n.keys()):
-        if c not in n:
-            out.append({"column": c, "change": "removed",
-                        "old_type": o[c], "new_type": None})
-        elif c not in o:
-            out.append({"column": c, "change": "added",
-                        "old_type": None, "new_type": n[c]})
-        elif o[c] != n[c]:
-            out.append({"column": c, "change": "type_changed",
-                        "old_type": o[c], "new_type": n[c]})
-    return out
-
-
 def summary_regression(
     old_summary: DataFrame,
     new_summary: DataFrame,

@@ -71,49 +71,6 @@ def chunk_digests(
     )
 
 
-def partition_digests(
-    df: DataFrame,
-    column: str,
-    *,
-    partition_col: str = "partition",
-    max_centroids: int = td.DEFAULT_MAX_CENTROIDS,
-) -> DataFrame:
-    """Level-2: merge chunk digests into one digest per table partition."""
-    chunks = chunk_digests(df, column, partition_col=partition_col, max_centroids=max_centroids)
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        digs = [td.deserialize(b) for b in pdf["tdigest"]]
-        merged = td.merge(digs, max_centroids)
-        return pd.DataFrame(
-            [(pdf["partition"].iloc[0], column, td.serialize(merged), int(pdf["n"].sum()))],
-            columns=["partition", "column_name", "tdigest", "n"],
-        )
-
-    return chunks.groupBy("partition").applyInPandas(merge_group, schema=_CHUNK_SCHEMA)
-
-
-def global_digest(
-    df: DataFrame,
-    column: str,
-    *,
-    partition_col: str = "partition",
-    max_centroids: int = td.DEFAULT_MAX_CENTROIDS,
-) -> tuple[td.TDigest, int]:
-    """Merge chunk digests to one global sketch via RDD treeAggregate."""
-    chunks = chunk_digests(df, column, partition_col=partition_col, max_centroids=max_centroids)
-    rows = chunks.select("tdigest", "n").rdd
-
-    def seq(acc, row):
-        d, n = acc
-        return td.merge([d, td.deserialize(bytes(row["tdigest"]))], max_centroids), n + int(row["n"])
-
-    def comb(a, b):
-        return td.merge([a[0], b[0]], max_centroids), a[1] + b[1]
-
-    zero = (td.TDigest(np.empty(0), np.empty(0)), 0)
-    return rows.treeAggregate(zero, seq, comb, depth=2)
-
-
 def make_baseline(
     spark: SparkSession,
     df: DataFrame,
@@ -186,23 +143,6 @@ def drift_violations_multi(
     # pandas labels and crash inside the executor.
     columns = list(dict.fromkeys(c for _, c, *_ in rules))
     chunks = chunk_digests(df, columns, partition_col=partition_col)
-    return score_chunk_digests(chunks, baseline, rules)
-
-
-def score_chunk_digests(
-    chunks: DataFrame,
-    baseline: DataFrame,
-    rules: list[tuple[str, str, float]],
-) -> DataFrame:
-    """Merge pre-computed chunk digests per (partition, column) and score
-    them against the baseline snapshot. Split out from
-    :func:`drift_violations_multi` because digest merging is ASSOCIATIVE:
-    any accumulation of chunk rows works — one batch pass (the batch
-    engine), or micro-batch sketch rows appended over days by a stream
-    (streaming/incremental.py::cumulative_drift_violations) — without ever
-    rescanning the underlying data."""
-    columns = list(dict.fromkeys(c for _, c, *_ in rules))
-    chunks = chunks.filter(F.col("column_name").isin(columns))
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
         digs = [td.deserialize(b) for b in pdf["tdigest"]]
@@ -273,21 +213,6 @@ def score_chunk_digests(
                 F.col("column_name"), F.lit(" w1="), F.round(F.col("w1"), 4).cast("string")
             ).alias("observed"),
         )
-    )
-
-
-def drift_violations(
-    df: DataFrame,
-    baseline: DataFrame,
-    rule_id: str,
-    column: str,
-    *,
-    threshold: float = 0.25,
-    partition_col: str = "partition",
-) -> DataFrame:
-    """Single-column wrapper over :func:`drift_violations_multi`."""
-    return drift_violations_multi(
-        df, baseline, [(rule_id, column, threshold)], partition_col=partition_col
     )
 
 

@@ -16,7 +16,8 @@ touches the driver. Decode support is tiered:
   "error is data, not an exception" convention.
 
 Audio-PCM decode is NOT stubbed anywhere in this repo: the vectorized
-decode/validate path lives in operators/audio.py (pandas UDF, SNR gate).
+decode/validate path lives in operators/audio.py (the mapInPandas wide
+pass, SNR gate).
 """
 
 from __future__ import annotations
@@ -154,60 +155,11 @@ def extract_features(
     return cols.mapInPandas(run, schema=_FEATURES_SCHEMA)
 
 
-def frame_sample_plan(
-    media: DataFrame, *, every_ms: int = 1000, max_frames: int = 32
-) -> DataFrame:
-    """Video frame-sampling plan: (media_id, frame_idx, ts_ms) rows derived
-    from metadata only — JVM expressions, no decode. The downstream decode
-    of each planned frame goes through ``extract_features``."""
-    dur = F.coalesce(F.element_at(F.col("meta"), "dur_ms").cast("long"), F.lit(0))
-    # ceil, not floor+1: every planned ts must be < dur_ms (a video's valid
-    # range is [0, dur)) — floor+1 planned a frame AT dur_ms whenever the
-    # duration was divisible by every_ms, and one frame for dur_ms=0/unknown
-    # metadata; ceil plans zero frames there instead.
-    n = F.least(F.ceil(dur / F.lit(every_ms)), F.lit(max_frames))
-    # Guard n >= 1: sequence(0, -1) DESCENDS (Spark defaults step -1 when
-    # stop < start), so bad metadata (negative dur_ms) would plan bogus
-    # negative-timestamp frames instead of zero frames.
-    idxs = F.when(n >= 1, F.sequence(F.lit(0), n - 1)).otherwise(
-        F.array().cast("array<long>")
-    )
-    return media.filter(F.col("media_type") == "video").select(
-        "media_id",
-        F.posexplode(F.transform(idxs, lambda i: i * every_ms)).alias(
-            "frame_idx", "ts_ms"
-        ),
-    )
-
-
-def synthetic_media_df(spark, n_rows: int, *, seed: str = "media") -> DataFrame:
-    """Deterministic media fixture (payload = hash-derived pseudo-bytes)."""
-    df = spark.range(n_rows)
-    h = F.xxhash64(F.col("id"), F.lit(seed))
-    mtype = F.element_at(
-        F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-        (F.pmod(h, F.lit(3)) + 1).cast("int"),
-    )
-    payload = F.when(
-        F.pmod(h, F.lit(97)) == 0, F.lit(None).cast("binary")
-    ).otherwise(F.encode(F.concat(F.lit("blob_"), F.conv(F.abs(h).cast("string"), 10, 16)), "UTF-8"))
-    return df.select(
-        F.concat(F.lit("m_"), F.col("id").cast("string")).alias("media_id"),
-        mtype.alias("media_type"),
-        payload.alias("payload"),
-        F.create_map(
-            F.lit("dur_ms"), (F.pmod(h, F.lit(30000)) + 500).cast("string")
-        ).alias("meta"),
-        F.format_string("p%02d", F.pmod(h, F.lit(16)).cast("int")).alias("partition"),
-    )
-
-
 def portable_media_df(docs: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
     """Media fixture with ENGINE-PORTABLE synthesis (MEDIA_SCHEMA shape).
 
-    Same contract as :func:`synthetic_media_df` but every derived field is
-    md5-prefix arithmetic over an existing id column (the portable-hash
-    family the MinHash/LSH oracles use) instead of xxhash64, so a DuckDB
+    Every derived field is md5-prefix arithmetic over an existing id column
+    (the portable-hash family the MinHash/LSH oracles use), so a DuckDB
     oracle can recompute media_type / NULL-payload routing / n_bytes
     analytically and value-check ``extract_features``'s error-as-data
     contract end-to-end (queries.media_feature_extract). Payload text is

@@ -49,13 +49,6 @@ def sample_mark(id_col: str, rate: float, *, seed: str = "s0") -> Column:
     return _keyed_hash(id_col, seed) < F.lit(_rate_threshold(rate))
 
 
-def deterministic_sample(
-    df: DataFrame, *, id_col: str, rate: float, seed: str = "s0"
-) -> DataFrame:
-    """Uniform deterministic sample: keep rows whose keyed hash < rate."""
-    return df.filter(sample_mark(id_col, rate, seed=seed))
-
-
 def stratified_sample(
     df: DataFrame,
     *,
@@ -125,8 +118,7 @@ def mix_plan(
     an EXPECTED k_d = w_d * T // 10000 rows via hash threshold
     (k_d << 32) // n_d — the threshold (and therefore the kept row SET) is
     deterministic, but the realized count is binomial around k_d
-    (deviation O(sqrt(k)); see deterministic_sample's "kept fraction ≈
-    rate"), so 'keep' is a target, not a guarantee.
+    (deviation O(sqrt(k))), so 'keep' is a target, not a guarantee.
     All-integer (Python bigints — no 64-bit overflow), so the DuckDB
     oracle reproduces it bit-for-bit with HUGEINT arithmetic.
     """

@@ -217,9 +217,7 @@ def build_ivf_index(
     the n_lists × dim list the probe step needs. Splitting build from
     search is how an index is actually used at scale — the corpus-side
     k-means + assignment pass runs ONCE, then any number of query batches
-    probe it (see :func:`save_ivf_index` / :func:`load_ivf_index` for the
-    persisted form, partitioned by cell so a probe that filters on cells
-    prunes file partitions)."""
+    probe it."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -229,27 +227,6 @@ def build_ivf_index(
     assigned = model.transform(ml_df).select("_vid", "_vv", F.col("prediction").alias("_cell"))
     centroids = [c.tolist() for c in model.clusterCenters()]
     return assigned, centroids
-
-
-def save_ivf_index(assigned: DataFrame, centroids: list[list[float]], path: str) -> None:
-    """Persist the inverted file partitioned by cell + the centroid table.
-
-    Cell partitioning means a search that probes few cells reads few file
-    partitions (PartitionFilters at the scan). Centroids are a tiny
-    n_lists-row parquet — no JSON sidecar, same reader everywhere."""
-    assigned.write.mode("overwrite").partitionBy("_cell").parquet(f"{path}/cells")
-    spark = assigned.sparkSession
-    rows = [(i, c) for i, c in enumerate(centroids)]
-    spark.createDataFrame(rows, "cell int, centroid array<double>").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/centroids")
-
-
-def load_ivf_index(spark, path: str) -> tuple[DataFrame, list[list[float]]]:
-    """Inverse of :func:`save_ivf_index`."""
-    assigned = spark.read.parquet(f"{path}/cells")
-    cent_rows = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
-    return assigned, [list(r["centroid"]) for r in cent_rows]
 
 
 def ivf_search(

@@ -1,61 +1,13 @@
-"""Mergeable cardinality sketches (Apache DataSketches HLL, built into
-Spark 4 as ``hll_sketch_agg`` / ``hll_union_agg`` / ``hll_sketch_estimate``).
-
-Exact count(DISTINCT) reshuffles every distinct key; at 10^12 rows a
-per-partition HLL sketch (fixed ~KB regardless of cardinality) merges up
-the tree instead — the same shuffle-only-sketches design as the t-digest
-drift operator. Estimates are within ~1.6% at lgk=12 (per the DataSketches
-error bounds), and sketches persisted per partition can be re-merged later
-without touching the rows again (incremental daily rollups).
+"""Heavy-hitter keys: exact counts of every key above a share threshold,
+found through a bounded Misra–Gries candidate sketch instead of a shuffle
+of the full distinct-key set (same shuffle-only-sketches design as the
+t-digest drift operator).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-DEFAULT_LGK = 12  # 2^12 buckets: ~1.6% relative standard error
-
-
-def approx_distinct_by(
-    df: DataFrame,
-    key_col: str,
-    *,
-    by: str | None = None,
-    lgk: int = DEFAULT_LGK,
-) -> DataFrame:
-    """(by?, n_distinct_est) via HLL sketches — one shuffle of ≤KB sketches.
-
-    ``by=None`` returns a single global row."""
-    grouped = df.groupBy(by) if by else df.groupBy()
-    out = grouped.agg(
-        F.hll_sketch_estimate(F.hll_sketch_agg(key_col, F.lit(lgk))).alias(
-            "n_distinct_est"
-        )
-    )
-    return out
-
-
-def partition_sketches(
-    df: DataFrame, key_col: str, *, partition_col: str = "partition", lgk: int = DEFAULT_LGK
-) -> DataFrame:
-    """(partition, sketch binary): persistable per-partition sketches that
-    re-merge later without rescanning rows (see :func:`merge_sketches`)."""
-    return df.groupBy(partition_col).agg(
-        F.hll_sketch_agg(key_col, F.lit(lgk)).alias("sketch")
-    )
-
-
-def merge_sketches(sketches: DataFrame, *, sketch_col: str = "sketch") -> int:
-    """Union previously-persisted sketches into one global estimate.
-
-    Zero sketch rows (empty/filtered state table) estimate 0 distinct —
-    hll_union_agg returns NULL there, which would TypeError on int()."""
-    row = sketches.agg(
-        F.hll_sketch_estimate(F.hll_union_agg(sketch_col)).alias("n")
-    ).collect()[0]
-    return int(row["n"]) if row["n"] is not None else 0
-
 
 def heavy_hitters(
     df: DataFrame,

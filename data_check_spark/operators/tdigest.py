@@ -95,26 +95,6 @@ def quantile(d: TDigest, q: float) -> float:
     return float(np.interp(target, cum, d.means))
 
 
-def quantiles(d: TDigest, qs: list[float]) -> list[float]:
-    return [quantile(d, q) for q in qs]
-
-
-def cdf(d: TDigest, xs: np.ndarray) -> np.ndarray:
-    """Interpolated CDF at each x (inverse of :func:`quantile`, same
-    centroid-midpoint convention). Returns NaN for an empty digest."""
-    xs = np.asarray(xs, dtype=np.float64)
-    if d.is_empty():
-        return np.full(xs.shape, np.nan)
-    total = d.total_weight
-    if d.means.size == 1:
-        # Same conventions as the interpolated branch: NaN propagates, and
-        # x at the sole centroid mean sits at the midpoint (0.5), not 1.0.
-        out = np.where(xs < d.means[0], 0.0, np.where(xs > d.means[0], 1.0, 0.5))
-        return np.where(np.isnan(xs), np.nan, out)
-    cum = np.cumsum(d.weights) - d.weights / 2.0
-    return np.interp(xs, d.means, cum, left=0.0, right=total) / total
-
-
 def wasserstein(a: TDigest, b: TDigest, *, grid: int = 512) -> float:
     """Wasserstein-1 (earth-mover) distance between two digests via the
     quantile-space identity ``W1 = ∫₀¹ |Q_a(u) − Q_b(u)| du``, midpoint

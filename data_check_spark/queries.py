@@ -4472,9 +4472,8 @@ def compaction_plan_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-files compaction plan (operators/compaction.py): per-dir
     first-fit merge groups over a deterministic synthetic file inventory —
     group_id = cumulative-small-bytes div target, healthy files kept.
-    The inventory itself normally comes from file_inventory's _metadata
-    scan (unit-tested against pyarrow); here it is md5-derived so DuckDB
-    replays the identical greedy walk."""
+    The inventory is md5-derived so DuckDB replays the identical greedy
+    walk."""
     from data_check_spark.operators import compaction as _cp
 
     return _cp.compaction_plan(

@@ -130,16 +130,6 @@ def export_csv(df: DataFrame, path: str, *, single_file: bool = True) -> None:
                 os.remove(crc)
 
 
-def summary_df(violations: DataFrame, *, series_col: str = "series") -> DataFrame:
-    """Per-key violation counts ordered by key (reference value_counts,
-    data_check.py:1186-1215). The top-5-rules view lives in
-    ``engine.ValidationResult.summary()``; use :func:`top_rules` for the
-    DataFrame form."""
-    key = series_col if series_col in violations.columns else "rule_id"
-    per_key = violations.groupBy(key).agg(F.count(F.lit(1)).alias("n")).orderBy(key)
-    return per_key
-
-
 def top_rules(violations: DataFrame, k: int | None = 5) -> DataFrame:
     """Top-k rules by violation count (reference nlargest; count desc,
     rule_id asc tie-break). ``k=None`` returns the full ranked summary."""

@@ -231,53 +231,3 @@ def load_catalog(path_or_list: str | list[dict[str, Any]]) -> RuleCatalog:
     else:
         raw = path_or_list
     return RuleCatalog([Rule(**item) for item in raw])
-
-
-def _rule_column_refs(rule: Rule, known_columns: set[str]) -> set[str]:
-    """Columns a rule watches: explicit fields first, then a whole-word scan
-    of its SQL/template strings against the table's actual column names
-    (never a general SQL parse — `known_columns` bounds false positives)."""
-    import re as _re
-
-    refs: set[str] = set()
-    if rule.column and rule.column in known_columns:
-        refs.add(rule.column)
-    for key in ("columns", "determinant", "group_by", "fact_key"):
-        v = rule.params.get(key)
-        names = [v] if isinstance(v, str) else (v or [])
-        refs.update(n for n in names if n in known_columns)
-    texts = [rule.gate or "", rule.params.get("expr", ""),
-             rule.params.get("template", ""), rule.params.get("predicate", "")]
-    for text in texts:
-        if not text:
-            continue
-        for name in known_columns:
-            if _re.search(rf"\b{_re.escape(name)}\b", text):
-                refs.add(name)
-    return refs
-
-
-def catalog_coverage(catalog: RuleCatalog, columns: list[str]) -> list[dict[str, Any]]:
-    """Which table columns does this catalog actually watch? — the meta-audit
-    that finds the BLIND SPOTS (a column no rule references can rot without
-    any violation ever firing; the reference has no equivalent — unwatched
-    columns are simply invisible there).
-
-    Driver-side metadata only (no Spark job). One dict per table column:
-    ``{"column", "n_rules", "rule_ids" (sorted), "covered"}``, in the given
-    column order. Gate-only references count as coverage — a gate read IS a
-    dependency on the column's correctness."""
-    per: dict[str, list[str]] = {c: [] for c in columns}
-    known = set(columns)
-    for rule in catalog:
-        for c in _rule_column_refs(rule, known):
-            per[c].append(rule.rule_id)
-    return [
-        {
-            "column": c,
-            "n_rules": len(per[c]),
-            "rule_ids": sorted(per[c]),
-            "covered": bool(per[c]),
-        }
-        for c in columns
-    ]

@@ -93,10 +93,6 @@ CHECKPOINT_SCHEMA = T.StructType(
 )
 
 
-class SchemaMismatch(Exception):
-    """Raised when an input DataFrame does not match the pinned schema."""
-
-
 def validate_schema(df: DataFrame, expected: T.StructType, *, strict_nullability: bool = False) -> list[str]:
     """Compare ``df.schema`` to ``expected``; return a list of problems.
 
@@ -120,9 +116,3 @@ def validate_schema(df: DataFrame, expected: T.StructType, *, strict_nullability
         if strict_nullability and f.nullable is False and a.nullable:
             problems.append(f"nullability mismatch on {f.name}: expected NOT NULL")
     return problems
-
-
-def require_schema(df: DataFrame, expected: T.StructType) -> None:
-    problems = validate_schema(df, expected)
-    if problems:
-        raise SchemaMismatch("; ".join(problems))

@@ -19,7 +19,7 @@ Scale contract (the reasons behind each default):
   one-file-one-task and must never be the corpus path.
 * **PERMISSIVE + corrupt-record column.** A bad line lands raw in
   ``corrupt_col`` with every schema field NULL; clean lines carry NULL
-  there. ``split_corrupt`` routes the two classes without a second read.
+  there, so one filter on it routes the two classes without a second read.
   (FAILFAST would kill a 1000-executor job on one bad byte;
   DROPMALFORMED silently loses data — both wrong for curation, where the
   reject stream is itself an input to quality monitoring.)
@@ -28,9 +28,9 @@ Scale contract (the reasons behind each default):
   the native source disallows any plan that reads only the corrupt-record
   column (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN), which is
   exactly what a reject-stream writer does.
-* **Required-column refusal** mirrors the CSV/xlsx sources: a corpus file
-  missing a contracted field raises :class:`MissingColumnsError` up front
-  rather than producing all-NULL columns downstream.
+* **Required-column refusal:** a corpus file missing a contracted field
+  raises :class:`MissingColumnsError` up front rather than producing
+  all-NULL columns downstream.
 """
 
 from __future__ import annotations
@@ -39,9 +39,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from data_check_spark.sources.files import MissingColumnsError
-
 DEFAULT_CORRUPT_COL = "_corrupt_record"
+
+
+class MissingColumnsError(ValueError):
+    def __init__(self, path: str, missing: list[str]):
+        self.missing = missing
+        super().__init__(f"{path}: missing required columns {missing}")
 
 
 def _resolve_schema(
@@ -61,20 +65,6 @@ def _resolve_schema(
     )
 
 
-def _parse_lines(lines: DataFrame, full: T.StructType, corrupt_col: str) -> DataFrame:
-    return (
-        lines.filter(F.trim("value") != "")
-        .select(
-            F.from_json(
-                "value",
-                full,
-                {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": corrupt_col},
-            ).alias("_j")
-        )
-        .select("_j.*")
-    )
-
-
 def read_jsonl(
     spark: SparkSession,
     path: str,
@@ -90,46 +80,15 @@ def read_jsonl(
     lines are skipped (the native JSON source's behavior).
     """
     full = _resolve_schema(path, schema, required_columns, corrupt_col)
-    return _parse_lines(spark.read.text(path), full, corrupt_col)
-
-
-def stream_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | str,
-    *,
-    required_columns: list[str] | None = None,
-    corrupt_col: str = DEFAULT_CORRUPT_COL,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming twin of :func:`read_jsonl` over a landing directory.
-
-    Corpus deliveries land as JSONL file drops; this turns them into a
-    Structured Streaming source with identical parse semantics — same
-    schema handling, same corrupt-record routing — so the downstream rule
-    projection / quality monitoring built for the batch frame runs
-    unchanged on arrivals (one parse contract, two runtimes, mirroring
-    streaming/incremental.py's design). ``max_files_per_trigger`` bounds
-    per-micro-batch work during backlog catch-up."""
-    full = _resolve_schema(path, schema, required_columns, corrupt_col)
-    reader = spark.readStream
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return _parse_lines(reader.text(path), full, corrupt_col)
-
-
-def split_corrupt(
-    df: DataFrame, *, corrupt_col: str = DEFAULT_CORRUPT_COL
-) -> tuple[DataFrame, DataFrame]:
-    """(clean, rejects) from one :func:`read_jsonl` frame.
-
-    ``clean`` drops the corrupt column; ``rejects`` is
-    ``(raw string, n_bytes long)`` — the quarantine stream feeding the same
-    monitoring tables as the engine's quarantine split. One scan feeds both
-    when the caller materializes the parent (the plans share the source)."""
-    clean = df.filter(F.col(corrupt_col).isNull()).drop(corrupt_col)
-    rejects = df.filter(F.col(corrupt_col).isNotNull()).select(
-        F.col(corrupt_col).alias("raw"),
-        F.octet_length(corrupt_col).cast("long").alias("n_bytes"),
+    return (
+        spark.read.text(path)
+        .filter(F.trim("value") != "")
+        .select(
+            F.from_json(
+                "value",
+                full,
+                {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": corrupt_col},
+            ).alias("_j")
+        )
+        .select("_j.*")
     )
-    return clean, rejects

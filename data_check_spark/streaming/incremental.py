@@ -68,19 +68,6 @@ def stream_clips(
     )
 
 
-def streaming_violations(
-    stream: DataFrame,
-    catalog: RuleCatalog,
-    *,
-    run_ts: str,
-    partition_col: str = "partition",
-) -> DataFrame:
-    """Stateless row-local rules applied to the stream (same compiler as
-    batch — one rule catalog, two runtimes)."""
-    compiled = compile_row_rules(catalog.row_local, run_ts)
-    return apply_row_rules(stream, compiled, partition_col=partition_col)
-
-
 def streaming_violations_with_ts(
     stream: DataFrame,
     catalog: RuleCatalog,
@@ -255,105 +242,3 @@ def start_incremental_validation(
         writer = writer.trigger(availableNow=True)
     return writer.start()
 
-
-# ---------------------------------------------------------------------------
-# Cumulative drift via sketch accumulation
-# ---------------------------------------------------------------------------
-
-
-def start_drift_sketch_stream(
-    spark: SparkSession,
-    input_dir: str,
-    state_dir: str,
-    columns: list[str],
-    *,
-    checkpoint_dir: str,
-    partition_col: str = "partition",
-    trigger_once: bool = False,
-    schema: T.StructType = STREAM_CLIPS_SCHEMA,
-    max_files_per_trigger: int = 16,
-):
-    """Accumulate per-micro-batch t-digest chunk sketches into a tiny
-    append-only parquet state table — the streaming leg of the drift rule.
-
-    Each batch contributes O(tasks × partitions-per-task) sketch rows
-    (≤2KB each) for the monitored ``columns``; the DATA is touched exactly
-    once, on arrival. Because digest merging is associative, the cumulative
-    stream distribution at any moment is just a merge over all accumulated
-    rows (:func:`cumulative_drift_violations`) — no re-scan of history,
-    which is the only workable shape at 10^12-row scale."""
-    from data_check_spark.operators.drift import chunk_digests
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # Idempotent replay (same pattern as the violations sink): a
-        # re-delivered batch overwrites its own batch_id partition — an
-        # APPENDED duplicate would be merged twice by
-        # cumulative_drift_violations and double-weight this batch's data.
-        (
-            chunk_digests(batch_df, columns, partition_col=partition_col)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{state_dir}/drift_sketches")
-        )
-
-    stream = stream_clips(
-        spark, input_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
-    )
-    writer = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def cumulative_drift_violations(
-    spark: SparkSession,
-    state_dir: str,
-    baseline: DataFrame,
-    rules: list[tuple[str, str, float]],
-) -> DataFrame:
-    """Score the stream-to-date distribution against the baseline snapshot:
-    merge every accumulated sketch row per (partition, column) and apply the
-    same W1 scoring as the batch drift rule — identical violation contract,
-    zero re-reads of clip data. ``rules`` is [(rule_id, column, threshold)]
-    exactly as in :func:`~data_check_spark.operators.drift.drift_violations_multi`."""
-    from data_check_spark.operators.drift import score_chunk_digests
-
-    chunks = spark.read.parquet(f"{state_dir}/drift_sketches")
-    return score_chunk_digests(chunks, baseline, rules)
-
-
-def freshness_monitor(
-    stream: DataFrame,
-    *,
-    key_col: str = "partition",
-    ts_col: str = "event_ts",
-) -> DataFrame:
-    """Streaming per-feed freshness state: the latest event time each feed
-    has ever produced, updated every micro-batch.
-
-    The streaming face of ``anomaly.freshness_audit``: batch answers "how
-    stale was feed X at the pinned audit instant"; this keeps a live
-    ``(key, last_ts, n_rows)`` state the sink can diff against the clock
-    (staleness = sink-side now − last_ts; the alert threshold lives with
-    the consumer, so the state itself stays deterministic and replayable).
-
-    A running MAX per feed is tiny bounded state (one timestamp per feed),
-    so no watermark is needed or wanted: a watermark here would EVICT the
-    state of a quiet feed — and a quiet feed is exactly the one the
-    monitor exists to expose. Use ``outputMode('complete')`` (or 'update')
-    — the aggregate re-emits per batch."""
-    return (
-        stream.filter(F.col(key_col).isNotNull() & F.col(ts_col).isNotNull())
-        .groupBy(F.col(key_col))
-        .agg(
-            F.max(ts_col).alias("last_ts"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-    )

@@ -4,7 +4,11 @@ consistency check, innosite.py:263-312) and transcript byte-equality."""
 import numpy as np
 
 from data_check_spark.functions.pcm import ref_freq, snr_db, synth_wave
-from data_check_spark.operators.audio import audio_snr_violations, transcript_match_violations
+from data_check_spark.operators.audio import (
+    prepare_clips,
+    snr_column_violations,
+    transcript_match_violations,
+)
 
 CAP_MS = 100
 
@@ -61,7 +65,8 @@ def _clips(spark):
 
 def test_audio_snr_violations(spark):
     # clip bb's payload was synthesized for clip aa → SNR fails for bb.
-    out = audio_snr_violations(_clips(spark), "SNR", cap_ms=CAP_MS).collect()
+    # Same path as the engine's audio_decode rule: wide pass, then the rule.
+    out = snr_column_violations(prepare_clips(_clips(spark), cap_ms=CAP_MS), "SNR").collect()
     got = {r["clip_id"] for r in out}
     assert got == {
         "clip_00000000000000bb",
@@ -221,66 +226,3 @@ def test_augmentation_plan_guards(spark):
         augmentation_plan(clips, n_variants=0)
     with pytest.raises(ValueError):
         augmentation_plan(clips, snr_min_db=10, snr_max_db=10)
-
-
-def test_spectral_features_pure_tone_physics(spark):
-    """Independent physics checks: a pure tone's centroid sits at the tone
-    frequency; an 8 kHz-bandlimited signal has no mel energy above 4 kHz."""
-    import numpy as np
-
-    sr, n_fft, n_mels = 16000, 512, 16
-    t = np.arange(sr)  # 1 second
-    tone = (10000 * np.sin(2 * np.pi * 2000.0 * n_fft / sr * t / n_fft)).astype(np.int16)
-    # exact bin: 2000 Hz = bin 64 of 512 @ 16 kHz → rectangular window is leak-free
-    low = (10000 * np.sin(2 * np.pi * 500.0 * t / sr)).astype(np.int16)
-    rows = [
-        ("tone2k", tone.tobytes(), sr),
-        ("low500", low.tobytes(), sr),
-        ("empty", b"", sr),
-        ("null", None, sr),
-    ]
-    df = spark.createDataFrame(rows, "clip_id string, bytes binary, sr_hz int")
-    from data_check_spark.operators.audio import spectral_features
-
-    out = {r["clip_id"]: r for r in spectral_features(df, n_mels=n_mels, n_fft=n_fft).collect()}
-
-    assert abs(out["tone2k"]["centroid_hz"] - 2000.0) < 40.0
-    assert abs(out["low500"]["centroid_hz"] - 500.0) < 40.0
-    assert out["tone2k"]["n_frames"] == sr // n_fft
-
-    # bandwidth: the 500 Hz signal's high-band mel energy is ~floor while the
-    # 2 kHz tone puts its energy in a higher band
-    mel_low = out["low500"]["log_mel"]
-    assert len(mel_low) == n_mels
-    top_band_low = max(range(n_mels), key=lambda k: mel_low[k])
-    top_band_tone = max(range(n_mels), key=lambda k: out["tone2k"]["log_mel"][k])
-    assert top_band_tone > top_band_low
-
-    assert out["empty"]["n_frames"] == 0 and out["empty"]["log_mel"] is None
-    assert out["null"]["n_frames"] == 0 and out["null"]["centroid_hz"] is None
-
-
-def test_spectral_features_parseval(spark):
-    """Parseval: mean per-bin power over rfft bins reconstructs frame energy
-    (within float tolerance) — an independent check the FFT path is wired
-    right, not a copy of the implementation."""
-    import numpy as np
-
-    rng_free = (np.arange(2048) * 2654435761 % 65536 - 32768).astype(np.int16)
-    sr, n_fft = 8000, 256
-    df = spark.createDataFrame(
-        [("x", rng_free.tobytes(), sr)], "clip_id string, bytes binary, sr_hz int"
-    )
-    from data_check_spark.operators.audio import spectral_features
-
-    row = spectral_features(df, n_fft=n_fft).collect()[0]
-    x = rng_free.astype(np.float64)
-    frames = x.size // n_fft
-    seg = x[: frames * n_fft].reshape(frames, n_fft)
-    # Parseval for rfft: sum |X_k|^2 (with conjugate-symmetric doubling of
-    # interior bins) = n_fft * sum x^2
-    spec = np.abs(np.fft.rfft(seg, axis=1)) ** 2
-    doubled = spec.copy()
-    doubled[:, 1:-1] *= 2
-    assert np.allclose(doubled.sum(axis=1), n_fft * (seg ** 2).sum(axis=1), rtol=1e-9)
-    assert row["n_frames"] == frames

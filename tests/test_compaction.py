@@ -1,33 +1,11 @@
-"""Storage-layout ops: _metadata file inventory + compaction planning."""
-
-import glob
-import os
+"""Storage-layout ops: compaction planning."""
 
 import pytest
 
 from data_check_spark.operators.compaction import (
     compaction_plan,
     compaction_summary,
-    file_inventory,
 )
-
-
-def test_file_inventory_matches_pyarrow(spark, tmp_path):
-    import pyarrow.parquet as pq
-
-    path = str(tmp_path / "ds")
-    spark.range(1000).selectExpr("id", "id % 7 AS v").repartition(4).write.parquet(path)
-    inv = {r["file_name"]: (r["file_size"], r["n_rows"]) for r in
-           file_inventory(spark, path).collect()}
-    files = glob.glob(f"{path}/*.parquet")
-    assert len(inv) == len(files)
-    total = 0
-    for f in files:
-        name = os.path.basename(f)
-        assert inv[name][0] == os.path.getsize(f)
-        assert inv[name][1] == pq.ParquetFile(f).metadata.num_rows
-        total += inv[name][1]
-    assert total == 1000
 
 
 def _plan_rows(spark, rows, **kw):

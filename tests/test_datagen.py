@@ -6,7 +6,6 @@ from data_check_spark.datagen import (
     HOT_PARTITION,
     N_PARTITIONS,
     clips_df,
-    rows_for_sf,
     transcripts_df,
 )
 
@@ -74,12 +73,6 @@ def test_transcripts_dim_relations(spark):
     )
     frac = joined.filter("eq").count() / max(joined.count(), 1)
     assert frac > 0.95
-
-
-def test_rows_for_sf():
-    assert rows_for_sf(0.001) == 10_000
-    assert rows_for_sf(0.1) == 1_000_000
-    assert rows_for_sf(0.0000001) == 1000  # floor
 
 
 def test_docs_df_deterministic_with_planted_dups(spark):

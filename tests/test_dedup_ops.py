@@ -140,15 +140,6 @@ def test_ngram_stop_shingle_cap(spark):
     assert abs(got[(100, 101)] - expected) <= 5e-5  # q4 rounding half-step
 
 
-def test_stop_shingles_reported(spark):
-    from data_check_spark.operators.dedup import stop_shingles
-
-    rows = [(i, "SAMEPREFIX" + str(i) * 20) for i in range(40)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    stopped = stop_shingles(docs, max_df=16).collect()
-    assert any(r["s"] == "SAMEPREF" and r["df"] == 40 for r in stopped)
-
-
 def test_minhash_estimate_error_vs_exact_jaccard(spark):
     """Quantified quality gate for the MinHash path: on candidate pairs the
     64-permutation estimate must track the exact n-gram Jaccard closely

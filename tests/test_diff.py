@@ -2,7 +2,7 @@
 
 import pytest
 
-from data_check_spark.operators.diff import diff_summary, snapshot_diff
+from data_check_spark.operators.diff import snapshot_diff
 
 
 def _df(spark, rows):
@@ -17,9 +17,6 @@ def test_snapshot_diff_classification(spark):
     # 1 removed, 2 identical (absent), 3 changed, 4 identical-with-NULL
     # (absent), 5 added
     assert got == {1: "removed", 3: "changed", 5: "added"}
-    summary = {r.change_type: r.n_keys for r in diff_summary(
-        snapshot_diff(old, new, key_cols=["k"], compare_cols=["a", "b"])).collect()}
-    assert summary == {"removed": 1, "changed": 1, "added": 1}
 
 
 def test_snapshot_diff_null_position_matters(spark):
@@ -106,19 +103,6 @@ def test_snapshot_diff_fingerprints_fold_before_join(spark):
     # md5 per side = 6 total below the join
     head, _, below = plan.partition("Join")
     assert "md5" not in head and below.count("md5") == 6
-
-
-def test_schema_diff(spark):
-    from data_check_spark.operators.diff import schema_diff
-
-    old = spark.createDataFrame([(1, "a", 2.0)], "k long, a string, x double")
-    new = spark.createDataFrame([(1, 2, True)], "k long, a int, b boolean")
-    assert schema_diff(old, new) == [
-        {"column": "a", "change": "type_changed", "old_type": "string", "new_type": "int"},
-        {"column": "b", "change": "added", "old_type": None, "new_type": "boolean"},
-        {"column": "x", "change": "removed", "old_type": "double", "new_type": None},
-    ]
-    assert schema_diff(old, old) == []
 
 
 def test_summary_regression(spark):

@@ -3,13 +3,8 @@
 import numpy as np
 from pyspark.sql import functions as F
 
-from data_check_spark.operators.drift import (
-    drift_violations,
-    global_digest,
-    make_baseline,
-    partition_digests,
-)
 from data_check_spark.operators import tdigest as td
+from data_check_spark.operators.drift import GLOBAL_KEY, drift_violations_multi, make_baseline
 
 
 def _table(spark, shift_parts=()):
@@ -24,9 +19,10 @@ def _table(spark, shift_parts=()):
 
 def test_partition_digests(spark):
     df = _table(spark)
-    out = partition_digests(df, "dur_ms").collect()
+    out = make_baseline(spark, df, ["dur_ms"]).filter(F.col("partition") != GLOBAL_KEY).collect()
     assert len(out) == 6
     for r in out:
+        assert r["column_name"] == "dur_ms"
         assert r["n"] == 400
         d = td.deserialize(bytes(r["tdigest"]))
         assert 4000 < td.quantile(d, 0.5) < 6000
@@ -34,16 +30,16 @@ def test_partition_digests(spark):
 
 def test_global_digest_treeaggregate(spark):
     df = _table(spark)
-    g, n = global_digest(df, "dur_ms")
-    assert n == 2400
-    assert 4500 < td.quantile(g, 0.5) < 5500
+    (row,) = make_baseline(spark, df, ["dur_ms"]).filter(F.col("partition") == GLOBAL_KEY).collect()
+    assert row["n"] == 2400
+    assert 4500 < td.quantile(td.deserialize(bytes(row["tdigest"])), 0.5) < 5500
 
 
 def test_drift_flags_shifted_partition(spark):
     clean = _table(spark)
     baseline = make_baseline(spark, clean, ["dur_ms"])
     current = _table(spark, shift_parts={"p2", "p4"})
-    out = drift_violations(current, baseline, "DRIFT", "dur_ms", threshold=0.25).collect()
+    out = drift_violations_multi(current, baseline, [("DRIFT", "dur_ms", 0.25)]).collect()
     assert {r["partition"] for r in out} == {"p2", "p4"}
     assert all(r["clip_id"] is None for r in out)
 
@@ -51,7 +47,7 @@ def test_drift_flags_shifted_partition(spark):
 def test_drift_clean_passes(spark):
     clean = _table(spark)
     baseline = make_baseline(spark, clean, ["dur_ms"])
-    out = drift_violations(_table(spark), baseline, "DRIFT", "dur_ms", threshold=0.25).collect()
+    out = drift_violations_multi(_table(spark), baseline, [("DRIFT", "dur_ms", 0.25)]).collect()
     assert out == []
 
 
@@ -62,7 +58,7 @@ def test_drift_global_fallback(spark):
         (F.col("partition") != "p5") | (F.col("partition") == "__global__")
     )
     shifted = _table(spark, shift_parts={"p5"})
-    out = drift_violations(shifted, baseline, "DRIFT", "dur_ms", threshold=0.25).collect()
+    out = drift_violations_multi(shifted, baseline, [("DRIFT", "dur_ms", 0.25)]).collect()
     assert {r["partition"] for r in out} == {"p5"}
 
 
@@ -70,7 +66,7 @@ def test_drift_no_baseline_at_all_flags(spark):
     # missing baseline row AND no __global__ → NULL w1 → flagged (fail-closed)
     current = _table(spark)
     empty = make_baseline(spark, current, ["dur_ms"]).filter(F.lit(False))
-    out = drift_violations(current, empty, "DRIFT", "dur_ms").collect()
+    out = drift_violations_multi(current, empty, [("DRIFT", "dur_ms", 0.25)]).collect()
     assert len(out) == 6
 
 
@@ -86,13 +82,13 @@ def test_drift_discrete_knife_edge_not_flagged(spark):
     cur = spark.createDataFrame(cur_rows, "partition string, sr_hz double")
     # pX is absent from the baseline → compared against __global__ where the
     # median sits on the other side of the atom boundary
-    out = drift_violations(cur, baseline, "DRIFT", "sr_hz", threshold=0.25).collect()
+    out = drift_violations_multi(cur, baseline, [("DRIFT", "sr_hz", 0.25)]).collect()
     assert out == []
     # sanity: a LARGE flip of the same two atoms (30% of mass) IS drift and
     # does fire — proves the metric, not an insensitive threshold, held above
     big_rows = [("pY", 16000.0)] * 200 + [("pY", 44100.0)] * 800
     big = spark.createDataFrame(big_rows, "partition string, sr_hz double")
-    out_big = drift_violations(big, baseline, "DRIFT", "sr_hz", threshold=0.25).collect()
+    out_big = drift_violations_multi(big, baseline, [("DRIFT", "sr_hz", 0.25)]).collect()
     assert {r["partition"] for r in out_big} == {"pY"}
 
 
@@ -102,7 +98,7 @@ def test_drift_real_shift_flagged_w1(spark):
     clean = _table(spark)
     baseline = make_baseline(spark, clean, ["dur_ms"])
     shifted = _table(spark, shift_parts={"p1"})
-    out = drift_violations(shifted, baseline, "DRIFT", "dur_ms", threshold=0.25).collect()
+    out = drift_violations_multi(shifted, baseline, [("DRIFT", "dur_ms", 0.25)]).collect()
     assert {r["partition"] for r in out} == {"p1"}
     assert "w1=" in out[0]["observed"]
 
@@ -257,8 +253,6 @@ def test_two_drift_rules_same_column(spark):
     """Warn + error tiers can monitor ONE column: the sketch pass must not
     crash on the duplicate column and BOTH rules must score independently
     (the old per-column map was last-wins)."""
-    from data_check_spark.operators.drift import drift_violations_multi
-
     clean = _table(spark)
     baseline = make_baseline(spark, clean, ["dur_ms"])
     current = _table(spark, shift_parts={"p2"})

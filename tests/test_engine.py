@@ -9,11 +9,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_check_spark.datagen import (
+    CODECS,
     DRIFT_PARTITIONS,
     HOT_DUP_CLIP_ID,
     HOT_PARTITION,
     clips_df,
-    codec_whitelist_df,
     transcripts_df,
 )
 from data_check_spark.engine import run_validation
@@ -119,11 +119,23 @@ def test_checkpoint_resume(spark):
 
 
 def test_codec_whitelist_dim_consistent(spark):
-    wl = codec_whitelist_df(spark)
-    allowed = {r["codec"] for r in wl.filter("allowed").collect()}
-    from data_check_spark.datagen import CODECS
-
-    assert allowed == set(CODECS)
+    """The catalog's CODEC_WHITELIST value-set rule and a referential check
+    against a codec whitelist dim table flag the same clips."""
+    wl = spark.createDataFrame(
+        [(c, True) for c in CODECS] + [("wav", False), ("wma", False)],
+        "codec string, allowed boolean",
+    )
+    clips = clips_df(spark, 4000, with_bytes=False).filter(F.col("codec").isNotNull())
+    cat = RuleCatalog([
+        Rule("CODEC_WHITELIST", "value_in_set", "codec", {"allowed": CODECS}),
+        Rule("CODEC_FK", "referential", "codec",
+             {"dim": "codec_whitelist", "dim_key": "codec", "mode": "anti"}),
+    ])
+    res = run_validation(spark, clips, {"codec_whitelist": wl.filter("allowed")}, cat)
+    flagged = {}
+    for r in res.violations.filter(F.col("rule_id").startswith("CODEC_")).collect():
+        flagged.setdefault(r["rule_id"], set()).add(r["clip_id"])
+    assert flagged["CODEC_WHITELIST"] and flagged["CODEC_WHITELIST"] == flagged["CODEC_FK"]
 
 
 def test_conflicting_cap_ms_rejected(spark):

@@ -6,8 +6,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from data_check_spark.sources.files import MissingColumnsError
-from data_check_spark.sources.jsonl import read_jsonl, split_corrupt
+from data_check_spark.sources.jsonl import DEFAULT_CORRUPT_COL, MissingColumnsError, read_jsonl
 from data_check_spark.sources.media import read_media_dir
 
 DOC_SCHEMA = "doc_id bigint, lang string, text string"
@@ -20,11 +19,19 @@ def _write_jsonl(tmp_path, lines, name="part-0.jsonl"):
     return str(d)
 
 
+def _split(df):
+    """(clean rows, raw corrupt lines) of one read_jsonl frame."""
+    bad = F.col(DEFAULT_CORRUPT_COL).isNotNull()
+    return df.filter(~bad).drop(DEFAULT_CORRUPT_COL), df.filter(bad).select(
+        F.col(DEFAULT_CORRUPT_COL).alias("raw")
+    )
+
+
 def test_jsonl_clean_roundtrip(spark, tmp_path):
     rows = [{"doc_id": i, "lang": "en", "text": f"doc {i} body"} for i in range(5)]
     path = _write_jsonl(tmp_path, [json.dumps(r) for r in rows])
     df = read_jsonl(spark, path, DOC_SCHEMA)
-    clean, rejects = split_corrupt(df)
+    clean, rejects = _split(df)
     got = {(r.doc_id, r.lang, r.text) for r in clean.collect()}
     assert got == {(r["doc_id"], r["lang"], r["text"]) for r in rows}
     assert rejects.count() == 0
@@ -38,17 +45,16 @@ def test_jsonl_corrupt_lines_are_data_not_exceptions(spark, tmp_path):
         json.dumps({"doc_id": 3, "lang": "de", "text": "auch gut"}),
     ]
     path = _write_jsonl(tmp_path, lines)
-    clean, rejects = split_corrupt(read_jsonl(spark, path, DOC_SCHEMA))
+    clean, rejects = _split(read_jsonl(spark, path, DOC_SCHEMA))
     assert sorted(r.doc_id for r in clean.collect()) == [1, 3]
-    got_rejects = {(r.raw, r.n_bytes) for r in rejects.collect()}
-    assert got_rejects == {(lines[1], len(lines[1])), (lines[2], len(lines[2]))}
+    assert {r.raw for r in rejects.collect()} == {lines[1], lines[2]}
 
 
 def test_jsonl_missing_fields_are_null_not_corrupt(spark, tmp_path):
     # A valid JSON object missing schema fields parses with NULLs — only
     # malformed syntax lands in the corrupt column.
     path = _write_jsonl(tmp_path, ['{"doc_id": 7}'])
-    clean, rejects = split_corrupt(read_jsonl(spark, path, DOC_SCHEMA))
+    clean, rejects = _split(read_jsonl(spark, path, DOC_SCHEMA))
     row = clean.collect()[0]
     assert (row.doc_id, row.lang, row.text) == (7, None, None)
     assert rejects.count() == 0
@@ -135,34 +141,6 @@ def test_binaryfile_feeds_multimodal_features(spark, tmp_path):
     feats = extract_features(media)
     got = {r.media_id: r.ok for r in feats.collect()}
     assert got == {"a": True, "b": True, "c": True, "d": True}
-
-
-def test_jsonl_streaming_ingest(spark, tmp_path):
-    # Same parse contract streaming: two file drops, corrupt routing intact.
-    from data_check_spark.sources.jsonl import stream_jsonl
-
-    land = tmp_path / "landing"
-    land.mkdir()
-    (land / "drop1.jsonl").write_text(
-        json.dumps({"doc_id": 1, "lang": "en", "text": "a"}) + "\n" + "garbage\n"
-    )
-    (land / "drop2.jsonl").write_text(
-        json.dumps({"doc_id": 2, "lang": "fr", "text": "b"}) + "\n"
-    )
-    stream = stream_jsonl(spark, str(land), DOC_SCHEMA, max_files_per_trigger=1)
-    out = str(tmp_path / "parsed")
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(out)
-    clean, rejects = split_corrupt(got)
-    assert sorted(r.doc_id for r in clean.collect()) == [1, 2]
-    assert [r.raw for r in rejects.collect()] == ["garbage"]
 
 
 def test_provenance_multi_file_addresses(spark, tmp_path):

@@ -5,19 +5,19 @@ import pytest
 from data_check_spark.operators.multimodal import (
     FEATURE_DIM,
     extract_features,
-    frame_sample_plan,
-    synthetic_media_df,
+    portable_media_df,
 )
 
 
 @pytest.fixture(scope="module")
 def media(spark):
-    return synthetic_media_df(spark, 300)
+    ids = spark.createDataFrame([(i,) for i in range(400)], "doc_id long")
+    return portable_media_df(ids)
 
 
 def test_feature_extraction_contract(media):
     out = extract_features(media).collect()
-    assert len(out) == 300
+    assert len(out) == 400
     ok = [r for r in out if r["ok"]]
     bad = [r for r in out if not r["ok"]]
     assert ok and bad  # fixture plants some null payloads
@@ -38,28 +38,13 @@ def test_feature_determinism(media):
 
 def test_real_decoder_seam_is_error_as_data(spark, media):
     """decode_stub=False on payloads with no available decoder (the
-    synthetic fixture's pseudo-bytes) degrades to ok=false rows naming the
+    portable fixture's ``blob_`` text) degrades to ok=false rows naming the
     plug-in seam — never a job failure."""
     rows = extract_features(media.limit(5), decode_stub=False).collect()
     assert rows
     for r in rows:
         assert not r["ok"]
         assert r["error"] is not None
-
-
-def test_frame_sample_plan(spark):
-    media = synthetic_media_df(spark, 200)
-    plan = frame_sample_plan(media, every_ms=1000, max_frames=8)
-    rows = plan.collect()
-    assert rows
-    by_id = {}
-    for r in rows:
-        by_id.setdefault(r["media_id"], []).append((r["frame_idx"], r["ts_ms"]))
-    for frames in by_id.values():
-        idxs = [i for i, _ in sorted(frames)]
-        assert idxs == list(range(len(idxs)))
-        assert len(frames) <= 8
-        assert all(ts == i * 1000 for i, ts in frames)
 
 
 def _wav_bytes(sr=16000, dur_ms=250, freq=440.0, n_ch=1):
@@ -124,32 +109,12 @@ def test_non_wav_riff_goes_to_no_decoder_seam(spark):
     assert not r["ok"] and "no decoder" in r["error"]
 
 
-def test_frame_plan_bad_duration_plans_zero_frames(spark):
-    """Negative/garbage dur_ms metadata must plan ZERO frames — Spark's
-    sequence(0, -1) otherwise descends and emits negative timestamps."""
-    from data_check_spark.operators.multimodal import frame_sample_plan
-
-    media = spark.createDataFrame(
-        [("m1", "video", None, {"dur_ms": "-500"}),
-         ("m2", "video", None, {"dur_ms": "2500"})],
-        "media_id string, media_type string, payload binary, meta map<string,string>",
-    )
-    rows = frame_sample_plan(media).collect()
-    by_id = {}
-    for r in rows:
-        by_id.setdefault(r["media_id"], []).append((r["frame_idx"], r["ts_ms"]))
-    assert "m1" not in by_id
-    assert sorted(by_id["m2"]) == [(0, 0), (1, 1000), (2, 2000)]
-
-
 def test_portable_media_df_matches_python_md5(spark):
     """Engine-independent recompute of the portable fixture: hashlib-derived
     (media_type, NULL routing, payload length, partition) must equal the
     Spark columns — the same cross-check discipline as the portable LSH and
     audio-stats oracles."""
     import hashlib
-
-    from data_check_spark.operators.multimodal import portable_media_df
 
     ids = spark.createDataFrame([(i,) for i in range(400)], "doc_id long")
     rows = {r["media_id"]: r for r in portable_media_df(ids).collect()}
@@ -173,8 +138,6 @@ def test_portable_media_df_matches_python_md5(spark):
 def test_media_feature_extract_flags_null_payloads(spark):
     """The oracle-checked query shape: NULL payloads surface as error-data
     rows with n_bytes=0; everything else is ok with the analytic length."""
-    from data_check_spark.operators.multimodal import extract_features, portable_media_df
-
     ids = spark.createDataFrame([(i,) for i in range(400)], "doc_id long")
     out = extract_features(portable_media_df(ids)).collect()
     bad = [r for r in out if not r["ok"]]

@@ -60,29 +60,6 @@ def test_column_profile_group_by(spark, mixed_df):
     assert "grp" not in names and "id" in names
 
 
-def test_engine_profile_columns(spark):
-    from data_check_spark import datagen
-    from data_check_spark.engine import run_validation
-    from data_check_spark.rules.catalog_audio import audio_catalog
-    from data_check_spark.rules.spec import RuleCatalog
-
-    clips = datagen.clips_df(spark, 2000, with_bytes=False).drop("_gen_id", "_viol")
-    catalog = RuleCatalog([r for r in audio_catalog() if r.kind == "not_null"])
-    res = run_validation(
-        spark, clips, {}, catalog, run_ts="2026-01-01 00:00:00",
-        profile_columns=["codec", "sr_hz"],
-    )
-    assert res.profile is not None
-    rows = res.profile.collect()
-    parts = {r["partition"] for r in rows}
-    assert {r["col_name"] for r in rows} == {"codec", "sr_hz"}
-    # per-partition n_rows must reconcile with the verdicts' rows_scanned
-    scanned = {r["partition"]: r["rows_scanned"] for r in res.verdicts.collect()}
-    assert parts == set(scanned)
-    for r in rows:
-        assert r["n_rows"] == scanned[r["partition"]]
-
-
 def test_column_profile_approx_tracks_exact(spark):
     df = spark.range(5000).select(
         (F.col("id") % 1000).alias("k"), F.col("id").cast("string").alias("s")

@@ -256,36 +256,3 @@ def test_novelty_rate(spark):
     assert (out["2024-01-03"]["n_rows"], out["2024-01-03"]["n_new_ids"]) == (2, 0)
     assert out["2024-01-03"]["novelty_ppm"] == 0
 
-
-# ---------------------------------------------------------------------------
-# Catalog coverage meta-audit
-
-
-def test_catalog_coverage_blind_spots():
-    from data_check_spark.rules.spec import Rule, RuleCatalog, catalog_coverage
-
-    cat = RuleCatalog([
-        Rule("R1", "not_null", column="a"),
-        Rule("R2", "cross_column", params={"expr": "b > c"}),
-        Rule("R3", "multi_column", params={"columns": ["a", "d"],
-                                           "template": "{col} IS NULL"}),
-        Rule("R4", "not_null", column="a", gate="e = 'x'"),
-    ])
-    cov = {r["column"]: r for r in catalog_coverage(cat, ["a", "b", "c", "d", "e", "f"])}
-    assert cov["a"]["rule_ids"] == ["R1", "R3", "R4"]
-    assert cov["b"]["rule_ids"] == ["R2"] and cov["c"]["rule_ids"] == ["R2"]
-    assert cov["d"]["rule_ids"] == ["R3"]
-    assert cov["e"]["rule_ids"] == ["R4"]  # gate reads count as coverage
-    assert cov["f"] == {"column": "f", "n_rules": 0, "rule_ids": [], "covered": False}
-
-
-def test_catalog_coverage_shipped_catalog_only_partition_unwatched():
-    from data_check_spark.rules.catalog_audio import audio_catalog
-    from data_check_spark.rules.spec import catalog_coverage
-    from data_check_spark.schemas import CLIPS_SCHEMA
-
-    cols = [f.name for f in CLIPS_SCHEMA.fields]
-    cov = catalog_coverage(audio_catalog(), cols)
-    uncovered = [r["column"] for r in cov if not r["covered"]]
-    # the grouping key is the ONLY blind spot in the shipped 26-rule catalog
-    assert uncovered == ["partition"]

@@ -5,7 +5,6 @@ from pyspark.sql import functions as F
 
 from data_check_spark.operators.sampling import (
     _rate_threshold,
-    deterministic_sample,
     sample_mark,
     stratified_sample,
 )
@@ -31,24 +30,24 @@ def test_rate_threshold_exact_hex():
 
 
 def test_deterministic_and_rate(spark, ids):
-    a = {r["doc_id"] for r in deterministic_sample(ids, id_col="doc_id", rate=0.2).collect()}
-    b = {r["doc_id"] for r in deterministic_sample(ids, id_col="doc_id", rate=0.2).collect()}
+    a = {r["doc_id"] for r in ids.filter(sample_mark("doc_id", 0.2)).collect()}
+    b = {r["doc_id"] for r in ids.filter(sample_mark("doc_id", 0.2)).collect()}
     assert a == b  # pure function of (seed, id)
     # binomial(10000, 0.2): sd ~= 40; allow 5 sd
     assert abs(len(a) - 2000) < 200
     other = {
         r["doc_id"]
-        for r in deterministic_sample(ids, id_col="doc_id", rate=0.2, seed="z9").collect()
+        for r in ids.filter(sample_mark("doc_id", 0.2, seed="z9")).collect()
     }
     assert other != a
     # nested rates: a higher-rate sample with the same seed is a superset
-    sup = {r["doc_id"] for r in deterministic_sample(ids, id_col="doc_id", rate=0.5).collect()}
+    sup = {r["doc_id"] for r in ids.filter(sample_mark("doc_id", 0.5)).collect()}
     assert a <= sup
 
 
 def test_rate_one_keeps_everything(spark, ids):
-    assert deterministic_sample(ids, id_col="doc_id", rate=1.0).count() == 10_000
-    assert deterministic_sample(ids, id_col="doc_id", rate=0.0).count() == 0
+    assert ids.filter(sample_mark("doc_id", 1.0)).count() == 10_000
+    assert ids.filter(sample_mark("doc_id", 0.0)).count() == 0
 
 
 def test_stratified_rates(spark, ids):
@@ -64,9 +63,9 @@ def test_stratified_rates(spark, ids):
     # en-sample at the same seed+rate
     en_uniform = {
         r["doc_id"]
-        for r in deterministic_sample(
-            ids.filter(F.col("lang") == "en"), id_col="doc_id", rate=0.6
-        ).collect()
+        for r in ids.filter(F.col("lang") == "en")
+        .filter(sample_mark("doc_id", 0.6))
+        .collect()
     }
     en_strat = {r["doc_id"] for r in out.filter(F.col("lang") == "en").collect()}
     assert en_strat == en_uniform

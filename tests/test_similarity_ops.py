@@ -240,44 +240,6 @@ def test_portable_signature_matches_independent_recompute(spark, vectors):
         assert got[vid] == sig, vid
 
 
-def test_ivf_index_save_load_roundtrip(spark, tmp_path):
-    """Train-once/probe-many: a searched loaded index returns exactly what
-    the one-shot ivf_ann_topk returns for the same seed, and the persisted
-    cell layout prunes file partitions when probing few cells."""
-    from pyspark.sql import functions as F
-
-    from data_check_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_ann_topk,
-        ivf_search,
-        load_ivf_index,
-        save_ivf_index,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = emb.limit(3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    want = {(r.q_id, r.rank, r.vec_id, r.cosine)
-            for r in ivf_ann_topk(emb, queries, k=5, n_lists=8, n_probe=3).collect()}
-
-    assigned, centroids = build_ivf_index(emb, n_lists=8)
-    path = str(tmp_path / "ivf")
-    save_ivf_index(assigned, centroids, path)
-    loaded, cent2 = load_ivf_index(spark, path)
-    assert cent2 == centroids
-    got = {(r.q_id, r.rank, r.vec_id, r.cosine)
-           for r in ivf_search(loaded, cent2, queries, k=5, n_probe=3).collect()}
-    assert got == want
-
-    # cell partitioning prunes: a single-cell filter reads 1 of 8 partitions
-    plan = (
-        loaded.filter(F.col("_cell") == 3)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "PartitionFilters: [isnotnull(_cell" in plan
-
-
 def test_semantic_dedup_embeddings_invariants(spark):
     """End-to-end semantic dedup: every corpus vector appears exactly once,
     exactly one kept copy per cluster, the kept copy is the cluster's min id

@@ -1,47 +1,6 @@
-"""HLL cardinality sketches: accuracy and mergeability."""
+"""Heavy-hitter keys: exact counts above a share threshold."""
 
 from pyspark.sql import functions as F
-
-from data_check_spark.operators.sketches import (
-    approx_distinct_by,
-    merge_sketches,
-    partition_sketches,
-)
-
-SF_DIR = "/root/testdata/sf0.01"
-
-
-def test_approx_distinct_accuracy(spark):
-    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    exact = orders.select("o_custkey").distinct().count()
-    est = approx_distinct_by(orders, "o_custkey").collect()[0]["n_distinct_est"]
-    assert abs(est - exact) / exact < 0.05, (est, exact)
-
-
-def test_partition_sketches_merge_to_global(spark):
-    """Per-partition sketches persisted once re-merge to the global estimate
-    WITHOUT rescanning rows — the incremental-rollup contract."""
-    from data_check_spark import datagen
-
-    clips = datagen.clips_df(spark, 5000, with_bytes=False).drop("_gen_id", "_viol")
-    clips = clips.filter(F.col("clip_id").isNotNull())
-    exact = clips.select("clip_id").distinct().count()
-    sk = partition_sketches(clips, "clip_id")
-    assert sk.count() == clips.select("partition").distinct().count()
-    merged = merge_sketches(sk)
-    assert abs(merged - exact) / exact < 0.05, (merged, exact)
-
-
-def test_sketch_shuffle_is_small(spark):
-    """The aggregation plan carries sketches, not keys: partial HLL agg
-    appears below the exchange (map-side sketch build)."""
-    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    plan = (
-        approx_distinct_by(orders, "o_custkey", by="o_orderstatus")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "hll_sketch_agg" in plan
-    assert plan.index("ObjectHashAggregate") < plan.index("Exchange")
 
 
 def test_heavy_hitters_exact_above_threshold(spark):

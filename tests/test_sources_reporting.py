@@ -1,9 +1,9 @@
-"""Sources (CSV fallback, JDBC builder), reporting ops, pre-flight rules."""
+"""xlsx source, reporting ops, pre-flight rules."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from data_check_spark.engine import run_series_validations, run_validation
+from data_check_spark.engine import run_validation
 from data_check_spark.reporting import (
     export_csv,
     filter_violations,
@@ -11,13 +11,7 @@ from data_check_spark.reporting import (
     with_messages,
 )
 from data_check_spark.rules.spec import Rule, RuleCatalog
-from data_check_spark.sources.files import (
-    MissingColumnsError,
-    read_csv_with_fallback,
-    read_keyword_column,
-    sniff_encoding,
-)
-from data_check_spark.sources.jdbc import JdbcSource
+from data_check_spark.sources.xlsx import read_xlsx_df
 
 CAT = RuleCatalog([
     Rule("X_NOT_NULL", "not_null", "clip_id", name="id required",
@@ -31,46 +25,6 @@ def _clips(spark, rows):
     return spark.createDataFrame(
         rows, "clip_id string, sr_hz int, dur_ms int, codec string, transcript string, partition string"
     )
-
-
-# --- sources ---------------------------------------------------------------
-
-def test_csv_encoding_fallback_cp932(spark, tmp_path):
-    p = tmp_path / "aux.csv"
-    p.write_bytes("顧客番号,名前\n0001,テスト\n0002,検証\n".encode("cp932"))
-    assert sniff_encoding(str(p)) == "cp932"
-    df = read_csv_with_fallback(spark, str(p), required_columns=["顧客番号"])
-    got = {r["顧客番号"]: r["名前"] for r in df.collect()}
-    assert got == {"0001": "テスト", "0002": "検証"}
-
-
-def test_csv_utf8_and_missing_columns(spark, tmp_path):
-    p = tmp_path / "aux2.csv"
-    p.write_text("code,val\n1,a\n", encoding="utf-8")
-    df = read_csv_with_fallback(spark, str(p), required_columns=["code"])
-    assert df.count() == 1
-    with pytest.raises(MissingColumnsError):
-        read_csv_with_fallback(spark, str(p), required_columns=["missing_col"])
-
-
-def test_keyword_column(spark, tmp_path):
-    p = tmp_path / "kw.csv"
-    p.write_text("検索文字\n株式\n有限\n\n株式\n", encoding="utf-8")
-    assert read_keyword_column(spark, str(p), "検索文字") == ["有限", "株式"]
-
-
-def test_jdbc_source_options():
-    src = JdbcSource(
-        url="jdbc:mysql://h:3306/db", table="t_stdidata", user="u", password="p",
-        partition_column="id", lower_bound=0, upper_bound=1000, num_partitions=8,
-    )
-    opts = src.reader_options()
-    assert opts["dbtable"] == "t_stdidata"
-    assert opts["numPartitions"] == "8"
-    with pytest.raises(ValueError):
-        JdbcSource(url="jdbc:x", table="t", query="select 1")
-    with pytest.raises(ValueError):
-        JdbcSource(url="jdbc:x", table="t", partition_column="id")
 
 
 # --- reporting -------------------------------------------------------------
@@ -142,19 +96,6 @@ def test_empty_fact_escalation(spark):
     assert "EMPTY_INPUT" in rules
 
 
-def test_run_series_validations(spark):
-    tr = spark.createDataFrame([("a", "t")], "clip_id string, transcript_ref string")
-    jobs = {
-        "DEKISPART": (_clips(spark, [(None, 1, 1, "f", "t", "p0")]), {"transcripts": tr}, CAT),
-        "INNOSITE": (_clips(spark, [("a", 1, 1, "f", "t", "p0")]), {"transcripts": tr}, CAT),
-    }
-    viol, verd, results = run_series_validations(spark, jobs, run_ts="2026-01-01 00:00:00")
-    rows = {(r["series"], r["rule_id"]) for r in viol.collect()}
-    assert ("DEKISPART", "X_NOT_NULL") in rows
-    assert all(r["series"] in jobs for r in verd.collect())
-    assert set(results) == {"DEKISPART", "INNOSITE"}
-
-
 def _write_minimal_xlsx(path, header, rows, sheet_name="キーワード"):
     """Build a real (minimal) OOXML workbook with shared + inline strings."""
     import zipfile
@@ -208,39 +149,24 @@ def _write_minimal_xlsx(path, header, rows, sheet_name="キーワード"):
         zf.writestr("xl/worksheets/sheet1.xml", sheet_xml)
 
 
-def test_read_keyword_column_from_xlsx(spark, tmp_path):
-    """Real .xlsx aux files load directly (reference loads keyword sheets
-    straight from Excel, dekispart.py:1178-1192)."""
-    from data_check_spark.sources.files import read_keyword_column
-
+def test_read_xlsx_shared_and_inline_strings(spark, tmp_path):
+    """A real .xlsx aux file (shared + inline string cells, named sheet)
+    loads row for row; empty cells come back NULL."""
     path = str(tmp_path / "keywords.xlsx")
-    _write_minimal_xlsx(
-        path,
-        ["検索文字", "メモ"],
-        [["株式会社", "a"], ["有限会社", None], ["  ", "blank row"],
-         ["株式会社", "dup"], [None, "empty kw"]],
-    )
-    kws = read_keyword_column(spark, path, "検索文字")
-    assert kws == ["有限会社", "株式会社"]
-
-
-def test_read_xlsx_missing_column_raises(spark, tmp_path):
-    import pytest
-
-    from data_check_spark.sources.files import MissingColumnsError, read_keyword_column
-
-    path = str(tmp_path / "kw2.xlsx")
-    _write_minimal_xlsx(path, ["other"], [["x", ]])
-    with pytest.raises(MissingColumnsError):
-        read_keyword_column(spark, path, "検索文字")
+    rows = [["株式会社", "a"], ["有限会社", None], ["  ", "blank row"],
+            ["株式会社", "dup"], [None, "empty kw"]]
+    _write_minimal_xlsx(path, ["検索文字", "メモ"], rows)
+    df = read_xlsx_df(spark, path, "キーワード")
+    assert df.columns == ["検索文字", "メモ"]
+    assert [list(r) for r in df.collect()] == rows
 
 
 def test_xlsx_duplicate_headers_uniquified(spark, tmp_path):
-    from data_check_spark.sources.files import read_keyword_column
-
     path = str(tmp_path / "dup_headers.xlsx")
     _write_minimal_xlsx(path, ["検索文字", "検索文字"], [["kw1", "ignored"]])
-    assert read_keyword_column(spark, path, "検索文字") == ["kw1"]
+    df = read_xlsx_df(spark, path)
+    assert df.columns == ["検索文字", "検索文字_2"]
+    assert [tuple(r) for r in df.collect()] == [("kw1", "ignored")]
 
 
 def test_quarantine_split(spark):

@@ -323,60 +323,6 @@ def test_microbatch_bytes_schema_runs_audio_rules(spark, tmp_path):
     assert ("B_SNR", "c_ok") not in got
 
 
-def test_cumulative_drift_sketch_stream(spark, tmp_path):
-    """Sketch accumulation across micro-batches: a partition that looks
-    clean after batch 1 drifts once batch 2's shifted rows merge in —
-    scored from the accumulated sketches alone, never re-reading batch 1."""
-    import datetime as dt
-
-    import numpy as np
-
-    from data_check_spark.operators.drift import make_baseline
-    from data_check_spark.streaming.incremental import (
-        cumulative_drift_violations,
-        start_drift_sketch_stream,
-    )
-
-    ts = dt.datetime(2026, 1, 1, 0, 0, 0)
-    rng = np.random.default_rng(7)
-
-    def rows(part, shift, n=400):
-        return [
-            (f"c{i}", 16000, int(v), "flac", "t", part, ts)
-            for i, v in enumerate(rng.normal(5000 + shift, 800, n))
-        ]
-
-    baseline_df = spark.createDataFrame(
-        [("p0", float(v)) for v in rng.normal(5000, 800, 800)],
-        "partition string, dur_ms double",
-    )
-    baseline = make_baseline(spark, baseline_df, ["dur_ms"])
-
-    in_dir = str(tmp_path / "in")
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-    rules = [("DRIFT_DUR_MS", "dur_ms", 0.25)]
-
-    _write_batch(spark, in_dir, rows("pX", 0), 0)  # clean arrivals
-    q = start_drift_sketch_stream(
-        spark, in_dir, state, ["dur_ms"], checkpoint_dir=ckpt, trigger_once=True
-    )
-    q.awaitTermination(120)
-    clean = cumulative_drift_violations(spark, state, baseline, rules).collect()
-    assert clean == []
-
-    _write_batch(spark, in_dir, rows("pX", 8000), 1)  # drifted arrivals
-    q = start_drift_sketch_stream(
-        spark, in_dir, state, ["dur_ms"], checkpoint_dir=ckpt, trigger_once=True
-    )
-    q.awaitTermination(120)
-    sketches = spark.read.parquet(f"{state}/drift_sketches")
-    assert sketches.select("batch_id").distinct().count() == 2  # truly incremental
-    out = cumulative_drift_violations(spark, state, baseline, rules).collect()
-    assert {r["partition"] for r in out} == {"pX"}
-    assert out[0]["rule_id"] == "DRIFT_DUR_MS" and "w1=" in out[0]["observed"]
-
-
 def test_watermark_bound_controls_late_data_loss(spark, tmp_path):
     """Ties the watermark_plan recommendation to actual behavior: a row
     arriving 2h late is DROPPED by a windowed aggregation under a 10-minute
@@ -437,46 +383,6 @@ def test_watermark_bound_controls_late_data_loss(spark, tmp_path):
     assert tight[base] == 2          # the 2h-late third violation was DROPPED
     wide = run("3 hours", "wide")
     assert wide[base] == 3           # p100-sized bound keeps it
-
-
-def test_freshness_monitor_tracks_quiet_feed(spark, tmp_path):
-    """The quiet feed keeps its state across later batches (no watermark
-    eviction) — a consumer diffing last_ts against the clock sees exactly
-    which feed stopped and when."""
-    import datetime as dt
-
-    from data_check_spark.streaming.incremental import freshness_monitor, stream_clips
-
-    base = dt.datetime(2026, 1, 1, 0, 0, 0)
-    in_dir = str(tmp_path / "in")
-    _write_batch(spark, in_dir, [
-        ("a1", 16000, 1000, "flac", "t", "p0", base),
-        ("b1", 16000, 1000, "flac", "t", "p1", base + dt.timedelta(minutes=1)),
-    ], 1)
-
-    mon = freshness_monitor(stream_clips(spark, in_dir))
-
-    def drain():
-        q = (
-            mon.writeStream.format("memory").queryName("fresh_state")
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .outputMode("complete").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-        return {r["partition"]: r for r in spark.sql("select * from fresh_state").collect()}
-
-    s1 = drain()
-    assert s1["p0"]["last_ts"] == base and s1["p0"]["n_rows"] == 1
-    # batch 2: only p1 keeps producing — p0 goes quiet
-    _write_batch(spark, in_dir, [
-        ("b2", 16000, 1000, "flac", "t", "p1", base + dt.timedelta(hours=2)),
-        ("b3", 16000, 1000, "flac", "t", "p1", base + dt.timedelta(hours=3)),
-    ], 2)
-    s2 = drain()
-    assert s2["p1"]["last_ts"] == base + dt.timedelta(hours=3)
-    assert s2["p1"]["n_rows"] == 3
-    # the quiet feed's state SURVIVES — its growing staleness is the signal
-    assert s2["p0"]["last_ts"] == base and s2["p0"]["n_rows"] == 1
 
 
 def test_stream_validate_job_once_drains_and_resumes(spark, tmp_path):

@@ -72,22 +72,3 @@ def test_wasserstein_empty_is_nan():
     d = td.from_values(np.array([1.0, 2.0]))
     assert np.isnan(td.wasserstein(e, d))
     assert np.isnan(td.wasserstein(d, e))
-
-
-def test_cdf_inverts_quantile():
-    """cdf is the inverse of quantile under the shared centroid-midpoint
-    convention; NaN propagates; tails clamp to [0, 1]."""
-    import numpy as np
-
-    from data_check_spark.operators.tdigest import cdf, from_values, quantile, quantiles
-
-    d = from_values(np.arange(1000, dtype=np.float64))
-    for q in (0.1, 0.25, 0.5, 0.75, 0.9):
-        x = quantile(d, q)
-        assert abs(float(cdf(d, np.array([x]))[0]) - q) < 0.01
-    assert quantiles(d, [0.25, 0.75]) == [quantile(d, 0.25), quantile(d, 0.75)]
-    out = cdf(d, np.array([-1e9, 1e9, np.nan]))
-    assert out[0] == 0.0 and out[1] == 1.0 and np.isnan(out[2])
-    # single-centroid digest: below/at/above -> 0 / 0.5 / 1
-    one = from_values(np.array([5.0]))
-    assert list(cdf(one, np.array([4.0, 5.0, 6.0]))) == [0.0, 0.5, 1.0]

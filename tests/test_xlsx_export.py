@@ -36,19 +36,6 @@ def test_xlsx_round_trip(spark, report_df, tmp_path):
     assert got == want
 
 
-def test_xlsx_keyword_source_round_trip(spark, tmp_path):
-    """The exported workbook is a valid keyword aux source — the reference
-    workflow writes result sheets that later runs read back as inputs."""
-    from data_check_spark.sources.files import read_keyword_column
-
-    df = spark.createDataFrame(
-        [("検索",), ("alpha",), (" ",), (None,), ("alpha",)], "keyword string"
-    )
-    path = str(tmp_path / "kw.xlsx")
-    export_xlsx(df, path)
-    assert read_keyword_column(spark, path, "keyword") == ["alpha", "検索"]
-
-
 def test_xlsx_refuses_oversize(spark, tmp_path):
     df = spark.range(12).select(F.col("id").cast("string").alias("v"))
     with pytest.raises(ValueError, match="refuses"):
