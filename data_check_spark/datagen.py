@@ -242,7 +242,7 @@ def attach_pcm_bytes(df: DataFrame, cap_ms: int = 100) -> DataFrame:
 # Dimension tables (FIXTURES.md §2)
 # ---------------------------------------------------------------------------
 
-def transcripts_df(spark: SparkSession, n_rows: int, orphan_frac: float = 0.02) -> DataFrame:
+def transcripts_df(spark: SparkSession, n_rows: int) -> DataFrame:
     """Transcript reference dim keyed by clip_id.
 
     Rows whose fact-side bucket is ``dim_missing`` are withheld (FK violation);
@@ -250,7 +250,7 @@ def transcripts_df(spark: SparkSession, n_rows: int, orphan_frac: float = 0.02) 
     orphan rows (ids beyond n) exercise the reverse direction (reference
     analog: CHK_0060's semi∘anti composition, dekispart.py:968-988).
     """
-    n_orphans = int(n_rows * orphan_frac)
+    n_orphans = int(n_rows * 0.02)
     df = spark.range(n_rows + n_orphans)
     v = F.pmod(F.xxhash64(F.col("id"), F.lit("viol")), F.lit(10000))
     base_tr = _transcript_text()
@@ -283,14 +283,15 @@ DOC_BUCKETS = {
 }
 
 
-def _doc_words(id_expr, *, min_words: int = 20, span: int = 80):
-    """Hash-chosen pseudo-word sequence for one document id expression."""
+def _doc_words(id_expr):
+    """Hash-chosen pseudo-word sequence (20-99 words) for one document id
+    expression."""
     # ONE SQL array literal, not 512 F.lit py4j round trips (see CLAUDE.md:
     # the portable LSH weight matrix went 7.9s -> 0.8s with this change).
     vocab = F.expr(
         "array(" + ",".join(f"'w{(i * 2654435761) % 0xFFFF:04x}'" for i in range(DOC_VOCAB_SIZE)) + ")"
     )
-    n_words = (F.pmod(F.xxhash64(id_expr, F.lit("nw")), F.lit(span)) + min_words).cast("int")
+    n_words = (F.pmod(F.xxhash64(id_expr, F.lit("nw")), F.lit(80)) + 20).cast("int")
     return F.transform(
         F.sequence(F.lit(0), n_words - 1),
         lambda j: F.element_at(
@@ -300,15 +301,15 @@ def _doc_words(id_expr, *, min_words: int = 20, span: int = 80):
     )
 
 
-def docs_df(spark: SparkSession, n_rows: int, *, dup_pool: int = 64) -> DataFrame:
+def docs_df(spark: SparkSession, n_rows: int) -> DataFrame:
     """Synthetic documents table (doc_id, text) at any scale.
 
-    ~3% of rows duplicate one of ``dup_pool`` base documents verbatim and
+    ~3% of rows duplicate one of 64 base documents verbatim and
     ~2% duplicate one with the first word replaced, so exact dedup, MinHash
     and Jaccard operators all find real structure."""
     df = spark.range(n_rows)
     v = F.pmod(F.xxhash64(F.col("id"), F.lit("dviol")), F.lit(10000))
-    pool_id = F.pmod(F.xxhash64(F.col("id"), F.lit("dpool")), F.lit(dup_pool))
+    pool_id = F.pmod(F.xxhash64(F.col("id"), F.lit("dpool")), F.lit(64))
     lo_e, hi_e = DOC_BUCKETS["exact_dup"]
     lo_n, hi_n = DOC_BUCKETS["near_dup"]
     own = _doc_words(F.col("id"))

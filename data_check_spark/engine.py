@@ -76,8 +76,8 @@ from data_check_spark.operators.uniqueness import (
 from data_check_spark.reporting import top_rules
 from data_check_spark.rules.compiler import (
     apply_row_rules,
-    compile_rule_many,
     gate_condition,
+    resolve_row_rules,
 )
 from data_check_spark.rules.spec import Rule, RuleCatalog
 from data_check_spark.schemas import CLIPS_SCHEMA, validate_schema
@@ -302,7 +302,6 @@ def run_validation(
     reliable_cache: bool = False,
     exclude_partitions: list[str] | None = None,
     batch_member: bool = False,
-    defer_checkpoint: bool = False,
 ) -> ValidationResult:
     """Run the full catalog; returns lazily-built violations + materialized
     verdicts (the verdict aggregation is the single action that executes the
@@ -327,10 +326,12 @@ def run_validation(
     consult ``checkpoint.owner_complete`` on relaunch and pass
     ``batch_member=True`` for batch 0 once its first attempt completed —
     otherwise the relaunch re-emits run-level rows (validate_job does this).
-    ``defer_checkpoint``: skip the engine's own checkpoint append so the
-    caller can write it AFTER its output writes are durable — a crash
-    between a checkpoint append and the output write would otherwise mark
-    partitions done whose violations never landed anywhere.
+    ``checkpoint_dir`` is read, never written: with ``resume`` the run
+    skips the partitions it marks done, and ``reliable_cache`` keeps its
+    cache there. The caller appends ``verdicts`` to it
+    (``checkpoint.write_checkpoint``) AFTER its output writes are durable —
+    a checkpoint that landed before the output would mark partitions done
+    whose violations never landed anywhere.
 
     Member-batch degradation caveat: members mirror the owner's per-rule
     degradation (a rule that fails analysis is skipped) WITHOUT re-reporting
@@ -476,47 +477,14 @@ def run_validation(
             prepared = prepared.coalesce(2 * n_parts)
 
     # --- per-rule isolation (reference: a crashing per-row check degrades to
-    # UNEXPECTED_ERROR_<fn> violation rows, dekispart.py:1151-1157). Each
-    # rule's compile + analysis (column resolution, type check — no job) and
-    # regex precompile run individually; a broken rule becomes a synthetic
-    # RULE_ERROR_<id> row and the rest of the catalog still runs.
+    # UNEXPECTED_ERROR_<fn> violation rows, dekispart.py:1151-1157). A rule
+    # whose regex, compile or analysis (column resolution, type check — no
+    # job) fails becomes a synthetic RULE_ERROR_<id> row and the rest of the
+    # catalog still runs.
     parts: list[DataFrame] = []
-    compiled = []
-    candidates: list[tuple[Rule, list]] = []
-    for r in catalog.row_local:
-        try:
-            for pat in [r.params.get("pattern"), *(r.params.get("any_of") or [])]:
-                if pat is not None:  # JVM regex compiles lazily at first eval
-                    spark._jvm.java.util.regex.Pattern.compile(pat)
-            candidates.append((r, compile_rule_many(r, run_ts)))
-        except Exception as e:  # noqa: BLE001 — degrade, don't die
-            rule_error(r, e)
-    # analysis-only probe (resolves columns/types, runs no job): ONE batched
-    # analysis on the healthy path; only when something is broken fall back
-    # to per-rule probes to attribute the failure — a per-rule .schema costs
-    # a py4j analysis round-trip each, which adds up across the catalog.
-    try:
-        if candidates:
-            prepared.select(
-                *[
-                    e
-                    for i, (_, rc) in enumerate(candidates)
-                    for j, c in enumerate(rc)
-                    for e in (
-                        c.predicate.cast("boolean").alias(f"_p{i}_{j}"),
-                        c.observed.alias(f"_o{i}_{j}"),
-                    )
-                ]
-            ).schema
-        compiled = [c for _, rc in candidates for c in rc]
-    except Exception:  # noqa: BLE001 — bisect to the broken rule(s)
-        for r, rule_compiled in candidates:
-            try:
-                for c in rule_compiled:
-                    prepared.select(c.predicate.cast("boolean"), c.observed).schema
-                compiled.extend(rule_compiled)
-            except Exception as e:  # noqa: BLE001 — degrade, don't die
-                rule_error(r, e)
+    compiled, failures = resolve_row_rules(prepared, catalog.row_local, run_ts)
+    for r, e in failures:
+        rule_error(r, e)
     if compiled:
         parts.append(apply_row_rules(prepared, compiled, partition_col=partition_col))
 
@@ -666,9 +634,6 @@ def run_validation(
                 [("EMPTY_INPUT", "N/A", None, "fact table has no rows")], _VIOLATION_SCHEMA
             )
             violations = violations.unionByName(empty_row)
-
-    if checkpoint_dir and not defer_checkpoint:
-        cp.write_checkpoint(verdicts, checkpoint_dir, run_id)
 
     return ValidationResult(
         violations=violations,

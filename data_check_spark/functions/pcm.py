@@ -63,20 +63,20 @@ def audio_features(decoded: np.ndarray, sr_hz: int) -> tuple[float, float, float
     return clip_ratio, rms_db, est_freq
 
 
-def max_quiet_run_ms(decoded: np.ndarray, sr_hz: int, *, threshold: int = 327) -> float:
-    """Longest run of consecutive samples with ``|x| < threshold``, in ms.
+def max_quiet_run_ms(decoded: np.ndarray, sr_hz: int) -> float:
+    """Longest run of consecutive samples with ``|x| < 327``, in ms.
 
     The dead-air signal: a recording gap, a muted channel segment, or
     padding shows up as one long quiet run even when the clip's OVERALL
     RMS level passes (a 10s clip with 2s of silence still has healthy
-    average energy). Default threshold 327 ≈ 1% of full scale (−40 dBFS).
+    average energy). 327 ≈ 1% of full scale (−40 dBFS).
     Run lengths come from the boolean mask's change points — O(n) per row,
     no Python loop."""
     if decoded.size == 0 or sr_hz <= 0:
         return float("nan")
     # int32 copy: abs(int16 -32768) overflows back negative (same hazard as
     # audio_features' clip_ratio).
-    quiet = np.abs(decoded.astype(np.int32)) < threshold
+    quiet = np.abs(decoded.astype(np.int32)) < 327
     if not quiet.any():
         return 0.0
     d = np.diff(quiet.astype(np.int8))
@@ -110,8 +110,8 @@ def snr_db(reference: np.ndarray, decoded: np.ndarray) -> float:
     return 10.0 * np.log10(signal / noise)
 
 
-def clipped_run_stats(decoded: np.ndarray, *, threshold: int = 32767) -> tuple[int, int]:
-    """(n_clipped, max_clipped_run): samples at |x| ≥ threshold and the
+def clipped_run_stats(decoded: np.ndarray) -> tuple[int, int]:
+    """(n_clipped, max_clipped_run): samples at |x| ≥ 32767 (full scale) and the
     longest CONSECUTIVE run of them, in samples.
 
     The loud sibling of :func:`max_quiet_run_ms`: a clip *ratio* can't tell
@@ -121,7 +121,7 @@ def clipped_run_stats(decoded: np.ndarray, *, threshold: int = 32767) -> tuple[i
     abs(-32768) overflow hazard."""
     if decoded.size == 0:
         return 0, 0
-    hot = np.abs(decoded.astype(np.int32)) >= threshold
+    hot = np.abs(decoded.astype(np.int32)) >= 32767
     n_over = int(np.count_nonzero(hot))
     if n_over == 0:
         return 0, 0

@@ -86,30 +86,21 @@ def out_of_order_rows(
     )
 
 
-def daily_volume_anomaly(
-    df: DataFrame,
-    *,
-    ts_col: str = "ts",
-    k: int = 3,
-    trailing_days: int = 7,
-    min_window: int = 4,
-) -> DataFrame:
-    """Flag days whose event count deviates > ``k`` trailing stddevs.
+def daily_volume_anomaly(df: DataFrame) -> DataFrame:
+    """Flag days whose event count (by ``ts``) deviates > 3 trailing stddevs.
 
-    The window is the ``trailing_days`` rows strictly BEFORE the current
-    day (the day under test never contaminates its own baseline). Days
-    with fewer than ``min_window`` predecessors are never flagged (cold
-    start). Output per day: ``(day, n_events, window_n, window_sum,
-    is_anomaly)``, ordered by day via the caller.
+    The window is the 7 rows strictly BEFORE the current day (the day under
+    test never contaminates its own baseline). Days with fewer than 4
+    predecessors are never flagged (cold start). Output per day: ``(day,
+    n_events, window_n, window_sum, is_anomaly)``, ordered by day via the
+    caller.
 
     The calendar is DENSIFIED between the first and last observed day:
     a day with zero events still gets a row (``n_events = 0``) — a total
     outage is precisely the day this alarm exists for, and grouping alone
     would silently drop it AND let the trailing window span the gap.
     """
-    if k <= 0 or trailing_days <= 0 or min_window <= 0:
-        raise ValueError("k, trailing_days and min_window must be positive")
-    observed = df.groupBy(F.to_date(F.col(ts_col)).alias("day")).agg(
+    observed = df.groupBy(F.to_date(F.col("ts")).alias("day")).agg(
         F.count(F.lit(1)).alias("n_events")
     )
     # sequence(min, max) of dates steps one day; empty input → NULL bounds
@@ -120,7 +111,7 @@ def daily_volume_anomaly(
     daily = calendar.join(observed, "day", "left").select(
         "day", F.coalesce("n_events", F.lit(0)).cast("long").alias("n_events")
     )
-    w = Window.orderBy("day").rowsBetween(-trailing_days, -1)
+    w = Window.orderBy("day").rowsBetween(-7, -1)
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731 — 128-bit lane
     stats = daily.select(
         "day",
@@ -139,7 +130,7 @@ def daily_volume_anomaly(
         F.coalesce("window_n", F.lit(0)).cast("long").alias("window_n"),
         F.coalesce("window_sum", F.lit(0)).cast("long").alias("window_sum"),
         F.when(
-            (F.col("window_n") >= min_window) & (d * d > F.lit(k * k) * var_num),
+            (F.col("window_n") >= 4) & (d * d > F.lit(3 * 3) * var_num),
             F.lit(1),
         )
         .otherwise(F.lit(0))

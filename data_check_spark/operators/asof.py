@@ -27,18 +27,13 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     values: list[str],
-    direction: str = "backward",
 ) -> DataFrame:
-    """Left rows + the ``values`` columns of the as-of matching right row.
-
-    ``backward``: latest right row with ``right_ts <= left_ts`` (inclusive).
-    ``forward``:  earliest right row with ``right_ts >= left_ts``.
+    """Left rows + the ``values`` columns of the as-of matching right row:
+    the latest right row with ``right_ts <= left_ts`` (inclusive).
     Unmatched left rows keep NULL values (left-join semantics). If several
     right rows share (key, ts), the LAST one in window order wins — dedup
     the right side first when determinism per (key, ts) matters.
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"direction must be backward|forward, got {direction!r}")
     lcols = left.columns
     clash = set(values) & set(lcols)
     if clash:
@@ -77,16 +72,12 @@ def asof_join(
     )
     u = l.unionByName(r)
     # Right rows sort before left rows at equal ts (src 0 < 1), making the
-    # boundary inclusive in both directions. NULL left timestamps sort
-    # FIRST so they precede every right row and keep a NULL carry (a left
-    # row with no timestamp matches nothing).
-    ts_order = (
-        F.col("_ts").asc_nulls_first() if direction == "backward"
-        else F.col("_ts").desc_nulls_first()
-    )
+    # boundary inclusive. NULL left timestamps sort FIRST so they precede
+    # every right row and keep a NULL carry (a left row with no timestamp
+    # matches nothing).
     w = (
         Window.partitionBy("_key")
-        .orderBy(ts_order, F.col("_src").asc())
+        .orderBy(F.col("_ts").asc_nulls_first(), F.col("_src").asc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     filled = u.select(

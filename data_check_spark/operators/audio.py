@@ -142,7 +142,6 @@ def transcript_match_violations(
     fact_text: str = "transcript",
     ref_text: str = "transcript_ref",
     partition_col: str | None = "partition",
-    dim_rows: int | None = None,
 ) -> DataFrame:
     """Byte-equality of the clip transcript vs the reference transcript dim.
 
@@ -158,8 +157,6 @@ def transcript_match_violations(
     from data_check_spark.functions.blank import bytes_differ, is_present
 
     dim = transcripts.select(F.col(dim_key).alias("_dk"), F.col(ref_text).alias("_ref"))
-    if dim_rows is not None and dim_rows <= 5_000_000:
-        dim = F.broadcast(dim)
     part = F.col(partition_col) if partition_col else F.lit(None).cast("string")
     fact = df.filter(is_present(fact_key))
     return (
@@ -180,8 +177,6 @@ def transcript_alignment(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    seg_start_col: str = "start_sample",
-    seg_end_col: str = "end_sample",
 ) -> DataFrame:
     """Proportional transcript→audio alignment: a per-word time span.
 
@@ -213,8 +208,8 @@ def transcript_alignment(
             F.sort_array(
                 F.collect_list(
                     F.struct(
-                        F.col(seg_start_col).cast("long").alias("abs_s"),
-                        F.col(seg_end_col).cast("long").alias("abs_e"),
+                        F.col("start_sample").cast("long").alias("abs_s"),
+                        F.col("end_sample").cast("long").alias("abs_e"),
                     )
                 )
             ).alias("_sp0")
@@ -335,12 +330,7 @@ def window_transcripts(
     )
 
 
-def window_density_screen(
-    labeled: DataFrame,
-    *,
-    max_tokens_per_100k: int = 2000,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def window_density_screen(labeled: DataFrame) -> DataFrame:
     """QA screen over :func:`window_transcripts` output: token density per
     window. A window whose transcript slice is implausibly dense points at
     a broken alignment (wrong clip paired, silence mislabeled voiced);
@@ -348,17 +338,17 @@ def window_density_screen(
     can drop or keep it deliberately. ``density_pm`` is integer tokens per
     100k samples (``n_tokens·100000 div (w_end - w_start)`` — actual window
     length, which is shorter than ``window_samples`` for tail windows);
-    statuses:
+    statuses (``too_dense``: over 2000 per 100k):
     ``silent`` > ``too_dense`` > ``ok``. Pure projection — zero shuffle."""
     density = F.expr("n_tokens * 100000L div (w_end - w_start)")
     return labeled.select(
-        id_col,
+        "doc_id",
         "seg_idx",
         "window_idx",
         F.col("n_tokens"),
         density.cast("long").alias("density_pm"),
         F.when(F.col("n_tokens") == 0, F.lit("silent"))
-        .when(density > max_tokens_per_100k, F.lit("too_dense"))
+        .when(density > 2000, F.lit("too_dense"))
         .otherwise(F.lit("ok"))
         .alias("status"),
     )
@@ -375,7 +365,6 @@ def transcript_wer_violations(
     ref_text: str = "transcript_ref",
     max_wer_bp: int = 2500,
     partition_col: str | None = "partition",
-    dim_rows: int | None = None,
 ) -> DataFrame:
     """WER-tolerance sibling of :func:`transcript_match_violations`.
 
@@ -395,8 +384,6 @@ def transcript_wer_violations(
     from data_check_spark.operators.text import word_edit_distance
 
     dim = transcripts.select(F.col(dim_key).alias("_dk"), F.col(ref_text).alias("_ref_t"))
-    if dim_rows is not None and dim_rows <= 5_000_000:
-        dim = F.broadcast(dim)
     part = F.col(partition_col) if partition_col else F.lit(None).cast("string")
     fact = df.filter(is_present(fact_key))
     joined = fact.join(dim, fact[fact_key] == F.col("_dk"), "inner").select(
@@ -431,16 +418,7 @@ def transcript_wer_violations(
     )
 
 
-def synth_square_pcm(
-    df: DataFrame,
-    *,
-    n_col: str = "n",
-    lead_col: str = "lead",
-    amp_col: str = "amp",
-    half_period_col: str = "k",
-    offset_col: str | None = None,
-    out_col: str = "bytes",
-) -> DataFrame:
+def synth_square_pcm(df: DataFrame, *, offset_col: str | None = None) -> DataFrame:
     """Deterministic int16-LE square-wave payloads from per-row parameters.
 
     ``lead`` zero samples, then an ``offset ± amp`` square wave alternating
@@ -459,14 +437,14 @@ def synth_square_pcm(
     host, and variable-length payloads force a per-row loop anyway).
     """
     fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    schema = f"{fields}, {out_col} binary"
+    schema = f"{fields}, bytes binary"
 
     def run(batches):
         for pdf in batches:
             payloads: list[bytes] = []
             offsets = pdf[offset_col] if offset_col else [0] * len(pdf)
             for n, lead, amp, k, o in zip(
-                pdf[n_col], pdf[lead_col], pdf[amp_col], pdf[half_period_col], offsets
+                pdf["n"], pdf["lead"], pdf["amp"], pdf["k"], offsets
             ):
                 n, lead, amp, k, o = int(n), int(lead), int(amp), max(int(k), 1), int(o)
                 wave_len = max(n - lead, 0)
@@ -475,23 +453,13 @@ def synth_square_pcm(
                 x = np.concatenate([np.zeros(max(lead, 0), dtype=np.int64), wave])
                 payloads.append(x.astype("<i2").tobytes())
             out = pdf.copy()
-            out[out_col] = payloads
+            out["bytes"] = payloads
             yield out
 
     return df.mapInPandas(run, schema=schema)
 
 
-def synth_two_burst_pcm(
-    df: DataFrame,
-    *,
-    lead_col: str = "lead",
-    w1_col: str = "w1",
-    gap_col: str = "gap",
-    w2_col: str = "w2",
-    amp_col: str = "amp",
-    half_period_col: str = "k",
-    out_col: str = "bytes",
-) -> DataFrame:
+def synth_two_burst_pcm(df: DataFrame) -> DataFrame:
     """Square-wave payload with an interior silence gap (two bursts).
 
     Layout: ``lead`` zero samples, a ±``amp`` square burst of ``w1``
@@ -502,7 +470,7 @@ def synth_two_burst_pcm(
     are analytic in the parameters. Same int16-LE contract.
     """
     fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    schema = f"{fields}, {out_col} binary"
+    schema = f"{fields}, bytes binary"
 
     def burst(w: int, amp: int, k: int) -> np.ndarray:
         j = np.arange(max(w, 0), dtype=np.int64)
@@ -512,8 +480,8 @@ def synth_two_burst_pcm(
         for pdf in batches:
             payloads: list[bytes] = []
             for lead, w1, gap, w2, amp, k in zip(
-                pdf[lead_col], pdf[w1_col], pdf[gap_col], pdf[w2_col],
-                pdf[amp_col], pdf[half_period_col],
+                pdf["lead"], pdf["w1"], pdf["gap"], pdf["w2"],
+                pdf["amp"], pdf["k"],
             ):
                 lead, w1, gap, w2 = int(lead), int(w1), int(gap), int(w2)
                 amp, k = int(amp), max(int(k), 1)
@@ -525,7 +493,7 @@ def synth_two_burst_pcm(
                 ])
                 payloads.append(x.astype("<i2").tobytes())
             out = pdf.copy()
-            out[out_col] = payloads
+            out["bytes"] = payloads
             yield out
 
     return df.mapInPandas(run, schema=schema)
@@ -635,7 +603,6 @@ def audio_fingerprint(
     *,
     bytes_col: str = "bytes",
     frame_samples: int = 64,
-    levels: int = 16,
     keep: list[str] | None = None,
 ) -> DataFrame:
     """Gain-invariant acoustic fingerprint for audio deduplication.
@@ -644,7 +611,7 @@ def audio_fingerprint(
     recording re-encoded at a different volume. This fingerprints the
     ENERGY SHAPE instead of the bytes: per ``frame_samples`` window the
     int64 energy e_f, quantized against the clip's loudest frame as
-    q_f = (levels·e_f) // e_max. The division is exact under any common
+    q_f = (16·e_f) // e_max. The division is exact under any common
     scale factor — x → c·x multiplies every e_f and e_max by c², and
     floor(a·c²/(b·c²)) ≡ floor(a/b) — so an integer-gain copy produces
     the IDENTICAL profile, bit-for-bit, on every engine. Emits
@@ -656,10 +623,8 @@ def audio_fingerprint(
     rather than dropping the row (consumers join back by id). One
     mapInPandas pass; the binary dies here.
     """
-    if frame_samples < 1 or levels < 1:
-        raise ValueError(
-            f"frame_samples and levels must be >= 1, got {frame_samples}, {levels}"
-        )
+    if frame_samples < 1:
+        raise ValueError(f"frame_samples must be >= 1, got {frame_samples}")
     kept = keep if keep is not None else [
         f.name for f in df.schema.fields if f.name != bytes_col
     ]
@@ -686,7 +651,7 @@ def audio_fingerprint(
                 _, fe = decoded
                 nf = fe.size
                 e_max = int(fe.max())
-                q = (levels * fe) // e_max if e_max > 0 else np.zeros(nf, dtype=np.int64)
+                q = (16 * fe) // e_max if e_max > 0 else np.zeros(nf, dtype=np.int64)
                 profile = ",".join(str(int(v)) for v in q)
                 nf_s[i] = nf
                 prof_s[i] = profile
@@ -700,15 +665,7 @@ def audio_fingerprint(
     return df.mapInPandas(run, schema=schema)
 
 
-def speech_rate(
-    df: DataFrame,
-    *,
-    tokens_col: str = "n_tokens",
-    voiced_col: str = "voiced_samples",
-    sr_col: str = "sr_hz",
-    min_mtps: int = 1_000,
-    max_mtps: int = 6_000,
-) -> DataFrame:
+def speech_rate(df: DataFrame, *, min_mtps: int = 1_000, max_mtps: int = 6_000) -> DataFrame:
     """Transcript↔audio speech-rate consistency (cross-modal QC screen).
 
     The standard ASR-corpus sanity check: a transcript whose token count is
@@ -736,15 +693,15 @@ def speech_rate(
     """
     if min_mtps > max_mtps:
         raise ValueError(f"min_mtps {min_mtps} > max_mtps {max_mtps}")
-    toks = F.coalesce(F.col(tokens_col).cast("bigint"), F.lit(0))
-    voiced = F.col(voiced_col).cast("bigint")
-    sr = F.col(sr_col).cast("bigint")
+    toks = F.coalesce(F.col("n_tokens").cast("bigint"), F.lit(0))
+    voiced = F.col("voiced_samples").cast("bigint")
+    sr = F.col("sr_hz").cast("bigint")
     has_audio = voiced.isNotNull() & (voiced > 0) & sr.isNotNull() & (sr > 0)
     rate = F.when(
         has_audio, F.expr(
-            f"(coalesce(cast({tokens_col} as bigint), 0)"
-            f" * cast({sr_col} as bigint) * 1000)"
-            f" div cast({voiced_col} as bigint)"
+            "(coalesce(cast(n_tokens as bigint), 0)"
+            " * cast(sr_hz as bigint) * 1000)"
+            " div cast(voiced_samples as bigint)"
         )
     )
     status = (
@@ -758,7 +715,7 @@ def speech_rate(
     return df.withColumn("rate_mtps", rate).withColumn("status", status)
 
 
-def pcm_stats(df: DataFrame, *, bytes_col: str = "bytes", keep: list[str] | None = None) -> DataFrame:
+def pcm_stats(df: DataFrame, *, keep: list[str] | None = None) -> DataFrame:
     """Integer-exact per-clip QC stats decoded from raw int16-LE PCM bytes.
 
     Emits (n_samples, lead_silence, peak_abs, dc_sum, energy,
@@ -781,7 +738,7 @@ def pcm_stats(df: DataFrame, *, bytes_col: str = "bytes", keep: list[str] | None
     ``keep``: passthrough columns (default: everything but ``bytes`` —
     like the engine's wide pass, the binary column dies here).
     """
-    kept = keep if keep is not None else [f.name for f in df.schema.fields if f.name != bytes_col]
+    kept = keep if keep is not None else [f.name for f in df.schema.fields if f.name != "bytes"]
     _guard_emitted(
         kept,
         ("n_samples", "lead_silence", "peak_abs", "dc_sum", "energy", "n_zero_cross"),
@@ -804,7 +761,7 @@ def pcm_stats(df: DataFrame, *, bytes_col: str = "bytes", keep: list[str] | None
             dc_s: list[int | None] = [None] * m
             en_s: list[int | None] = [None] * m
             zc_s: list[int | None] = [None] * m
-            payloads = pdf[bytes_col].to_numpy(dtype=object)
+            payloads = pdf["bytes"].to_numpy(dtype=object)
             for i in range(m):
                 b = payloads[i]
                 if b is None or len(b) % 2 != 0:
@@ -879,13 +836,7 @@ def training_windows(
     )
 
 
-def autocorr_lags(
-    df: DataFrame,
-    *,
-    bytes_col: str = "bytes",
-    lags_col: str = "lags",
-    keep: list[str] | None = None,
-) -> DataFrame:
+def autocorr_lags(df: DataFrame, *, keep: list[str] | None = None) -> DataFrame:
     """Integer autocorrelation r(τ) = Σ x[i]·x[i+τ] at caller-chosen lags —
     the classic periodicity / pitch / mains-hum screen over int16 PCM.
 
@@ -907,7 +858,7 @@ def autocorr_lags(
     kept = (
         keep
         if keep is not None
-        else [f.name for f in df.schema.fields if f.name not in (bytes_col, lags_col)]
+        else [f.name for f in df.schema.fields if f.name not in ("bytes", "lags")]
     )
     _guard_emitted(kept, ("lag", "n_samples", "r0", "r_lag", "ratio_bp"), "autocorr_lags")
     fields = ", ".join(
@@ -923,8 +874,8 @@ def autocorr_lags(
             r0_o: list[int | None] = []
             r_o: list[int | None] = []
             bp_o: list[int | None] = []
-            payloads = pdf[bytes_col].to_numpy(dtype=object)
-            all_lags = pdf[lags_col].to_numpy(dtype=object)
+            payloads = pdf["bytes"].to_numpy(dtype=object)
+            all_lags = pdf["lags"].to_numpy(dtype=object)
             for i in range(len(pdf)):
                 lags = all_lags[i]
                 if lags is None:
@@ -964,15 +915,7 @@ def autocorr_lags(
     return df.mapInPandas(run, schema=schema)
 
 
-def normalization_gain(
-    stats: DataFrame,
-    *,
-    target_ms_q: int,
-    energy_col: str = "energy",
-    n_col: str = "n_samples",
-    peak_col: str = "peak_abs",
-    full_scale: int = 32767,
-) -> DataFrame:
+def normalization_gain(stats: DataFrame, *, target_ms_q: int) -> DataFrame:
     """Loudness-normalization planning over a :func:`pcm_stats` frame.
 
     For each clip, the linear gain (in basis points) that brings its mean
@@ -983,7 +926,7 @@ def normalization_gain(
 
     - ``gain_bp``        — the un-capped target gain (NULL if the clip has
       no energy or no samples — you cannot normalize silence)
-    - ``max_gain_bp``    — largest clip-safe gain, ``full_scale·10⁴ div
+    - ``max_gain_bp``    — largest clip-safe gain, ``32767·10⁴ div
       peak`` (NULL when peak is 0/NULL)
     - ``would_clip``     — target gain exceeds the safe gain
     - ``capped_gain_bp`` — ``least(gain_bp, max_gain_bp)`` — what a
@@ -998,9 +941,7 @@ def normalization_gain(
     """
     if target_ms_q <= 0:
         raise ValueError(f"target_ms_q must be positive, got {target_ms_q}")
-    if full_scale <= 0:
-        raise ValueError(f"full_scale must be positive, got {full_scale}")
-    e, n, p = energy_col, n_col, peak_col
+    e, n, p = "energy", "n_samples", "peak_abs"
     n_t = f"(CAST({target_ms_q} AS DECIMAL(38,0)) * 100000000 * {n})"
     bad = f"({e} IS NULL OR {e} <= 0 OR {n} IS NULL OR {n} <= 0)"
     out = (
@@ -1028,7 +969,7 @@ def normalization_gain(
         )
         .withColumn(
             "max_gain_bp",
-            F.expr(f"CASE WHEN {p} > 0 THEN {full_scale} * 10000 div {p} END"),
+            F.expr(f"CASE WHEN {p} > 0 THEN 32767 * 10000 div {p} END"),
         )
         .withColumn(
             "would_clip",
@@ -1048,13 +989,7 @@ def normalization_gain(
     return out.drop("_c0", "_c1")
 
 
-def clipping_stats(
-    df: DataFrame,
-    *,
-    bytes_col: str = "bytes",
-    threshold: int = 32767,
-    keep: list[str] | None = None,
-) -> DataFrame:
+def clipping_stats(df: DataFrame, *, keep: list[str] | None = None) -> DataFrame:
     """Sustained-overdrive screen decoded from raw int16-LE PCM bytes.
 
     Emits ``(n_samples, n_clipped, max_clip_run, clipped_ppm)`` per row:
@@ -1065,7 +1000,7 @@ def clipping_stats(
     odd-length payloads yield NULL stats; one mapInPandas stage and the
     binary column dies inside it (same contract as :func:`pcm_stats`).
     """
-    kept = keep if keep is not None else [f.name for f in df.schema.fields if f.name != bytes_col]
+    kept = keep if keep is not None else [f.name for f in df.schema.fields if f.name != "bytes"]
     _guard_emitted(
         kept, ("n_samples", "n_clipped", "max_clip_run", "clipped_ppm"), "clipping_stats"
     )
@@ -1086,7 +1021,7 @@ def clipping_stats(
             nc_s: list[int | None] = [None] * m
             run_s: list[int | None] = [None] * m
             ppm_s: list[int | None] = [None] * m
-            payloads = pdf[bytes_col].to_numpy(dtype=object)
+            payloads = pdf["bytes"].to_numpy(dtype=object)
             for i in range(m):
                 b = payloads[i]
                 if b is None or len(b) % 2 != 0:
@@ -1094,7 +1029,7 @@ def clipping_stats(
                 decoded = np.frombuffer(b, dtype="<i2")
                 n = decoded.size
                 n_s[i] = n
-                n_over, longest = clipped_run_stats(decoded, threshold=threshold)
+                n_over, longest = clipped_run_stats(decoded)
                 nc_s[i] = n_over
                 run_s[i] = longest
                 ppm_s[i] = (n_over * 1_000_000 + n // 2) // n if n else 0
@@ -1114,19 +1049,10 @@ AUG_SPEEDS_PERMILLE = (900, 1000, 1100)
 AUG_NOISE_KINDS = ("babble", "music", "street", "white")
 
 
-def augmentation_plan(
-    df: DataFrame,
-    *,
-    id_col: str = "clip_id",
-    n_variants: int = 3,
-    speeds_permille: tuple[int, ...] = AUG_SPEEDS_PERMILLE,
-    noise_kinds: tuple[str, ...] = AUG_NOISE_KINDS,
-    snr_min_db: int = 5,
-    snr_max_db: int = 30,
-) -> DataFrame:
+def augmentation_plan(df: DataFrame, *, id_col: str = "clip_id", n_variants: int = 3) -> DataFrame:
     """Assign each clip ``n_variants`` augmentation parameter rows — speed
-    perturbation, additive-noise kind, and mix SNR — as a PURE FUNCTION of
-    (clip id, variant index).
+    perturbation, additive-noise kind (``AUG_NOISE_KINDS``), and mix SNR (5-30 dB) — as a
+    PURE FUNCTION of (clip id, variant index).
 
     ASR training recipes (kaldi/espnet 3-way speed perturb + MUSAN-style
     noise mixing) need per-clip augmentation parameters; drawing them with
@@ -1142,8 +1068,6 @@ def augmentation_plan(
     """
     if n_variants < 1:
         raise ValueError(f"n_variants must be >= 1, got {n_variants}")
-    if snr_max_db <= snr_min_db:
-        raise ValueError("snr_max_db must exceed snr_min_db")
     from data_check_spark.operators.dedup import _portable_hash60
 
     v = F.explode(F.sequence(F.lit(0), F.lit(n_variants - 1))).alias("variant")
@@ -1156,9 +1080,8 @@ def augmentation_plan(
             F.concat(F.col(id_col).cast("string"), F.lit(tag), F.col("variant"))
         )
 
-    speed_arr = F.array(*[F.lit(s) for s in speeds_permille])
-    kind_arr = F.array(*[F.lit(k) for k in noise_kinds])
-    span = snr_max_db - snr_min_db + 1
+    speed_arr = F.array(*[F.lit(s) for s in AUG_SPEEDS_PERMILLE])
+    kind_arr = F.array(*[F.lit(k) for k in AUG_NOISE_KINDS])
     return base.select(
         id_col,
         "variant",
@@ -1166,16 +1089,16 @@ def augmentation_plan(
         # the original copy is kept; perturbed copies add to it)
         F.when(F.col("variant") == 0, F.lit(1000))
         .otherwise(F.element_at(
-            speed_arr, (_h(":aug:spd:") % F.lit(len(speeds_permille))).cast("int") + 1
+            speed_arr, (_h(":aug:spd:") % F.lit(len(AUG_SPEEDS_PERMILLE))).cast("int") + 1
         ))
         .alias("speed_permille"),
         F.when(F.col("variant") == 0, F.lit(None).cast("string"))
         .otherwise(F.element_at(
-            kind_arr, (_h(":aug:nk:") % F.lit(len(noise_kinds))).cast("int") + 1
+            kind_arr, (_h(":aug:nk:") % F.lit(len(AUG_NOISE_KINDS))).cast("int") + 1
         ))
         .alias("noise_kind"),
         F.when(F.col("variant") == 0, F.lit(None).cast("int"))
-        .otherwise((F.lit(snr_min_db) + _h(":aug:snr:") % F.lit(span)).cast("int"))
+        .otherwise((F.lit(5) + _h(":aug:snr:") % F.lit(26)).cast("int"))
         .alias("noise_snr_db"),
     )
 

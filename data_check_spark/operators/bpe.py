@@ -48,10 +48,8 @@ __all__ = ["word_symbol_frame", "bpe_train", "bpe_merges_df", "bpe_segment", "bp
 _CHECKPOINT_EVERY = 8
 
 
-def word_symbol_frame(
-    df: DataFrame, *, text_col: str = "text", lowercase: bool = True
-) -> DataFrame:
-    """Collapse a corpus to ``(word, syms, freq)`` — the ONLY corpus-sized
+def word_symbol_frame(df: DataFrame) -> DataFrame:
+    """Collapse a corpus to lowercased ``(word, syms, freq)`` — the ONLY corpus-sized
     pass in BPE training.
 
     ``syms`` is the word as a space-joined character-symbol string
@@ -60,10 +58,8 @@ def word_symbol_frame(
     ``regexp_replace(word, '(.)', '\\1 ', 'g')``, so both engines agree on
     the initial symbol layout for any codepoint.
     """
-    word = F.explode(_tokens(text_col)).alias("word")
-    toks = df.select(word).filter(F.col("word") != "")
-    if lowercase:
-        toks = toks.select(F.lower("word").alias("word"))
+    word = F.explode(_tokens("text")).alias("word")
+    toks = df.select(word).filter(F.col("word") != "").select(F.lower("word").alias("word"))
     return toks.groupBy("word").agg(F.count("*").alias("freq")).select(
         "word",
         F.trim(F.regexp_replace("word", r"(.)", r"$1 ")).alias("syms"),
@@ -106,13 +102,7 @@ def _apply_merge(words: DataFrame, lhs: str, rhs: str) -> DataFrame:
     return words.select("word", merged.alias("syms"), "freq")
 
 
-def bpe_train(
-    df: DataFrame,
-    *,
-    n_merges: int,
-    text_col: str = "text",
-    lowercase: bool = True,
-) -> tuple[list[dict], DataFrame]:
+def bpe_train(df: DataFrame, *, n_merges: int) -> tuple[list[dict], DataFrame]:
     """Learn ``n_merges`` BPE merges from a corpus.
 
     Returns ``(merges, dictionary)``: ``merges`` is the driver-side merge
@@ -126,7 +116,7 @@ def bpe_train(
     """
     if n_merges <= 0:
         raise ValueError(f"n_merges must be positive, got {n_merges}")
-    words = word_symbol_frame(df, text_col=text_col, lowercase=lowercase).localCheckpoint()
+    words = word_symbol_frame(df).localCheckpoint()
     merges: list[dict] = []
     for rank in range(1, n_merges + 1):
         top = (
@@ -162,14 +152,7 @@ def bpe_merges_df(spark: SparkSession, merges: list[dict]) -> DataFrame:
     )
 
 
-def bpe_segment(
-    df: DataFrame,
-    dictionary: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lowercase: bool = True,
-) -> DataFrame:
+def bpe_segment(df: DataFrame, dictionary: DataFrame) -> DataFrame:
     """Segment a corpus with a trained dictionary; per-document piece stats.
 
     Output per input row: ``n_words`` (whitespace words), ``n_pieces``
@@ -180,20 +163,19 @@ def bpe_segment(
     Blank/NULL documents keep a zero row.
 
     Plan shape: dictionary → ``(word, n_pieces)`` broadcast; corpus explode
-    + broadcast lookup + one per-``id_col`` hash aggregate (map-side
+    + broadcast lookup + one per-``doc_id`` hash aggregate (map-side
     partials). The corpus text never shuffles.
     """
     dict_pieces = dictionary.select(
         "word", F.size(F.split("syms", " ")).alias("_dict_pieces")
     )
-    word = F.explode_outer(_tokens(text_col)).alias("word")
-    toks = df.select(F.col(id_col), word)
-    if lowercase:
-        toks = toks.select(id_col, F.lower("word").alias("word"))
+    word = F.explode_outer(_tokens("text")).alias("word")
+    toks = df.select(F.col("doc_id"), word)
+    toks = toks.select("doc_id", F.lower("word").alias("word"))
     # explode_outer keeps blank docs as (id, NULL) so they survive to output
     toks = toks.withColumn("word", F.when(F.col("word") == "", None).otherwise(F.col("word")))
     joined = toks.join(F.broadcast(dict_pieces), "word", "left")
-    per_doc = joined.groupBy(id_col).agg(
+    per_doc = joined.groupBy("doc_id").agg(
         F.count("word").cast("long").alias("n_words"),
         F.sum(
             F.when(F.col("word").isNotNull(), F.coalesce("_dict_pieces", F.length("word")))
@@ -205,7 +187,7 @@ def bpe_segment(
         .alias("n_word_chars"),
     )
     return per_doc.select(
-        id_col,
+        "doc_id",
         "n_words",
         F.coalesce("n_pieces", F.lit(0)).cast("long").alias("n_pieces"),
         F.coalesce("n_word_chars", F.lit(0)).cast("long").alias("n_word_chars"),
@@ -219,14 +201,7 @@ def bpe_segment(
     )
 
 
-def bpe_tokenize(
-    df: DataFrame,
-    dictionary: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lowercase: bool = True,
-) -> DataFrame:
+def bpe_tokenize(df: DataFrame, dictionary: DataFrame) -> DataFrame:
     """Tokenize a corpus with a trained dictionary — the piece stream itself.
 
     Where :func:`bpe_segment` reports counts, this emits the artifact a
@@ -241,20 +216,19 @@ def bpe_tokenize(
     """
     dict_pieces = dictionary.select("word", F.split("syms", " ").alias("_dict_p"))
     toks = df.select(
-        F.col(id_col), F.posexplode(_tokens(text_col)).alias("_wi", "word")
+        F.col("doc_id"), F.posexplode(_tokens("text")).alias("_wi", "word")
     )
-    if lowercase:
-        toks = toks.select(id_col, "_wi", F.lower("word").alias("word"))
+    toks = toks.select("doc_id", "_wi", F.lower("word").alias("word"))
     fallback = F.split(F.trim(F.regexp_replace("word", r"(.)", r"$1 ")), " ")
     joined = toks.join(F.broadcast(dict_pieces), "word", "left").select(
-        id_col,
+        "doc_id",
         F.col("_wi").cast("int").alias("word_idx"),
         F.coalesce("_dict_p", fallback).alias("_p"),
     )
     return joined.select(
-        id_col,
+        "doc_id",
         "word_idx",
         F.posexplode("_p").alias("piece_idx", "piece"),
     ).select(
-        id_col, "word_idx", F.col("piece_idx").cast("int").alias("piece_idx"), "piece"
+        "doc_id", "word_idx", F.col("piece_idx").cast("int").alias("piece_idx"), "piece"
     )

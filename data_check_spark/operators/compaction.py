@@ -29,18 +29,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def compaction_plan(
-    files: DataFrame,
-    *,
-    target_bytes: int,
-    small_bytes: int | None = None,
-    dir_col: str = "part_dir",
-    name_col: str = "file_name",
-    size_col: str = "file_size",
-) -> DataFrame:
+def compaction_plan(files: DataFrame, *, target_bytes: int) -> DataFrame:
     """Assign small files to merge groups, one plan row per input file.
 
-    ``small_bytes`` (default ``target_bytes // 2``): files at or above it
+    Files at or above ``target_bytes // 2``
     are already healthy — ``action='keep'``, ``group_id`` NULL. Small
     files get ``action='merge'`` and a 0-based per-dir ``group_id``:
     cumulative size before the file (file-name order) ``div``
@@ -51,31 +43,29 @@ def compaction_plan(
     """
     if target_bytes <= 0:
         raise ValueError(f"target_bytes must be positive, got {target_bytes}")
-    small = target_bytes // 2 if small_bytes is None else small_bytes
-    if not 0 < small <= target_bytes:
-        raise ValueError(f"small_bytes must be in (0, target_bytes], got {small}")
-    sz = F.col(size_col).cast("long")
+    small = target_bytes // 2
+    sz = F.col("file_size").cast("long")
     is_small = sz < F.lit(small)
     w = (
-        Window.partitionBy(dir_col)
-        .orderBy(name_col)
+        Window.partitionBy("part_dir")
+        .orderBy("file_name")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     before = F.coalesce(
         F.sum(F.when(is_small, sz).otherwise(F.lit(0))).over(w), F.lit(0)
     )
     staged = files.select(
-        dir_col,
-        name_col,
-        sz.alias(size_col),
+        "part_dir",
+        "file_name",
+        sz.alias("file_size"),
         F.when(is_small, F.lit("merge")).otherwise(F.lit("keep")).alias("action"),
         before.cast("long").alias("_before"),
     )
     # `div` (not float /): cumulative bytes in a dir can pass 2^53
     return staged.select(
-        dir_col,
-        name_col,
-        size_col,
+        "part_dir",
+        "file_name",
+        "file_size",
         "action",
         F.expr(f"CASE WHEN action = 'merge' THEN _before div {target_bytes} END").alias(
             "group_id"
@@ -83,11 +73,11 @@ def compaction_plan(
     )
 
 
-def compaction_summary(plan: DataFrame, *, dir_col: str = "part_dir") -> DataFrame:
+def compaction_summary(plan: DataFrame) -> DataFrame:
     """Per-dir rollup of a :func:`compaction_plan`: files/bytes before,
     merge groups, and the projected file count after the rewrite."""
     merged = F.sum(F.when(F.col("action") == "merge", 1).otherwise(0))
-    return plan.groupBy(dir_col).agg(
+    return plan.groupBy("part_dir").agg(
         F.count(F.lit(1)).alias("n_files"),
         merged.alias("n_small"),
         F.sum(

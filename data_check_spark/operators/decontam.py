@@ -53,7 +53,6 @@ def decontaminate(
     n: int = 4,
     id_col: str = "doc_id",
     text_col: str = "text",
-    eval_text_col: str | None = None,
 ) -> DataFrame:
     """Per-training-doc contamination report.
 
@@ -63,9 +62,8 @@ def decontaminate(
     anti-join to drop contaminated docs; the absent-row convention keeps
     the result proportional to contamination, not corpus size).
     """
-    etext = eval_text_col or text_col
     eval_grams = (
-        eval_df.select(F.explode(word_ngrams(etext, n)).alias("g")).distinct()
+        eval_df.select(F.explode(word_ngrams(text_col, n)).alias("g")).distinct()
     )
     train_grams = train.select(
         F.col(id_col), F.explode(word_ngrams(text_col, n)).alias("g")
@@ -79,12 +77,6 @@ def fuzzy_decontaminate(
     eval_df: DataFrame,
     *,
     threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    num_perm: int = 64,
-    bands: int = 16,
-    max_eval_bucket: int = 64,
     portable: bool = False,
 ) -> DataFrame:
     """MinHash-LSH fuzzy contamination: training docs NEAR-duplicating an
@@ -98,7 +90,7 @@ def fuzzy_decontaminate(
     in DuckDB for the oracle.
 
     Plan shape at 100 TB: both sides reduce to (id, signature) band rows;
-    the EVAL side is small (a benchmark), capped at ``max_eval_bucket``
+    the EVAL side is small (a benchmark), capped at 64
     rows per band bucket (deterministic by id order) and **broadcast** —
     the training corpus is never shuffled for the match. Verification is
     exact signature agreement on the joined rows; the only shuffle is the
@@ -109,23 +101,17 @@ def fuzzy_decontaminate(
     ``(id, n_eval_matches, best_n_agree, best_est_q4, first_eval_id)``
     with integer est quantization (tie-free cross-engine, CLAUDE.md).
     """
-    from data_check_spark.operators.dedup import banded_signatures
+    from data_check_spark.operators.dedup import NUM_PERM, banded_signatures
 
     from pyspark.sql.window import Window
 
-    bt = banded_signatures(
-        train, id_col=id_col, text_col=text_col, k=k, num_perm=num_perm,
-        bands=bands, portable=portable,
-    )
-    be = banded_signatures(
-        eval_df, id_col=id_col, text_col=text_col, k=k, num_perm=num_perm,
-        bands=bands, portable=portable,
-    )
+    bt = banded_signatures(train, portable=portable)
+    be = banded_signatures(eval_df, portable=portable)
     # cap degenerate eval buckets (boilerplate bands) deterministically
     w = Window.partitionBy("band", "bh").orderBy("_id")
     be = (
         be.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= max_eval_bucket)
+        .filter(F.col("_rn") <= 64)
         .select(
             F.col("_id").alias("_eid"),
             F.col("signature").alias("_esig"),
@@ -145,10 +131,10 @@ def fuzzy_decontaminate(
         )
     )
     scored = cand.withColumn("n_agree", n_agree.cast("long")).filter(
-        F.col("n_agree").cast("double") / num_perm >= threshold
+        F.col("n_agree").cast("double") / NUM_PERM >= threshold
     )
     return (
-        scored.groupBy(F.col("_id").alias(id_col))
+        scored.groupBy(F.col("_id").alias("doc_id"))
         .agg(
             F.count(F.lit(1)).alias("n_eval_matches"),
             F.max("n_agree").alias("best_n_agree"),
@@ -156,10 +142,10 @@ def fuzzy_decontaminate(
         )
         .withColumn(
             "best_est_q4",
-            F.expr(f"(best_n_agree * 10000 + {num_perm // 2}) div {num_perm}")
+            F.expr(f"(best_n_agree * 10000 + {NUM_PERM // 2}) div {NUM_PERM}")
             .cast("long"),
         )
         .select(
-            id_col, "n_eval_matches", "best_n_agree", "best_est_q4", "first_eval_id"
+            "doc_id", "n_eval_matches", "best_n_agree", "best_est_q4", "first_eval_id"
         )
     )

@@ -103,9 +103,7 @@ def exact_duplicate_groups(
     )
 
 
-def exact_duplicate_rows(
-    df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def exact_duplicate_rows(df: DataFrame) -> DataFrame:
     """(doc_id, fingerprint, keep_id): every non-canonical duplicate row.
 
     ONE scan: group stats come from window functions over the fingerprint
@@ -113,19 +111,19 @@ def exact_duplicate_rows(
     scan of the corpus (the text column is the dominant IO at scale)."""
     from pyspark.sql.window import Window
 
-    fp = fingerprints(df, id_col=id_col, text_col=text_col).filter(
+    fp = fingerprints(df).filter(
         F.col("fingerprint").isNotNull()
     )
     w = Window.partitionBy("fingerprint")
     return (
         fp.select(
-            F.col(id_col),
+            F.col("doc_id"),
             "fingerprint",
             F.count(F.lit(1)).over(w).alias("_n"),
-            F.min(id_col).over(w).alias("keep_id"),
+            F.min("doc_id").over(w).alias("keep_id"),
         )
-        .filter((F.col("_n") > 1) & (F.col(id_col) != F.col("keep_id")))
-        .select(id_col, "fingerprint", "keep_id")
+        .filter((F.col("_n") > 1) & (F.col("doc_id") != F.col("keep_id")))
+        .select("doc_id", "fingerprint", "keep_id")
     )
 
 
@@ -229,19 +227,18 @@ def minhash_signatures(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k: int = SHINGLE_K,
-    num_perm: int = NUM_PERM,
     portable: bool = False,
 ) -> DataFrame:
-    """(id, signature array<long>[num_perm]) — fully JVM-side MinHash.
+    """(id, signature array<long>[NUM_PERM]) over ``SHINGLE_K``-shingles —
+    fully JVM-side MinHash.
 
-    Both modes hash each shingle ONCE and derive the num_perm minima from
+    Both modes hash each shingle ONCE and derive the NUM_PERM minima from
     affine permutations of the cached base-hash array (the standard
     universal-hashing MinHash family). The alternative — one full string
-    hash per (shingle, permutation) — costs num_perm string passes and
-    measured ~15x slower at num_perm=64. ``portable`` only swaps the leaf:
+    hash per (shingle, permutation) — costs NUM_PERM string passes and
+    measured ~15x slower at NUM_PERM=64. ``portable`` only swaps the leaf:
     xxhash64 (fast, JVM-only) vs md5 prefix (DuckDB-evaluable)."""
-    sh = _shingles_expr(text_col, k)
+    sh = _shingles_expr(text_col, SHINGLE_K)
     if portable:
         leaf = F.transform(sh, lambda s: _portable_hash60(s) % PORTABLE_PRIME)
     else:
@@ -250,7 +247,7 @@ def minhash_signatures(
     sig = F.array(
         *[
             F.array_min(F.transform(F.col("_hs"), _affine(a, b)))
-            for a, b in portable_perm_table(num_perm)
+            for a, b in portable_perm_table(NUM_PERM)
         ]
     )
     return base.select(F.col(id_col), sig.alias("signature"))
@@ -261,24 +258,13 @@ def banded_signatures(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k: int = SHINGLE_K,
-    num_perm: int = NUM_PERM,
-    bands: int = LSH_BANDS,
     portable: bool = False,
 ) -> DataFrame:
     """MinHash signatures exploded into LSH band buckets:
     ``(_id, signature, band, bh)`` — the shared candidate-generation frame
     for intra-corpus pairing (minhash_lsh_pairs) and cross-corpus fuzzy
     matching (decontam.fuzzy_decontaminate)."""
-    if not 1 <= bands <= num_perm or num_perm % bands:
-        # bands > num_perm would make rows = 0 (every band hash a constant →
-        # one giant silently-truncated bucket); a non-divisor would silently
-        # ignore the trailing permutations during candidate generation.
-        raise ValueError(
-            f"bands must divide num_perm, 1 <= bands <= num_perm "
-            f"(got bands={bands}, num_perm={num_perm})"
-        )
-    rows = num_perm // bands
+    rows = NUM_PERM // LSH_BANDS
 
     def _band_hash(b: Column) -> Column:
         sl = F.slice(F.col("signature"), b * rows + 1, rows)
@@ -286,15 +272,13 @@ def banded_signatures(
             return F.concat_ws(",", F.transform(sl, lambda v: v.cast("string")))
         return F.xxhash64(sl.cast("string"))
 
-    sigs = minhash_signatures(
-        df, id_col=id_col, text_col=text_col, k=k, num_perm=num_perm, portable=portable
-    )
+    sigs = minhash_signatures(df, id_col=id_col, text_col=text_col, portable=portable)
     return sigs.select(
         F.col(id_col).alias("_id"),
         F.col("signature"),
         F.explode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
+                F.sequence(F.lit(0), F.lit(LSH_BANDS - 1)),
                 lambda b: F.struct(b.alias("band"), _band_hash(b).alias("bh")),
             )
         ).alias("bb"),
@@ -306,11 +290,7 @@ def minhash_lsh_pairs(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k: int = SHINGLE_K,
-    num_perm: int = NUM_PERM,
-    bands: int = LSH_BANDS,
     threshold: float = 0.5,
-    max_bucket: int = 64,
     portable: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, est_jaccard ≥ threshold).
@@ -324,15 +304,14 @@ def minhash_lsh_pairs(
     C half-even disagree — integer quantization is tie-free (CLAUDE.md).
     """
     banded = banded_signatures(
-        df, id_col=id_col, text_col=text_col, k=k, num_perm=num_perm,
-        bands=bands, portable=portable,
+        df, id_col=id_col, text_col=text_col, portable=portable,
     )
 
     # Bucket members capped: a pathological bucket (empty docs, boilerplate)
     # is truncated deterministically by id order (shared _bucket_pairs).
     pairs = _bucket_pairs(
         banded, ["band", "bh"], "signature",
-        max_bucket=max_bucket, out_a="sig_a", out_b="sig_b",
+        max_bucket=64, out_a="sig_a", out_b="sig_b",
     )
     n_agree = F.size(
         F.filter(
@@ -345,17 +324,17 @@ def minhash_lsh_pairs(
         # num_perm (the division is by 2^k, so the double is exact).
         return (
             pairs.withColumn("n_agree", n_agree.cast("long"))
-            .filter(F.col("n_agree").cast("double") / num_perm >= threshold)
+            .filter(F.col("n_agree").cast("double") / NUM_PERM >= threshold)
             .select(
                 "id_a",
                 "id_b",
                 "n_agree",
-                F.floor((F.col("n_agree") * 10000 + F.lit(num_perm // 2)) / F.lit(num_perm))
+                F.floor((F.col("n_agree") * 10000 + F.lit(NUM_PERM // 2)) / F.lit(NUM_PERM))
                 .cast("long")
                 .alias("est_q4"),
             )
         )
-    est = n_agree.cast("double") / F.lit(float(num_perm))
+    est = n_agree.cast("double") / F.lit(float(NUM_PERM))
     return (
         pairs.withColumn("est_jaccard", est)
         .filter(F.col("est_jaccard") >= threshold)
@@ -368,9 +347,7 @@ def minhash_lsh_pairs(
 # ---------------------------------------------------------------------------
 
 
-def simhash_64(
-    df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text", portable: bool = False
-) -> DataFrame:
+def simhash_64(df: DataFrame, *, portable: bool = False) -> DataFrame:
     """(id, simhash long): 64-bit SimHash over whitespace tokens.
 
     Token→hash is JVM (`xxhash64`); the per-doc bit vote runs as ONE
@@ -383,7 +360,7 @@ def simhash_64(
 
     # engine-wide tokenization (empty/NULL text → empty array → simhash 0,
     # not one phantom '' token voting on every bit)
-    toks = _tokens(text_col)
+    toks = _tokens("text")
     if portable:
         hashes = F.transform(toks, lambda t: _portable_hash60(t))
     else:
@@ -405,23 +382,15 @@ def simhash_64(
                     np.where(votes > 0, np.uint64(1) << np.arange(64, dtype=np.uint64), np.uint64(0))
                 )
                 out[i] = np.int64(np.uint64(sh).astype(np.int64))
-            yield pd.DataFrame({id_col: pdf[id_col], "simhash": out})
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "simhash": out})
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    return df.select(F.col(id_col), hashes.alias("_h")).mapInPandas(
-        vote, schema=f"{id_col} {id_type}, simhash long"
+    id_type = df.schema["doc_id"].dataType.simpleString()
+    return df.select(F.col("doc_id"), hashes.alias("_h")).mapInPandas(
+        vote, schema=f"doc_id {id_type}, simhash long"
     )
 
 
-def simhash_near_pairs(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    max_bucket: int = 256,
-    portable: bool = False,
-) -> DataFrame:
+def simhash_near_pairs(df: DataFrame, *, max_hamming: int = 3, portable: bool = False) -> DataFrame:
     """Pairs with hamming(simhash) ≤ max_hamming via chunk blocking.
 
     The 64 bits are split into ``max_hamming + 1`` contiguous chunks, so by
@@ -434,9 +403,9 @@ def simhash_near_pairs(
         raise ValueError(f"max_hamming must be in [0, 63], got {max_hamming}")
     # Contiguous chunk boundaries; widths differ by at most 1 bit.
     bounds = [(c * 64 // n_chunks, (c + 1) * 64 // n_chunks) for c in range(n_chunks)]
-    sh = simhash_64(df, id_col=id_col, text_col=text_col, portable=portable)
+    sh = simhash_64(df, portable=portable)
     chunked = sh.select(
-        F.col(id_col).alias("_id"),
+        F.col("doc_id").alias("_id"),
         "simhash",
         F.explode(
             F.array(
@@ -458,7 +427,7 @@ def simhash_near_pairs(
     ).select("_id", "simhash", F.col("cc.chunk").alias("chunk"), F.col("cc.ck").alias("ck"))
     pairs = _bucket_pairs(
         chunked, ["chunk", "ck"], "simhash",
-        max_bucket=max_bucket, out_a="sh_a", out_b="sh_b",
+        max_bucket=256, out_a="sh_a", out_b="sh_b",
     )
     ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).cast("int")
     return (
@@ -477,21 +446,14 @@ MAX_SHINGLE_DF = 128  # stop-shingle cutoff: document frequency above this
                       # drops the shingle from CANDIDATE GENERATION only
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = SHINGLE_K,
-    threshold: float = 0.5,
-    max_df: int = MAX_SHINGLE_DF,
-) -> DataFrame:
-    """Exact Jaccard over distinct k-shingles for pairs sharing ≥1 RARE shingle.
+def ngram_jaccard_pairs(df: DataFrame, *, threshold: float = 0.5) -> DataFrame:
+    """Exact Jaccard over distinct ``SHINGLE_K``-shingles of ``text`` for
+    ``doc_id`` pairs sharing ≥1 RARE shingle.
 
     Candidate generation (unchanged contract): explode distinct shingles →
-    drop shingles with document frequency > ``max_df`` (stop-shingle removal)
-    → self-join the pruned inverted index. The posting-list cap bounds the
-    self-join at Σ min(df, max_df)² instead of Σ df².
+    drop shingles with document frequency > ``MAX_SHINGLE_DF`` (stop-shingle
+    removal) → self-join the pruned inverted index. The posting-list cap
+    bounds the self-join at Σ min(df, MAX_SHINGLE_DF)² instead of Σ df².
 
     Verification (count-based, no per-pair set arrays): the exact
     intersection size splits as |A∩B| = shared_rare + shared_common.
@@ -504,21 +466,23 @@ def ngram_jaccard_pairs(
     Why bitmaps: the naive verify join ships each candidate pair two
     ~|set|-element arrays (measured 15s for 2.2M candidates at sf0.1); the
     bitmap is ceil(C/64) longs where C = #distinct common shingles. C is
-    bounded: Σ df ≤ total shingle instances, so #shingles with df > max_df
-    ≤ instances/max_df. At cluster scale set ``max_df`` as a corpus
-    FRACTION (boilerplate = "appears in > x% of docs") and the dictionary
-    stays ≤ avg_set_size/x entries regardless of corpus size.
+    bounded: Σ df ≤ total shingle instances, so #shingles with df >
+    MAX_SHINGLE_DF ≤ instances/MAX_SHINGLE_DF. At cluster scale set the cap
+    as a corpus FRACTION (boilerplate = "appears in > x% of docs") and the
+    dictionary stays ≤ avg_set_size/x entries regardless of corpus size.
 
     One tiny driver action (count of the aggregated df frame, ~|dictionary|
     rows) fixes the bitmap width at plan-build time."""
-    sh = df.select(F.col(id_col).alias("_id"), F.explode(_shingles_expr(text_col, k)).alias("s"))
+    sh = df.select(
+        F.col("doc_id").alias("_id"), F.explode(_shingles_expr("text", SHINGLE_K)).alias("s")
+    )
     dfs = (
         sh.groupBy("s")
         .agg(F.count(F.lit(1)).alias("_df"))
         .localCheckpoint(eager=True)  # ≤ #distinct shingles rows; reused 3×
     )
     commons = (
-        dfs.filter(F.col("_df") > max_df)
+        dfs.filter(F.col("_df") > MAX_SHINGLE_DF)
         .select(
             "s",
             # Unpartitioned window is intentional: this frame is the common-
@@ -530,7 +494,7 @@ def ngram_jaccard_pairs(
     n_common = commons.count()
     width = (n_common + 63) // 64
 
-    rare_idx = sh.join(dfs.filter(F.col("_df") <= max_df).select("s"), "s")
+    rare_idx = sh.join(dfs.filter(F.col("_df") <= MAX_SHINGLE_DF).select("s"), "s")
     a = rare_idx.alias("a")
     b = rare_idx.alias("b")
     pairs = (
@@ -604,13 +568,7 @@ def ngram_jaccard_pairs(
     )
 
 
-def edit_distance_verify(
-    pairs: DataFrame,
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def edit_distance_verify(pairs: DataFrame, docs: DataFrame) -> DataFrame:
     """Exact edit-distance verification of near-dup CANDIDATE pairs — the
     final filter of a dedup pipeline. Approximate emitters (MinHash bands,
     SimHash chunks, shingle Jaccard) admit false positives by design;
@@ -628,8 +586,8 @@ def edit_distance_verify(
     shuffled). Levenshtein is the JVM built-in — O(len_a·len_b) per pair,
     in codegen, zero Python.
     """
-    a = docs.select(F.col(id_col).alias("id_a"), F.col(text_col).alias("_ta"))
-    b = docs.select(F.col(id_col).alias("id_b"), F.col(text_col).alias("_tb"))
+    a = docs.select(F.col("doc_id").alias("id_a"), F.col("text").alias("_ta"))
+    b = docs.select(F.col("doc_id").alias("id_b"), F.col("text").alias("_tb"))
     return (
         pairs.select("id_a", "id_b")
         .join(a, "id_a")
@@ -650,13 +608,7 @@ def edit_distance_verify(
     )
 
 
-def span_dedup(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    span_tokens: int = 32,
-) -> DataFrame:
+def span_dedup(df: DataFrame, *, span_tokens: int = 32) -> DataFrame:
     """Cross-document duplicate-SPAN removal — sub-document dedup.
 
     Whole-doc dedup (``exact_duplicate_rows``) misses the dominant failure
@@ -695,8 +647,6 @@ def span_dedup(
         df,
         chunk_tokens=span_tokens,
         overlap_tokens=0,
-        id_col=id_col,
-        text_col=text_col,
     # materialize the tiling ONCE (AQE-safe localCheckpoint, the repo idiom):
     # the eligible and tail branches below would otherwise each re-scan and
     # re-explode the raw corpus — two full text scans instead of one
@@ -705,19 +655,19 @@ def span_dedup(
     tails = spans.filter(F.col("n_chunk_tokens") != span_tokens)
 
     w = Window.partitionBy("_fp")
-    wo = w.orderBy(F.col(id_col).asc(), F.col("chunk_idx").asc())
+    wo = w.orderBy(F.col("doc_id").asc(), F.col("chunk_idx").asc())
     marked = (
         full.withColumn("_fp", F.md5("chunk_text"))
         .withColumn(
             "_keep",
             (F.count(F.lit(1)).over(w) == 1) | (F.row_number().over(wo) == 1),
         )
-        .select(id_col, "chunk_idx", "chunk_text", "_keep")
+        .select("doc_id", "chunk_idx", "chunk_text", "_keep")
     )
     everything = marked.unionByName(
-        tails.select(id_col, "chunk_idx", "chunk_text", F.lit(True).alias("_keep"))
+        tails.select("doc_id", "chunk_idx", "chunk_text", F.lit(True).alias("_keep"))
     )
-    rebuilt = everything.groupBy(id_col).agg(
+    rebuilt = everything.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 F.array_sort(
@@ -734,10 +684,10 @@ def span_dedup(
     )
     # token-less docs produced zero spans — restore them with NULL text
     return (
-        df.select(id_col)
-        .join(rebuilt, id_col, "left")
+        df.select("doc_id")
+        .join(rebuilt, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.col("text_clean"),
             F.coalesce("n_spans", F.lit(0)).cast("long").alias("n_spans"),
             F.coalesce("n_removed", F.lit(0)).cast("long").alias("n_removed"),
@@ -751,9 +701,6 @@ def incremental_exact_dedup(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    store_fp_col: str = "fingerprint",
-    m_bits: int = 1 << 20,
-    k: int = 5,
 ) -> DataFrame:
     """Batch-vs-history exact dedup: flag new documents whose content
     fingerprint already exists in the historical fingerprint store —
@@ -785,11 +732,11 @@ def incremental_exact_dedup(
     fps = new_docs.select(
         F.col(id_col), F.md5(F.col(text_col)).alias("fingerprint")
     )
-    bitmap = build_bloom(fps, "fingerprint", m_bits=m_bits, k=k)
+    bitmap = build_bloom(fps, "fingerprint")
     candidates = (
-        store_fps.where(F.col(store_fp_col).isNotNull())
-        .where(might_contain(store_fp_col, bitmap, k=k))
-        .select(F.col(store_fp_col).alias("_sfp"))
+        store_fps.where(F.col("fingerprint").isNotNull())
+        .where(might_contain("fingerprint", bitmap))
+        .select(F.col("fingerprint").alias("_sfp"))
         .dropDuplicates()
         .withColumn("_hit", F.lit(1))
     )

@@ -68,8 +68,7 @@ def _assert_unique_keys(df: DataFrame, key_cols: list[str], side: str) -> None:
         key = {k: dup[0][k] for k in key_cols}
         raise ValueError(
             f"snapshot_diff: duplicate key in {side} snapshot: {key} "
-            "(keys must be unique per snapshot; pass check_unique=False "
-            "only if uniqueness is already guaranteed upstream)"
+            "(keys must be unique per snapshot)"
         )
 
 
@@ -79,15 +78,14 @@ def snapshot_diff(
     *,
     key_cols: list[str],
     compare_cols: list[str],
-    check_unique: bool = True,
 ) -> DataFrame:
     """Per-key change classification between two snapshots.
 
     Returns one row per key that is NOT identical in both snapshots:
     ``(key…, change_type)`` with ``change_type`` ∈ {'added', 'removed',
     'changed'}. Keys must be unique per snapshot (it's a key) — violated
-    uniqueness is detected up front (one column-pruned count per side)
-    unless ``check_unique=False``. NULL key values are matched NULL-safely
+    uniqueness is detected up front (one column-pruned count per side).
+    NULL key values are matched NULL-safely
     (``<=>``), so an identical row with a NULL key is *unchanged*, not
     'removed'+'added'. Compared columns are explicit so a caller adding an
     audit column doesn't silently flip every row to 'changed'.
@@ -97,9 +95,8 @@ def snapshot_diff(
     overlap = set(key_cols) & set(compare_cols)
     if overlap:
         raise ValueError(f"key and compare columns overlap: {sorted(overlap)}")
-    if check_unique:
-        _assert_unique_keys(old, key_cols, "old")
-        _assert_unique_keys(new, key_cols, "new")
+    _assert_unique_keys(old, key_cols, "old")
+    _assert_unique_keys(new, key_cols, "new")
     o = old.select(*key_cols, row_fingerprint(compare_cols).alias("_fp_old"))
     n = new.select(
         *[F.col(k).alias(f"_new_{k}") for k in key_cols],
@@ -129,10 +126,7 @@ def summary_regression(
     old_summary: DataFrame,
     new_summary: DataFrame,
     *,
-    rule_col: str = "rule_id",
-    count_col: str = "n",
     threshold_bp: int = 2500,
-    check_unique: bool = True,
 ) -> DataFrame:
     """Per-rule violation-count regression between two runs.
 
@@ -142,11 +136,11 @@ def summary_regression(
     count (integer arithmetic — cross-engine exact), plus rules that
     appeared ('new_rule') or disappeared ('gone'). Rule ids must be unique
     per summary — duplicates would fan out the join and double-count, so
-    they raise up front (tiny frames, the check is one cheap count) unless
-    ``check_unique=False``. The frames are #rules-sized, so the full-outer
-    join is trivially broadcast; this is the "did today's run look like
-    yesterday's" gate that catches a rule suddenly firing 100x — or
-    silently going dark — before anyone ships the certified table.
+    they raise up front (tiny frames, the check is one cheap count). The
+    frames are #rules-sized, so the full-outer join is trivially broadcast;
+    this is the "did today's run look like yesterday's" gate that catches a
+    rule suddenly firing 100x — or silently going dark — before anyone ships
+    the certified table.
 
     delta_bp is signed: ``(new - old) * 10000 div greatest(old, 1)`` —
     truncating integer division (Spark ``div`` ≡ DuckDB ``//``, both
@@ -156,14 +150,13 @@ def summary_regression(
     this gate exists for; plain division would NULL out and silently drop
     it). delta_bp is NULL for new_rule/gone rows.
     """
-    if check_unique:
-        _assert_unique_keys(old_summary.select(rule_col), [rule_col], "old summary")
-        _assert_unique_keys(new_summary.select(rule_col), [rule_col], "new summary")
+    _assert_unique_keys(old_summary.select("rule_id"), ["rule_id"], "old summary")
+    _assert_unique_keys(new_summary.select("rule_id"), ["rule_id"], "new summary")
     o = old_summary.select(
-        F.col(rule_col).alias("_r"), F.col(count_col).cast("long").alias("_n_old")
+        F.col("rule_id").alias("_r"), F.col("n").cast("long").alias("_n_old")
     )
     n = new_summary.select(
-        F.col(rule_col).alias("_rn"), F.col(count_col).cast("long").alias("_n_new")
+        F.col("rule_id").alias("_rn"), F.col("n").cast("long").alias("_n_new")
     )
     joined = o.join(n, F.col("_r") == F.col("_rn"), "full_outer")
     delta_bp = F.expr(

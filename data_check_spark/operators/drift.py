@@ -48,7 +48,6 @@ def chunk_digests(
     column: str | list[str],
     *,
     partition_col: str = "partition",
-    max_centroids: int = td.DEFAULT_MAX_CENTROIDS,
 ) -> DataFrame:
     """Level-1 sketches: one digest per (Arrow batch × table partition ×
     column). Accepts several columns so one pass sketches all drift rules."""
@@ -61,7 +60,7 @@ def chunk_digests(
                 for col in columns:
                     vals = pd.to_numeric(grp[col], errors="coerce").to_numpy(dtype=np.float64)
                     vals = vals[~np.isnan(vals)]
-                    d = td.from_values(vals, max_centroids)
+                    d = td.from_values(vals, td.DEFAULT_MAX_CENTROIDS)
                     rows.append((part, col, td.serialize(d), int(vals.size)))
             if rows:
                 yield pd.DataFrame(rows, columns=["partition", "column_name", "tdigest", "n"])
@@ -71,13 +70,24 @@ def chunk_digests(
     )
 
 
-def make_baseline(
-    spark: SparkSession,
-    df: DataFrame,
-    columns: list[str],
-    *,
-    partition_col: str = "partition",
-) -> DataFrame:
+def _merge_partition_digests(chunks: DataFrame) -> DataFrame:
+    """Level 2: one digest per (partition, column), merged from the chunk
+    digests of :func:`chunk_digests` (digest merging is associative)."""
+
+    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        merged = td.merge([td.deserialize(b) for b in pdf["tdigest"]], td.DEFAULT_MAX_CENTROIDS)
+        return pd.DataFrame(
+            [(pdf["partition"].iloc[0], pdf["column_name"].iloc[0],
+              td.serialize(merged), int(pdf["n"].sum()))],
+            columns=["partition", "column_name", "tdigest", "n"],
+        )
+
+    return chunks.groupBy("partition", "column_name").applyInPandas(
+        merge_group, schema=_CHUNK_SCHEMA
+    )
+
+
+def make_baseline(spark: SparkSession, df: DataFrame, columns: list[str]) -> DataFrame:
     """Baseline snapshot table (BASELINE_STATS_SCHEMA): per-partition digests
     for each column + one __global__ row, computed from a clean reference run.
 
@@ -86,22 +96,8 @@ def make_baseline(
     chunk frame is checkpointed (sketch rows only — tiny) and the
     per-partition merge AND the per-column treeAggregate globals all reduce
     over it, never rescanning the data — digest merging is associative."""
-    chunks = chunk_digests(df, columns, partition_col=partition_col).localCheckpoint(
-        eager=False
-    )
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        digs = [td.deserialize(b) for b in pdf["tdigest"]]
-        merged = td.merge(digs, td.DEFAULT_MAX_CENTROIDS)
-        return pd.DataFrame(
-            [(pdf["partition"].iloc[0], pdf["column_name"].iloc[0],
-              td.serialize(merged), int(pdf["n"].sum()))],
-            columns=["partition", "column_name", "tdigest", "n"],
-        )
-
-    out = chunks.groupBy("partition", "column_name").applyInPandas(
-        merge_group, schema=_CHUNK_SCHEMA
-    )
+    chunks = chunk_digests(df, columns).localCheckpoint(eager=False)
+    out = _merge_partition_digests(chunks)
 
     def seq(acc, row):
         d, n = acc
@@ -142,20 +138,7 @@ def drift_violations_multi(
     # a duplicate column in the sketch-pass select would produce duplicate
     # pandas labels and crash inside the executor.
     columns = list(dict.fromkeys(c for _, c, *_ in rules))
-    chunks = chunk_digests(df, columns, partition_col=partition_col)
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        digs = [td.deserialize(b) for b in pdf["tdigest"]]
-        merged = td.merge(digs, td.DEFAULT_MAX_CENTROIDS)
-        return pd.DataFrame(
-            [(pdf["partition"].iloc[0], pdf["column_name"].iloc[0],
-              td.serialize(merged), int(pdf["n"].sum()))],
-            columns=["partition", "column_name", "tdigest", "n"],
-        )
-
-    current = chunks.groupBy("partition", "column_name").applyInPandas(
-        merge_group, schema=_CHUNK_SCHEMA
-    )
+    current = _merge_partition_digests(chunk_digests(df, columns, partition_col=partition_col))
     base = baseline.filter(F.col("column_name").isin(columns)).select(
         F.col("partition").alias("_bpart"),
         F.col("column_name").alias("_bcol"),

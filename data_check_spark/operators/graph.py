@@ -82,34 +82,27 @@ def _unionfind_components(edges: DataFrame) -> DataFrame:
     return edges.sparkSession.createDataFrame(out, schema)
 
 
-def connected_components(
-    pairs: DataFrame,
-    *,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = DEFAULT_MAX_ITER,
-    small_graph_edges: int = SMALL_GRAPH_MAX_EDGES,
-) -> DataFrame:
-    """(node, component) for every node in ``pairs``; ``component`` is the
-    smallest node id reachable via pair edges (deterministic canonical id).
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """(node, component) for every node in ``pairs`` (columns ``id_a``,
+    ``id_b``); ``component`` is the smallest node id reachable via pair
+    edges (deterministic canonical id).
 
-    Graphs at or below ``small_graph_edges`` edges run driver-side
-    union-find (identical output, none of the per-round job latency); pass
-    ``small_graph_edges=0`` to force the distributed path.
+    Graphs at or below ``SMALL_GRAPH_MAX_EDGES`` edges run driver-side
+    union-find (identical output, none of the per-round job latency).
 
-    Raises ``RuntimeError`` if ``max_iter`` rounds don't reach the fixpoint
+    Raises ``RuntimeError`` if ``DEFAULT_MAX_ITER`` rounds don't reach the fixpoint
     (component labels would be incomplete — fail loudly, never silently)."""
     # NULL ids can't be graph nodes: a NULL src would adopt its neighbor's
     # label and emit a phantom (NULL, component) member that inflates
     # cluster sizes downstream.
-    p = pairs.filter(F.col(id_a).isNotNull() & F.col(id_b).isNotNull())
+    p = pairs.filter(F.col("id_a").isNotNull() & F.col("id_b").isNotNull())
     edges = (
-        p.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionByName(p.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
+        p.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        .unionByName(p.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
         .distinct()
         .localCheckpoint(eager=True)  # reused every round — cut the upstream plan once
     )
-    if edges.count() <= small_graph_edges:
+    if edges.count() <= SMALL_GRAPH_MAX_EDGES:
         # the count is over already-materialized checkpoint blocks — cheap
         return _unionfind_components(edges)
     labels = (
@@ -118,6 +111,7 @@ def connected_components(
         .withColumn("label", F.col("node"))
         .localCheckpoint(eager=True)
     )
+    max_iter = DEFAULT_MAX_ITER
     for _ in range(max_iter):
         nbr_min = (
             edges.join(labels, edges["dst"] == labels["node"])
@@ -146,18 +140,12 @@ def connected_components(
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 
 
-def dedup_clusters(
-    pairs: DataFrame,
-    *,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = DEFAULT_MAX_ITER,
-) -> DataFrame:
+def dedup_clusters(pairs: DataFrame) -> DataFrame:
     """Cluster view of a near-dup pair set: one row per clustered doc —
     (doc_id, cluster_id, cluster_size, is_canonical) where cluster_id is the
     min doc id of the component and is_canonical=1 marks the kept copy
     (first-wins, matching exact_duplicate_groups' keep rule)."""
-    cc = connected_components(pairs, id_a=id_a, id_b=id_b, max_iter=max_iter)
+    cc = connected_components(pairs)
     sizes = cc.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (
         cc.join(sizes, "component")

@@ -2,18 +2,11 @@
 
 Media payloads are opaque ``binary`` columns + typed metadata; all heavy
 per-item work runs as Arrow-batched ``mapInPandas`` so nothing row-at-a-time
-touches the driver. Decode support is tiered:
-
-- ``decode_stub=True`` (default): deterministic fake feature vector from the
-  payload bytes — exercises the full Spark contract without codecs.
-- ``decode_stub=False``: REAL decode where the stdlib suffices — WAV/RIFF
-  audio parses via ``wave`` + numpy, and P6 PPM images via the strict
-  header + raw-RGB parser (``_parse_p6``), both sniffed from the payload
-  magic and yielding genuine features / exact channel statistics
-  (``image_stats``). Compressed image (PNG/JPEG) and video codecs have no
-  decoder in this container; those payloads come back as ``ok=false`` rows
-  naming the seam (plug PIL / av in ``_REAL_DECODERS``) — the engine-wide
-  "error is data, not an exception" convention.
+touches the driver. ``extract_features`` derives a deterministic stand-in
+feature vector from the payload bytes — it exercises the full Spark contract
+without codecs. P6 PPM images decode for real through the strict header +
+raw-RGB parser (``_parse_p6``), which yields exact channel statistics
+(``image_stats``).
 
 Audio-PCM decode is NOT stubbed anywhere in this repo: the vectorized
 decode/validate path lives in operators/audio.py (the mapInPandas wide
@@ -23,8 +16,6 @@ pass, SNR gate).
 from __future__ import annotations
 
 import hashlib
-import io
-import wave
 from collections.abc import Iterator
 
 import numpy as np
@@ -51,56 +42,17 @@ _FEATURES_SCHEMA = (
 )
 
 
-def _decode_wav(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
-    """Real WAV decode (stdlib wave + numpy): summary feature vector
-    [n_channels, sr/48k, dur_s, rms, peak, zcr_per_s/1k, 0...]."""
-    with wave.open(io.BytesIO(payload), "rb") as w:
-        n_ch, width, sr, n_frames = (
-            w.getnchannels(), w.getsampwidth(), w.getframerate(), w.getnframes()
-        )
-        raw = w.readframes(n_frames)
-    if width != 2:
-        raise ValueError(f"only PCM16 wav supported, got sample width {width}")
-    x = np.frombuffer(raw, dtype=np.int16).astype(np.float64) / 32768.0
-    if n_ch > 1:
-        x = x.reshape(-1, n_ch).mean(axis=1)
-    dur_s = n_frames / sr if sr else 0.0
-    rms = float(np.sqrt(np.mean(x * x))) if x.size else 0.0
-    peak = float(np.max(np.abs(x))) if x.size else 0.0
-    signs = np.signbit(x)
-    zcr = float(np.count_nonzero(signs[1:] != signs[:-1]) / dur_s) if dur_s > 0 else 0.0
-    vec = np.zeros(dim, dtype=np.float32)
-    vec[:6] = [n_ch, sr / 48000.0, dur_s, rms, peak, zcr / 1000.0]
-    return vec
-
-
-# Payload sniffers → real decoders. The WAV sniff checks BOTH the RIFF tag
-# and the WAVE fourcc so other RIFF containers (WebP, AVI) fall through to
-# the "no decoder" seam instead of a misleading wave-parse error. Image
-# (PNG/JPEG) and video seams are intentionally absent in this container;
-# add (lambda b: b[:8] == b"\x89PNG\r\n\x1a\n", pil_decode) etc.
-_REAL_DECODERS = [
-    (lambda b: b[:4] == b"RIFF" and b[8:12] == b"WAVE", _decode_wav),
-    (lambda b: b[:2] == b"P6", lambda b, dim=FEATURE_DIM: _decode_ppm(b, dim)),
-]
-
-
-def _fake_decode(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
+def _fake_decode(payload: bytes) -> np.ndarray:
     """Deterministic stand-in feature vector: sha256-seeded, unit-normed."""
     digest = hashlib.sha256(payload).digest()
-    raw = np.frombuffer((digest * ((dim * 4) // len(digest) + 1))[: dim * 4], dtype=np.uint32)
+    n = FEATURE_DIM * 4
+    raw = np.frombuffer((digest * (n // len(digest) + 1))[:n], dtype=np.uint32)
     vec = (raw.astype(np.float64) / np.iinfo(np.uint32).max) * 2.0 - 1.0
     norm = np.linalg.norm(vec)
     return (vec / norm if norm > 0 else vec).astype(np.float32)
 
 
-def extract_features(
-    media: DataFrame,
-    *,
-    decode_stub: bool = True,
-    feature_dim: int = FEATURE_DIM,
-    batch_hint: int = 256,
-) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """payload → (ok, error, n_bytes, feature[float]) via mapInPandas.
 
     Decode failures become rows with ``ok=false`` + error detail — the same
@@ -118,7 +70,7 @@ def extract_features(
                 "n_bytes": [],
                 "feature": [],
             }
-            for payload, mtype in zip(pdf["payload"], pdf["media_type"]):
+            for payload in pdf["payload"]:
                 if payload is None or len(payload) == 0:
                     out["ok"].append(False)
                     out["error"].append("empty payload")
@@ -126,20 +78,7 @@ def extract_features(
                     out["feature"].append(None)
                     continue
                 try:
-                    if decode_stub:
-                        vec = _fake_decode(bytes(payload), feature_dim)
-                    else:
-                        b = bytes(payload)
-                        decoder = next(
-                            (fn for sniff, fn in _REAL_DECODERS if sniff(b)),
-                            None,
-                        )
-                        if decoder is None:
-                            raise ValueError(
-                                f"no decoder for {mtype} payload in this environment "
-                                "(plug PIL/av into _REAL_DECODERS)"
-                            )
-                        vec = decoder(b, feature_dim)
+                    vec = _fake_decode(bytes(payload))
                     out["ok"].append(True)
                     out["error"].append(None)
                     out["n_bytes"].append(len(payload))
@@ -155,7 +94,7 @@ def extract_features(
     return cols.mapInPandas(run, schema=_FEATURES_SCHEMA)
 
 
-def portable_media_df(docs: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
+def portable_media_df(docs: DataFrame) -> DataFrame:
     """Media fixture with ENGINE-PORTABLE synthesis (MEDIA_SCHEMA shape).
 
     Every derived field is md5-prefix arithmetic over an existing id column
@@ -166,7 +105,7 @@ def portable_media_df(docs: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
     ``blob_`` + a 5..32-char md5-hex prefix — pure ASCII, so byte length ==
     char length in both engines.
     """
-    sid = F.col(id_col).cast("string")
+    sid = F.col("doc_id").cast("string")
     hx = F.md5(F.encode(F.concat(sid, F.lit(":media")), "UTF-8"))
     h = F.conv(F.substring(hx, 1, 15), 16, 10).cast("long")
     mtype = F.element_at(
@@ -184,16 +123,6 @@ def portable_media_df(docs: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
         F.create_map(F.lit("dur_ms"), (h % 30000 + 500).cast("string")).alias("meta"),
         F.format_string("p%02d", (h % 16).cast("int")).alias("partition"),
     )
-
-
-def _decode_ppm(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
-    """Real P6 PPM decode → summary feature vector
-    [w/1k, h/1k, aspect, mean_r, mean_g, mean_b, maxval/255, 0...]."""
-    w, h, maxval, rgb = _parse_p6(payload)
-    means = rgb.reshape(-1, 3).mean(axis=0) / maxval if rgb.size else np.zeros(3)
-    vec = np.zeros(dim, dtype=np.float32)
-    vec[:7] = [w / 1000.0, h / 1000.0, w / h if h else 0.0, *means, maxval / 255.0]
-    return vec
 
 
 def _parse_p6(payload: bytes) -> tuple[int, int, int, np.ndarray]:
@@ -229,9 +158,7 @@ def _parse_p6(payload: bytes) -> tuple[int, int, int, np.ndarray]:
     return w, h, maxval, np.frombuffer(raster, dtype=np.uint8)
 
 
-def image_stats(
-    df: DataFrame, *, bytes_col: str = "payload", keep: list[str] | None = None
-) -> DataFrame:
+def image_stats(df: DataFrame, *, keep: list[str] | None = None) -> DataFrame:
     """Integer-exact per-image stats from raw P6 PPM bytes — the image
     sibling of ``audio.pcm_stats``.
 
@@ -245,7 +172,7 @@ def image_stats(
     the audio wide pass).
     """
     kept = keep if keep is not None else [
-        f.name for f in df.schema.fields if f.name != bytes_col
+        f.name for f in df.schema.fields if f.name != "payload"
     ]
     emitted = ("width", "height", "maxval", "n_pixels", "sum_r", "sum_g", "sum_b")
     bad = [c for c in kept if c in emitted]
@@ -263,7 +190,7 @@ def image_stats(
         for pdf in batches:
             m = len(pdf)
             cols: dict[str, list] = {c: [None] * m for c in emitted}
-            payloads = pdf[bytes_col].to_numpy(dtype=object)
+            payloads = pdf["payload"].to_numpy(dtype=object)
             for i in range(m):
                 b = payloads[i]
                 if b is None:
@@ -288,12 +215,7 @@ def image_stats(
     return df.mapInPandas(run, schema=schema)
 
 
-def synth_ppm(
-    df: DataFrame,
-    *,
-    out_col: str = "payload",
-    keep: list[str] | None = None,
-) -> DataFrame:
+def synth_ppm(df: DataFrame, *, keep: list[str] | None = None) -> DataFrame:
     """Deterministic P6 PPM synthesis from integer params — the image
     sibling of ``audio.synth_square_pcm``.
 
@@ -309,7 +231,7 @@ def synth_ppm(
     fields = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields if f.name in kept
     )
-    schema = f"{fields}, {out_col} binary"
+    schema = f"{fields}, payload binary"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -325,7 +247,7 @@ def synth_ppm(
                     px[:, c] = base + grad
                 payloads.append(f"P6\n{w} {h}\n255\n".encode() + px.tobytes())
             out = pdf[kept].copy()
-            out[out_col] = payloads
+            out["payload"] = payloads
             yield out
 
     return df.mapInPandas(run, schema=schema)

@@ -45,9 +45,7 @@ def pack_assignments(
     *,
     budget: int,
     id_col: str = "doc_id",
-    text_col: str = "text",
     n_tokens_col: str | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Per-document pack assignment under a fixed token ``budget``.
 
@@ -69,10 +67,10 @@ def pack_assignments(
     if budget <= 0:
         raise ValueError(f"budget must be positive, got {budget}")
     spark = df.sparkSession
-    nparts = num_partitions or spark.sparkContext.defaultParallelism
+    nparts = spark.sparkContext.defaultParallelism
 
     if n_tokens_col is None:
-        n_tok = F.coalesce(F.size(_tokens(text_col)), F.lit(0))
+        n_tok = F.coalesce(F.size(_tokens("text")), F.lit(0))
         # size() of a NULL array is NULL under ANSI; -1 under legacy. Either
         # way coalesce+greatest pins NULL/blank text to 0 tokens.
         n_tok = F.greatest(n_tok, F.lit(0))

@@ -62,18 +62,16 @@ def redact(text: Column) -> Column:
     return out
 
 
-def pii_scan(
-    df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def pii_scan(df: DataFrame) -> DataFrame:
     """Per-document PII counts + md5 fingerprint of the redacted text.
 
     The fingerprint (not the redacted text itself) is the contract output:
     it proves byte-exact redaction without shipping the document back —
     at 10^9 docs the scan result stays ~40 bytes/row.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *pii_counts(t),
         F.md5(F.encode(redact(t), "UTF-8")).alias("redacted_fp"),
     )

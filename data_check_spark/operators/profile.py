@@ -260,24 +260,22 @@ def numeric_quantiles(
     return wide.select(F.explode(rows).alias("r")).select("r.*")
 
 
-def value_histogram(
-    df: DataFrame, column: str, *, bin_width: float, scale: int = 100
-) -> DataFrame:
+def value_histogram(df: DataFrame, column: str, *, bin_width: float) -> DataFrame:
     """(bin, bin_lo_scaled, n) fixed-width histogram — one hash aggregate.
 
-    Bin index = ``floor(round(x*scale) / round(bin_width*scale))`` over the
+    Bin index = ``floor(round(x*100) / round(bin_width*100))`` over the
     integer-quantized value, so the bin boundary arithmetic is exact (a raw
     ``floor(x / w)`` on doubles flips bins for values within a ulp of a
     boundary). Output is O(value_range / bin_width) rows regardless of
     input size; the single groupBy gets a map-side partial aggregate for
     free."""
-    w = round(bin_width * scale)
+    w = round(bin_width * 100)
     if w <= 0:
-        raise ValueError(f"bin_width too small for scale={scale}: {bin_width}")
+        raise ValueError(f"bin_width too small for scale=100: {bin_width}")
     qdf = (
         df.select(_finite(F.col(column)).alias("_v"))
         .filter(F.col("_v").isNotNull())
-        .select(F.round(F.col("_v") * scale).cast("long").alias("_q"))
+        .select(F.round(F.col("_v") * 100).cast("long").alias("_q"))
     )
     # Exact integer floor division: (_q - pmod(_q, w)) is an exact multiple
     # of w, so DIV is the true floor quotient even beyond 2^53 — a double
@@ -296,8 +294,6 @@ def quantile_drift(
     value_col: str,
     group_col: str,
     *,
-    percentiles: tuple[float, ...] = (0.25, 0.5, 0.75),
-    scale: int = 100,
     max_exact_range: int | None = MAX_EXACT_QUANTILE_RANGE,
 ) -> DataFrame:
     """Per-group vs whole-table quantile drift in ONE scan via ROLLUP.
@@ -318,10 +314,10 @@ def quantile_drift(
     ``percentile_approx`` so no per-group (value → count) map can exceed
     ``max_exact_range`` entries.
     """
-    _require_dyadic(percentiles)
-    wide_cols = _wide_range_columns(df, [value_col], scale, max_exact_range)
-    pcts = F.array(*[F.lit(float(p)) for p in percentiles])
-    qcol = F.round(_finite(F.col(value_col)) * scale).cast("long")
+    quartiles = (0.25, 0.5, 0.75)
+    wide_cols = _wide_range_columns(df, [value_col], 100, max_exact_range)
+    pcts = F.array(*[F.lit(p) for p in quartiles])
+    qcol = F.round(_finite(F.col(value_col)) * 100).cast("long")
     if value_col in wide_cols:
         pct_agg = F.percentile_approx(qcol, pcts, F.lit(APPROX_QUANTILE_ACCURACY))
     else:
@@ -349,7 +345,7 @@ def quantile_drift(
                 (F.col("qs")[i] * 4).cast("long").alias("q_scaled"),
                 (F.col("bqs")[i] * 4).cast("long").alias("base_scaled"),
             )
-            for i, p in enumerate(percentiles)
+            for i, p in enumerate(quartiles)
         ]
     )
     out = joined.select(F.explode(rows).alias("r")).select("r.*")
@@ -705,7 +701,7 @@ BENFORD_PPM = {
 }
 
 
-def benford_screen(df: DataFrame, value_col: str, *, scale: int = 100) -> DataFrame:
+def benford_screen(df: DataFrame, value_col: str) -> DataFrame:
     """First-significant-digit (Benford) screen over a numeric column.
 
     Naturally-occurring monetary/size/duration columns follow Benford's
@@ -717,7 +713,7 @@ def benford_screen(df: DataFrame, value_col: str, *, scale: int = 100) -> DataFr
 
     One row per first digit 1..9 present: ``(digit, n, share_ppm,
     benford_ppm, delta_ppm)``. Integer-exact cross-engine contract:
-    values quantize to ``floor(abs(x)*scale + 0.5)`` bigints (zeros drop —
+    values quantize to ``floor(abs(x)*100 + 0.5)`` bigints (zeros drop —
     they have no first significant digit), the first digit comes from the
     decimal string rendering (identical in any engine; no float log10),
     and shares are half-up integer ppm ``(n*1e6 + total/2) div total``.
@@ -731,8 +727,8 @@ def benford_screen(df: DataFrame, value_col: str, *, scale: int = 100) -> DataFr
         # and silently saturates at Long.MaxValue past 2^63 (which would
         # bucket every huge value under digit 9); such rows degrade like
         # NULL — they are a range rule's finding, not a digit sample.
-        .filter(F.abs(F.col("_v")) < F.lit(9.0e18 / scale))
-        .select(F.expr(f"cast(floor(abs(_v) * {int(scale)} + 0.5) as bigint)").alias("_q"))
+        .filter(F.abs(F.col("_v")) < F.lit(9.0e16))
+        .select(F.expr("cast(floor(abs(_v) * 100 + 0.5) as bigint)").alias("_q"))
         .filter(F.col("_q") > 0)
     )
     g = (
@@ -757,12 +753,7 @@ def benford_screen(df: DataFrame, value_col: str, *, scale: int = 100) -> DataFr
     )
 
 
-def null_correlation(
-    df: DataFrame,
-    pairs: list[tuple[str, str]],
-    *,
-    blank_as_missing: bool = True,
-) -> DataFrame:
+def null_correlation(df: DataFrame, pairs: list[tuple[str, str]]) -> DataFrame:
     """Co-missingness audit across column pairs — ONE aggregation pass.
 
     For each ``(a, b)`` pair: how often is each column missing, how often
@@ -776,23 +767,19 @@ def null_correlation(
     - ``a_given_b_ppm`` — P(a missing | b missing) in ppm
     - ``b_given_a_ppm`` — P(b missing | a missing) in ppm
 
-    ``blank_as_missing`` uses the engine-wide tri-state blank convention
-    (functions/blank.py — whitespace-only strings count as missing), else
-    plain NULL. Scale: a single hash-free global aggregate (map-side
-    partials, one 1-row result), all integer arithmetic — no second scan
-    per pair, no shuffle of data rows.
+    Missing follows the engine-wide tri-state blank convention
+    (functions/blank.py — whitespace-only strings count as missing). Scale:
+    a single hash-free global aggregate (map-side partials, one 1-row
+    result), all integer arithmetic — no second scan per pair, no shuffle of
+    data rows.
     """
     from data_check_spark.functions.blank import is_blank
 
     if not pairs:
         raise ValueError("pairs must be non-empty")
-    if blank_as_missing:
-        miss = is_blank
-    else:
-        miss = lambda c: F.col(c).isNull()  # noqa: E731
     aggs = [F.count(F.lit(1)).alias("_n")]
     for i, (a, b) in enumerate(pairs):
-        ma, mb = miss(a), miss(b)
+        ma, mb = is_blank(a), is_blank(b)
         aggs += [
             F.sum(ma.cast("long")).alias(f"_a{i}"),
             F.sum(mb.cast("long")).alias(f"_b{i}"),
@@ -836,9 +823,7 @@ def _mask_expr(col: str, max_mask_len: int) -> Column:
     return F.coalesce(m, F.lit("<null>"))
 
 
-def format_masks(
-    df: DataFrame, columns: list[str], *, top_n: int = 5, max_mask_len: int = 64
-) -> DataFrame:
+def format_masks(df: DataFrame, columns: list[str], *, top_n: int = 5) -> DataFrame:
     """Per-column structure-mask histogram — format DISCOVERY, one scan.
 
     The format *rules* (rules/compiler.py regex kind) verify a format you
@@ -848,16 +833,14 @@ def format_masks(
     length anomalies surface as separate masks. Output: top ``top_n``
     masks per column with exact count, half-up integer-ppm share of ALL
     rows (NULLs bucket as '<null>'), and a deterministic rank
-    (count desc, mask asc).
+    (count desc, mask asc). Masks truncate at 64 chars.
 
     Scale shape: ONE scan; ``stack`` reshapes to (col, mask) rows feeding a
     single map-side-combined aggregate bounded by Σ distinct masks — the
     windows below run over that small frame, never the corpus."""
     if not columns:
         raise ValueError("columns must be non-empty")
-    if max_mask_len < 1:
-        raise ValueError(f"max_mask_len must be >= 1, got {max_mask_len}")
-    masked = df.select(*[_mask_expr(c, max_mask_len).alias(c) for c in columns])
+    masked = df.select(*[_mask_expr(c, 64).alias(c) for c in columns])
     stack_args = ", ".join(f"'{c}', `{c}`" for c in columns)
     long = masked.selectExpr(
         f"stack({len(columns)}, {stack_args}) AS (col_name, mask)"
@@ -975,15 +958,7 @@ def numeric_correlation(
     )
 
 
-def dataset_card(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-    lang_col: str = "lang",
-    approx: bool = False,
-) -> DataFrame:
+def dataset_card(df: DataFrame) -> DataFrame:
     """Dataset-card summary: the headline numbers a corpus release ships with
     (model/data cards à la Datasheets for Datasets), as (metric, value)
     bigint rows.
@@ -996,24 +971,22 @@ def dataset_card(
     Plan shape: ONE full scan feeds a single global aggregate (map-side
     partials, 1-row result); the duplicate tally is the standard two-phase
     fingerprint groupBy (the shuffle carries 128-bit fingerprints, never
-    text). ``approx=True`` swaps the two exact distinct counts for
-    HyperLogLog++ (no Expand, the 100-TB default); exact is kept as the
-    oracle-checkable baseline. The two 1-row frames cross-join (trivial)
-    and unpivot via ``stack`` — output is 8 rows regardless of corpus size.
+    text). The two distinct counts are exact (oracle-checkable). The two
+    1-row frames cross-join (trivial) and unpivot via ``stack`` — output is
+    8 rows regardless of corpus size.
     """
-    t = F.trim(F.col(text_col))
+    t = F.trim(F.col("text"))
     n_tokens = F.when(t == "", F.lit(0)).otherwise(F.size(F.split(t, r"\s+")))
-    distinct = F.approx_count_distinct if approx else F.count_distinct
     base = df.agg(
         F.count(F.lit(1)).alias("n_docs"),
-        distinct(F.col(source_col)).alias("n_sources"),
-        distinct(F.col(lang_col)).alias("n_langs"),
-        F.sum(F.length(F.col(text_col))).alias("total_chars"),
+        F.count_distinct(F.col("source")).alias("n_sources"),
+        F.count_distinct(F.col("lang")).alias("n_langs"),
+        F.sum(F.length(F.col("text"))).alias("total_chars"),
         F.sum(n_tokens).alias("total_tokens"),
         F.count_if(t == "").alias("n_blank_docs"),
     )
     groups = (
-        df.groupBy(F.md5(F.col(text_col)).alias("_fp"))
+        df.groupBy(F.md5(F.col("text")).alias("_fp"))
         .agg(F.count(F.lit(1)).alias("_n"))
         .filter(F.col("_n") > 1)
     )

@@ -26,18 +26,15 @@ def interval_join(
     start: str,
     end: str,
     bucket: str = "7 days",
-    how: str = "inner",
 ) -> DataFrame:
     """Rows of ``points`` joined to every ``intervals`` row of the same key
     whose [start, end] (inclusive) contains the point's timestamp.
 
     ``bucket`` is a Spark interval literal (e.g. ``'7 days'``, ``'1 hour'``).
     Output: all point columns + all interval columns (caller aliases any
-    collisions beforehand). ``how='inner'`` only; the bucketed plan cannot
+    collisions beforehand). Inner join only; the bucketed plan cannot
     express outer semantics directly — anti/outer callers wrap it.
     """
-    if how != "inner":
-        raise ValueError("interval_join supports how='inner' only")
     units = {"second": 1, "minute": 60, "hour": 3600, "day": 86400, "week": 604800}
     n_str, unit = bucket.split()
     unit_key = unit.lower().rstrip("s")  # case-insensitive, like Spark literals

@@ -6,11 +6,9 @@ semi-join CHK_0033 (503-510), and the semi∘anti composition CHK_0060
 materializes Python sets on the driver; here both sides stay distributed.
 
 Join-strategy selection (north_rule: "broadcast or sort-merge depending on
-dimension size"): the dimension key set is broadcast when its estimated size
-is under ``broadcast_max_rows``; otherwise we leave the plan to Catalyst,
-which picks sort-merge for two large sides (plus AQE skew splitting). The
-decision is explicit — callers of ``referential_violations`` pass
-``dim_rows`` when known (e.g. from table metadata) to avoid a count() action.
+dimension size"): the plans carry no hint. AQE broadcasts the dimension key
+set at runtime when it is under ``spark.sql.autoBroadcastJoinThreshold`` and
+leaves two large sides to sort-merge (plus skew splitting).
 """
 
 from __future__ import annotations
@@ -19,25 +17,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_check_spark.functions.blank import bytes_differ, is_present
-
-# Dim-size boundary for the broadcast-vs-sort-merge decision (north_rule).
-# 1M string keys ≈ 30MB serialized: comfortably broadcastable; above that the
-# serial driver collect + re-send dominates and SMJ's parallel exchanges win
-# (measured: broadcasting a 4M-key dim cost ~8s serial driver time per rule).
-BROADCAST_MAX_ROWS = 1_000_000
-
-
-def _maybe_broadcast(dim_keys: DataFrame, dim_rows: int | None) -> DataFrame:
-    """Explicit broadcast ONLY when the caller knows the dim size (table
-    metadata, catalog stats). Unknown size → leave the plan unhinted: AQE
-    converts the join to broadcast at runtime when the built side turns out
-    small. The previous behavior (count() when unknown) cost one full dim
-    scan per referential rule per run — at 100x scale that is a job per rule
-    just to pick a join strategy AQE picks for free."""
-    if dim_rows is not None and dim_rows <= BROADCAST_MAX_ROWS:
-        return F.broadcast(dim_keys)
-    return dim_keys
-
 
 def _membership_violations(
     df: DataFrame,
@@ -50,11 +29,10 @@ def _membership_violations(
     id_col: str,
     partition_col: str | None,
     gate,
-    dim_rows: int | None,
 ) -> DataFrame:
     """Shared body of the anti (key absent) / semi (key present) rules —
     one implementation so the two directions can't drift apart."""
-    dim_keys = _maybe_broadcast(dim.select(F.col(dim_key).alias("_dk")).dropDuplicates(), dim_rows)
+    dim_keys = dim.select(F.col(dim_key).alias("_dk")).dropDuplicates()
     fact = df.filter(is_present(fact_key))
     if gate is not None:
         fact = fact.filter(gate)
@@ -77,16 +55,14 @@ def anti_join_violations(
     *,
     fact_key: str = "clip_id",
     dim_key: str = "clip_id",
-    id_col: str = "clip_id",
     partition_col: str | None = "partition",
     gate=None,
-    dim_rows: int | None = None,
 ) -> DataFrame:
     """Fact rows whose key has NO match in the dimension (FK violation)."""
     return _membership_violations(
         df, dim, rule_id, "left_anti",
-        fact_key=fact_key, dim_key=dim_key, id_col=id_col,
-        partition_col=partition_col, gate=gate, dim_rows=dim_rows,
+        fact_key=fact_key, dim_key=dim_key, id_col="clip_id",
+        partition_col=partition_col, gate=gate,
     )
 
 
@@ -100,13 +76,12 @@ def semi_join_violations(
     id_col: str = "clip_id",
     partition_col: str | None = "partition",
     gate=None,
-    dim_rows: int | None = None,
 ) -> DataFrame:
     """Fact rows whose key IS in the (forbidden) dimension set."""
     return _membership_violations(
         df, dim, rule_id, "left_semi",
         fact_key=fact_key, dim_key=dim_key, id_col=id_col,
-        partition_col=partition_col, gate=gate, dim_rows=dim_rows,
+        partition_col=partition_col, gate=gate,
     )
 
 
@@ -352,14 +327,10 @@ def semi_anti_violations(
     dim_not_in_key: str = "clip_id",
     id_col: str = "clip_id",
     partition_col: str | None = "partition",
-    dim_in_rows: int | None = None,
-    dim_not_in_rows: int | None = None,
 ) -> DataFrame:
     """key ∈ dim_in AND key ∉ dim_not_in (reference: CHK_0060 composition)."""
-    in_keys = _maybe_broadcast(dim_in.select(F.col(dim_in_key).alias("_ik")).dropDuplicates(), dim_in_rows)
-    not_keys = _maybe_broadcast(
-        dim_not_in.select(F.col(dim_not_in_key).alias("_nk")).dropDuplicates(), dim_not_in_rows
-    )
+    in_keys = dim_in.select(F.col(dim_in_key).alias("_ik")).dropDuplicates()
+    not_keys = dim_not_in.select(F.col(dim_not_in_key).alias("_nk")).dropDuplicates()
     fact = df.filter(is_present(fact_key))
     part = F.col(partition_col) if partition_col else F.lit(None).cast("string")
     return (

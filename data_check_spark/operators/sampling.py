@@ -55,10 +55,10 @@ def stratified_sample(
     id_col: str,
     strata_col: str,
     rates: dict[str, float],
-    default_rate: float = 0.0,
     seed: str = "s0",
 ) -> DataFrame:
-    """Per-stratum deterministic sample (rate chosen by ``strata_col``).
+    """Per-stratum deterministic sample (rate chosen by ``strata_col``;
+    strata missing from ``rates`` are dropped).
 
     The hash is computed ONCE per row; only the threshold varies by stratum,
     so the plan stays a single map-side filter with a small CASE — no join
@@ -70,7 +70,7 @@ def stratified_sample(
         lit = F.lit(_rate_threshold(rate))
         match = F.col(strata_col) == stratum
         threshold = F.when(match, lit) if threshold is None else threshold.when(match, lit)
-    default = F.lit(_rate_threshold(default_rate))
+    default = F.lit(_rate_threshold(0.0))
     threshold = default if threshold is None else threshold.otherwise(default)
     return df.filter(h < threshold)
 
@@ -243,7 +243,6 @@ def upsample_domains(
     id_col: str,
     domain_col: str,
     factors_bp: dict[str, int],
-    default_bp: int = 10000,
     seed: str = "up0",
 ) -> DataFrame:
     """Deterministic repeat-epoch upsampling (the other half of mixing).
@@ -255,7 +254,7 @@ def upsample_domains(
     can keep copies apart. All-integer: q = f_bp // 10000 whole copies,
     plus one more iff hash32 < (f_bp % 10000) << 32 // 10000 — exactly
     reproducible cross-engine. Factor 0 drops the domain; domains not
-    listed get ``default_bp`` (1x pass-through by default).
+    listed pass through once.
 
     Plan: map-side CASE + explode(sequence) — the fan-out happens in the
     scan projection, no shuffle, no join; 100 TB in, (mean factor) x out.
@@ -263,8 +262,6 @@ def upsample_domains(
     for d, f in factors_bp.items():
         if f < 0:
             raise ValueError(f"factor for {d!r} must be >= 0 bp, got {f}")
-    if default_bp < 0:
-        raise ValueError(f"default_bp must be >= 0, got {default_bp}")
     clobbered = {"epoch", "_n_copies"} & set(df.columns)
     if clobbered:
         raise ValueError(
@@ -281,8 +278,7 @@ def upsample_domains(
         extra_thr = (
             F.when(match, t_lit) if extra_thr is None else extra_thr.when(match, t_lit)
         )
-    dq = F.lit(default_bp // 10000)
-    dt = F.lit(((default_bp % 10000) << 32) // 10000)
+    dq, dt = F.lit(1), F.lit(0)
     q = dq if q is None else q.otherwise(dq)
     extra_thr = dt if extra_thr is None else extra_thr.otherwise(dt)
     n_copies = (q + (h < extra_thr).cast("int")).alias("_n_copies")
@@ -473,15 +469,7 @@ def cluster_safe_split(
     )
 
 
-def split_leakage_audit(
-    pairs: DataFrame,
-    assignments: DataFrame,
-    *,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    id_col: str = "doc_id",
-    side_col: str = "side",
-) -> DataFrame:
+def split_leakage_audit(pairs: DataFrame, assignments: DataFrame) -> DataFrame:
     """Audit an EXISTING train/eval split for contamination.
 
     :func:`cluster_safe_split` prevents leakage at assignment time; this is
@@ -508,13 +496,13 @@ def split_leakage_audit(
             "first (split_leakage_audit adds 'side_a', 'side_b', 'status')"
         )
     asg = assignments.select(
-        F.col(id_col).alias("_k"), F.col(side_col).alias("_s")
+        F.col("doc_id").alias("_k"), F.col("side").alias("_s")
     )
     j = (
         pairs.join(asg.withColumnsRenamed({"_k": "_ka", "_s": "side_a"}),
-                   pairs[a_col] == F.col("_ka"), "left")
+                   pairs["doc_a"] == F.col("_ka"), "left")
         .join(asg.withColumnsRenamed({"_k": "_kb", "_s": "side_b"}),
-              pairs[b_col] == F.col("_kb"), "left")
+              pairs["doc_b"] == F.col("_kb"), "left")
     )
     status = (
         F.when(F.col("side_a").isNull() | F.col("side_b").isNull(), F.lit("unassigned"))

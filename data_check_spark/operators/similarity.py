@@ -38,29 +38,20 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
 
 
-def embedding_norms(df: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    v = _vec_d(vec_col)
+def embedding_norms(df: DataFrame) -> DataFrame:
+    v = _vec_d("embedding")
     return df.select(
-        F.col(id_col),
-        F.size(vec_col).alias("dim"),
+        F.col("vec_id"),
+        F.size("embedding").alias("dim"),
         F.format_string("%.4f", _norm(v)).alias("l2_norm"),
     )
 
 
-def cosine_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    q_id_col: str = "q_id",
-    q_vec_col: str = "q_vec",
-) -> DataFrame:
+def cosine_topk(vectors: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact top-k neighbors per query (query set broadcast; self-matches
     by id are excluded). Returns (q_id, rank, vec_id, cosine)."""
-    q = F.broadcast(queries.select(F.col(q_id_col).alias("_qid"), _vec_d(q_vec_col).alias("_qv")))
-    v = vectors.select(F.col(id_col).alias("_vid"), _vec_d(vec_col).alias("_vv"))
+    q = F.broadcast(queries.select(F.col("q_id").alias("_qid"), _vec_d("q_vec").alias("_qv")))
+    v = vectors.select(F.col("vec_id").alias("_vid"), _vec_d("embedding").alias("_vv"))
     sim = _dot(F.col("_qv"), F.col("_vv")) / (_norm(F.col("_qv")) * _norm(F.col("_vv")))
     scored = (
         v.join(q, F.col("_vid") != F.col("_qid"))
@@ -82,31 +73,24 @@ def cosine_topk(
 EXACT_PAIRS_MAX_ROWS = 100_000  # guard for the O(n^2) exact-pair baseline
 
 
-def exact_cosine_pairs(
-    df: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.3,
-    max_rows: int = EXACT_PAIRS_MAX_ROWS,
-) -> DataFrame:
+def exact_cosine_pairs(df: DataFrame, *, threshold: float = 0.3) -> DataFrame:
     """All pairs (id_a < id_b) with cosine ≥ threshold — EXACT baseline.
 
     This is inherently O(n²) (a nested-loop join); it exists as the
     oracle-checkable reference for the LSH route. The guard refuses corpora
-    above ``max_rows`` so the baseline cannot be launched at a scale where
-    the quadratic blow-up would run forever — use
+    above ``EXACT_PAIRS_MAX_ROWS`` so the baseline cannot be launched at a
+    scale where the quadratic blow-up would run forever — use
     :func:`lsh_near_dup_pairs` there."""
-    if max_rows is not None:
-        # Bounded probe: scans at most max_rows+1 ids, never the full corpus.
-        n = df.select(id_col).limit(max_rows + 1).count()
-        if n > max_rows:
-            raise ValueError(
-                f"exact_cosine_pairs is O(n^2); corpus exceeds max_rows={max_rows}. "
-                "Use lsh_near_dup_pairs for large corpora or raise max_rows explicitly."
-            )
-    a = df.select(F.col(id_col).alias("id_a"), _vec_d(vec_col).alias("_va"))
-    b = df.select(F.col(id_col).alias("id_b"), _vec_d(vec_col).alias("_vb"))
+    # Bounded probe: scans at most max_rows+1 ids, never the full corpus.
+    max_rows = EXACT_PAIRS_MAX_ROWS
+    n = df.select("vec_id").limit(max_rows + 1).count()
+    if n > max_rows:
+        raise ValueError(
+            f"exact_cosine_pairs is O(n^2); corpus exceeds max_rows={max_rows}. "
+            "Use lsh_near_dup_pairs for large corpora."
+        )
+    a = df.select(F.col("vec_id").alias("id_a"), _vec_d("embedding").alias("_va"))
+    b = df.select(F.col("vec_id").alias("id_b"), _vec_d("embedding").alias("_vb"))
     sim = _dot(F.col("_va"), F.col("_vb")) / (_norm(F.col("_va")) * _norm(F.col("_vb")))
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
@@ -122,19 +106,16 @@ def lsh_near_dup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.3,
-    n_planes: int = 8,
-    multiprobe: int = MULTIPROBE_FLIPS,
-    max_bucket: int = 256,
     portable_dim: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via LSH buckets + EXACT cosine re-rank (scale path).
 
-    Each vector lands in its signature bucket plus ``multiprobe`` 1-bit-flip
-    buckets; pairs co-bucketed anywhere are re-scored exactly. The shuffle
-    carries (id, signature, vector) — no all-pairs join appears in the plan,
-    and degenerate buckets are capped like the MinHash route. Approximate in
-    recall (pairs never co-bucketed are missed), exact in the reported
-    cosine values.
+    Each vector lands in its 8-plane signature bucket plus
+    ``MULTIPROBE_FLIPS`` 1-bit-flip buckets; pairs co-bucketed anywhere are
+    re-scored exactly. The shuffle carries (id, signature, vector) — no
+    all-pairs join appears in the plan, and degenerate buckets are capped
+    like the MinHash route. Approximate in recall (pairs never co-bucketed
+    are missed), exact in the reported cosine values.
 
     ``portable_dim`` (oracle mode, analogous to the MinHash ``portable``
     flag): swaps only the SIGNATURE to the integer-exact portable variant
@@ -143,13 +124,13 @@ def lsh_near_dup_pairs(
     verbatim. Bucket machinery and reported cosines are unchanged."""
     v = df.select(F.col(id_col).alias("_id"), _vec_d(vec_col).alias("_v"))
     if portable_dim is not None:
-        sig = portable_lsh_signature(F.col("_v"), n_planes, portable_dim)
+        sig = portable_lsh_signature(F.col("_v"), 8, portable_dim)
     else:
-        sig = lsh_signature(F.col("_v"), n_planes)
+        sig = lsh_signature(F.col("_v"), 8)
     probes = F.array_distinct(
         F.array(
             sig,
-            *[sig.bitwiseXOR(F.lit(1 << p).cast("long")) for p in range(multiprobe)],
+            *[sig.bitwiseXOR(F.lit(1 << p).cast("long")) for p in range(MULTIPROBE_FLIPS)],
         )
     )
     from data_check_spark.operators.dedup import _bucket_pairs
@@ -157,7 +138,7 @@ def lsh_near_dup_pairs(
     exploded = v.select("_id", "_v", F.explode(probes).alias("_bucket"))
     pairs = _bucket_pairs(
         exploded, ["_bucket"], "_v",
-        max_bucket=max_bucket, out_a="_va", out_b="_vb",
+        max_bucket=256, out_a="_va", out_b="_vb",
     )
     sim = _dot(F.col("_va"), F.col("_vb")) / (_norm(F.col("_va")) * _norm(F.col("_vb")))
     return (
@@ -172,44 +153,30 @@ def ivf_ann_topk(
     queries: DataFrame,
     k: int = 10,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    q_id_col: str = "q_id",
-    q_vec_col: str = "q_vec",
     n_lists: int = 16,
     n_probe: int = 4,
-    kmeans_iter: int = 5,
-    seed: int = 7,
 ) -> DataFrame:
     """IVF-flat ANN: k-means coarse quantizer → probe n_probe cells → exact
     cosine re-rank (the classic inverted-file index, complementing the LSH
     route).
 
     The quantizer trains with MLlib KMeans (distributed, deterministic for a
-    given seed+input); every vector lands in ONE cell, queries probe their
+    seed 7, 5 iterations); every vector lands in ONE cell, queries probe their
     ``n_probe`` nearest centroids, and only probed cells are re-ranked
     exactly. The corpus-side shuffle carries (cell, id, vector) once;
     centroids travel as a broadcast literal (n_lists × dim doubles). Recall
     dial: ``n_probe``/``n_lists`` — at n_probe=n_lists this degrades to the
     exact scan."""
-    assigned, centroids = build_ivf_index(
-        vectors, id_col=id_col, vec_col=vec_col, n_lists=n_lists,
-        kmeans_iter=kmeans_iter, seed=seed,
-    )
+    assigned, centroids = build_ivf_index(vectors, n_lists=n_lists)
     return ivf_search(
-        assigned, centroids, queries, k=k,
-        q_id_col=q_id_col, q_vec_col=q_vec_col, n_probe=n_probe,
+        assigned, centroids, queries, k=k, n_probe=n_probe,
     )
 
 
 def build_ivf_index(
     vectors: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_lists: int = 16,
-    kmeans_iter: int = 5,
-    seed: int = 7,
 ) -> tuple[DataFrame, list[list[float]]]:
     """Train the IVF coarse quantizer once; returns (assigned, centroids).
 
@@ -221,9 +188,9 @@ def build_ivf_index(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    v = vectors.select(F.col(id_col).alias("_vid"), _vec_d(vec_col).alias("_vv"))
+    v = vectors.select(F.col("vec_id").alias("_vid"), _vec_d("embedding").alias("_vv"))
     ml_df = v.withColumn("_feat", array_to_vector("_vv"))
-    model = KMeans(k=n_lists, seed=seed, maxIter=kmeans_iter, featuresCol="_feat").fit(ml_df)
+    model = KMeans(k=n_lists, seed=7, maxIter=5, featuresCol="_feat").fit(ml_df)
     assigned = model.transform(ml_df).select("_vid", "_vv", F.col("prediction").alias("_cell"))
     centroids = [c.tolist() for c in model.clusterCenters()]
     return assigned, centroids
@@ -235,8 +202,6 @@ def ivf_search(
     queries: DataFrame,
     k: int = 10,
     *,
-    q_id_col: str = "q_id",
-    q_vec_col: str = "q_vec",
     n_probe: int = 4,
 ) -> DataFrame:
     """Probe a built IVF index: n_probe nearest centroids per query, exact
@@ -254,7 +219,7 @@ def ivf_search(
             lambda acc, x: acc + x,
         )
 
-    q = queries.select(F.col(q_id_col).alias("_qid"), _vec_d(q_vec_col).alias("_qv"))
+    q = queries.select(F.col("q_id").alias("_qid"), _vec_d("q_vec").alias("_qv"))
     dists = F.array(
         *[
             F.struct(_sq_dist(F.col("_qv"), c).alias("d"), F.lit(i).alias("cell"))
@@ -366,10 +331,6 @@ def lsh_ann_topk(
     queries: DataFrame,
     k: int = 10,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    q_id_col: str = "q_id",
-    q_vec_col: str = "q_vec",
     n_planes: int = N_PLANES,
     multiprobe: int = MULTIPROBE_FLIPS,
     n_tables: int = 1,
@@ -404,11 +365,11 @@ def lsh_ann_topk(
             ]
         )
 
-    v = vectors.select(F.col(id_col).alias("_vid"), _vec_d(vec_col).alias("_vv"))
+    v = vectors.select(F.col("vec_id").alias("_vid"), _vec_d("embedding").alias("_vv"))
     v_sig = v.select(
         "_vid", "_vv", F.explode(_sigs(F.col("_vv"))).alias("_ts")
     ).select("_vid", "_vv", F.col("_ts._table").alias("_table"), F.col("_ts._sig").alias("_sig"))
-    q = queries.select(F.col(q_id_col).alias("_qid"), _vec_d(q_vec_col).alias("_qv"))
+    q = queries.select(F.col("q_id").alias("_qid"), _vec_d("q_vec").alias("_qv"))
     q_sig = q.select(
         "_qid", "_qv", F.explode(_sigs(F.col("_qv"))).alias("_ts")
     ).select("_qid", "_qv", F.col("_ts._table").alias("_table"), F.col("_ts._sig").alias("_sig"))
@@ -447,17 +408,11 @@ def lsh_ann_topk(
     )
 
 
-def label_centroids(
-    df: DataFrame,
-    *,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-    scale: int = QUANT_SCALE,
-) -> DataFrame:
+def label_centroids(df: DataFrame) -> DataFrame:
     """Per-label embedding centroids, integer-exact: ``(label, pos, n_vecs,
     sum_q, centroid_q)`` with one row per (label, 1-based dimension).
 
-    Elements quantize to ``floor(x·scale + 0.5)`` bigints BEFORE summing, so
+    Elements quantize to ``floor(x·QUANT_SCALE + 0.5)`` bigints BEFORE summing, so
     the sum is exact int64 regardless of addend order (a float sum would
     differ across partitionings) and ``centroid_q = sum_q div n`` is
     engine-portable.
@@ -468,11 +423,12 @@ def label_centroids(
     carries O(labels·dim·partitions) rows, never O(n·dim). NULL labels and
     NULL vectors are excluded (they have no centroid to contribute to)."""
     q = F.transform(
-        _vec_d(vec_col), lambda x: F.floor(x * F.lit(float(scale)) + F.lit(0.5)).cast("long")
+        _vec_d("embedding"),
+        lambda x: F.floor(x * F.lit(float(QUANT_SCALE)) + F.lit(0.5)).cast("long"),
     )
     rows = (
-        df.filter(F.col(label_col).isNotNull() & F.col(vec_col).isNotNull())
-        .select(F.col(label_col).alias("label"), F.posexplode(q).alias("pos0", "xq"))
+        df.filter(F.col("label").isNotNull() & F.col("embedding").isNotNull())
+        .select("label", F.posexplode(q).alias("pos0", "xq"))
     )
     return (
         rows.groupBy("label", (F.col("pos0") + 1).alias("pos"))
@@ -512,10 +468,6 @@ def portable_ivf_topk(
     queries: DataFrame,
     k: int = 10,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    q_id_col: str = "q_id",
-    q_vec_col: str = "q_vec",
     n_lists: int = 16,
     n_probe: int = 4,
     lloyd_iters: int = 0,
@@ -547,14 +499,14 @@ def portable_ivf_topk(
     if not 1 <= n_probe <= n_lists:
         raise ValueError(f"need 1 <= n_probe <= n_lists, got {n_probe}/{n_lists}")
     cents = portable_ivf_train(
-        vectors, id_col=id_col, vec_col=vec_col,
+        vectors,
         n_lists=n_lists, lloyd_iters=lloyd_iters,
     )
-    assigned = portable_ivf_assign(vectors, cents, id_col=id_col, vec_col=vec_col)
+    assigned = portable_ivf_assign(vectors, cents)
     probes = (
         _int_cells_sorted(
             queries.select(
-                F.col(q_id_col).alias("_qid"), _vec_d(q_vec_col).alias("_qv")
+                F.col("q_id").alias("_qid"), _vec_d("q_vec").alias("_qv")
             ).withColumn("_xq", _int_quantize("_qv")),
             cents,
         )
@@ -610,8 +562,6 @@ def _int_cells_sorted(
 def portable_ivf_train(
     vectors: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_lists: int = 16,
     lloyd_iters: int = 0,
 ) -> list[tuple[int, list[int]]]:
@@ -626,7 +576,7 @@ def portable_ivf_train(
     if lloyd_iters < 0:
         raise ValueError(f"lloyd_iters must be >= 0, got {lloyd_iters}")
     seed_rows = (
-        vectors.select(F.col(id_col).alias("_sid"), _vec_d(vec_col).alias("_sv"))
+        vectors.select(F.col("vec_id").alias("_sid"), _vec_d("embedding").alias("_sv"))
         .orderBy(F.md5(F.col("_sid").cast("string")).asc(), F.col("_sid").asc())
         .limit(n_lists)
         .collect()
@@ -636,7 +586,7 @@ def portable_ivf_train(
         for i, r in enumerate(seed_rows)
     ]
     v = vectors.select(
-        F.col(id_col).alias("_vid"), _vec_d(vec_col).alias("_vv")
+        F.col("vec_id").alias("_vid"), _vec_d("embedding").alias("_vv")
     ).withColumn("_xq", _int_quantize("_vv"))
     for _ in range(lloyd_iters):
         stats = (
@@ -665,19 +615,13 @@ def portable_ivf_train(
     return cents
 
 
-def portable_ivf_assign(
-    vectors: DataFrame,
-    cents: list[tuple[int, list[int]]],
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def portable_ivf_assign(vectors: DataFrame, cents: list[tuple[int, list[int]]]) -> DataFrame:
     """Voronoi-assign vectors to FIXED centroids (integer-exact, ties by
     cell index) → the (_vid, _vv, _cell) inverted-file shape. Pure
     function of (vector, centroids): assigning a batch now or later gives
     identical cells — the property incremental maintenance rests on."""
     v = vectors.select(
-        F.col(id_col).alias("_vid"), _vec_d(vec_col).alias("_vv")
+        F.col("vec_id").alias("_vid"), _vec_d("embedding").alias("_vv")
     ).withColumn("_xq", _int_quantize("_vv"))
     return _int_cells_sorted(v, cents).select(
         "_vid", "_vv", F.element_at("_cells", 1)["cell"].alias("_cell")
@@ -713,14 +657,7 @@ def load_portable_ivf_index(
     return assigned, load_portable_ivf_cents(spark, path)
 
 
-def ivf_add_batch(
-    spark,
-    path: str,
-    new_vectors: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
+def ivf_add_batch(spark, path: str, new_vectors: DataFrame) -> None:
     """Incremental IVF maintenance: assign an ARRIVING batch against the
     persisted coarse quantizer and append it to the inverted file — no
     retrain, no touch of existing cells' data (append goes only to the
@@ -735,7 +672,7 @@ def ivf_add_batch(
     file count grows with corpus size, the batch doesn't)."""
     cents = load_portable_ivf_cents(spark, path)
     (
-        portable_ivf_assign(new_vectors, cents, id_col=id_col, vec_col=vec_col)
+        portable_ivf_assign(new_vectors, cents)
         .write.mode("append")
         .partitionBy("_cell")
         .parquet(f"{path}/cells")
@@ -750,8 +687,6 @@ EMBEDDING_QUALITY_RULES = (
 def embedding_quality(
     df: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     expected_dim: int,
     normsq_q_lo: int,
     normsq_q_hi: int,
@@ -773,8 +708,8 @@ def embedding_quality(
     touches NaN, and the whole operator is a single JVM projection + filter
     — at 10^12 rows it is a map-side scan with no exchange and no Python.
     """
-    v = F.col(vec_col)
-    d = _vec_d(vec_col)
+    v = F.col("embedding")
+    d = _vec_d("embedding")
     inf = F.lit(float("inf"))
     bad_elem = lambda x: F.isnan(x) | (F.abs(x) == inf)  # noqa: E731
     n_bad = F.size(F.filter(d, bad_elem))
@@ -799,21 +734,22 @@ def embedding_quality(
         )
     )
     return (
-        df.select(F.col(id_col), rule.alias("_r"))
+        df.select(F.col("vec_id"), rule.alias("_r"))
         .filter(F.col("_r").isNotNull())
-        .select(id_col, F.col("_r.rule_id"), F.col("_r.observed"))
+        .select("vec_id", F.col("_r.rule_id"), F.col("_r.observed"))
     )
 
 
-def dim_means(df: DataFrame, *, vec_col: str = "embedding", scale: int = QUANT_SCALE) -> DataFrame:
+def dim_means(df: DataFrame) -> DataFrame:
     """Per-dimension quantized means: ``(pos, n_vecs, sum_q, mean_q)`` —
     :func:`label_centroids` without the label (same map-side-collapsed
     posexplode shape: the shuffle carries dim×partitions partial rows,
     never n×dim)."""
     q = F.transform(
-        _vec_d(vec_col), lambda x: F.floor(x * F.lit(float(scale)) + F.lit(0.5)).cast("long")
+        _vec_d("embedding"),
+        lambda x: F.floor(x * F.lit(float(QUANT_SCALE)) + F.lit(0.5)).cast("long"),
     )
-    rows = df.filter(F.col(vec_col).isNotNull()).select(
+    rows = df.filter(F.col("embedding").isNotNull()).select(
         F.posexplode(q).alias("pos0", "xq")
     )
     return (
@@ -823,14 +759,7 @@ def dim_means(df: DataFrame, *, vec_col: str = "embedding", scale: int = QUANT_S
     )
 
 
-def embedding_drift(
-    current: DataFrame,
-    baseline: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    scale: int = QUANT_SCALE,
-    threshold_q: int,
-) -> DataFrame:
+def embedding_drift(current: DataFrame, baseline: DataFrame, *, threshold_q: int) -> DataFrame:
     """Per-dimension mean drift of an embedding column vs a baseline slice
     — the encoder-version tripwire: a silently swapped/retrained embedding
     model shifts per-dimension means immediately, long before any
@@ -841,7 +770,7 @@ def embedding_drift(
 
     One row per dimension present in either side: ``(pos, n_cur, n_base,
     mean_cur_q, mean_base_q, delta_q, drifted)`` with ``delta_q =
-    mean_cur_q − mean_base_q`` in quantized (``scale``) units and
+    mean_cur_q − mean_base_q`` in quantized (``QUANT_SCALE``) units and
     ``drifted = |delta_q| > threshold_q``. A side with no vectors for a
     dimension yields NULL means and NULL drifted (never a silent pass).
     Both inputs aggregate to dim-sized frames before the single tiny join
@@ -850,10 +779,10 @@ def embedding_drift(
     """
     if threshold_q <= 0:
         raise ValueError(f"threshold_q must be positive, got {threshold_q}")
-    cur = dim_means(current, vec_col=vec_col, scale=scale).select(
+    cur = dim_means(current).select(
         "pos", F.col("n_vecs").alias("n_cur"), F.col("mean_q").alias("mean_cur_q")
     )
-    base = dim_means(baseline, vec_col=vec_col, scale=scale).select(
+    base = dim_means(baseline).select(
         "pos", F.col("n_vecs").alias("n_base"), F.col("mean_q").alias("mean_base_q")
     )
     return (
@@ -874,14 +803,8 @@ def embedding_drift(
     )
 
 
-def quantization_plan(
-    df: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    bits: int = 8,
-    scale: int = QUANT_SCALE,
-) -> DataFrame:
-    """Per-dimension int-``bits`` quantization plan for an embedding table.
+def quantization_plan(df: DataFrame) -> DataFrame:
+    """Per-dimension int8 quantization plan for an embedding table.
 
     Serving/ANN infra stores embeddings as int8 with one symmetric scale
     per dimension; this computes that plan AND its cost — per dim: the
@@ -891,10 +814,10 @@ def quantization_plan(
     the re-quantize tripwire.
 
     Integer-exact cross-engine contract: values quantize to micro-units
-    (``floor(x·scale + 0.5)``, the portable-LSH convention), and the codec
+    (``floor(x·QUANT_SCALE + 0.5)``, the portable-LSH convention), and the codec
     is defined on NON-NEGATIVE integers only — ``code = (2·|q|·L +
     absmax) div (2·absmax)``, ``recon = (2·code·absmax + L) div (2·L)``
-    with ``L = 2^(bits−1) − 1`` — because integer division FLOORS in some
+    with ``L = 127`` — because integer division FLOORS in some
     engines and TRUNCATES in others for negative operands; keeping every
     numerator non-negative makes the two identical. NaN/±Inf elements are
     ignored like NULL.
@@ -904,19 +827,17 @@ def quantization_plan(
     must exist before errors can (same two-phase shape as drift's
     baseline); both are map-side-combined aggregates keyed by the ≤ d-row
     dim id, and the d-row absmax frame broadcasts back."""
-    if not 2 <= bits <= 16:
-        raise ValueError(f"bits must be in [2, 16], got {bits}")
-    levels = (1 << (bits - 1)) - 1
+    levels = 127
     d = F.col("_v").cast("double")
     # non-finite guard BEFORE the quantizing cast: under ANSI, floor(NaN·s)
     # cast to bigint aborts the job on one bad element
     fin = F.when(F.isnan(d) | (F.abs(d) == float("inf")), F.lit(None)).otherwise(d)
     pos = (
-        df.filter(F.col(vec_col).isNotNull())
-        .select(F.posexplode(vec_col).alias("dim", "_v"))
+        df.filter(F.col("embedding").isNotNull())
+        .select(F.posexplode("embedding").alias("dim", "_v"))
         .select(
             "dim",
-            F.floor(fin * int(scale) + F.lit(0.5)).cast("bigint").alias("_q"),
+            F.floor(fin * QUANT_SCALE + F.lit(0.5)).cast("bigint").alias("_q"),
         )
         .filter(F.col("_q").isNotNull())
     )

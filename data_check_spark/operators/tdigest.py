@@ -95,20 +95,20 @@ def quantile(d: TDigest, q: float) -> float:
     return float(np.interp(target, cum, d.means))
 
 
-def wasserstein(a: TDigest, b: TDigest, *, grid: int = 512) -> float:
+def wasserstein(a: TDigest, b: TDigest) -> float:
     """Wasserstein-1 (earth-mover) distance between two digests via the
     quantile-space identity ``W1 = ∫₀¹ |Q_a(u) − Q_b(u)| du``, midpoint
-    Riemann sum on a ``grid``-point mass grid. Quantile space (not x space)
+    Riemann sum on a 512-point mass grid. Quantile space (not x space)
     because the quantile functions are well-defined even when centroid means
     coincide (pure atoms), and the uniform mass grid weights every sliver of
     probability equally: a 1% flip across a wide atom gap contributes
     gap×0.01, a full location shift contributes the whole shift — unlike
     sup-norm quantile distance, which is knife-edged on atoms. Resolution:
-    mass features narrower than 1/grid are under-weighted (irrelevant for
+    mass features narrower than 1/512 are under-weighted (irrelevant for
     drift thresholds ~0.25). NaN if either digest is empty."""
     if a.is_empty() or b.is_empty():
         return float("nan")
-    u = (np.arange(grid) + 0.5) / grid
+    u = (np.arange(512) + 0.5) / 512
     # vectorized quantile(): same centroid-midpoint convention, np.interp
     # clamps to the extreme centroid means just like the scalar version
     qa = np.interp(u * a.total_weight, np.cumsum(a.weights) - a.weights / 2.0, a.means)

@@ -124,14 +124,14 @@ def _predicted_lang() -> Column:
     return chain.otherwise(F.lit(LANG_MARKERS[-1][0]))
 
 
-def lang_id(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """Marker-word language ID; equal scores resolve in LANG_MARKERS order."""
     scored = df.select(
-        F.col(id_col),
-        *[_marker_score(text_col, words).alias(f"s_{lang}") for lang, words in LANG_MARKERS],
+        F.col("doc_id"),
+        *[_marker_score("text", words).alias(f"s_{lang}") for lang, words in LANG_MARKERS],
     )
     return scored.select(
-        id_col, *[f"s_{lang}" for lang, _ in LANG_MARKERS],
+        "doc_id", *[f"s_{lang}" for lang, _ in LANG_MARKERS],
         _predicted_lang().alias("predicted_lang"),
     )
 
@@ -139,8 +139,6 @@ def lang_id(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") ->
 def curation_pipeline(
     df: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     min_quality_q4: int = 6500,
     min_tokens: int = 25,
 ) -> DataFrame:
@@ -150,22 +148,22 @@ def curation_pipeline(
     the only shuffle is the first-wins dedup window on the fingerprint."""
     from pyspark.sql.window import Window
 
-    toks = _tokens(text_col)
+    toks = _tokens("text")
     n_tokens = F.size(toks)
     s1 = df.select(
-        F.col(id_col),
-        F.md5(F.encode(F.col(text_col), "UTF-8")).alias("fingerprint"),
+        F.col("doc_id"),
+        F.md5(F.encode(F.col("text"), "UTF-8")).alias("fingerprint"),
         n_tokens.alias("n_tokens"),
         F.size(F.array_distinct(toks)).alias("n_distinct_tokens"),
-        F.length(F.col(text_col)).alias("n_chars_calc"),
+        F.length(F.col("text")).alias("n_chars_calc"),
         (
-            F.length(F.col(text_col))
-            - F.length(F.regexp_replace(text_col, r"[.,!?;:]", ""))
+            F.length(F.col("text"))
+            - F.length(F.regexp_replace("text", r"[.,!?;:]", ""))
         ).alias("n_punct"),
-        *[_marker_score(text_col, words).alias(f"s_{lang}") for lang, words in LANG_MARKERS],
+        *[_marker_score("text", words).alias(f"s_{lang}") for lang, words in LANG_MARKERS],
     )
     s2 = s1.select(
-        id_col, "fingerprint", "n_tokens",
+        "doc_id", "fingerprint", "n_tokens",
         _quality_q4(
             F.col("n_tokens"), F.col("n_distinct_tokens"),
             F.col("n_chars_calc"), F.col("n_punct"),
@@ -177,7 +175,7 @@ def curation_pipeline(
     # identical to filtering after: exact duplicates share the text, hence
     # the same quality_q4/n_tokens — a fingerprint group passes or fails as
     # a whole, so the first-wins winner is unchanged.
-    w = Window.partitionBy("fingerprint").orderBy(id_col)
+    w = Window.partitionBy("fingerprint").orderBy("doc_id")
     return (
         s2.filter(
             (F.col("quality_q4") >= min_quality_q4)
@@ -185,13 +183,11 @@ def curation_pipeline(
         )
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .select(id_col, "fingerprint", "quality_q4", "predicted_lang", "n_tokens")
+        .select("doc_id", "fingerprint", "quality_q4", "predicted_lang", "n_tokens")
     )
 
 
-def repetition_stats(
-    df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Gopher-style repetition signals, computed per row with zero shuffle.
 
     - ``n_bigrams``           — total word bigrams (n_tokens − 1)
@@ -206,7 +202,7 @@ def repetition_stats(
     leaves the row, which is the difference between a narrow projection
     and a corpus-sized exchange at 100 TB.
     """
-    toks = _tokens(text_col)
+    toks = _tokens("text")
     n_tokens = F.size(toks)
     bigrams = F.when(n_tokens < 2, F.array().cast("array<string>")).otherwise(
         F.transform(
@@ -237,7 +233,7 @@ def repetition_stats(
     n_bigrams = F.greatest(n_tokens - 1, F.lit(0)).cast("long")
     n_distinct = F.size(F.array_distinct(toks))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_bigrams.alias("n_bigrams"),
         top_count.alias("top_bigram_count"),
         F.when(
@@ -265,14 +261,12 @@ ROLLING_BASE = 31
 ROLLING_MOD = 1_000_000_007
 
 
-def rolling_hash(
-    text_col: str, *, base: int = ROLLING_BASE, mod: int = ROLLING_MOD
-) -> Column:
+def rolling_hash(text_col: str) -> Column:
     """Polynomial rolling hash of a string, entirely JVM-side.
 
-    ``h = fold(codepoints, 0, (h, c) -> (h*base + c) mod m)`` — the classic
+    ``h = fold(codepoints, 0, (h, c) -> (h*ROLLING_BASE + c) mod ROLLING_MOD)`` — the classic
     Rabin-Karp document fingerprint. The mod is applied at EVERY step so the
-    accumulator stays < mod*base + 0x10FFFF and can never overflow a 64-bit
+    accumulator stays < ROLLING_MOD*ROLLING_BASE + 0x10FFFF and can never overflow a 64-bit
     long, which keeps the arithmetic identical on any engine (DuckDB raises
     on bigint overflow; Spark non-ANSI wraps — neither path is ever hit).
     Unlike ``fingerprints`` (md5), a rolling hash extends incrementally:
@@ -289,17 +283,11 @@ def rolling_hash(
     return F.aggregate(
         chars,
         F.lit(0).cast("long"),
-        lambda h, c: (h * base + F.ascii(c)) % mod,
+        lambda h, c: (h * ROLLING_BASE + F.ascii(c)) % ROLLING_MOD,
     )
 
 
-def unigram_rarity(
-    df: DataFrame,
-    *,
-    vocab_size: int = 10_000,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def unigram_rarity(df: DataFrame, *, vocab_size: int = 10_000) -> DataFrame:
     """Corpus-frequency (unigram-LM proxy) rarity signals per document.
 
     CCNet-style quality filtering scores documents under a language model;
@@ -324,7 +312,7 @@ def unigram_rarity(
     which Spark plans as TakeOrderedAndProject (per-partition top-k, then
     merge — no global sort, no single-partition window). Scoring is a
     broadcast join of the tf frame against the ≤``vocab_size``-row head,
-    weighted by tf, then one re-aggregation keyed by ``id_col``. Ties at
+    weighted by tf, then one re-aggregation keyed by ``doc_id``. Ties at
     the vocabulary cutoff break deterministically by (count desc, token
     asc).
     """
@@ -332,10 +320,10 @@ def unigram_rarity(
         raise ValueError(f"vocab_size must be positive, got {vocab_size}")
     tf = (
         df.select(
-            F.col(id_col),
-            F.explode_outer(F.transform(_tokens(text_col), F.lower)).alias("_tok"),
+            F.col("doc_id"),
+            F.explode_outer(F.transform(_tokens("text"), F.lower)).alias("_tok"),
         )
-        .groupBy(id_col, "_tok")
+        .groupBy("doc_id", "_tok")
         # count("_tok") counts non-null: an empty/NULL doc keeps one
         # (id, NULL, 0) row so it survives to the output with zeros
         .agg(F.count("_tok").alias("_tf"))
@@ -350,7 +338,7 @@ def unigram_rarity(
     )
     scored = tf.join(F.broadcast(vocab), "_tok", "left")
     return (
-        scored.groupBy(id_col)
+        scored.groupBy("doc_id")
         .agg(
             F.sum("_tf").cast("long").alias("n_tokens"),
             F.sum(
@@ -379,8 +367,6 @@ def chunk_documents(
     *,
     chunk_tokens: int = 64,
     overlap_tokens: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Sliding-window token chunks per document (RAG / embedding prep).
 
@@ -398,17 +384,17 @@ def chunk_documents(
             f"chunk_tokens ({chunk_tokens}) must exceed overlap_tokens "
             f"({overlap_tokens})"
         )
-    toks = _tokens(text_col)
+    toks = _tokens("text")
     n = F.coalesce(F.size(toks), F.lit(0))
     # sequence(0, -1) would DESCEND in Spark — gate on n > 0 explicitly
     starts = F.when(
         n > 0, F.sequence(F.lit(0), n - 1, F.lit(step))
     ).otherwise(F.array().cast("array<int>"))
     return (
-        df.select(F.col(id_col), toks.alias("_toks"), F.explode(starts).alias("_start"))
+        df.select(F.col("doc_id"), toks.alias("_toks"), F.explode(starts).alias("_start"))
         .withColumn("_chunk", F.slice(F.col("_toks"), F.col("_start") + 1, chunk_tokens))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.expr(f"_start div {step}").cast("long").alias("chunk_idx"),
             F.col("_start").cast("long").alias("start_token"),
             F.size("_chunk").cast("long").alias("n_chunk_tokens"),
@@ -417,12 +403,7 @@ def chunk_documents(
     )
 
 
-def top_ngrams(
-    df: DataFrame,
-    *,
-    top_n: int = 20,
-    text_col: str = "text",
-) -> DataFrame:
+def top_ngrams(df: DataFrame, *, top_n: int = 20) -> DataFrame:
     """Corpus-wide most frequent token bigrams.
 
     The per-document sibling is ``repetition_stats`` (intra-doc repetition);
@@ -435,7 +416,7 @@ def top_ngrams(
     ``orderBy().limit(n)`` → TakeOrderedAndProject. The rank window runs on
     ≤ ``top_n`` rows.
     """
-    toks = _tokens(text_col)
+    toks = _tokens("text")
     n = F.coalesce(F.size(toks), F.lit(0))
     grams = F.when(
         n >= 2,
@@ -459,13 +440,7 @@ def top_ngrams(
     return top.withColumn("rank", F.row_number().over(w))
 
 
-def top_terms_per_doc(
-    df: DataFrame,
-    *,
-    top_k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def top_terms_per_doc(df: DataFrame, *, top_k: int = 3) -> DataFrame:
     """TF-IDF-style distinguishing terms per document, integer-exact.
 
     Classic TF-IDF weighs ``tf · ln(N/df)``; the transcendental log makes
@@ -479,7 +454,7 @@ def top_terms_per_doc(
     Scale shape: (doc, term) frequencies and per-term document frequencies
     are two counts-only aggregations with map-side partials; df joins back
     keyed by term (AQE broadcasts when the vocabulary head is small). The
-    per-document top-k window partitions by ``id_col`` — millions of small
+    per-document top-k window partitions by ``doc_id`` — millions of small
     groups, no global window.
     """
     if top_k <= 0:
@@ -487,12 +462,12 @@ def top_terms_per_doc(
     from pyspark.sql.window import Window
 
     toks = df.select(
-        F.col(id_col),
-        F.explode(F.transform(_tokens(text_col), F.lower)).alias("term"),
+        F.col("doc_id"),
+        F.explode(F.transform(_tokens("text"), F.lower)).alias("term"),
     )
-    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     docfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.desc("relevance_ppm"), F.asc("term")
     )
     return (
@@ -500,14 +475,13 @@ def top_terms_per_doc(
         .withColumn("relevance_ppm", F.expr("tf * 1000000L div df"))
         .withColumn("term_rank", F.row_number().over(w))
         .filter(F.col("term_rank") <= top_k)
-        .select(id_col, "term", "tf", "df", "relevance_ppm", "term_rank")
+        .select("doc_id", "term", "tf", "df", "relevance_ppm", "term_rank")
     )
 
 
 def vocab_coverage(
     df: DataFrame,
     *,
-    text_col: str = "text",
     vocab_sizes: tuple[int, ...] = (100, 1000, 10000),
 ) -> DataFrame:
     """Token-mass coverage of the top-k vocabulary, one row per k:
@@ -524,7 +498,7 @@ def vocab_coverage(
     if not ks or ks[0] <= 0:
         raise ValueError(f"vocab_sizes must be positive, got {vocab_sizes}")
     counts = (
-        df.select(F.explode(_tokens(text_col)).alias("tok"))
+        df.select(F.explode(_tokens("text")).alias("tok"))
         .filter(F.col("tok") != "")
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -551,12 +525,7 @@ def vocab_coverage(
     )
 
 
-def bigram_coherence(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bigram_coherence(df: DataFrame) -> DataFrame:
     """Bigram-LM coherence scoring — the conditional-probability sibling of
     :func:`unigram_rarity`.
 
@@ -589,7 +558,7 @@ def bigram_coherence(
     corpus-vocabulary-sized, NOT broadcastable at web scale) and
     re-aggregates by document. The raw text never shuffles.
     """
-    toks = F.transform(_tokens(text_col), F.lower)
+    toks = F.transform(_tokens("text"), F.lower)
     n = F.coalesce(F.size(toks), F.lit(0))
     pair = "struct<_prefix:string,_bg:string>"
     grams = F.when(
@@ -605,11 +574,11 @@ def bigram_coherence(
         ),
     ).otherwise(F.array().cast(f"array<{pair}>"))
     tf = (
-        df.select(F.col(id_col), F.explode_outer(grams).alias("_g"))
+        df.select(F.col("doc_id"), F.explode_outer(grams).alias("_g"))
         # count("_g._bg") counts non-null: a short/blank doc keeps one
         # (id, NULL, NULL, 0) row so it reaches the output with zeros
-        .select(id_col, F.col("_g._prefix").alias("_prefix"), F.col("_g._bg").alias("_bg"))
-        .groupBy(id_col, "_prefix", "_bg")
+        .select("doc_id", F.col("_g._prefix").alias("_prefix"), F.col("_g._bg").alias("_bg"))
+        .groupBy("doc_id", "_prefix", "_bg")
         .agg(F.count("_bg").alias("_tf"))
         .localCheckpoint()
     )
@@ -625,7 +594,7 @@ def bigram_coherence(
     )
     scored = tf.join(bg_counts, "_bg", "left").join(px_counts, "_prefix", "left")
     return (
-        scored.groupBy(id_col)
+        scored.groupBy("doc_id")
         .agg(
             F.sum("_tf").cast("long").alias("n_bigrams"),
             F.sum(F.when(F.col("_bgc") == 1, F.col("_tf")).otherwise(F.lit(0)))
@@ -652,7 +621,6 @@ def token_drift(
     current: DataFrame,
     baseline: DataFrame,
     *,
-    text_col: str = "text",
     k: int = 20,
     threshold_ppm: int = 1000,
 ) -> DataFrame:
@@ -675,9 +643,9 @@ def token_drift(
     if threshold_ppm <= 0:
         raise ValueError(f"threshold_ppm must be positive, got {threshold_ppm}")
     tagged = current.select(
-        F.lit(1).alias("_cur"), _tokens(text_col).alias("_toks")
+        F.lit(1).alias("_cur"), _tokens("text").alias("_toks")
     ).unionByName(
-        baseline.select(F.lit(0).alias("_cur"), _tokens(text_col).alias("_toks"))
+        baseline.select(F.lit(0).alias("_cur"), _tokens("text").alias("_toks"))
     )
     tok = tagged.select("_cur", F.explode("_toks").alias("token")).filter(
         F.col("token") != ""
@@ -726,7 +694,6 @@ def extraction_quality(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    residue_bp_max: int = 500,
 ) -> DataFrame:
     """Text-extraction QC: flag docs whose HTML→text conversion failed.
 
@@ -745,7 +712,7 @@ def extraction_quality(
     - ``residue_bp`` — markup chars in basis points of the doc length
       (integer ``div``, no float compare);
     - ``status`` — ``mojibake`` > ``markup_residue`` (residue_bp above
-      ``residue_bp_max``) > ``light_markup`` > ``clean``, first match wins.
+      500) > ``light_markup`` > ``clean``, first match wins.
     """
     t = F.col(text_col)
     stripped = F.regexp_replace(
@@ -769,7 +736,7 @@ def extraction_quality(
         .withColumn(
             "status",
             F.when((F.col("n_replacement") > 0) | (F.col("n_ctrl") > 0), F.lit("mojibake"))
-            .when(F.col("residue_bp") > residue_bp_max, F.lit("markup_residue"))
+            .when(F.col("residue_bp") > 500, F.lit("markup_residue"))
             .when((F.col("n_tags") + F.col("n_entities")) > 0, F.lit("light_markup"))
             .otherwise(F.lit("clean")),
         )
@@ -787,10 +754,7 @@ def word_edit_distance(
     df: DataFrame,
     *,
     id_col: str = "doc_id",
-    ref_col: str = "ref_text",
-    hyp_col: str = "hyp_text",
     threshold_bp: int = 2500,
-    lowercase: bool = True,
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Exact word-level edit distance (WER) per (reference, hypothesis) pair.
@@ -821,11 +785,10 @@ def word_edit_distance(
     # coalesce a NULL array would NULL-out size()/status and silently
     # report 'ok' instead of 'empty_ref'
     empty = F.array().cast("array<string>")
-    ref_toks = F.coalesce(_tokens(ref_col), empty)
-    hyp_toks = F.coalesce(_tokens(hyp_col), empty)
-    if lowercase:
-        ref_toks = F.transform(ref_toks, F.lower)
-        hyp_toks = F.transform(hyp_toks, F.lower)
+    ref_toks = F.coalesce(_tokens("ref_text"), empty)
+    hyp_toks = F.coalesce(_tokens("hyp_text"), empty)
+    ref_toks = F.transform(ref_toks, F.lower)
+    hyp_toks = F.transform(hyp_toks, F.lower)
     keep = list(keep_cols)
     base = df.select(
         F.col(id_col),
@@ -885,9 +848,7 @@ def word_edit_distance(
     )
 
 
-def normalize_text(
-    df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def normalize_text(df: DataFrame) -> DataFrame:
     """Width-fold normalization for a mixed-width corpus.
 
     Japanese-sourced text mixes full-width ASCII (ＡＢＣ１２３) with
@@ -905,9 +866,9 @@ def normalize_text(
 
     pattern = "[" + WIDTH_FULL_CHARS + "　]"
     return df.select(
-        F.col(id_col),
-        fold_width(text_col).alias("text_norm"),
-        F.coalesce(F.regexp_count(F.col(text_col), F.lit(pattern)), F.lit(0))
+        F.col("doc_id"),
+        fold_width("text").alias("text_norm"),
+        F.coalesce(F.regexp_count(F.col("text"), F.lit(pattern)), F.lit(0))
         .cast("long")
         .alias("n_folded"),
     )

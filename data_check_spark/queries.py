@@ -808,10 +808,9 @@ sigs AS (
 )"""
 
 
-def _minhash_oracle_sql(
-    *, k: int = 8, num_perm: int = 64, bands: int = 16, threshold: float = 0.3,
-    max_bucket: int = 64,
-) -> str:
+def _minhash_oracle_sql() -> str:
+    k, num_perm, bands = _dedup.SHINGLE_K, _dedup.NUM_PERM, _dedup.LSH_BANDS
+    threshold, max_bucket = 0.3, 64
     rows = num_perm // bands
     return f"""
 WITH {_minhash_sig_ctes(k=k, num_perm=num_perm)},
@@ -843,7 +842,8 @@ ORDER BY id_a, id_b
 """
 
 
-def _simhash_oracle_sql(*, max_hamming: int = 6, max_bucket: int = 256) -> str:
+def _simhash_oracle_sql() -> str:
+    max_hamming, max_bucket = 6, 256
     n_chunks = max_hamming + 1
     bounds = [(c * 64 // n_chunks, (c + 1) * 64 // n_chunks) for c in range(n_chunks)]
     chunk_rows = ", ".join(
@@ -905,13 +905,11 @@ def simhash_near_dup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
-def _lsh_ann_oracle_sql(
-    *, k: int = 10, n_planes: int = 4, multiprobe: int = 4, n_tables: int = 4,
-    dim: int = 64,
-) -> str:
-    """DuckDB mirror of lsh_ann_topk(portable_dim=dim): per-table integer-
+def _lsh_ann_oracle_sql() -> str:
+    """DuckDB mirror of lsh_ann_topk(portable_dim=64): per-table integer-
     exact signatures (same inlined weight table), query-side multiprobe,
     exact cosine re-rank + row_number top-k."""
+    k, n_planes, multiprobe, n_tables, dim = 10, 4, 4, 4, 64
     w = _sim.portable_plane_table(n_tables * n_planes, dim)
     scale = _sim.QUANT_SCALE
 
@@ -1418,13 +1416,11 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sim.exact_cosine_pairs(_t(spark, sf_dir, "embeddings"), threshold=0.3)
 
 
-def _lsh_embedding_oracle_sql(
-    *, n_planes: int = 8, multiprobe: int = 4, max_bucket: int = 256,
-    threshold: float = 0.3, dim: int = 64, order: bool = True,
-) -> str:
-    """DuckDB mirror of lsh_near_dup_pairs(portable_dim=dim): integer-exact
+def _lsh_embedding_oracle_sql(*, order: bool = True) -> str:
+    """DuckDB mirror of lsh_near_dup_pairs(portable_dim=64): integer-exact
     signatures from the SAME inlined md5-derived weight table, identical
     multiprobe/bucket-cap/pairing, exact cosine re-rank."""
+    n_planes, multiprobe, max_bucket, threshold, dim = 8, 4, 256, 0.3, 64
     w = _sim.portable_plane_table(n_planes, dim)
     scale = _sim.QUANT_SCALE
     bit_terms = "\n    + ".join(
@@ -3265,10 +3261,9 @@ def top_terms_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 # training docs near-duplicating an eval doc. Portable signatures — DuckDB
 # re-runs the ENTIRE pipeline (shingles, permutations, banding, eval-bucket
 # cap, agreement estimate) verbatim.
-def _fuzzy_decontam_oracle_sql(
-    *, k: int = 8, num_perm: int = 64, bands: int = 16, threshold: float = 0.3,
-    max_eval_bucket: int = 64, eval_mod: int = 20,
-) -> str:
+def _fuzzy_decontam_oracle_sql() -> str:
+    k, num_perm, bands = _dedup.SHINGLE_K, _dedup.NUM_PERM, _dedup.LSH_BANDS
+    threshold, max_eval_bucket, eval_mod = 0.3, 64, 20
     rows = num_perm // bands
     return f"""
 WITH {_minhash_sig_ctes(k=k, num_perm=num_perm)},
@@ -4008,15 +4003,13 @@ def provenance_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.select("doc_id", "src_file", "src_row_index")
 
 
-def _ivf_portable_oracle_sql(
-    *, k: int = 10, n_lists: int = 16, n_probe: int = 4, dim: int = 64,
-    lloyd_iters: int = 0,
-) -> str:
+def _ivf_portable_oracle_sql(*, n_lists: int = 16, n_probe: int = 4, lloyd_iters: int = 0) -> str:
     """DuckDB mirror of portable_ivf_topk: md5-seeded centroids, optional
     integer-exact Lloyd refinements (truncating division — DuckDB ``//``
     and Spark ``div`` agree), integer quantized squared-distance
     assignment/probe (ties by cell), float cosine re-rank — the whole
     inverted-file build AND search replayed value-for-value."""
+    k, dim = 10, 64
     scale = _sim.QUANT_SCALE
 
     def _assign(name: str, cents: str, where: str = "", rn: str = "rn = 1") -> str:
@@ -6736,15 +6729,15 @@ def _stream_workspace(tag: str) -> tuple[str, str, str]:
     return f"{root}/in", f"{root}/out", f"{root}/ckpt"
 
 
-def _chrono_wave(df: DataFrame, ts_col: str = "ts", n_waves: int = 4):
-    """Wave index 0..n_waves-1 by ABSOLUTE time position inside the data's
+def _chrono_wave(df: DataFrame):
+    """Wave index 0..3 by ABSOLUTE time position inside the data's
     [min, max] span — chronological for any time range. (Day-of-month
     bucketing was only chronological while the events table happened to
     span a single calendar month; datagen is allowed to change.) Costs one
     tiny min/max aggregate."""
     import datetime as _dt
 
-    lo, hi = df.agg(F.min(ts_col), F.max(ts_col)).collect()[0]
+    lo, hi = df.agg(F.min("ts"), F.max("ts")).collect()[0]
 
     def _us(t) -> int:
         # collected timestamps are naive UTC (session tz pinned); make the
@@ -6754,21 +6747,20 @@ def _chrono_wave(df: DataFrame, ts_col: str = "ts", n_waves: int = 4):
     lo_us, hi_us = _us(lo), _us(hi)
     span = max(hi_us - lo_us, 1)
     return F.least(
-        F.lit(n_waves - 1),
+        F.lit(3),
         F.floor(
             # parquet ts is TIMESTAMP_NTZ; session tz is pinned UTC so the
             # cast to TIMESTAMP is value-identity and satisfies unix_micros
-            ((F.unix_micros(F.col(ts_col).cast("timestamp")) - F.lit(lo_us))
-             * n_waves)
+            ((F.unix_micros(F.col("ts").cast("timestamp")) - F.lit(lo_us))
+             * 4)
             / F.lit(span + 1)
         ).cast("int"),
     )
 
 
-def _events_as_clip_waves(spark: SparkSession, sf_dir: str, in_dir: str,
-                          *, key: str, n_waves: int = 4) -> None:
-    """Write `events` as ``n_waves`` clip-schema parquet files (wave =
-    ``event_id % n_waves``) so ``maxFilesPerTrigger=1`` forces genuinely
+def _events_as_clip_waves(spark: SparkSession, sf_dir: str, in_dir: str, *, key: str) -> None:
+    """Write `events` as 4 clip-schema parquet files (wave =
+    ``event_id % 4``) so ``maxFilesPerTrigger=1`` forces genuinely
     separate micro-batches with every key spread across them."""
     ev = _t(spark, sf_dir, "events")
     clips = ev.select(
@@ -6779,9 +6771,9 @@ def _events_as_clip_waves(spark: SparkSession, sf_dir: str, in_dir: str,
         F.col("props").alias("transcript"),
         F.col("event_type").alias("partition"),
         F.col("ts").alias("event_ts"),
-        F.pmod("event_id", F.lit(n_waves)).alias("_wave"),
+        F.pmod("event_id", F.lit(4)).alias("_wave"),
     )
-    for i in range(n_waves):
+    for i in range(4):
         (clips.filter(F.col("_wave") == i).drop("_wave")
               .coalesce(1).write.mode("append").parquet(in_dir))
 
@@ -6980,13 +6972,12 @@ def streaming_row_rules_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _ivf_incremental_oracle_sql(
-    *, n_lists: int = 8, dim: int = 64, lloyd_iters: int = 1
-) -> str:
+def _ivf_incremental_oracle_sql() -> str:
     """DuckDB mirror: md5-seeded centroids + integer Lloyd over the BASE
     subset (vec_id % 4 != 0), then integer-exact assignment of ALL vectors
     to those fixed centroids — exactly what base-build + add-batch leaves
     in the cell store."""
+    n_lists, dim, lloyd_iters = 8, 64, 1
     scale = _sim.QUANT_SCALE
     sq = (
         f"list_aggregate(list_transform(range(1, {dim + 1}), "

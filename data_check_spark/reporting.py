@@ -20,22 +20,13 @@ from pyspark.sql import functions as F
 from data_check_spark.rules.spec import RuleCatalog
 
 
-def filter_violations(
-    df: DataFrame,
-    *,
-    series: str | None = None,
-    search: str | None = None,
-    search_columns: tuple[str, ...] = ("rule_id", "clip_id", "partition", "observed"),
-    series_col: str = "series",
-) -> DataFrame:
-    """Equality filter on series + case-insensitive substring search."""
+def filter_violations(df: DataFrame, *, search: str | None = None) -> DataFrame:
+    """Case-insensitive substring search over the violation columns."""
     out = df
-    if series and series_col in df.columns:
-        out = out.filter(F.col(series_col) == series)
     if search:
         needle = search.lower()
         cond = None
-        for c in search_columns:
+        for c in ("rule_id", "clip_id", "partition", "observed"):
             if c not in out.columns:
                 continue
             this = F.lower(F.coalesce(F.col(c).cast("string"), F.lit(""))).contains(needle)
@@ -45,7 +36,7 @@ def filter_violations(
     return out
 
 
-def sort_numeric_coerced(df: DataFrame, column: str, ascending: bool = True) -> DataFrame:
+def sort_numeric_coerced(df: DataFrame, column: str) -> DataFrame:
     """Two-key sort: numeric value of ``column`` (non-numeric → NULL → last),
     then the raw string — the reference's pd.to_numeric(errors='coerce')
     sort (data_check.py:1147-1159). The literal strings 'NaN'/'Infinity'
@@ -56,9 +47,7 @@ def sort_numeric_coerced(df: DataFrame, column: str, ascending: bool = True) -> 
     reference UI displays them."""
     raw = F.expr(f"try_cast(cast(`{column}` as string) as double)")
     num = F.when(F.isnan(raw) | (F.abs(raw) == float("inf")), F.lit(None)).otherwise(raw)
-    key1 = num.asc_nulls_last() if ascending else num.desc_nulls_last()
-    key2 = F.col(column).asc() if ascending else F.col(column).desc()
-    return df.orderBy(key1, key2)
+    return df.orderBy(num.asc_nulls_last(), F.col(column).asc())
 
 
 def with_messages(violations: DataFrame, catalog: RuleCatalog) -> DataFrame:
@@ -77,11 +66,11 @@ def with_messages(violations: DataFrame, catalog: RuleCatalog) -> DataFrame:
     )
 
 
-def export_csv(df: DataFrame, path: str, *, single_file: bool = True) -> None:
+def export_csv(df: DataFrame, path: str) -> None:
     """CSV export with utf-8-sig BOM handling (reference writes utf-8-sig so
     Excel opens Japanese text correctly). Spark's csv writer has no BOM
-    option; for the single-file export path we coalesce(1) and prepend the
-    BOM to the part file."""
+    option, so the export is coalesced to ONE part file and the BOM is
+    prepended to it."""
     import re as _re
     from urllib.parse import urlparse
 
@@ -89,45 +78,43 @@ def export_csv(df: DataFrame, path: str, *, single_file: bool = True) -> None:
     # Hadoop URI): anything with a scheme other than file is not local.
     m = _re.match(r"^[A-Za-z][A-Za-z0-9+.\-]+:", path)
     scheme = m.group(0)[:-1].lower() if m else ""
-    if single_file and scheme not in ("", "file"):
+    if scheme not in ("", "file"):
         # The BOM prepend below runs on the driver's local filesystem; on
         # hdfs://-/s3a:// it would silently no-op and deliver a BOM-less
         # file — the one thing this function exists to guarantee.
         raise ValueError(
-            f"single_file BOM export requires a local path, got {path!r}; "
-            "use single_file=False (no BOM) or export locally and upload"
+            f"BOM export requires a local path, got {path!r}; "
+            "export locally and upload"
         )
-    writer = (df.coalesce(1) if single_file else df).write.mode("overwrite").option(
-        "header", "true"
-    ).option("encoding", "UTF-8")
-    writer.csv(path)
-    if single_file:
-        import glob
-        import os
+    df.coalesce(1).write.mode("overwrite").option("header", "true").option(
+        "encoding", "UTF-8"
+    ).csv(path)
+    import glob
+    import os
 
-        # glob needs the OS path, not the file: URI Spark accepted above
-        local_dir = urlparse(path).path if scheme == "file" else path
-        for part in glob.glob(os.path.join(local_dir, "part-*.csv")):
-            tmp = part + ".bom"
-            with open(part, "rb") as src:
-                head = src.read(3)
-                if head == b"\xef\xbb\xbf":
-                    continue
-                # Stream in chunks — the export can be bigger than driver RAM.
-                with open(tmp, "wb") as dst:
-                    dst.write(b"\xef\xbb\xbf")
-                    dst.write(head)
-                    while chunk := src.read(1 << 20):
-                        dst.write(chunk)
-            os.replace(tmp, part)
-            # The BOM rewrite invalidates Hadoop's checksum sidecar; leaving
-            # it makes Spark itself unable to re-read the exported file
-            # (ChecksumException) — delete it so re-ingest round-trips.
-            crc = os.path.join(
-                os.path.dirname(part), "." + os.path.basename(part) + ".crc"
-            )
-            if os.path.exists(crc):
-                os.remove(crc)
+    # glob needs the OS path, not the file: URI Spark accepted above
+    local_dir = urlparse(path).path if scheme == "file" else path
+    for part in glob.glob(os.path.join(local_dir, "part-*.csv")):
+        tmp = part + ".bom"
+        with open(part, "rb") as src:
+            head = src.read(3)
+            if head == b"\xef\xbb\xbf":
+                continue
+            # Stream in chunks — the export can be bigger than driver RAM.
+            with open(tmp, "wb") as dst:
+                dst.write(b"\xef\xbb\xbf")
+                dst.write(head)
+                while chunk := src.read(1 << 20):
+                    dst.write(chunk)
+        os.replace(tmp, part)
+        # The BOM rewrite invalidates Hadoop's checksum sidecar; leaving
+        # it makes Spark itself unable to re-read the exported file
+        # (ChecksumException) — delete it so re-ingest round-trips.
+        crc = os.path.join(
+            os.path.dirname(part), "." + os.path.basename(part) + ".crc"
+        )
+        if os.path.exists(crc):
+            os.remove(crc)
 
 
 def top_rules(violations: DataFrame, k: int | None = 5) -> DataFrame:
@@ -145,8 +132,6 @@ def quarantine_split(
     df: DataFrame,
     violations: DataFrame,
     id_col: str,
-    *,
-    rule_ids: list[str] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Split the input into (clean, quarantined) by violation membership.
 
@@ -159,8 +144,7 @@ def quarantine_split(
 
     Partition-grain violation rows (``clip_id IS NULL`` — drift, volume)
     quarantine nothing: they indict a partition, not a row; act on them
-    via the verdicts table. ``rule_ids`` optionally limits which rules
-    quarantine (e.g. exclude warning-severity rules).
+    via the verdicts table.
 
     Input rows whose ``id_col`` is NULL are ALWAYS quarantined: a keyless
     row cannot be joined against the violation set, so it can never be
@@ -169,8 +153,6 @@ def quarantine_split(
     very rows most in need of repair.
     """
     bad = violations.filter(F.col("clip_id").isNotNull())
-    if rule_ids is not None:
-        bad = bad.filter(F.col("rule_id").isin(rule_ids))
     keys = bad.select(F.col("clip_id").alias("_qkey")).distinct()
     cond = F.col(id_col).cast("string") == F.col("_qkey")
     null_id = F.col(id_col).isNull()
@@ -183,7 +165,6 @@ def examples_per_rule(
     violations: DataFrame,
     n: int = 5,
     *,
-    rule_col: str = "rule_id",
     order_col: str = "clip_id",
 ) -> DataFrame:
     """Up to ``n`` deterministic example rows per rule — the triage view
@@ -198,7 +179,7 @@ def examples_per_rule(
 
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    w = Window.partitionBy(rule_col).orderBy(F.asc(order_col))
+    w = Window.partitionBy("rule_id").orderBy(F.asc(order_col))
     return (
         violations.withColumn("example_rank", F.row_number().over(w))
         .where(F.col("example_rank") <= n)
@@ -215,13 +196,10 @@ def _xlsx_col_ref(idx: int) -> str:
     return out
 
 
-def export_xlsx(
-    df: DataFrame,
-    path: str,
-    *,
-    sheet_name: str = "result",
-    max_rows: int = 1_048_575,
-) -> None:
+XLSX_MAX_ROWS = 1_048_575  # data rows under the header: the format's sheet limit
+
+
+def export_xlsx(df: DataFrame, path: str) -> None:
     """Result export to a real .xlsx workbook (reference: the primary result
     export is DataFrame.to_excel, data_check.py:1249-1264; export_csv's
     BOM-CSV is the scale-path sibling). Stdlib-only writer — zipfile + hand
@@ -231,7 +209,7 @@ def export_xlsx(
 
     Like the reference's to_excel this is a DRIVER-side write of a bounded
     REPORT frame (summaries, top-k, examples_per_rule output): it refuses
-    more than ``max_rows`` data rows (the xlsx format's own sheet limit)
+    more than ``XLSX_MAX_ROWS`` data rows (the xlsx format's own sheet limit)
     instead of truncating silently — route bigger results through
     export_csv/parquet."""
     import re as _re
@@ -242,21 +220,6 @@ def export_xlsx(
         ByteType, DecimalType, DoubleType, FloatType, IntegerType, LongType,
         ShortType,
     )
-
-    # Excel's own sheet-name rules, enforced up front: a violating name
-    # yields a workbook Excel refuses or silently "repairs".
-    if (
-        not 1 <= len(sheet_name) <= 31
-        or _re.search(r"[\[\]:*?/\\\x00-\x1f]", sheet_name)
-        or sheet_name.startswith("'")
-        or sheet_name.endswith("'")
-        or sheet_name.lower() == "history"
-    ):
-        raise ValueError(
-            f"invalid xlsx sheet name {sheet_name!r}: 1-31 chars, no control "
-            "chars, none of []:*?/\\, no leading/trailing apostrophe, "
-            "not 'History'"
-        )
 
     # Control characters are illegal in XML 1.0 even escaped; OOXML's own
     # convention (what openpyxl emits) is the _xHHHH_ escape. Literal
@@ -274,10 +237,10 @@ def export_xlsx(
     numeric = (ByteType, ShortType, IntegerType, LongType, FloatType,
                DoubleType, DecimalType)
     is_num = [isinstance(f.dataType, numeric) for f in df.schema.fields]
-    rows = df.limit(max_rows + 1).collect()
-    if len(rows) > max_rows:
+    rows = df.limit(XLSX_MAX_ROWS + 1).collect()
+    if len(rows) > XLSX_MAX_ROWS:
         raise ValueError(
-            f"export_xlsx refuses >{max_rows} rows (xlsx sheet limit); "
+            f"export_xlsx refuses >{XLSX_MAX_ROWS} rows (xlsx sheet limit); "
             "use export_csv or parquet for full-size results"
         )
 
@@ -321,10 +284,7 @@ def export_xlsx(
     workbook = (
         '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
         f'<workbook xmlns="{ns}" xmlns:r="{rel_ns}"><sheets>'
-        # attribute context: double quotes must be entity-escaped too, or a
-        # quoted sheet name breaks out of name="..." and corrupts the XML
-        f'<sheet name="{_sax_escape(sheet_name, {chr(34): "&quot;"})}" '
-        'sheetId="1" r:id="rId1"/>'
+        '<sheet name="result" sheetId="1" r:id="rId1"/>'
         "</sheets></workbook>"
     )
     wb_rels = (
@@ -352,24 +312,23 @@ def export_xlsx(
             out.write(b"</sheetData></worksheet>")
 
 
-def export_result(df: DataFrame, path: str, *, sheet_name: str = "result") -> None:
+def export_result(df: DataFrame, path: str) -> None:
     """Extension-dispatched result export mirroring the reference's save
     dialog (data_check.py:1256-1261: ``.csv`` → BOM-CSV so Excel opens
-    Japanese text correctly, ``.xlsx`` → Excel workbook). ``sheet_name``
-    applies to the xlsx branch only (CSV has no sheets)."""
+    Japanese text correctly, ``.xlsx`` → Excel workbook)."""
     if path.endswith(".xlsx"):
-        export_xlsx(df, path, sheet_name=sheet_name)
+        export_xlsx(df, path)
     elif path.endswith(".csv"):
         # The reference's dialog saves ONE file at the chosen path;
-        # export_csv(single_file=True) still leaves a Spark output
-        # DIRECTORY (part-00000 + _SUCCESS), so write there and promote the
+        # export_csv still leaves a Spark output DIRECTORY
+        # (part-00000 + _SUCCESS), so write there and promote the
         # BOM part file to the requested path.
         import glob as _glob
         import os as _os
         import shutil as _shutil
 
         tmp_dir = path + ".spark-tmp"
-        export_csv(df, tmp_dir, single_file=True)
+        export_csv(df, tmp_dir)
         parts = _glob.glob(_os.path.join(tmp_dir, "part-*.csv"))
         if len(parts) != 1:  # coalesce(1) guarantees one; fail loud if not
             raise RuntimeError(f"expected one part file in {tmp_dir}, got {parts}")

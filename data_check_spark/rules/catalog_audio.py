@@ -20,13 +20,7 @@ from data_check_spark.rules.spec import Rule, RuleCatalog
 CLIP_ID_PATTERN = r"^clip_[0-9a-f]{16}$"
 
 
-def audio_catalog(
-    *,
-    snr_db_min: float = 30.0,
-    drift_threshold: float = 0.25,
-    cat_drift_threshold_bp: int = 2500,
-    bytes_cap_ms: int = 100,
-) -> RuleCatalog:
+def audio_catalog(*, bytes_cap_ms: int = 100) -> RuleCatalog:
     rules = [
         # --- clip_id (format family) ---------------------------------------
         Rule("CLIP_ID_NOT_NULL", "not_null", "clip_id",
@@ -101,16 +95,16 @@ def audio_catalog(
              {"dim": "transcripts", "dim_key": "clip_id", "mode": "orphan"},
              name="every transcript row must reference an existing clip"),
         Rule("DRIFT_DUR_MS", "drift", "dur_ms",
-             {"threshold": drift_threshold},
+             {"threshold": 0.25},
              name="dur_ms distribution must match the baseline snapshot"),
         Rule("DRIFT_SR_HZ", "drift", "sr_hz",
-             {"threshold": drift_threshold},
+             {"threshold": 0.25},
              name="sr_hz distribution must match the baseline snapshot"),
         Rule("CODEC_MIX_DRIFT", "cat_drift", "codec",
-             {"threshold_bp": cat_drift_threshold_bp},
+             {"threshold_bp": 2500},
              name="per-partition codec mix must match the table-wide mix"),
         Rule("PCM_SNR", "audio_decode", "bytes",
-             {"snr_db_min": snr_db_min, "cap_ms": bytes_cap_ms},
+             {"snr_db_min": 30.0, "cap_ms": bytes_cap_ms},
              gate=f"clip_id rlike '{CLIP_ID_PATTERN}' AND sr_hz > 0 AND dur_ms > 0",
              name="decoded PCM must be allclose to the reference decode (SNR>=30dB)"),
         Rule("TRANSCRIPT_MATCH", "transcript_match", "transcript",

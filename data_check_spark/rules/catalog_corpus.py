@@ -25,21 +25,15 @@ DEFAULT_LANG_WHITELIST = ["en", "es", "de", "fr"]
 SOURCE_PATTERN = r"^src[0-9]{1,4}$"
 
 
-def corpus_catalog(
-    *,
-    min_chars: int = 64,
-    lang_whitelist: list[str] | None = None,
-    source_pattern: str = SOURCE_PATTERN,
-) -> RuleCatalog:
-    langs = lang_whitelist or DEFAULT_LANG_WHITELIST
+def corpus_catalog() -> RuleCatalog:
     rules = [
         Rule("TEXT_NOT_NULL", "not_null", "text",
              name="document text must be present"),
-        Rule("TEXT_MIN_CHARS", "range", "n_chars", {"min": min_chars},
+        Rule("TEXT_MIN_CHARS", "range", "n_chars", {"min": 64},
              name="document must meet the minimum length"),
-        Rule("LANG_WHITELIST", "value_in_set", "lang", {"allowed": langs},
+        Rule("LANG_WHITELIST", "value_in_set", "lang", {"allowed": DEFAULT_LANG_WHITELIST},
              name="language must be in the release whitelist"),
-        Rule("SOURCE_FORMAT", "format", "source", {"pattern": source_pattern},
+        Rule("SOURCE_FORMAT", "format", "source", {"pattern": SOURCE_PATTERN},
              name="source id must match the feed naming scheme"),
         Rule("CHARS_CONSISTENT", "cross_column", None,
              {"expr": "n_chars <> length(text)",

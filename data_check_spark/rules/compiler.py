@@ -220,6 +220,52 @@ def compile_row_rules(rules: list[Rule], run_ts: str | None = None) -> list[Comp
     return out
 
 
+def resolve_row_rules(
+    df: DataFrame, rules: list[Rule], run_ts: str | None
+) -> tuple[list[CompiledRule], list[tuple[Rule, Exception]]]:
+    """Compile ``rules`` and check them against ``df``'s schema without
+    running a job: ``(compiled, failures)``, where ``failures`` holds each
+    rule that cannot run with its exception, in catalog order.
+
+    Per rule: its regexes precompile on the JVM (a JVM regex otherwise
+    compiles lazily, at the first row it meets) and it compiles to
+    (predicate, observed) pairs. Then ONE batched analysis probe resolves
+    every compiled pair's columns and types; only when that probe fails
+    does each rule get its own probe, to attribute the failure — a per-rule
+    ``.schema`` costs a py4j analysis round-trip each, which adds up across
+    the catalog."""
+    jvm_pattern = df.sparkSession._jvm.java.util.regex.Pattern
+    failures: list[tuple[Rule, Exception]] = []
+    candidates: list[tuple[Rule, list[CompiledRule]]] = []
+    for r in rules:
+        try:
+            for pat in [r.params.get("pattern"), *(r.params.get("any_of") or [])]:
+                if pat is not None:
+                    jvm_pattern.compile(pat)
+            candidates.append((r, compile_rule_many(r, run_ts)))
+        except Exception as e:  # noqa: BLE001 — reported, the caller decides
+            failures.append((r, e))
+
+    def probe(pairs: list[CompiledRule]) -> None:
+        df.select(
+            *[e for c in pairs for e in (c.predicate.cast("boolean"), c.observed)]
+        ).schema
+
+    compiled: list[CompiledRule] = []
+    try:
+        if candidates:
+            probe([c for _, rc in candidates for c in rc])
+        compiled = [c for _, rc in candidates for c in rc]
+    except Exception:  # noqa: BLE001 — bisect to the broken rule(s)
+        for r, rc in candidates:
+            try:
+                probe(rc)
+                compiled.extend(rc)
+            except Exception as e:  # noqa: BLE001 — reported, the caller decides
+                failures.append((r, e))
+    return compiled, failures
+
+
 def apply_row_rules(
     df: DataFrame,
     compiled: list[CompiledRule],

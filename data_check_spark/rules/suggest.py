@@ -37,9 +37,7 @@ UNIQUE nomination gates on the HLL estimate reaching 0.8×n_rows, and at
 rsd=0.02 an estimate for a truly-unique column landing below that bar is a
 >10-sigma event — astronomically unlikely, but not a hard guarantee. Every
 other rule family's decision is exact, and the DuckDB oracle replays the
-decisions with exact SQL. ``exact=True`` is the strict-guarantee mode
-(single-pass exact profile — also useful when a table has MANY near-unique
-columns and per-nominee verification jobs would add up).
+decisions with exact SQL.
 """
 
 from __future__ import annotations
@@ -73,7 +71,6 @@ def suggest_rules(
     *,
     columns: list[str] | None = None,
     max_set_size: int = 12,
-    exact: bool = False,
 ) -> RuleCatalog:
     """Propose a catalog the current data satisfies (see module docstring)."""
     from data_check_spark.operators.profile import column_profile, format_masks
@@ -96,7 +93,7 @@ def suggest_rules(
         prof_futs = [
             ex.submit(
                 lambda cs=cs: column_profile(
-                    df, cs, approx=not exact, rsd=0.02
+                    df, cs, approx=True, rsd=0.02
                 ).collect()
             )
             for cs in chunks
@@ -120,14 +117,11 @@ def suggest_rules(
     # Expand this plans multiplies rows by ~2, not by the column count).
     uniq_nominees = [
         c for c in cols
-        if not exact
-        and prof[c]["n_rows"]
+        if prof[c]["n_rows"]
         and _blanks(prof[c]) == 0
         and (prof[c]["n_distinct"] or 0) >= 0.8 * prof[c]["n_rows"]
     ]
-    exact_distinct: dict[str, int] = (
-        {c: prof[c]["n_distinct"] for c in cols} if exact else {}
-    )
+    exact_distinct: dict[str, int] = {}
 
     numeric = [c for c in cols if dtypes[c].startswith(_NUMERIC_PREFIXES)]
     # The profile already carries min/max, rendered to strings. For int and

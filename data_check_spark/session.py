@@ -123,7 +123,6 @@ def get_spark(
     app_name: str = "data_check_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
@@ -152,12 +151,9 @@ def get_spark(
     builder = SparkSession.builder.appName(app_name).master(master)
     if shuffle_partitions is not None:
         conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    if extra_conf:
-        conf.update(extra_conf)
     for k, v in conf.items():
-        # A spark-submit --conf for the same key wins over this module's
-        # defaults (explicit extra_conf still overrides).
-        if k in submit_conf and k not in (extra_conf or {}):
+        # A spark-submit --conf for the same key wins over this module's defaults.
+        if k in submit_conf:
             continue
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

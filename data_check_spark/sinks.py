@@ -42,71 +42,26 @@ def write_dataset(
     *,
     partition_by: list[str] | None = None,
     sort_by: list[str] | None = None,
-    zorder_by: list[str] | None = None,
-    zorder_bounds: dict[str, tuple[int, int]] | None = None,
-    zorder_bits: int = 16,
     rows_per_file: int = MAX_RECORDS_PER_FILE,
-    n_tasks: int | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Write ``df`` as a partitioned, sorted, size-bounded parquet dataset.
 
     ``partition_by``: hive partition columns (directory layout — enables
     partition pruning downstream). ``sort_by``: clustering columns inside
     each file (enables row-group pruning). ``rows_per_file`` bounds file
-    size; ``n_tasks`` bounds file COUNT from above at
-    ``n_tasks (+ skew splits) × ceil(rows_in_task / rows_per_file)``
-    (default: the session's shuffle parallelism via a plain range
-    exchange).
-
-    ``zorder_by`` (mutually exclusive with ``sort_by``): cluster on the
-    Morton interleave of 2-4 columns instead of a lexicographic sort, so
-    scans filtered on ANY of the columns prune files, not just the leading
-    one (``functions/zorder.py``). Quantization bounds come from
-    ``zorder_bounds`` (per-column (lo, hi)) or, when omitted, from ONE
-    min/max aggregate pass over the input.
+    size; file COUNT is bounded by the session's shuffle parallelism via a
+    plain range exchange.
     """
     if rows_per_file <= 0:
         raise ValueError(f"rows_per_file must be positive, got {rows_per_file}")
-    if zorder_by and sort_by:
-        raise ValueError("zorder_by and sort_by are mutually exclusive")
     parts = list(partition_by or [])
-    sorts = list(sort_by or [])
+    keys = parts + list(sort_by or [])
     out = df
-    z_col = "__z_order__"
-    if zorder_by:
-        from data_check_spark.functions.zorder import z_value
-
-        bounds = dict(zorder_bounds or {})
-        missing = [c for c in zorder_by if c not in bounds]
-        if missing:
-            row = df.agg(
-                *[F.min(F.col(c).cast("bigint")).alias(f"_lo_{c}") for c in missing],
-                *[F.max(F.col(c).cast("bigint")).alias(f"_hi_{c}") for c in missing],
-            ).collect()[0]
-            for c in missing:
-                lo, hi = row[f"_lo_{c}"], row[f"_hi_{c}"]
-                if lo is None or hi is None:
-                    raise ValueError(f"zorder column {c!r} is all-NULL")
-                bounds[c] = (lo, max(hi, lo + 1))
-        out = out.withColumn(z_col, z_value(zorder_by, bounds, bits=zorder_bits))
-        sorts = [z_col]
-    keys = parts + sorts
     if keys:
         # ONE range exchange: co-locates each hive partition into few
         # contiguous tasks AND pre-clusters rows for the local sort below.
-        out = out.repartitionByRange(*([n_tasks] if n_tasks else []), *keys)
-        out = out.sortWithinPartitions(*keys)
-    elif n_tasks:
-        out = out.repartition(n_tasks)
-    if zorder_by:
-        # projection after the local sort keeps row order; the curve value
-        # was only ever a clustering key, not data
-        out = out.drop(z_col)
-    writer = (
-        out.write.mode(mode)
-        .option("maxRecordsPerFile", rows_per_file)
-    )
+        out = out.repartitionByRange(*keys).sortWithinPartitions(*keys)
+    writer = out.write.mode("overwrite").option("maxRecordsPerFile", rows_per_file)
     if parts:
         writer = writer.partitionBy(*parts)
     writer.parquet(path)
@@ -201,7 +156,6 @@ def write_tar_shards(
     *,
     key_col: str,
     payloads: dict[str, str],
-    shard_col: str = "shard",
     order_col: str | None = None,
 ) -> DataFrame:
     """Export samples as WebDataset-style tar shards —
@@ -217,7 +171,7 @@ def write_tar_shards(
     utf-8-encoded. NULL payloads are skipped (a sample with every payload
     NULL still appears in ``n_samples`` of its shard's report row).
 
-    Plan shape: ONE hash exchange on ``shard_col`` guarantees each shard's
+    Plan shape: ONE hash exchange on ``shard`` guarantees each shard's
     rows land in exactly one task (a shard never splits across writers);
     a task writes each of its shards to ``.tmp`` and atomically renames, so
     a retried task can't leave a torn tar. Returns the lazily-evaluated
@@ -230,11 +184,11 @@ def write_tar_shards(
     import os as _os
 
     _os.makedirs(path, exist_ok=True)
-    cols = [shard_col, key_col, *payloads]
-    sort_cols = [shard_col, order_col or key_col]
+    cols = ["shard", key_col, *payloads]
+    sort_cols = ["shard", order_col or key_col]
     prepped = (
         df.select(*dict.fromkeys(cols + ([order_col] if order_col else [])))
-        .repartition(F.col(shard_col))
+        .repartition(F.col("shard"))
         .sortWithinPartitions(*sort_cols)
     )
 
@@ -282,7 +236,7 @@ def write_tar_shards(
                         "WebDataset splits the basename at the first dot, "
                         "so that segment must be dot-free"
                     )
-                s = int(rd[shard_col])
+                s = int(rd["shard"])
                 if state["tf"] is None or s != state["shard"]:
                     _close()
                     final = _os.path.join(path, f"shard-{s:06d}.tar")

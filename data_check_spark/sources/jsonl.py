@@ -71,15 +71,14 @@ def read_jsonl(
     schema: T.StructType | str,
     *,
     required_columns: list[str] | None = None,
-    corrupt_col: str = DEFAULT_CORRUPT_COL,
 ) -> DataFrame:
     """One distributed, splittable read of a JSONL dataset.
 
-    Returns the caller's schema plus ``corrupt_col`` (string): NULL for
+    Returns the caller's schema plus ``DEFAULT_CORRUPT_COL`` (string): NULL for
     clean rows, the raw offending line for malformed ones. Whitespace-only
     lines are skipped (the native JSON source's behavior).
     """
-    full = _resolve_schema(path, schema, required_columns, corrupt_col)
+    full = _resolve_schema(path, schema, required_columns, DEFAULT_CORRUPT_COL)
     return (
         spark.read.text(path)
         .filter(F.trim("value") != "")
@@ -87,7 +86,7 @@ def read_jsonl(
             F.from_json(
                 "value",
                 full,
-                {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": corrupt_col},
+                {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": DEFAULT_CORRUPT_COL},
             ).alias("_j")
         )
         .select("_j.*")

@@ -33,22 +33,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def read_tar_shards(
-    spark: SparkSession,
-    path: str,
-    *,
-    payloads: dict[str, str],
-    binary_suffixes: frozenset[str] | set[str] = frozenset(),
-) -> DataFrame:
+def read_tar_shards(spark: SparkSession, path: str, *, payloads: dict[str, str]) -> DataFrame:
     """Read ``<path>/*.tar`` WebDataset shards into one row per sample.
 
     ``payloads`` maps member suffix → output column (the inverse of the
     sink's column → suffix map), e.g. ``{"txt": "text", "wav": "bytes"}``.
-    Suffixes in ``binary_suffixes`` stay ``binary``; all others decode as
-    utf-8 strings (mirroring the sink, which utf-8-encodes non-binary
-    columns). Members with unlisted suffixes are ignored; a sample missing
-    a member keeps NULL in that column (the sink skips NULL payloads, so
-    the round trip is exact).
+    Every payload decodes as a utf-8 string (mirroring the sink, which
+    utf-8-encodes non-binary columns). Members with unlisted suffixes are
+    ignored; a sample missing a member keeps NULL in that column (the sink
+    skips NULL payloads, so the round trip is exact).
 
     Member BASENAMES split at the FIRST dot (the public WebDataset
     key/suffix convention): ``key.seq.txt`` is key ``key`` with suffix
@@ -66,13 +59,9 @@ def read_tar_shards(
     cols = list(payloads.values())
     if len(set(cols)) != len(cols):
         raise ValueError(f"duplicate output columns in payloads: {cols}")
-    fields = ", ".join(
-        f"`{col}` {'binary' if sfx in binary_suffixes else 'string'}"
-        for sfx, col in payloads.items()
-    )
+    fields = ", ".join(f"`{col}` string" for col in cols)
     schema = f"shard_file string, key string, {fields}, status string"
     suffix_to_col = dict(payloads)
-    bin_sfx = frozenset(binary_suffixes)
 
     scan = (
         spark.read.format("binaryFile")
@@ -118,15 +107,12 @@ def read_tar_shards(
                         if key not in samples:
                             samples[key] = dict(blank)
                             order.append(key)
-                        if sfx in bin_sfx:
-                            samples[key][col] = data
-                        else:
-                            try:
-                                samples[key][col] = data.decode("utf-8")
-                            except UnicodeDecodeError:
-                                # error-as-data at SAMPLE grain: keep the
-                                # shard's other samples, NULL this column.
-                                bad.add(key)
+                        try:
+                            samples[key][col] = data.decode("utf-8")
+                        except UnicodeDecodeError:
+                            # error-as-data at SAMPLE grain: keep the
+                            # shard's other samples, NULL this column.
+                            bad.add(key)
                     rows.extend(
                         {"shard_file": shard, "key": k, **samples[k],
                          "status": "bad_member" if k in bad else "ok"}

@@ -73,17 +73,12 @@ def streaming_violations_with_ts(
     catalog: RuleCatalog,
     *,
     run_ts: str,
-    partition_col: str = "partition",
-    ts_col: str = "event_ts",
 ) -> DataFrame:
     """Violations + event timestamp, for windowed monitoring — the SAME
     compiler projection as batch (``extra_cols`` threads the timestamp
     through; no forked hit-array logic to keep in sync)."""
     compiled = compile_row_rules(catalog.row_local, run_ts)
-    out = apply_row_rules(
-        stream, compiled, partition_col=partition_col, extra_cols=[ts_col]
-    )
-    return out.withColumnRenamed(ts_col, "event_ts") if ts_col != "event_ts" else out
+    return apply_row_rules(stream, compiled, extra_cols=["event_ts"])
 
 
 def violation_rate_monitor(
@@ -115,7 +110,6 @@ def start_microbatch_validation(
     *,
     run_ts: str,
     checkpoint_dir: str,
-    partition_col: str = "partition",
     trigger_once: bool = False,
     schema: T.StructType = STREAM_CLIPS_SCHEMA,
     max_files_per_trigger: int = 16,
@@ -154,7 +148,7 @@ def start_microbatch_validation(
         before = {int(e.getKey()) for e in jmap.entrySet().toArray()}
         res = run_validation(
             spark, batch_df, dims, catalog,
-            run_ts=run_ts, partition_col=partition_col, cache_input=False,
+            run_ts=run_ts, cache_input=False,
         )
         # Idempotent under foreachBatch's at-least-once replay: dynamic
         # partition overwrite replaces ONLY this batch_id's directory, so a

@@ -44,14 +44,10 @@ _STATE_SCHEMA = T.StructType(
 
 
 def streaming_duplicate_violations(
-    stream: DataFrame,
-    *,
-    rule_id: str = "STREAM_DUP",
-    key_col: str = "clip_id",
-    partition_col: str = "partition",
-    ttl_minutes: int | None = None,
+    stream: DataFrame, *, ttl_minutes: int | None = None
 ) -> DataFrame:
-    """Violations for duplicated keys ACROSS micro-batches (blank-exempt).
+    """``STREAM_DUP`` violations for ``clip_id`` values duplicated ACROSS
+    micro-batches (blank-exempt).
 
     Emits one row per duplicate occurrence; when the second occurrence of a
     key arrives, the (previously silent) first occurrence is emitted
@@ -67,7 +63,7 @@ def streaming_duplicate_violations(
         emit: list[object] = []
         for pdf in pdfs:
             parts = list(
-                pdf[partition_col].astype(object).where(pd.notna(pdf[partition_col]), None)
+                pdf["partition"].astype(object).where(pd.notna(pdf["partition"]), None)
             )
             if not parts:
                 continue
@@ -85,7 +81,7 @@ def streaming_duplicate_violations(
         if emit:
             yield pd.DataFrame(
                 {
-                    "rule_id": rule_id,
+                    "rule_id": "STREAM_DUP",
                     "clip_id": k,
                     "partition": pd.Series(emit, dtype=object),
                     "observed": f"dup_count={prev}",
@@ -98,8 +94,8 @@ def streaming_duplicate_violations(
         else GroupStateTimeout.NoTimeout
     )
     return (
-        stream.filter(is_present(key_col))
-        .groupBy(F.col(key_col))
+        stream.filter(is_present("clip_id"))
+        .groupBy(F.col("clip_id"))
         .applyInPandasWithState(dedup, VIOLATION_SCHEMA, _STATE_SCHEMA, "append", timeout)
     )
 
@@ -110,7 +106,6 @@ def start_stateful_dedup(
     output_dir: str,
     *,
     checkpoint_dir: str,
-    rule_id: str = "STREAM_DUP",
     ttl_minutes: int | None = None,
     trigger_once: bool = False,
     max_files_per_trigger: int = 16,
@@ -123,7 +118,7 @@ def start_stateful_dedup(
     stream = stream_clips(
         spark, input_dir, max_files_per_trigger=max_files_per_trigger
     )
-    viol = streaming_duplicate_violations(stream, rule_id=rule_id, ttl_minutes=ttl_minutes)
+    viol = streaming_duplicate_violations(stream, ttl_minutes=ttl_minutes)
     writer = (
         viol.writeStream.format("parquet")
         .option("path", output_dir)

@@ -113,31 +113,28 @@ def main(argv: list[str] | None = None) -> int:
     # Schema-applicability filter for the stateless row-rule stream: the
     # default catalog's bytes-derived row rules (BYTES_*, AUDIO_*) reference
     # wide-pass decode columns that the narrow monitoring schema doesn't
-    # carry — compiling them against the stream would fail analysis. Probe
-    # each row-local rule against an EMPTY frame of the stream schema
-    # (driver-side Catalyst analysis only, no jobs) and keep what resolves;
-    # dropped rule ids are reported in the summary so the narrowing is
-    # visible, and the micro-batch engine path still runs the full catalog
-    # (the batch engine owns its own schema handling). Only an analysis
-    # error means "not applicable to this schema": a spec error (a {run_ts}
-    # rule without --run-ts, an unparseable expression) is raised by the
-    # compile step outside the probe and fails the job.
-    from pyspark.errors import AnalysisException
+    # carry — compiling them against the stream would fail analysis. Resolve
+    # the row-local rules against an EMPTY frame of the stream schema (the
+    # engine's resolver: driver-side regex compile + Catalyst analysis, no
+    # jobs) and keep what resolves; dropped rule ids are reported in the
+    # summary so the narrowing is visible, and the micro-batch engine path
+    # still runs the full catalog (the batch engine owns its own schema
+    # handling). Only an analysis error means "not applicable to this
+    # schema": any other failure (a {run_ts} rule without --run-ts, an
+    # unparseable expression, a bad regex) fails the job before a query
+    # starts.
+    from pyspark.errors import AnalysisException, ParseException
 
-    from data_check_spark.rules.compiler import apply_row_rules, compile_row_rules
+    from data_check_spark.rules.compiler import resolve_row_rules
     from data_check_spark.rules.spec import RuleCatalog
 
     probe = spark.createDataFrame([], schema)
-    keep, dropped = [], {}
-    for r in catalog.rules:
-        if r.is_row_local:
-            compiled = compile_row_rules([r], run_ts)
-            try:
-                apply_row_rules(probe, compiled, partition_col="partition")
-            except AnalysisException as exc:
-                dropped[r.rule_id] = str(exc).splitlines()[0][:300]
-                continue
-        keep.append(r)
+    dropped = {}
+    for r, exc in resolve_row_rules(probe, catalog.row_local, run_ts)[1]:
+        if not isinstance(exc, AnalysisException) or isinstance(exc, ParseException):
+            raise ValueError(f"row rule {r.rule_id} cannot run: {exc}") from exc
+        dropped[r.rule_id] = str(exc).splitlines()[0][:300]
+    keep = [r for r in catalog.rules if not (r.is_row_local and r.rule_id in dropped)]
     stream_catalog = RuleCatalog(keep)
     # report the narrowing immediately (daemon mode has no summary line)
     for rule_id, cause in sorted(dropped.items()):

@@ -72,6 +72,60 @@ def _export_report(violations, catalog, path: str) -> None:
     export_result(enriched, path)
 
 
+def _append_run(res, output_dir: str) -> None:
+    """Partitioned-by-run append of one run's violations and verdicts: a
+    resumed relaunch into the same output dir adds its (partial) results
+    under a new run_id instead of clobbering the completed partitions
+    written by an earlier attempt."""
+    from pyspark.sql import functions as F
+
+    for name, df in (("violations", res.violations), ("verdicts", res.verdicts)):
+        (df.withColumn("run_id", F.lit(res.run_id))
+            .write.mode("append").partitionBy("run_id")
+            .parquet(f"{output_dir}/{name}"))
+
+
+def _write_final_views(spark, args, catalog, fallback_lineage: str):
+    """Exactly-once final views of a checkpointed run: the raw appends are
+    at-least-once (a crash between an output append and its checkpoint
+    write leaves an orphan attempt that the relaunch re-validates under a
+    new run_id, and a resumed relaunch re-emits NULL-partition rows and
+    run-level synthetics). ``reconcile_outputs`` drops orphan run_ids by
+    checkpoint lineage and recomputes verdicts from the reconciled
+    violations, so member partitions whose only violations are
+    owner-emitted global-grain rows fail here exactly as a single run
+    would.
+
+    Writes ``violations_final`` / ``verdicts_final``, exports the report
+    when asked, and returns ``(violations_final, total, rows_scanned)``
+    read back from the written views. Both numbers describe that one
+    reconciled view: after a crash-relaunch the current invocation ran
+    only the remaining partitions, so its own counts would undercount."""
+    from pyspark.sql import functions as F
+
+    from data_check_spark import engine
+
+    warning_ids = [r.rule_id for r in catalog if r.severity == "warning"]
+    fv, fd = engine.reconcile_outputs(
+        spark, args.output_dir, args.checkpoint_dir, warning_ids=warning_ids,
+        fallback_lineage=fallback_lineage,
+    )
+    fv.write.mode("overwrite").parquet(f"{args.output_dir}/violations_final")
+    fd.write.mode("overwrite").parquet(f"{args.output_dir}/verdicts_final")
+    # Re-read the written views: the reconciliation plan executes once
+    # instead of once per consumer (each execution re-scans the raw appends
+    # and the checkpoint).
+    fv = spark.read.parquet(f"{args.output_dir}/violations_final")
+    if args.export_result:
+        _export_report(fv, catalog, args.export_result)
+    rows_scanned = (
+        spark.read.parquet(f"{args.output_dir}/verdicts_final")
+        .agg(F.coalesce(F.sum("rows_scanned"), F.lit(0)))
+        .collect()[0][0]
+    )
+    return fv, fv.count(), int(rows_scanned)
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="clips parquet dir")
@@ -121,7 +175,8 @@ def main(argv: list[str] | None = None) -> int:
     if args.partition_batches > 1 and not args.checkpoint_dir:
         ap.error("--partition-batches needs --checkpoint-dir")
 
-    from data_check_spark.engine import run_validation
+    from data_check_spark import checkpoint as cp
+    from data_check_spark import engine
     from data_check_spark.rules.spec import load_catalog
     from data_check_spark.session import get_spark
 
@@ -149,8 +204,6 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import functions as F
 
     if args.dry_run:
-        from data_check_spark import checkpoint as cp
-
         sizes = _partition_sizes(clips, args.partition_col)
         null_rows = clips.filter(F.col(args.partition_col).isNull()).count()
         done = (cp.completed_partitions(spark, args.checkpoint_dir)
@@ -187,8 +240,6 @@ def main(argv: list[str] | None = None) -> int:
         sizes = _partition_sizes(clips, args.partition_col)
         chunks = [parts for parts, _rows in
                   _lpt_chunks(sizes, args.partition_batches)]
-        from data_check_spark import checkpoint as cp
-
         # Relaunch detection: once a previous attempt's batch 0 completed,
         # a re-run batch 0 must behave like a member (skip run-level
         # synthetics, NULL-partition rows, global-grain emission) or the
@@ -201,7 +252,7 @@ def main(argv: list[str] | None = None) -> int:
         crash_before_ckpt = os.environ.get("DATA_CHECK_TEST_CRASH_BEFORE_CKPT")
         batch_runs = []
         for i, chunk in enumerate(chunks):
-            res = run_validation(
+            res = engine.run_validation(
                 spark, clips, dims, catalog,
                 run_ts=args.run_ts,
                 partition_col=args.partition_col,
@@ -213,17 +264,11 @@ def main(argv: list[str] | None = None) -> int:
                 # NULL-partition rows, run-level synthetics); members skip
                 # all of that and validate only their own partitions.
                 batch_member=(i > 0) or owner_done,
-                # Checkpoint is written below, AFTER the output appends are
-                # durable — the done-marker must never precede the rows it
-                # attests to.
-                defer_checkpoint=True,
             )
-            (res.violations.withColumn("run_id", F.lit(res.run_id))
-                .write.mode("append").partitionBy("run_id")
-                .parquet(f"{args.output_dir}/violations"))
-            (res.verdicts.withColumn("run_id", F.lit(res.run_id))
-                .write.mode("append").partitionBy("run_id")
-                .parquet(f"{args.output_dir}/verdicts"))
+            # The checkpoint is written below, AFTER the output appends are
+            # durable — the done-marker must never precede the rows it
+            # attests to.
+            _append_run(res, args.output_dir)
             if crash_before_ckpt is not None and i == int(crash_before_ckpt):
                 raise RuntimeError(f"injected crash before checkpoint, batch {i}")
             # ONE append carries both the batch's partition rows and (for
@@ -241,97 +286,45 @@ def main(argv: list[str] | None = None) -> int:
                                "violations": s["total"]})
             if crash_after is not None and i == int(crash_after):
                 raise RuntimeError(f"injected crash after batch {i}")
-        # Exactly-once final views: the per-batch appends above are
-        # at-least-once (a crash between an output append and its
-        # checkpoint write leaves an orphan attempt that the relaunch
-        # re-validates under a new run_id). reconcile_outputs drops orphan
-        # run_ids by checkpoint lineage and recomputes verdicts from the
-        # reconciled violations, so member partitions whose only violations
-        # are owner-emitted global-grain rows fail here exactly as a single
-        # run would.
-        from data_check_spark.engine import reconcile_outputs
-
-        warning_ids = [r.rule_id for r in catalog if r.severity == "warning"]
-        fv, fd = reconcile_outputs(
-            spark, args.output_dir, args.checkpoint_dir, warning_ids=warning_ids,
-            fallback_lineage=batch_runs[0]["run_id"],
-        )
-        fv.write.mode("overwrite").parquet(f"{args.output_dir}/violations_final")
-        fd.write.mode("overwrite").parquet(f"{args.output_dir}/verdicts_final")
-        # Re-read the just-written final view for the count and the export:
-        # executing the reconciliation plan once instead of three times
-        # (each execution re-scans the raw appends + checkpoint).
-        fv_written = spark.read.parquet(f"{args.output_dir}/violations_final")
-        if args.export_result:
-            _export_report(fv_written, catalog, args.export_result)
-        final_total = fv_written.count()
-        # Both headline numbers describe the SAME exactly-once view: after a
-        # crash-relaunch the current invocation only ran the remaining
-        # batches, so summing batch_runs would pair a partial rows_scanned
-        # with the complete reconciled violation total. The reconciled
-        # verdicts carry each partition's rows_scanned exactly once.
-        final_rows_scanned = (
-            spark.read.parquet(f"{args.output_dir}/verdicts_final")
-            .agg(F.coalesce(F.sum("rows_scanned"), F.lit(0)))
-            .collect()[0][0]
-        )
+        _, final_total, final_rows_scanned = _write_final_views(
+            spark, args, catalog, fallback_lineage=batch_runs[0]["run_id"])
         print(json.dumps({
             "batches": batch_runs,
-            "rows_scanned": int(final_rows_scanned),
+            "rows_scanned": final_rows_scanned,
             "total_violations": final_total,
             "wall_sec": round(time.monotonic() - t0, 1),
         }))
         return 0
 
-    res = run_validation(
+    res = engine.run_validation(
         spark, clips, dims, catalog,
         run_ts=args.run_ts,
         partition_col=args.partition_col,
         checkpoint_dir=args.checkpoint_dir,
         resume=args.resume,
         reliable_cache=args.reliable_cache,
-        # Output-then-checkpoint ordering (below): a crash between the two
-        # must leave partitions UNmarked (re-validated on relaunch) rather
-        # than marked-done with no rows written anywhere.
-        defer_checkpoint=bool(args.checkpoint_dir),
     )
-    # Partitioned-by-run append: a resumed relaunch into the same output dir
-    # adds its (partial) results under a new run_id instead of clobbering the
-    # completed partitions written by the earlier attempt.
-    (res.violations.withColumn("run_id", F.lit(res.run_id))
-        .write.mode("append").partitionBy("run_id")
-        .parquet(f"{args.output_dir}/violations"))
-    (res.verdicts.withColumn("run_id", F.lit(res.run_id))
-        .write.mode("append").partitionBy("run_id")
-        .parquet(f"{args.output_dir}/verdicts"))
+    _append_run(res, args.output_dir)
     if args.checkpoint_dir:
-        from data_check_spark import checkpoint as cp
-
+        # Output-then-checkpoint ordering: a crash between the two must
+        # leave partitions UNmarked (re-validated on relaunch) rather than
+        # marked-done with no rows written anywhere.
         cp.write_checkpoint(res.verdicts, args.checkpoint_dir, res.run_id)
-        # Same exactly-once read view as the batched path: a resumed
-        # relaunch appends under a new run_id (NULL-partition rows and
-        # run-level synthetics are re-emitted by design), and a crash in
-        # the orphan window leaves un-checkpointed rows — reconciliation
-        # by lineage collapses both to the single-run multiset.
-        from data_check_spark.engine import reconcile_outputs
+        from data_check_spark.reporting import top_rules
 
-        warning_ids = [r.rule_id for r in catalog if r.severity == "warning"]
-        fv, fd = reconcile_outputs(
-            spark, args.output_dir, args.checkpoint_dir, warning_ids=warning_ids,
-            fallback_lineage=res.run_id,
-        )
-        fv.write.mode("overwrite").parquet(f"{args.output_dir}/violations_final")
-        fd.write.mode("overwrite").parquet(f"{args.output_dir}/verdicts_final")
+        fv, total, rows_scanned = _write_final_views(
+            spark, args, catalog, fallback_lineage=res.run_id)
+        top5 = [r["rule_id"] for r in top_rules(fv).collect()]
+    else:
         if args.export_result:
-            _export_report(fv, catalog, args.export_result)
-    elif args.export_result:
-        _export_report(res.violations, catalog, args.export_result)
-    summary = res.summary()
+            _export_report(res.violations, catalog, args.export_result)
+        summary = res.summary()
+        total, rows_scanned, top5 = summary["total"], res.rows_scanned, summary["top5"]
     print(json.dumps({
         "run_id": res.run_id,
-        "rows_scanned": res.rows_scanned,
-        "total_violations": summary["total"],
-        "top5": summary["top5"],
+        "rows_scanned": rows_scanned,
+        "total_violations": total,
+        "top5": top5,
         "schema_problems": res.schema_problems,
         "wall_sec": round(time.monotonic() - t0, 1),
     }))

@@ -3,8 +3,6 @@
 import datetime as dt
 import math
 
-import pytest
-
 from data_check_spark.operators.anomaly import daily_volume_anomaly
 
 
@@ -49,12 +47,6 @@ def test_matches_float_brute_force_on_noisy_series(spark):
     got = daily_volume_anomaly(_events(spark, counts)).orderBy("day").collect()
     assert [r.is_anomaly for r in got] == _brute(counts)
     assert got[20].is_anomaly == 1 and got[33].is_anomaly == 1
-
-
-def test_param_guard(spark):
-    df = _events(spark, [1])
-    with pytest.raises(ValueError):
-        daily_volume_anomaly(df, k=0)
 
 
 def test_counts_only_shuffle(spark):

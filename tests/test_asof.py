@@ -1,4 +1,4 @@
-"""As-of join operator: boundary semantics, direction, left-join nulls."""
+"""As-of join operator: boundary semantics, left-join nulls."""
 
 import datetime as dt
 
@@ -36,18 +36,6 @@ def test_backward_inclusive_and_nulls(spark):
                    "e2": "r-b",   # latest at-or-before
                    "e3": None,    # right rows all later
                    "e4": None}    # key absent from right
-
-
-def test_forward_direction(spark):
-    left, right = _frames(spark)
-    out = {r["event_id"]: r["payload"]
-           for r in asof_join(left, right, left_key="k", right_key="k",
-                              left_ts="ts", right_ts="rts",
-                              values=["payload"], direction="forward").collect()}
-    assert out == {"e1": "r-a",   # equal ts inclusive forward too
-                   "e2": None,    # nothing at-or-after
-                   "e3": "r-c",
-                   "e4": None}
 
 
 def test_asof_plan_single_shuffle_no_range_join(spark):
@@ -111,7 +99,7 @@ def test_asof_null_value_in_matched_row_stays_null(spark):
 
 def test_asof_null_timestamps_never_match(spark):
     """NULL right timestamps never seed the carry; NULL left timestamps
-    match nothing (both directions)."""
+    match nothing."""
     left = spark.createDataFrame(
         [("e1", 1, _ts("2026-01-01T09:00:00")), ("e2", 1, None)],
         "event_id string, k int, ts timestamp",
@@ -120,13 +108,12 @@ def test_asof_null_timestamps_never_match(spark):
         [(1, None, "ghost"), (1, _ts("2026-01-01T10:00:00"), "real")],
         "k int, rts timestamp, payload string",
     )
-    for direction, e1_want in (("backward", None), ("forward", "real")):
-        out = {r["event_id"]: r["payload"]
-               for r in asof_join(left, right, left_key="k", right_key="k",
-                                  left_ts="ts", right_ts="rts",
-                                  values=["payload"], direction=direction).collect()}
-        assert out["e1"] == e1_want
-        assert out["e2"] is None
+    out = {r["event_id"]: r["payload"]
+           for r in asof_join(left, right, left_key="k", right_key="k",
+                              left_ts="ts", right_ts="rts",
+                              values=["payload"]).collect()}
+    assert out["e1"] is None
+    assert out["e2"] is None
 
 
 def test_asof_null_keys_never_match(spark):

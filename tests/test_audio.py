@@ -224,5 +224,3 @@ def test_augmentation_plan_guards(spark):
     clips = spark.createDataFrame([("c",)], "clip_id string")
     with pytest.raises(ValueError):
         augmentation_plan(clips, n_variants=0)
-    with pytest.raises(ValueError):
-        augmentation_plan(clips, snr_min_db=10, snr_max_db=10)

@@ -480,8 +480,6 @@ def test_normalization_gain_guards_and_plan(spark):
     df = spark.createDataFrame([(1, 1, 1)], "n_samples long, energy long, peak_abs long")
     with _pytest.raises(ValueError, match="target_ms_q"):
         normalization_gain(df, target_ms_q=0)
-    with _pytest.raises(ValueError, match="full_scale"):
-        normalization_gain(df, target_ms_q=1, full_scale=0)
     plan = (
         normalization_gain(df, target_ms_q=10_000_000)
         ._jdf.queryExecution().executedPlan().toString()

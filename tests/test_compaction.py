@@ -19,11 +19,11 @@ def test_compaction_plan_grouping_and_keeps(spark):
     rows = [
         # p0: three smalls fill group 0 exactly at 100 then b starts group 1
         ("p0", "a", 40), ("p0", "b", 40), ("p0", "c", 30),
-        ("p0", "big", 500),               # >= small threshold: keep
+        ("p0", "big", 500),               # >= small threshold (50): keep
         ("p1", "only", 10),               # single small file still merges
         ("p2", "huge", 1000),             # all-keep dir: no groups
     ]
-    got, _ = _plan_rows(spark, rows, target_bytes=100, small_bytes=100)
+    got, _ = _plan_rows(spark, rows, target_bytes=100)
     assert got[("p0", "a")] == ("merge", 0)      # before=0
     assert got[("p0", "b")] == ("merge", 0)      # before=40
     assert got[("p0", "c")] == ("merge", 0)      # before=80 (straddles, ok)
@@ -32,7 +32,7 @@ def test_compaction_plan_grouping_and_keeps(spark):
     assert got[("p2", "huge")] == ("keep", None)
     # after c (before=80+30=110) a new small file would start group 1
     rows.append(("p0", "d", 20))
-    got2, _ = _plan_rows(spark, rows, target_bytes=100, small_bytes=100)
+    got2, _ = _plan_rows(spark, rows, target_bytes=100)
     assert got2[("p0", "d")] == ("merge", 1)
 
 
@@ -51,7 +51,7 @@ def test_compaction_summary_math(spark):
         ("p2", "huge", 1000),
     ]
     df = spark.createDataFrame(rows, "part_dir string, file_name string, file_size long")
-    plan = compaction_plan(df, target_bytes=100, small_bytes=100)
+    plan = compaction_plan(df, target_bytes=100)
     got = {r["part_dir"]: r.asDict() for r in compaction_summary(plan).collect()}
     assert got["p0"]["n_files"] == 5
     assert got["p0"]["n_small"] == 4
@@ -67,7 +67,3 @@ def test_compaction_plan_guards(spark):
                                "part_dir string, file_name string, file_size long")
     with pytest.raises(ValueError, match="target_bytes"):
         compaction_plan(df, target_bytes=0)
-    with pytest.raises(ValueError, match="small_bytes"):
-        compaction_plan(df, target_bytes=100, small_bytes=101)
-    with pytest.raises(ValueError, match="small_bytes"):
-        compaction_plan(df, target_bytes=100, small_bytes=0)

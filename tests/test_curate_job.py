@@ -169,7 +169,7 @@ def test_curate_job_preflight_rules_and_token_budget(spark, tmp_path, capsys):
     ).write.parquet(docs)
 
     cat_path = str(tmp_path / "rules.json")
-    corpus_catalog(min_chars=10).save(cat_path)
+    corpus_catalog().save(cat_path)
 
     out = str(tmp_path / "release")
     rc = curate_job.main([

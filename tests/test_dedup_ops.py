@@ -2,6 +2,7 @@
 
 import pytest
 
+from data_check_spark.operators import dedup
 from data_check_spark.operators.dedup import (
     exact_duplicate_groups,
     exact_duplicate_rows,
@@ -111,7 +112,7 @@ def test_lsh_scales_not_quadratic(docs):
     assert "CartesianProduct" not in plan
 
 
-def test_ngram_stop_shingle_cap(spark):
+def test_ngram_stop_shingle_cap(spark, monkeypatch):
     """A boilerplate shingle shared by every doc must not explode candidate
     generation; genuinely similar pairs are still found with EXACT jaccard
     (common shingles still count in intersection/union)."""
@@ -127,7 +128,8 @@ def test_ngram_stop_shingle_cap(spark):
     rows.append((101, boiler + "abcdefghijklmnopqrstuvwxyz0123456788"))
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    pairs = ngram_jaccard_pairs(docs, threshold=0.3, max_df=16).collect()
+    monkeypatch.setattr(dedup, "MAX_SHINGLE_DF", 16)
+    pairs = ngram_jaccard_pairs(docs, threshold=0.3).collect()
     got = {(p["id_a"], p["id_b"]): p["jac_q4"] / 10000 for p in pairs}
     # Only the planted pair survives: every other doc pair shares ONLY the
     # boilerplate shingles, which are df-capped out of candidate generation.
@@ -159,7 +161,8 @@ def test_minhash_estimate_error_vs_exact_jaccard(spark):
 def test_simhash_blocking_complete_vs_brute_force(spark):
     """Pigeonhole completeness, verified against brute force: every pair
     with hamming(simhash) <= 3 in the corpus must appear in the blocked
-    result (bucket cap raised so truncation can't hide pairs)."""
+    result (the 256-member bucket cap is above any bucket of this corpus,
+    so truncation can't hide pairs)."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     hashes = {r["doc_id"]: r["simhash"] for r in simhash_64(docs).collect()}
     ids = sorted(hashes)
@@ -169,7 +172,7 @@ def test_simhash_blocking_complete_vs_brute_force(spark):
             if bin((hashes[a] ^ hashes[b]) & 0xFFFFFFFFFFFFFFFF).count("1") <= 3:
                 want.add((a, b))
     got = {(r["id_a"], r["id_b"])
-           for r in simhash_near_pairs(docs, max_hamming=3, max_bucket=100_000).collect()}
+           for r in simhash_near_pairs(docs, max_hamming=3).collect()}
     assert want <= got, f"missed pairs: {sorted(want - got)[:10]}"
     assert got == want  # and nothing beyond the radius
 

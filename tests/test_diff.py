@@ -74,10 +74,6 @@ def test_snapshot_diff_duplicate_keys_detected(spark):
         snapshot_diff(dup, clean, key_cols=["k"], compare_cols=["a", "b"])
     with pytest.raises(ValueError, match="duplicate key in new"):
         snapshot_diff(clean, dup, key_cols=["k"], compare_cols=["a", "b"])
-    # opting out skips the check (caller guarantees uniqueness upstream)
-    snapshot_diff(
-        clean, clean, key_cols=["k"], compare_cols=["a", "b"], check_unique=False
-    ).collect()
 
 
 def test_snapshot_diff_guards(spark):
@@ -92,9 +88,7 @@ def test_snapshot_diff_fingerprints_fold_before_join(spark):
     old = _df(spark, [(1, "x", "y")])
     new = _df(spark, [(1, "x", "y")])
     plan = (
-        snapshot_diff(
-            old, new, key_cols=["k"], compare_cols=["a", "b"], check_unique=False
-        )
+        snapshot_diff(old, new, key_cols=["k"], compare_cols=["a", "b"])
         ._jdf.queryExecution().optimizedPlan().toString()
     )
     # the md5 fingerprints are computed in Projects BELOW the join (each

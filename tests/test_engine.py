@@ -8,6 +8,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from data_check_spark import checkpoint
 from data_check_spark.datagen import (
     CODECS,
     DRIFT_PARTITIONS,
@@ -111,6 +112,8 @@ def test_checkpoint_resume(spark):
     try:
         r1 = run_validation(spark, clips, {}, cat, checkpoint_dir=ckdir)
         assert r1.rows_scanned == 2000
+        # the caller appends the checkpoint once its outputs are durable
+        checkpoint.write_checkpoint(r1.verdicts, ckdir, r1.run_id)
         r2 = run_validation(spark, clips, {}, cat, checkpoint_dir=ckdir, resume=True)
         assert r2.rows_scanned == 0  # everything pruned by partition
         assert r2.verdicts.count() == 0

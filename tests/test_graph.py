@@ -3,6 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from data_check_spark.operators import graph
 from data_check_spark.operators.graph import connected_components, dedup_clusters
 
 
@@ -33,17 +34,16 @@ def test_empty_pairs(spark):
     assert connected_components(_pairs(spark, [])).collect() == []
 
 
-def test_max_iter_exceeded_raises(spark):
+def test_max_iter_exceeded_raises(spark, monkeypatch):
+    # diameter 4 cannot finish in 1 round (no small-graph budget forces the
+    # distributed path this guard belongs to)
+    monkeypatch.setattr(graph, "DEFAULT_MAX_ITER", 1)
+    monkeypatch.setattr(graph, "SMALL_GRAPH_MAX_EDGES", 0)
     with pytest.raises(RuntimeError, match="did not converge"):
-        # diameter 4 cannot finish in 1 round (small_graph_edges=0 forces
-        # the distributed path this guard belongs to)
-        connected_components(
-            _pairs(spark, [(i, i + 1) for i in range(4)]),
-            max_iter=1, small_graph_edges=0,
-        )
+        connected_components(_pairs(spark, [(i, i + 1) for i in range(4)]))
 
 
-def test_small_graph_fast_path_matches_iterative(spark):
+def test_small_graph_fast_path_matches_iterative(spark, monkeypatch):
     """The driver-side union-find fast path must be value-identical to the
     distributed min-label loop on the same graph — chains, triangles,
     singleton edges, reversed orderings, string ids."""
@@ -53,17 +53,14 @@ def test_small_graph_fast_path_matches_iterative(spark):
         [(5, 1), (3, 5), (7, 8), (8, 7)],
         [(1, 2), (3, 4), (2, 3), (4, 1)],  # cycle
     ]
-    for edges in cases:
-        fast = sorted(map(tuple, connected_components(_pairs(spark, edges)).collect()))
-        dist = sorted(map(tuple, connected_components(
-            _pairs(spark, edges), small_graph_edges=0
-        ).collect()))
-        assert fast == dist, edges
     # string node ids take the lexicographic minimum in both paths
     sp = spark.createDataFrame([("b", "a"), ("c", "b")], "id_a string, id_b string")
-    fast = sorted(map(tuple, connected_components(sp).collect()))
-    dist = sorted(map(tuple, connected_components(sp, small_graph_edges=0).collect()))
-    assert fast == dist == [("a", "a"), ("b", "a"), ("c", "a")]
+    frames = [_pairs(spark, edges) for edges in cases] + [sp]
+    fast = [sorted(map(tuple, connected_components(df).collect())) for df in frames]
+    monkeypatch.setattr(graph, "SMALL_GRAPH_MAX_EDGES", 0)
+    dist = [sorted(map(tuple, connected_components(df).collect())) for df in frames]
+    assert fast == dist, cases
+    assert fast[-1] == [("a", "a"), ("b", "a"), ("c", "a")]
 
 
 def test_dedup_clusters_canonical_and_sizes(spark):

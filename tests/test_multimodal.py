@@ -36,79 +36,6 @@ def test_feature_determinism(media):
     assert a == b
 
 
-def test_real_decoder_seam_is_error_as_data(spark, media):
-    """decode_stub=False on payloads with no available decoder (the
-    portable fixture's ``blob_`` text) degrades to ok=false rows naming the
-    plug-in seam — never a job failure."""
-    rows = extract_features(media.limit(5), decode_stub=False).collect()
-    assert rows
-    for r in rows:
-        assert not r["ok"]
-        assert r["error"] is not None
-
-
-def _wav_bytes(sr=16000, dur_ms=250, freq=440.0, n_ch=1):
-    import io
-    import wave
-
-    import numpy as np
-
-    n = int(sr * dur_ms / 1000)
-    t = np.arange(n) / sr
-    x = (np.sin(2 * np.pi * freq * t) * 0.5 * 32767).astype(np.int16)
-    if n_ch == 2:
-        x = np.column_stack([x, x]).ravel()
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(n_ch)
-        w.setsampwidth(2)
-        w.setframerate(sr)
-        w.writeframes(x.tobytes())
-    return buf.getvalue()
-
-
-def test_real_wav_decode_features(spark):
-    """decode_stub=False REALLY decodes RIFF/WAV payloads (stdlib wave):
-    channels, sample rate, duration and level come from the actual audio."""
-    from data_check_spark.operators.multimodal import extract_features
-
-    rows = [
-        ("a1", "audio", _wav_bytes(sr=16000, dur_ms=250), None, "p0"),
-        ("a2", "audio", _wav_bytes(sr=48000, dur_ms=100, n_ch=2), None, "p0"),
-        ("a3", "audio", b"RIFFgarbage-not-a-real-wav", None, "p0"),
-        ("i1", "image", b"\x89PNG\r\n\x1a\nfakepng", None, "p0"),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "media_id string, media_type string, payload binary, "
-        "meta map<string,string>, partition string",
-    )
-    out = {r["media_id"]: r for r in extract_features(df, decode_stub=False).collect()}
-    f1 = out["a1"]["feature"]
-    assert out["a1"]["ok"] and abs(f1[2] - 0.25) < 1e-6      # duration 0.25s
-    assert abs(f1[1] - 16000 / 48000) < 1e-6                  # sample rate
-    assert abs(f1[3] - 0.5 / (2 ** 0.5)) < 0.01               # sine rms ~ A/sqrt(2)
-    f2 = out["a2"]["feature"]
-    assert out["a2"]["ok"] and f2[0] == 2.0 and abs(f2[1] - 1.0) < 1e-6
-    assert not out["a3"]["ok"] and "Error" in out["a3"]["error"]
-    assert not out["i1"]["ok"] and "no decoder" in out["i1"]["error"]
-
-
-def test_non_wav_riff_goes_to_no_decoder_seam(spark):
-    """WebP/AVI are RIFF containers but not WAVE — they must hit the
-    'no decoder' seam, not a misleading wav-parse error."""
-    from data_check_spark.operators.multimodal import extract_features
-
-    webp = b"RIFF" + b"\x00\x00\x00\x00" + b"WEBPVP8 fake-webp-bytes"
-    df = spark.createDataFrame(
-        [("w1", "image", webp, None, "p0")],
-        "media_id string, media_type string, payload binary, "
-        "meta map<string,string>, partition string",
-    )
-    r = extract_features(df, decode_stub=False).collect()[0]
-    assert not r["ok"] and "no decoder" in r["error"]
-
-
 def test_portable_media_df_matches_python_md5(spark):
     """Engine-independent recompute of the portable fixture: hashlib-derived
     (media_type, NULL routing, payload length, partition) must equal the
@@ -201,24 +128,6 @@ def test_synth_ppm_roundtrip_closed_form(spark):
         assert r["sum_r"] == n * rb + S(n)
         assert r["sum_g"] == n * gb + S(n)
         assert r["sum_b"] == n * bb + S(n)
-
-
-def test_real_ppm_decode_features(spark):
-    """extract_features(decode_stub=False) must route P6 payloads through
-    the real image decoder (ok=true, geometry + channel means in the vec)."""
-    from data_check_spark.operators.multimodal import extract_features
-
-    payload = b"P6\n2 1\n255\n" + bytes([255, 0, 0, 255, 0, 0])  # pure red
-    df = spark.createDataFrame(
-        [("img1", "image", bytearray(payload), None, "p00")],
-        "media_id string, media_type string, payload binary, "
-        "meta map<string,string>, partition string",
-    )
-    row = extract_features(df, decode_stub=False).collect()[0]
-    assert row["ok"] is True
-    vec = row["feature"]
-    assert abs(vec[0] - 0.002) < 1e-6 and abs(vec[1] - 0.001) < 1e-6  # w, h /1k
-    assert abs(vec[3] - 1.0) < 1e-6 and vec[4] == 0.0 and vec[5] == 0.0  # means
 
 
 def test_sniff_container_magic_bytes(spark):

@@ -259,7 +259,7 @@ def test_profile_nonfinite_ignored_like_null(spark):
         [(1.0,), (2.0,), (3.0,), (float("nan"),), (float("inf"),), (None,)],
         "x double",
     )
-    h = {r["bin"]: r["n"] for r in value_histogram(df, "x", bin_width=1.0, scale=1).collect()}
+    h = {r["bin"]: r["n"] for r in value_histogram(df, "x", bin_width=1.0).collect()}
     assert sum(h.values()) == 3  # only the finite rows
     q = {r["percentile"]: r["q_scaled"] for r in
          numeric_quantiles(df, ["x"], percentiles=(0.5,), scale=1).collect()}
@@ -457,13 +457,6 @@ def test_null_correlation_hand_computed(spark):
     cc = got[("c", "c")]
     assert cc["jaccard_ppm"] == 1000000  # self-pair sanity: jaccard = 1
 
-    # NULL-only mode: blanks no longer count
-    strict = {(r["col_a"], r["col_b"]): r.asDict()
-              for r in null_correlation(df, [("a", "b")], blank_as_missing=False).collect()}
-    assert strict[("a", "b")]["b_missing"] == 1
-    assert strict[("a", "b")]["both_missing"] == 0
-    assert strict[("a", "b")]["b_given_a_ppm"] == 0
-
     # no missing values at all -> ratios NULL, not div-by-zero
     clean = spark.createDataFrame([(1, "v")], "a int, b string")
     r = null_correlation(clean, [("a", "b")]).collect()[0]
@@ -547,16 +540,3 @@ def test_dataset_card_metrics(spark):
         "dup_docs": 5,     # both members of the pair + all three of the triple
         "dup_groups": 2,
     }
-
-
-def test_dataset_card_approx_mode_runs(spark):
-    from data_check_spark.operators.profile import dataset_card
-
-    df = spark.createDataFrame(
-        [(1, "a b", "s1", "en"), (2, "c", "s2", "fr")],
-        "doc_id long, text string, source string, lang string",
-    )
-    got = {r["metric"]: r["value"] for r in dataset_card(df, approx=True).collect()}
-    # HLL++ is exact at tiny cardinalities; the point is the plan compiles
-    # without the Expand node and yields the same 8 metrics.
-    assert got["n_docs"] == 2 and got["n_sources"] == 2 and got["dup_docs"] == 0

@@ -45,7 +45,7 @@ def test_benford_screen_uniform_data_flags_deviation(spark):
     # uniform 1..9999 first digits are NOT Benford: digit 1 share ≈ 1/9 vs
     # expected ≈ 0.301 — the screen must show a large delta
     df = spark.range(1, 10_000).select((F.col("id").cast("double")).alias("v"))
-    out = {r["digit"]: r for r in benford_screen(df, "v", scale=1).collect()}
+    out = {r["digit"]: r for r in benford_screen(df, "v").collect()}
     assert set(out) == set(range(1, 10))
     assert out[1]["delta_ppm"] > 150_000
 
@@ -213,9 +213,9 @@ def test_format_masks_truncates_long_values(spark):
 
     rows = [("x" * 100,), ("ab12",)]
     df = spark.createDataFrame(rows, "s string")
-    out = {r["mask"]: r for r in format_masks(df, ["s"], max_mask_len=8).collect()}
-    assert set(out) == {"aaaaaaaa+", "aa99"}
-    assert out["aaaaaaaa+"]["n"] == 1
+    out = {r["mask"]: r for r in format_masks(df, ["s"]).collect()}
+    assert set(out) == {"a" * 64 + "+", "aa99"}
+    assert out["a" * 64 + "+"]["n"] == 1
 
 
 def test_split_leakage_audit_clobber_guard(spark):

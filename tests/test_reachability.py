@@ -8,6 +8,12 @@ resolves names through each module's import bindings, so a name that only
 appears in a string or a comment is not a use, and neither is a use from
 ``tests/``. A definition no root reaches is dead code: delete it, or, if a
 test compares live output against it, add it to ``KEEP`` with the reason.
+
+The option audit applies the same walk to parameters: a defaulted parameter
+of a package function or method that no reached call sets has one value in
+use, so it is a constant, not an option. Delete it, or, if it belongs to a
+``KEEP`` definition, names a resource outside the program, or switches on
+a check of outside input, add it to ``KEEP_OPTIONS`` with the reason.
 """
 
 from __future__ import annotations
@@ -26,6 +32,20 @@ KEEP = {
     # Reference xlsx decoder: tests read back the workbook that
     # validate_job --export-result writes and compare it against the source rows.
     "data_check_spark.sources.xlsx",
+}
+
+
+KEEP_OPTIONS = {
+    # KEEP definition: the reference decoder reads any sheet of a workbook.
+    "data_check_spark.sources.xlsx.read_xlsx_df(sheet)",
+    "data_check_spark.sources.xlsx.read_xlsx_rows(sheet)",
+    # Deployment setting: which files of an outside media directory to load.
+    "data_check_spark.sources.media.read_media_dir(glob)",
+    # Checks of outside input: a per-file size cap, the columns a JSONL feed
+    # must carry, and nullability drift in an incoming table.
+    "data_check_spark.sources.media.read_media_dir(max_bytes)",
+    "data_check_spark.sources.jsonl.read_jsonl(required_columns)",
+    "data_check_spark.schemas.validate_schema(strict_nullability)",
 }
 
 
@@ -100,7 +120,10 @@ def _is_register(dec: ast.AST) -> bool:
     return isinstance(fn, ast.Name) and fn.id == "register"
 
 
-def unreached() -> list[str]:
+def _walk():
+    """Parse the package and the roots and follow every use from the roots.
+    Returns the package modules by name, the reached ``module`` and
+    ``module.def`` names, and every (module, nodes) the walk read."""
     pkg = {m.name: m for m in map(_Module, _py_files(PKG))}
     roots = [_Module(p) for rel in ROOT_PATHS for p in _py_files(rel)]
 
@@ -124,6 +147,7 @@ def unreached() -> list[str]:
 
     reached: set[str] = set()
     todo: list[tuple[_Module, list]] = [(r, [r.tree]) for r in roots]
+    visited: list[tuple[_Module, list]] = []
 
     def reach(hit: str) -> None:
         if hit in reached:
@@ -146,10 +170,16 @@ def unreached() -> list[str]:
                 reach(f"{mod.name}.{d.name}")
     while todo:
         mod, nodes = todo.pop()
+        visited.append((mod, nodes))
         for dotted in mod.loads(nodes):
             hit = resolve(dotted)
             if hit is not None:
                 reach(hit)
+    return pkg, reached, visited, resolve
+
+
+def unreached() -> list[str]:
+    pkg, reached, _, _ = _walk()
     dead = []
     for mod in pkg.values():
         if mod.name not in reached and mod.defs:
@@ -159,9 +189,127 @@ def unreached() -> list[str]:
     return sorted(dead)
 
 
+def _defaulted(fn) -> list[str]:
+    """Names of ``fn``'s parameters that carry a default."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    out = [p.arg for p in pos[len(pos) - len(a.defaults):]] if a.defaults else []
+    return out + [p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+
+
+def _is_static(fn) -> bool:
+    return any(isinstance(d, ast.Name) and d.id == "staticmethod" for d in fn.decorator_list)
+
+
+def _dotted(node) -> str | None:
+    chain = []
+    while isinstance(node, ast.Attribute):
+        chain.append(node.attr)
+        node = node.value
+    return ".".join([node.id] + chain[::-1]) if isinstance(node, ast.Name) else None
+
+
+def option_audit() -> tuple[dict[str, list[str]], set[str]]:
+    """Every defaulted parameter of a package function or method, and the ones
+    no reached call sets.
+
+    Returns ``(defaulted, unset)``: ``defaulted`` maps ``module.func`` (or
+    ``module.Class.method``) to its defaulted parameter names; ``unset`` holds
+    ``module.func(param)`` for each one that no call in root or reached
+    package code passes, by keyword or by position. A call that passes
+    ``*args`` or ``**mapping`` sets every parameter. A function that escapes
+    as a value (stored, passed as an argument, used as a decorator target)
+    is called where the audit cannot see, so it is exempt; so are
+    ``@register`` queries, handed out by ``__spark_entry__.queries()``, and
+    dunder methods other than ``__init__``. Method calls (``obj.name(...)``)
+    are matched by method name, over every class in the package."""
+    pkg, _, visited, resolve = _walk()
+    funcs: dict[str, tuple[ast.AST, int]] = {}  # qualname -> (def, leading params to skip)
+    methods: dict[str, list[str]] = {}  # method name -> qualnames
+    escaped: set[str] = set()
+    for mod in pkg.values():
+        for d in mod.defs.values():
+            if isinstance(d, ast.ClassDef):
+                for m in d.body:
+                    if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                        q = f"{mod.name}.{d.name}.{m.name}"
+                        funcs[q] = (m, 0 if _is_static(m) else 1)
+                        methods.setdefault(m.name, []).append(q)
+                        if m.name.startswith("__") and m.name != "__init__":
+                            escaped.add(q)
+            else:
+                funcs[f"{mod.name}.{d.name}"] = (d, 0)
+                if any(_is_register(x) for x in d.decorator_list):
+                    escaped.add(f"{mod.name}.{d.name}")
+
+    def targets(mod, func) -> list[tuple[str, int]]:
+        """The package functions a call or reference to ``func`` can mean."""
+        dotted = _dotted(func)
+        if dotted is not None:
+            head, *rest = dotted.split(".")
+            hit = resolve(".".join([mod.binds.get(head, f"{mod.name}.{head}")] + rest))
+            if hit and hit.rsplit(".", 1)[-1] == dotted.rsplit(".", 1)[-1]:
+                if hit in funcs:
+                    return [(hit, funcs[hit][1])]
+                init = f"{hit}.__init__"  # a class: calling it runs __init__
+                return [(init, 1)] if init in funcs else []
+        if isinstance(func, ast.Attribute):
+            return [(q, funcs[q][1]) for q in methods.get(func.attr, [])]
+        return []
+
+    set_params: dict[str, set[str]] = {}
+    for mod, nodes in visited:
+        for top in nodes:
+            call_funcs, values = set(), set()
+            for node in ast.walk(top):
+                if isinstance(node, ast.Call):
+                    call_funcs.add(id(node.func))
+                if isinstance(node, ast.Attribute):
+                    values.add(id(node.value))
+            for node in ast.walk(top):
+                if isinstance(node, ast.Call):
+                    for q, skip in targets(mod, node.func):
+                        fn = funcs[q][0]
+                        params = [p.arg for p in fn.args.posonlyargs + fn.args.args][skip:]
+                        star = any(isinstance(a, ast.Starred) for a in node.args) or any(
+                            k.arg is None for k in node.keywords)
+                        got = set_params.setdefault(q, set())
+                        if star:
+                            got.update(_defaulted(fn))
+                        got.update(params[: len(node.args)])
+                        got.update(k.arg for k in node.keywords if k.arg)
+                elif (
+                    isinstance(node, (ast.Name, ast.Attribute))
+                    and isinstance(node.ctx, ast.Load)
+                    and id(node) not in call_funcs
+                    and id(node) not in values
+                ):
+                    escaped.update(q for q, _ in targets(mod, node))
+    defaulted = {q: _defaulted(fn) for q, (fn, _) in funcs.items() if _defaulted(fn)}
+    unset = {
+        f"{q}({p})"
+        for q, names in defaulted.items()
+        if q not in escaped
+        for p in names
+        if p not in set_params.get(q, set())
+    }
+    return defaulted, unset
+
+
 def test_every_package_definition_is_reachable_from_an_entry_point():
     dead = [d for d in unreached() if d not in KEEP]
     assert not dead, (
         f"{len(dead)} definitions in {PKG}/ are reached by no entry point "
         f"({', '.join(ROOT_PATHS)}, @register queries); delete them:\n  " + "\n  ".join(dead)
     )
+
+
+def test_every_defaulted_parameter_is_set_by_an_entry_point():
+    _, unset = option_audit()
+    flagged = sorted(unset - KEEP_OPTIONS)
+    assert not flagged, (
+        f"{len(flagged)} defaulted parameters in {PKG}/ are set by no call an entry "
+        "point reaches; make each the constant it always takes:\n  " + "\n  ".join(flagged)
+    )
+    stale = sorted(KEEP_OPTIONS - unset)
+    assert not stale, "KEEP_OPTIONS entries that are now set or gone:\n  " + "\n  ".join(stale)

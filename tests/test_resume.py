@@ -5,6 +5,7 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
+from data_check_spark.checkpoint import write_checkpoint
 from data_check_spark.engine import run_validation
 from data_check_spark.operators.drift import make_baseline
 from data_check_spark.rules.spec import Rule, RuleCatalog
@@ -20,6 +21,15 @@ CATALOG = RuleCatalog(
              {"dim": "transcripts", "dim_key": "clip_id", "mode": "orphan"}),
     ]
 )
+
+
+def _validate(spark, *args, **kwargs):
+    """``run_validation`` plus the caller's checkpoint append, in the job's
+    output-then-checkpoint order (the engine only reads the checkpoint)."""
+    res = run_validation(spark, *args, **kwargs)
+    if kwargs.get("checkpoint_dir"):
+        write_checkpoint(res.verdicts, kwargs["checkpoint_dir"], res.run_id)
+    return res
 
 
 @pytest.fixture()
@@ -46,7 +56,7 @@ def data(spark):
 def test_fresh_run_then_full_resume(spark, data, tmp_path):
     clips, tr = data
     ckpt = str(tmp_path / "ckpt")
-    res1 = run_validation(
+    res1 = _validate(
         spark, clips, {"transcripts": tr}, CATALOG,
         run_ts="2026-01-01 00:00:00", checkpoint_dir=ckpt,
     )
@@ -58,7 +68,7 @@ def test_fresh_run_then_full_resume(spark, data, tmp_path):
 
     # Resume on unchanged data: no partitions rescanned; row-grain rules
     # emit nothing; global-grain rules re-emit current global state only.
-    res2 = run_validation(
+    res2 = _validate(
         spark, clips, {"transcripts": tr}, CATALOG,
         run_ts="2026-01-01 00:00:00", checkpoint_dir=ckpt, resume=True,
     )
@@ -75,14 +85,14 @@ def test_resume_catches_cross_partition_dup(spark, data, tmp_path):
     clips, tr = data
     ckpt = str(tmp_path / "ckpt2")
     # First run validates only p0.
-    run_validation(
+    _validate(
         spark, clips.filter(F.col("partition") == "p0"),
         {"transcripts": tr}, CATALOG,
         run_ts="2026-01-01 00:00:00", checkpoint_dir=ckpt,
     )
     # Resumed run over the full table: p0 pruned from the wide pass, but the
     # duplicate spanning p0/p1 must still be reported for the NEW p1 row.
-    res = run_validation(
+    res = _validate(
         spark, clips, {"transcripts": tr}, CATALOG,
         run_ts="2026-01-01 00:00:00", checkpoint_dir=ckpt, resume=True,
     )
@@ -100,7 +110,7 @@ def test_checkpoint_latest_wins(spark, data, tmp_path):
 
     clips, tr = data
     ckpt = str(tmp_path / "ckpt3")
-    run_validation(
+    _validate(
         spark, clips, {"transcripts": tr}, CATALOG,
         run_ts="2026-01-01 00:00:00", checkpoint_dir=ckpt,
     )
@@ -124,7 +134,7 @@ def test_reliable_cache_path(spark, tmp_path):
     cat = audio_catalog(bytes_cap_ms=20)
     kwargs = dict(run_ts="2026-01-01 00:00:00")
     base = run_validation(spark, clips, dims, cat, **kwargs)
-    rel = run_validation(
+    rel = _validate(
         spark, clips, dims, cat,
         checkpoint_dir=str(tmp_path / "ckpt"), reliable_cache=True, **kwargs,
     )
@@ -169,13 +179,13 @@ def test_resume_through_reliable_cache(spark, tmp_path):
 
     # first run: half the partitions
     half = clips.filter(F.col("partition") < "p0064")
-    r1 = run_validation(spark, half, dims, cat, run_ts="2026-01-01 00:00:00",
+    r1 = _validate(spark, half, dims, cat, run_ts="2026-01-01 00:00:00",
                         checkpoint_dir=ckpt, reliable_cache=True)
     done1 = r1.verdicts.count()
     assert done1 > 0
 
     # resumed full run, reliable path: only the remaining partitions rescan
-    r2 = run_validation(spark, clips, dims, cat, run_ts="2026-01-01 00:00:00",
+    r2 = _validate(spark, clips, dims, cat, run_ts="2026-01-01 00:00:00",
                         checkpoint_dir=ckpt, resume=True, reliable_cache=True)
     parts2 = {r["partition"] for r in r2.verdicts.collect()}
     assert all(p >= "p0064" for p in parts2)
@@ -250,12 +260,12 @@ def test_resume_cardinality_counts_children_globally(spark, tmp_path):
               "min_children": 1, "max_children": 1}),
     ])
     ckpt = str(tmp_path / "ckpt_card")
-    run_validation(
+    _validate(
         spark, clips.filter(F.col("partition") == "p0"),
         {"transcripts": tr}, catalog,
         run_ts="2026-01-01 00:00:00", checkpoint_dir=ckpt,
     )
-    res = run_validation(
+    res = _validate(
         spark, clips, {"transcripts": tr}, catalog,
         run_ts="2026-01-01 00:00:00", checkpoint_dir=ckpt, resume=True,
     )
@@ -312,7 +322,7 @@ def test_batched_union_equals_single_run(spark, batch_data, tmp_path):
     got = None
     scanned = 0
     for i, chunk in enumerate(chunks):
-        res = run_validation(
+        res = _validate(
             spark, clips, {"transcripts": tr}, CATALOG,
             run_ts="2026-01-01 00:00:00", checkpoint_dir=ckpt, resume=True,
             exclude_partitions=[p for c in chunks if c is not chunk for p in c],
@@ -403,7 +413,7 @@ def test_batched_union_equals_single_run_every_kind(spark, kinds_data, tmp_path,
         assert any(k[0] == "K" for k in single), single
     chunks = [["p0"], ["p1", "p2"]]
     got = sum(
-        (_vset(run_validation(
+        (_vset(_validate(
             spark, clips, dims, catalog, run_ts="2026-01-01 00:00:00",
             checkpoint_dir=str(tmp_path / "ckpt"), resume=True,
             exclude_partitions=[p for c in chunks if c is not chunk for p in c],
@@ -420,7 +430,7 @@ def test_batched_relaunch_skips_completed_batches(spark, batch_data, tmp_path):
     chunks = [["p0", "p1"], ["p2"]]
 
     def run_batch(i):
-        return run_validation(
+        return _validate(
             spark, clips, {"transcripts": tr}, CATALOG,
             run_ts="2026-01-01 00:00:00", checkpoint_dir=ckpt, resume=True,
             exclude_partitions=[p for c in chunks if c is not chunks[i] for p in c],

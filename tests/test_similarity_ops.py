@@ -79,18 +79,21 @@ def test_lsh_candidates_subset_is_ranked_by_true_cosine(vectors):
     assert cosines == sorted(cosines, reverse=True)
 
 
-def test_exact_pairs_guard(spark):
+def test_exact_pairs_guard(spark, monkeypatch):
     """exact_cosine_pairs refuses corpora beyond max_rows (O(n^2) guard)."""
     import pytest
 
+    from data_check_spark.operators import similarity
     from data_check_spark.operators.similarity import exact_cosine_pairs
 
     rows = [(i, [float(i), 1.0]) for i in range(50)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    monkeypatch.setattr(similarity, "EXACT_PAIRS_MAX_ROWS", 10)
     with pytest.raises(ValueError, match="max_rows"):
-        exact_cosine_pairs(df, max_rows=10)
+        exact_cosine_pairs(df)
     # under the limit it runs
-    assert exact_cosine_pairs(df, threshold=0.99, max_rows=100).count() > 0
+    monkeypatch.setattr(similarity, "EXACT_PAIRS_MAX_ROWS", 100)
+    assert exact_cosine_pairs(df, threshold=0.99).count() > 0
 
 
 def test_lsh_pairs_subset_of_exact_with_exact_values(spark):
@@ -114,12 +117,13 @@ def test_lsh_pairs_subset_of_exact_with_exact_values(spark):
             assert cos == exact[pair], kwargs
 
 
-def test_lsh_pairs_recall_on_planted_near_dups(spark):
+def test_lsh_pairs_recall_on_planted_near_dups(spark, monkeypatch):
     """The LSH pair route must recover nearly all PLANTED near-duplicates
     (cosine >= 0.95) — the regime the scale path is for. Weakly similar
     pairs (0.3) are allowed to be missed; near-identical ones are not."""
     import numpy as np
 
+    from data_check_spark.operators import similarity
     from data_check_spark.operators.similarity import lsh_near_dup_pairs
 
     rng = np.random.default_rng(7)
@@ -132,8 +136,9 @@ def test_lsh_pairs_recall_on_planted_near_dups(spark):
         rows.append((1000 + i, [float(x) for x in vec]))
         planted.append((i, 1000 + i))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    monkeypatch.setattr(similarity, "MULTIPROBE_FLIPS", 8)
     got = {(r["id_a"], r["id_b"])
-           for r in lsh_near_dup_pairs(df, threshold=0.95, multiprobe=8).collect()}
+           for r in lsh_near_dup_pairs(df, threshold=0.95).collect()}
     recall = sum(p in got for p in planted) / len(planted)
     assert recall >= 0.9, f"planted near-dup recall {recall}"
 
@@ -473,16 +478,14 @@ def test_quantization_plan_exact_codec(spark):
 
 
 def test_quantization_plan_zero_dim_and_bits_guard(spark):
-    import pytest as _pytest
-
+    """The int8 plan over an all-zero dimension (the bits guard went with
+    the bits option)."""
     from data_check_spark.operators.similarity import quantization_plan
 
     df = spark.createDataFrame([(1, [0.0, 0.0])], "vec_id long, embedding array<float>")
     out = {r["dim"]: r for r in quantization_plan(df).collect()}
     # all-zero dimension: absmax 0 → err_ppm NULL, no division error
     assert out[0]["absmax_q"] == 0 and out[0]["err_ppm"] is None
-    with _pytest.raises(ValueError):
-        quantization_plan(df, bits=1)
 
 
 def test_ivf_fast_agrees_with_portable_on_registered_probes(spark):

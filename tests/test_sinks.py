@@ -18,11 +18,11 @@ def _files(path):
 def test_write_dataset_bounds_file_size(spark, tmp_path):
     df = spark.range(10_000).select(F.col("id"), (F.col("id") % 7).alias("k"))
     out = str(tmp_path / "d1")
-    write_dataset(df, out, sort_by=["id"], rows_per_file=1000, n_tasks=2)
+    write_dataset(df, out, sort_by=["id"], rows_per_file=1000)
     files = _files(out)
     sizes = [pq.ParquetFile(f).metadata.num_rows for f in files]
     assert all(s <= 1000 for s in sizes), sizes
-    # 2 tasks x ceil(5000/1000) = 10 files, no small-file explosion
+    # ceil(rows_in_task / 1000) files per task, no small-file explosion
     assert 10 <= len(files) <= 12, len(files)
     assert spark.read.parquet(out).count() == 10_000
 
@@ -32,7 +32,7 @@ def test_write_dataset_partition_dirs_and_roundtrip(spark, tmp_path):
         F.col("id"), (F.col("id") % 3).cast("string").alias("part")
     )
     out = str(tmp_path / "d2")
-    write_dataset(df, out, partition_by=["part"], sort_by=["id"], n_tasks=2)
+    write_dataset(df, out, partition_by=["part"], sort_by=["id"])
     assert sorted(os.path.basename(p) for p in glob.glob(f"{out}/part=*")) == [
         "part=0", "part=1", "part=2"
     ]
@@ -47,7 +47,7 @@ def test_write_dataset_files_are_pruning_friendly(spark, tmp_path):
     row-group / file skipping needs."""
     df = spark.range(20_000).select(F.col("id")).repartition(8)  # pre-scrambled
     out = str(tmp_path / "d3")
-    write_dataset(df, out, sort_by=["id"], rows_per_file=2500, n_tasks=4)
+    write_dataset(df, out, sort_by=["id"], rows_per_file=2500)
     ranges = []
     for f in _files(out):
         md = pq.ParquetFile(f).metadata
@@ -74,7 +74,7 @@ def test_verify_dataset_passes_on_faithful_write(spark, tmp_path):
         F.concat(F.lit("v"), F.col("id")).alias("val"),
     )
     out = str(tmp_path / "ds")
-    write_dataset(df, out, partition_by=["part"], sort_by=["id"], n_tasks=2)
+    write_dataset(df, out, partition_by=["part"], sort_by=["id"])
     report = verify_dataset(spark, out, df, partition_by=["part"]).collect()
     assert len(report) == 3
     assert all(r["passed"] for r in report)
@@ -90,7 +90,7 @@ def test_verify_dataset_catches_lost_partition_and_value_corruption(spark, tmp_p
         F.col("id"), (F.col("id") % 2).cast("string").alias("part")
     )
     out = str(tmp_path / "ds")
-    write_dataset(df, out, partition_by=["part"], n_tasks=1)
+    write_dataset(df, out, partition_by=["part"])
     # simulate a lost task output: drop one hive partition directory
     shutil.rmtree(out + "/part=1")
     report = {r["part"]: r for r in verify_dataset(spark, out, df, partition_by=["part"]).collect()}
@@ -103,7 +103,7 @@ def test_verify_dataset_catches_lost_partition_and_value_corruption(spark, tmp_p
         F.col("id"), F.when(F.col("id") == 7, "b").otherwise("a").alias("v")
     )
     out2 = str(tmp_path / "ds2")
-    write_dataset(bad, out2, n_tasks=1)
+    write_dataset(bad, out2)
     row = verify_dataset(spark, out2, good).collect()[0]
     assert row["expected_rows"] == row["actual_rows"] == 10
     assert not row["checksum_match"] and not row["passed"]
@@ -114,7 +114,7 @@ def test_verify_dataset_unpartitioned_total_row(spark, tmp_path):
 
     df = spark.range(50).select(F.col("id"), (F.col("id") * 2).alias("x"))
     out = str(tmp_path / "ds")
-    write_dataset(df, out, sort_by=["id"], n_tasks=1)
+    write_dataset(df, out, sort_by=["id"])
     rows = verify_dataset(spark, out, df).collect()
     assert len(rows) == 1 and rows[0]["passed"]
 

@@ -41,10 +41,10 @@ def viol(spark):
 
 
 def test_filter_and_search(viol):
-    assert filter_violations(viol, series="A").count() == 2
     got = filter_violations(viol, search="two").collect()
     assert len(got) == 1 and got[0]["rule_id"] == "R2"
-    assert filter_violations(viol, series="B", search="THREE").count() == 1
+    assert filter_violations(viol, search="THREE").count() == 1
+    assert filter_violations(viol).count() == 4
 
 
 def test_sort_numeric_coerced(viol):
@@ -184,10 +184,6 @@ def test_quarantine_split(spark):
     clean, quarantined = quarantine_split(df, v, "id")
     assert sorted(r["id"] for r in clean.collect()) == [1, 3]
     assert sorted(r["id"] for r in quarantined.collect()) == [2, 4]
-    # rule_ids filter: only R2 quarantines → row 4 stays clean
-    clean2, q2 = quarantine_split(df, v, "id", rule_ids=["R2"])
-    assert sorted(r["id"] for r in clean2.collect()) == [1, 3, 4]
-    assert [r["id"] for r in q2.collect()] == [2]
 
 
 def test_examples_per_rule_bounded_and_deterministic(spark):

@@ -481,3 +481,28 @@ def test_stream_validate_job_spec_error_is_not_skipped(spark, tmp_path, capsys):
     assert "row rule S_NO_SUCH_COL skipped for stream schema: [UNRESOLVED_COLUMN" in captured.err
     viol = spark.read.parquet(str(tmp_path / "out" / "row_violations")).collect()
     assert [r["rule_id"] for r in viol] == ["S_FUTURE_TS"]
+
+
+def test_stream_validate_job_bad_regex_fails_before_any_query(spark, tmp_path):
+    """A row rule whose regex does not compile fails the job at resolve
+    time, naming the rule, before any streaming query starts — a JVM regex
+    otherwise compiles lazily and the query would die on its first
+    micro-batch."""
+    import datetime as dt
+
+    from jobs.stream_validate_job import main as job_main
+
+    in_dir = str(tmp_path / "in")
+    _write_batch(spark, in_dir,
+                 [("c1", 16000, 1000, "flac", "t", "p0", dt.datetime(2026, 1, 1))], 1)
+    rules = str(tmp_path / "rules.json")
+    RuleCatalog([
+        Rule("S_SR_POSITIVE", "range", "sr_hz", {"min": 1}),
+        Rule("S_BAD_REGEX", "format", "codec", {"pattern": "(unclosed"}),
+    ]).save(rules)
+    with pytest.raises(ValueError, match="S_BAD_REGEX"):
+        job_main(["--input", in_dir, "--rules", rules,
+                  "--output-dir", str(tmp_path / "out"),
+                  "--checkpoint-dir", str(tmp_path / "ckpt"),
+                  "--once", "--timeout-sec", "120"])
+    assert spark.streams.active == []

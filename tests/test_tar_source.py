@@ -28,17 +28,14 @@ def exported(spark, tmp_path):
 
 def test_round_trip_exact(spark, exported):
     df, out = exported
-    back = read_tar_shards(
-        spark, out, payloads={"txt": "text", "wav": "bytes"},
-        binary_suffixes={"wav"},
-    )
+    back = read_tar_shards(spark, out, payloads={"txt": "text", "wav": "bytes"})
     rows = {r["key"]: r for r in back.collect()}
     assert len(rows) == 24
     assert all(r["status"] == "ok" for r in rows.values())
     orig = {r["key"]: r for r in df.collect()}
     for k, o in orig.items():
         assert rows[k]["text"] == o["text"]          # incl. doc7 -> None
-        assert bytes(rows[k]["bytes"]) == bytes(o["bytes"])
+        assert rows[k]["bytes"].encode() == bytes(o["bytes"])  # utf-8 decoded
     # shard assignment is recoverable from the file name
     assert rows["doc4"]["shard_file"] == "shard-000001.tar"
 
@@ -47,9 +44,7 @@ def test_corrupt_shard_is_error_as_data(spark, exported, tmp_path):
     _, out = exported
     with open(f"{out}/shard-000099.tar", "wb") as f:
         f.write(b"this is not a tar archive at all, not even close....")
-    back = read_tar_shards(
-        spark, out, payloads={"txt": "text", "wav": "bytes"}, binary_suffixes={"wav"}
-    )
+    back = read_tar_shards(spark, out, payloads={"txt": "text", "wav": "bytes"})
     bad = back.filter("status = 'corrupt_tar'").collect()
     assert len(bad) == 1
     assert bad[0]["shard_file"] == "shard-000099.tar"
@@ -130,9 +125,7 @@ def test_sink_rejects_dotted_keys(spark, tmp_path):
 
 def test_unknown_suffix_ignored_and_guards(spark, exported):
     _, out = exported
-    only_wav = read_tar_shards(
-        spark, out, payloads={"wav": "bytes"}, binary_suffixes={"wav"}
-    )
+    only_wav = read_tar_shards(spark, out, payloads={"wav": "bytes"})
     rows = only_wav.collect()
     assert len(rows) == 24 and all(r["bytes"] is not None for r in rows)
     with pytest.raises(ValueError):

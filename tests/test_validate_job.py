@@ -51,3 +51,31 @@ def test_validate_job_end_to_end(spark, tmp_path, capsys):
     v2 = spark.read.parquet(f"{out}/violations")
     assert v2.select("run_id").distinct().count() == 2
     assert v2.count() == 2 * summary["total_violations"]
+
+
+def test_resumed_single_run_summary_reports_reconciled_view(spark, tmp_path, capsys):
+    """After a --resume relaunch the checkpointed single run's summary
+    describes the reconciled final view (violations_final/verdicts_final),
+    not just the relaunch's own attempt."""
+    from pyspark.sql import functions as F
+
+    from data_check_spark import datagen
+    from jobs import validate_job
+
+    full = datagen.clips_df(spark, 400, bytes_cap_ms=20).drop("_gen_id", "_viol")
+    clips_half, clips_full = str(tmp_path / "half"), str(tmp_path / "full")
+    full.filter(F.col("partition") < "p0064").write.parquet(clips_half)
+    full.write.parquet(clips_full)
+    tr = str(tmp_path / "transcripts")
+    datagen.transcripts_df(spark, 400).write.parquet(tr)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    args = ["--transcripts", tr, "--output-dir", out, "--checkpoint-dir", ckpt,
+            "--run-ts", "2026-01-01 00:00:00"]
+
+    assert validate_job.main(["--input", clips_half, *args]) == 0
+    assert validate_job.main(["--input", clips_full, *args, "--resume"]) == 0
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    final_v = spark.read.parquet(f"{out}/violations_final")
+    final_d = spark.read.parquet(f"{out}/verdicts_final")
+    assert summary["total_violations"] == final_v.count()
+    assert summary["rows_scanned"] == final_d.agg(F.sum("rows_scanned")).first()[0]

@@ -24,8 +24,8 @@ def report_df(spark):
 
 def test_xlsx_round_trip(spark, report_df, tmp_path):
     path = str(tmp_path / "result.xlsx")
-    export_xlsx(report_df, path, sheet_name="violations")
-    back = read_xlsx_df(spark, path, "violations")
+    export_xlsx(report_df, path)
+    back = read_xlsx_df(spark, path, "result")
     assert back.columns == report_df.columns
     got = [tuple(r) for r in back.orderBy("rule_id").collect()]
     want = [
@@ -36,10 +36,13 @@ def test_xlsx_round_trip(spark, report_df, tmp_path):
     assert got == want
 
 
-def test_xlsx_refuses_oversize(spark, tmp_path):
+def test_xlsx_refuses_oversize(spark, tmp_path, monkeypatch):
+    from data_check_spark import reporting
+
+    monkeypatch.setattr(reporting, "XLSX_MAX_ROWS", 10)
     df = spark.range(12).select(F.col("id").cast("string").alias("v"))
     with pytest.raises(ValueError, match="refuses"):
-        export_xlsx(df, str(tmp_path / "big.xlsx"), max_rows=10)
+        export_xlsx(df, str(tmp_path / "big.xlsx"))
 
 
 def test_xlsx_csv_parity(spark, report_df, tmp_path):
@@ -72,19 +75,12 @@ def test_xlsx_control_chars_and_escape_lookalikes(spark, tmp_path):
     assert got == sorted(originals)
 
 
-def test_xlsx_rejects_bad_sheet_names(spark, tmp_path):
-    df = spark.createDataFrame([("v",)], "c string")
-    for bad in ["", "x" * 32, "a[b", "a/b", "a\\b", "a:b", "a*b", "a?b"]:
-        with pytest.raises(ValueError, match="sheet name"):
-            export_xlsx(df, str(tmp_path / "s.xlsx"), sheet_name=bad)
-
-
 def test_export_result_dispatch(spark, report_df, tmp_path):
     from data_check_spark.reporting import export_result
 
-    export_result(report_df, str(tmp_path / "r.xlsx"), sheet_name="s1")
+    export_result(report_df, str(tmp_path / "r.xlsx"))
     export_result(report_df, str(tmp_path / "r.csv"))
-    assert read_xlsx_df(spark, str(tmp_path / "r.xlsx"), "s1").count() == 3
+    assert read_xlsx_df(spark, str(tmp_path / "r.xlsx"), "result").count() == 3
     assert spark.read.option("header", "true").csv(str(tmp_path / "r.csv")).count() == 3
     with pytest.raises(ValueError, match="extension"):
         export_result(report_df, str(tmp_path / "r.parquet"))
