@@ -79,43 +79,34 @@ def _clips_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # already-green ones after, and the rows-only-by-design entries (no DuckDB
 # analog possible: synthetic clip table with real float PCM decode; MLlib
 # KMeans quantizer) LAST, since rows-only is already their max achievable
-# check and r01 recorded it. COVERAGE.md is the per-query ledger. After
-# CORRECTNESS_r04 (50/50 green, incl. the 5 r03 HUGEINT hash-reds) every
-# oracle-backed entry registered through round 4 was driver-green; with the
-# five round-5 additions green in CORRECTNESS_r05 that is 149/149.
+# check and r01 recorded it. COVERAGE.md is the per-query ledger. Every
+# oracle-backed entry (130/130) is green in CORRECTNESS_r05 or earlier.
 _DRIVER_GREEN: frozenset[str] = frozenset({
-    # r05 green (CORRECTNESS_r05.json):
-    "ivf_incremental_embeddings", "streaming_dedup_events",
-    "streaming_row_rules_events", "streaming_sessions_events",
-    "streaming_window_counts_events",
+    # r05 green (CORRECTNESS_r05.json). streaming_dedup_events is left out:
+    # round 6 changed its output to per-occurrence (clip_id, observed) rows,
+    # so it ranks first until a CORRECTNESS round re-checks it.
+    "ivf_incremental_embeddings", "streaming_row_rules_events",
+    "streaming_sessions_events", "streaming_window_counts_events",
     # r04 green (CORRECTNESS_r04.json):
-    "agg_sla_orders", "augmentation_plan_documents", "autocorr_documents",
-    "benford_orders", "bpe_merges_documents", "bpe_segment_documents",
-    "bpe_tokenize_documents", "calendar_gaps_events",
+    "agg_sla_orders", "benford_orders", "bpe_merges_documents",
+    "bpe_segment_documents", "bpe_tokenize_documents", "calendar_gaps_events",
     "cardinality_orders_lineitem", "categorical_drift_orders",
-    "clipping_runs_documents", "cluster_representatives_documents",
-    "compaction_plan_documents", "compaction_summary_documents",
-    "container_sniff_documents", "corpus_rules_documents",
+    "cluster_representatives_documents", "corpus_rules_documents",
     "correlation_lineitem", "dataset_card_documents",
     "embedding_drift_embeddings", "embedding_quality_embeddings",
     "extraction_quality_documents", "format_masks_customer",
-    "freshness_events", "image_stats_documents",
-    "incremental_dedup_documents", "label_centroids_embeddings",
-    "label_conflict_documents", "lang_mismatch_documents",
-    "loudness_gain_documents", "normalize_width_documents",
+    "freshness_events", "incremental_dedup_documents",
+    "label_centroids_embeddings", "label_conflict_documents",
+    "lang_mismatch_documents", "normalize_width_documents",
     "novelty_rate_events", "null_correlation_orders", "out_of_order_events",
     "partition_profile_orders", "quantization_plan_embeddings",
     "rate_drift_orders", "reconcile_orders_lineitem",
     "rule_suggestions_orders", "scan_pruning_lineitem",
     "split_leakage_documents", "tar_roundtrip_documents",
-    "token_drift_documents", "transcript_alignment_documents",
-    "transcript_wer_documents", "violation_delta_orders",
-    "vocab_coverage_documents", "volume_drift_orders",
-    "watermark_plan_events", "window_density_documents",
-    "window_transcripts_documents",
+    "token_drift_documents", "transcript_wer_documents",
+    "violation_delta_orders", "vocab_coverage_documents",
+    "volume_drift_orders", "watermark_plan_events",
     # r03 green (CORRECTNESS_r03.json):
-    "audio_batching_documents", "audio_curation_documents",
-    "audio_fingerprint_documents", "audio_windows_documents",
     "bigram_coherence_documents", "binaryfile_ingest_documents",
     "bloom_anti_orders", "bloom_semi_lineitem", "chunk_documents_corpus",
     "clips_validate_batched", "cluster_split_documents",
@@ -127,14 +118,13 @@ _DRIVER_GREEN: frozenset[str] = frozenset({
     "pii_scan_documents", "provenance_documents", "quantile_drift_lineitem",
     "repetition_stats_documents", "sequence_gaps_orders",
     "sequence_packing_documents", "skew_report_orders", "snapshot_diff_orders",
-    "span_dedup_documents", "speech_rate_documents",
-    "stratified_sample_documents", "summary_regression_orders",
-    "temperature_mix_documents", "token_budget_documents",
-    "top_bigrams_documents", "top_terms_documents", "unigram_rarity_documents",
-    "upsample_documents", "violation_examples_orders",
-    "voiced_segments_documents", "weighted_sample_documents",
+    "span_dedup_documents", "stratified_sample_documents",
+    "summary_regression_orders", "temperature_mix_documents",
+    "token_budget_documents", "top_bigrams_documents", "top_terms_documents",
+    "unigram_rarity_documents", "upsample_documents",
+    "violation_examples_orders", "weighted_sample_documents",
     # r01/r02 green:
-    "ann_cosine_topk", "asof_latest_order_per_event", "audio_stats_documents",
+    "ann_cosine_topk", "asof_latest_order_per_event",
     "clips_validate_portable", "column_stats_orders",
     "corpus_curation_documents", "date_parse_orders",
     "dedup_clusters_documents", "dedup_exact_documents",
@@ -142,7 +132,7 @@ _DRIVER_GREEN: frozenset[str] = frozenset({
     "dup_values_lineitem", "edit_distance_pairs_documents",
     "embedding_near_dup_pairs", "embedding_norms", "events_daily",
     "lang_id_documents", "lapsed_customers_except", "latest_event_per_user",
-    "lsh_ann_embeddings", "lsh_embedding_near_dup", "media_feature_extract",
+    "lsh_ann_embeddings", "lsh_embedding_near_dup",
     "minhash_near_dup_documents", "multi_field_lineitem",
     "ngram_jaccard_documents", "numeric_quantiles_lineitem", "orphan_parts",
     "q1_pricing_summary", "quality_score_documents", "quarantine_clean_orders",

@@ -65,9 +65,6 @@ BENCH_QUERIES = [
     "token_stats_documents",
     "quality_score_documents",
     "lang_id_documents",
-    "audio_stats_documents",
-    "media_feature_extract",
-    "image_stats_documents",
     "jsonl_ingest_documents",
     "binaryfile_ingest_documents",
     "skew_report_orders",
@@ -85,19 +82,13 @@ BENCH_QUERIES = [
     "dataset_card_documents",
     "corpus_rules_documents",
     "agg_sla_orders",
-    "augmentation_plan_documents",
     "daily_volume_anomaly_events",
     "pack_stats_documents",
     "top_terms_documents",
     "fuzzy_decontamination_documents",
     "snapshot_diff_orders",
     "embedding_quality_embeddings",
-    "container_sniff_documents",
-    "autocorr_documents",
-    "compaction_plan_documents",
-    "compaction_summary_documents",
     "null_correlation_orders",
-    "loudness_gain_documents",
     "embedding_drift_embeddings",
     "token_drift_documents",
     "func_dep_lineitem",
@@ -118,9 +109,6 @@ BENCH_QUERIES = [
     "transcript_wer_documents",
     "normalize_width_documents",
     "tar_roundtrip_documents",
-    "transcript_alignment_documents",
-    "window_transcripts_documents",
-    "window_density_documents",
     # profiling / drift / sampling family (round 2)
     "column_stats_orders",
     "numeric_quantiles_lineitem",
@@ -140,12 +128,6 @@ BENCH_QUERIES = [
     "rolling_hash_documents",
     "token_budget_documents",
     "corpus_shuffle_documents",
-    "voiced_segments_documents",
-    "audio_windows_documents",
-    "audio_fingerprint_documents",
-    "audio_batching_documents",
-    "audio_curation_documents",
-    "speech_rate_documents",
     # late round-2 additions
     "reconcile_orders_lineitem",
     "out_of_order_events",
@@ -158,7 +140,6 @@ BENCH_QUERIES = [
     "cardinality_orders_lineitem",
     "watermark_plan_events",
     "novelty_rate_events",
-    "clipping_runs_documents",
     "lang_mismatch_documents",
     "violation_delta_orders",
     "correlation_lineitem",

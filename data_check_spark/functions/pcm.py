@@ -108,28 +108,3 @@ def snr_db(reference: np.ndarray, decoded: np.ndarray) -> float:
     if signal == 0.0:
         return float("-inf")
     return 10.0 * np.log10(signal / noise)
-
-
-def clipped_run_stats(decoded: np.ndarray) -> tuple[int, int]:
-    """(n_clipped, max_clipped_run): samples at |x| ≥ 32767 (full scale) and the
-    longest CONSECUTIVE run of them, in samples.
-
-    The loud sibling of :func:`max_quiet_run_ms`: a clip *ratio* can't tell
-    sustained overdrive (hundreds of consecutive full-scale samples — real
-    distortion) from isolated legitimate peaks; the run length can. Same
-    change-point method, O(n), no Python loop; int32 copy for the int16
-    abs(-32768) overflow hazard."""
-    if decoded.size == 0:
-        return 0, 0
-    hot = np.abs(decoded.astype(np.int32)) >= 32767
-    n_over = int(np.count_nonzero(hot))
-    if n_over == 0:
-        return 0, 0
-    d = np.diff(hot.astype(np.int8))
-    starts = np.flatnonzero(d == 1) + 1
-    ends = np.flatnonzero(d == -1) + 1
-    if hot[0]:
-        starts = np.concatenate(([0], starts))
-    if hot[-1]:
-        ends = np.concatenate((ends, [hot.size]))
-    return n_over, int((ends - starts).max())

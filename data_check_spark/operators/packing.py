@@ -44,14 +44,12 @@ def pack_assignments(
     df: DataFrame,
     *,
     budget: int,
-    id_col: str = "doc_id",
-    n_tokens_col: str | None = None,
 ) -> DataFrame:
     """Per-document pack assignment under a fixed token ``budget``.
 
-    Documents are laid out in ascending ``id_col`` order (ties impossible:
-    it is an id); each occupies ``n_tokens`` whitespace tokens (or a
-    caller-supplied ``n_tokens_col``). Output, one row per input row:
+    Documents are laid out in ascending ``doc_id`` order (ties impossible:
+    it is an id); each occupies ``n_tokens`` whitespace tokens of ``text``.
+    Output, one row per input row:
 
     - ``n_tokens``       — token length (0 for blank/NULL text)
     - ``pack_id``        — 0-based pack whose window contains token offset
@@ -69,17 +67,14 @@ def pack_assignments(
     spark = df.sparkSession
     nparts = spark.sparkContext.defaultParallelism
 
-    if n_tokens_col is None:
-        n_tok = F.coalesce(F.size(_tokens("text")), F.lit(0))
-        # size() of a NULL array is NULL under ANSI; -1 under legacy. Either
-        # way coalesce+greatest pins NULL/blank text to 0 tokens.
-        n_tok = F.greatest(n_tok, F.lit(0))
-    else:
-        n_tok = F.coalesce(F.col(n_tokens_col).cast("long"), F.lit(0))
+    n_tok = F.coalesce(F.size(_tokens("text")), F.lit(0))
+    # size() of a NULL array is NULL under ANSI; -1 under legacy. Either
+    # way coalesce+greatest pins NULL/blank text to 0 tokens.
+    n_tok = F.greatest(n_tok, F.lit(0))
 
     narrow = (
-        df.select(F.col(id_col), n_tok.cast("long").alias("n_tokens"))
-        .repartitionByRange(nparts, F.col(id_col))
+        df.select(F.col("doc_id"), n_tok.cast("long").alias("n_tokens"))
+        .repartitionByRange(nparts, F.col("doc_id"))
         .withColumn("_pid", F.spark_partition_id())
         .localCheckpoint()  # tokenize once; pin _pid for both consumers
     )
@@ -95,7 +90,7 @@ def pack_assignments(
 
     w = (
         Window.partitionBy("_pid")
-        .orderBy(F.col(id_col))
+        .orderBy(F.col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     before = F.col("_offset") + F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
@@ -103,7 +98,7 @@ def pack_assignments(
         narrow.join(F.broadcast(off_df), "_pid")
         .withColumn("_before", before)
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("n_tokens"),
             F.expr(f"_before div {budget}").alias("pack_id"),
             (F.col("_before") % budget).alias("pack_offset"),

@@ -1022,43 +1022,6 @@ def ivf_fast_ann_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("q_id", "rank")
 
 
-# DuckDB recomputes the portable media fixture's derived fields and the
-# extract_features error-as-data contract analytically: a NULL payload
-# (h % 97 == 0) must come back ok=false / 'empty payload' / n_bytes=0, any
-# other payload ok=true with n_bytes = 10 + h % 28 ('blob_' + a 5..32-char
-# ASCII hex prefix). The sha256 stub feature vector is dropped from the
-# compared columns — it is the documented decode seam, not a contract.
-_MEDIA_FEATURES_SQL = """
-WITH m AS (
-  SELECT doc_id,
-         CAST(('0x' || substr(md5(doc_id || ':media'), 1, 15)) AS BIGINT) AS h
-  FROM documents
-)
-SELECT 'm_' || doc_id AS media_id,
-       CASE h % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS media_type,
-       h % 97 <> 0 AS ok,
-       CASE WHEN h % 97 = 0 THEN 'empty payload' END AS error,
-       CASE WHEN h % 97 = 0 THEN 0 ELSE 10 + h % 28 END AS n_bytes
-FROM m
-ORDER BY media_id
-"""
-
-
-@register("media_feature_extract", _MEDIA_FEATURES_SQL)
-def media_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-batched media feature extraction with the error-as-data
-    contract oracle-checked: the portable fixture's NULL-payload rows must
-    surface as (ok=false, 'empty payload', 0) and every real payload's
-    n_bytes must match the analytic length — proving the mapInPandas
-    plumbing, not the (stubbed) codec."""
-    from data_check_spark.operators.multimodal import extract_features, portable_media_df
-
-    media = portable_media_df(_t(spark, sf_dir, "documents").select("doc_id"))
-    return extract_features(media).select(
-        "media_id", "media_type", "ok", "error", "n_bytes"
-    ).orderBy("media_id")
-
-
 # --- the ENGINE itself under the oracle -------------------------------------
 # The three clips_* queries can't be value-checked by the driver (their
 # synthesized input has no DuckDB view), so this query rebuilds a clip-shaped
@@ -1942,357 +1905,6 @@ def rolling_hash_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", rolling_hash("text").alias("rhash")).orderBy("doc_id")
 
 
-# The audio-payload decode path, oracle-checked: synthesize a deterministic
-# int16 square-wave payload per doc (params are md5-derived integers, the
-# same portable-hash family as the MinHash/LSH oracles), push the BYTES
-# through the real mapInPandas decode (operators/audio.pcm_stats), and have
-# DuckDB compute what every stat MUST be from the integer closed forms —
-# the oracle never decodes audio, yet value-checks byte synthesis, int16-LE
-# decode, silence/peak/DC/energy arithmetic, and the Arrow batch contract
-# end-to-end. Closed forms: the wave alternates ±amp every k samples
-# starting positive, so energy = (n-lead)·amp², peak = amp, and the DC sum
-# of the remainder r = (n-lead) mod 2k is (min(r,k) − max(r−k,0))·amp
-# (full periods cancel); the wave flips sign at every multiple of k, so
-# zero crossings = floor((n-lead-1)/k) (lead zeros never cross — a zero
-# sample makes the consecutive product 0, not negative).
-_AUDIO_STATS_SQL = """
-WITH p AS (
-  SELECT doc_id,
-         800 + CAST(('0x' || substr(md5(doc_id || ':n'), 1, 15)) AS BIGINT) % 1600 AS n,
-         CAST(('0x' || substr(md5(doc_id || ':l'), 1, 15)) AS BIGINT) % 200 AS lead,
-         1000 + CAST(('0x' || substr(md5(doc_id || ':a'), 1, 15)) AS BIGINT) % 31000 AS amp,
-         4 + CAST(('0x' || substr(md5(doc_id || ':k'), 1, 15)) AS BIGINT) % 28 AS half_k
-  FROM documents
-)
-SELECT doc_id,
-       n AS n_samples,
-       lead AS lead_silence,
-       amp AS peak_abs,
-       (least((n - lead) % (2 * half_k), half_k)
-        - greatest((n - lead) % (2 * half_k) - half_k, 0)) * amp AS dc_sum,
-       (n - lead) * amp * amp AS energy,
-       (n - lead - 1) // half_k AS n_zero_cross
-FROM p
-"""
-
-
-@register("audio_stats_documents", _AUDIO_STATS_SQL)
-def audio_stats_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer-exact audio QC stats over real synthesized PCM bytes.
-
-    The clip-engine queries can't be oracle-checked (the driver's DuckDB
-    views don't carry the synthetic clip table), so this query puts the
-    audio DECODE path itself under the value-level oracle: per-row square
-    waves with md5-derived (n, lead, amp, half-period) are synthesized as
-    int16-LE bytes and decoded back by operators/audio.pcm_stats; DuckDB
-    verifies every stat against the analytic closed form."""
-    from data_check_spark.operators import audio as _audio
-
-    docs = _docs_parallel(spark, sf_dir).select("doc_id")
-    params = docs.select(
-        "doc_id",
-        (F.lit(800) + _doc_h(":n") % 1600).alias("n"),
-        (_doc_h(":l") % 200).alias("lead"),
-        (F.lit(1000) + _doc_h(":a") % 31000).alias("amp"),
-        (F.lit(4) + _doc_h(":k") % 28).alias("k"),
-    )
-    pcm = _audio.synth_square_pcm(params)
-    return _audio.pcm_stats(pcm, keep=["doc_id"])
-
-
-# Two-burst fixture geometry, shared by the voiced-segment and fingerprint
-# oracles: lead / burst1 / gap are frame-aligned (multiples of 64) so every
-# segment edge is analytic; burst2 is arbitrary-length (exercises the tail
-# partial frame). ONE definition per engine — the Spark builder and this SQL
-# fragment must stay in lockstep or the two oracles test different fixtures.
-_BURST_GEOM_SQL = """
-  SELECT doc_id,
-         64 * (CAST(('0x' || substr(md5(doc_id || ':sl'), 1, 15)) AS BIGINT) % 4) AS lead,
-         64 * (2 + CAST(('0x' || substr(md5(doc_id || ':w1'), 1, 15)) AS BIGINT) % 6) AS w1,
-         64 * (1 + CAST(('0x' || substr(md5(doc_id || ':sg'), 1, 15)) AS BIGINT) % 3) AS gap,
-         1 + CAST(('0x' || substr(md5(doc_id || ':w2'), 1, 15)) AS BIGINT) % 500 AS w2
-  FROM documents
-"""
-
-
-def _doc_h(tag: str) -> F.Column:
-    """md5-derived 60-bit param for a doc (portable: DuckDB analog is
-    CAST(('0x' || substr(md5(doc_id || tag), 1, 15)) AS BIGINT))."""
-    return _dedup._portable_hash60(
-        F.concat(F.col("doc_id").cast("string"), F.lit(tag))
-    )
-
-
-def _burst_geometry(docs: DataFrame) -> DataFrame:
-    """Spark side of _BURST_GEOM_SQL (same tags, offsets and moduli)."""
-    return docs.select(
-        "doc_id",
-        (F.lit(64) * (_doc_h(":sl") % 4)).alias("lead"),
-        (F.lit(64) * (F.lit(2) + _doc_h(":w1") % 6)).alias("w1"),
-        (F.lit(64) * (F.lit(1) + _doc_h(":sg") % 3)).alias("gap"),
-        (F.lit(1) + _doc_h(":w2") % 500).alias("w2"),
-    )
-
-
-# Voiced-segment extraction (operators/audio.py::voiced_segments) under the
-# value-level oracle: two square bursts with an interior silence gap, all
-# boundaries md5-derived MULTIPLES OF the 64-sample frame, so every segment
-# edge, frame count and run energy has an exact integer closed form — DuckDB
-# verifies the real framed decode + run-collapsing without touching audio.
-_VOICED_SEGMENTS_SQL = f"""
-WITH geom AS ({_BURST_GEOM_SQL}),
-p AS (
-  SELECT geom.*,
-         1000 + CAST(('0x' || substr(md5(doc_id || ':sa'), 1, 15)) AS BIGINT) % 31000 AS amp
-  FROM geom
-)
-SELECT doc_id, CAST(0 AS INT) AS seg_idx,
-       lead // 64 AS start_frame, (lead + w1) // 64 - 1 AS end_frame,
-       lead AS start_sample, lead + w1 AS end_sample,
-       w1 // 64 AS n_frames, w1 * amp * amp AS energy
-FROM p
-UNION ALL
-SELECT doc_id, CAST(1 AS INT),
-       (lead + w1 + gap) // 64,
-       (lead + w1 + gap + w2 - 1) // 64,
-       lead + w1 + gap,
-       lead + w1 + gap + w2,
-       (lead + w1 + gap + w2 - 1) // 64 - (lead + w1 + gap) // 64 + 1,
-       w2 * amp * amp
-FROM p
-ORDER BY doc_id, seg_idx
-"""
-
-
-@register("voiced_segments_documents", _VOICED_SEGMENTS_SQL)
-def voiced_segments_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Silence segmentation (VAD-lite) over real synthesized PCM: per-clip
-    voiced runs with frame/sample boundaries and run energy, two chained
-    Arrow stages (synth then segment) over one repartitioned scan — the
-    binary column is born and dies inside the python stages."""
-    from data_check_spark.operators import audio as _audio
-
-    docs = _docs_parallel(spark, sf_dir).select("doc_id")
-    params = (
-        _burst_geometry(docs)
-        .withColumn("amp", F.lit(1000) + _doc_h(":sa") % 31000)
-        .withColumn("k", F.lit(4) + _doc_h(":sk") % 28)
-    )
-    pcm = _audio.synth_two_burst_pcm(params)
-    segs = _audio.voiced_segments(pcm, frame_samples=64, keep=["doc_id"])
-    return segs.orderBy("doc_id", "seg_idx")
-
-
-# Gain-invariant acoustic fingerprint (operators/audio.py::audio_fingerprint):
-# each doc is synthesized at TWO gains (amp and amp·g); the quantized
-# energy profile q_f = (16·e_f) // e_max is amp-free in closed form
-# (floor(a·c²/(b·c²)) ≡ floor(a/b)), so DuckDB predicts ONE profile per doc
-# and the oracle match proves the gain copies collide, cross-engine.
-# Amplitude-free closed-form quantized energy profile of the two-burst
-# fixture (q = 16·e // e_max; full burst frames hit e_max, the tail frame
-# quantizes to 16·(w2%64)//64, silence to 0) — shared by the fingerprint
-# and curation oracles. Carries w1/w2 through for voiced-span closed forms.
-_BURST_PROF_SQL = f"""
-  SELECT doc_id, w1, w2,
-         (lead + w1 + gap + w2 + 63) // 64 AS n_frames,
-         rtrim(repeat('0,', CAST(lead // 64 AS INT))
-               || repeat('16,', CAST(w1 // 64 AS INT))
-               || repeat('0,', CAST(gap // 64 AS INT))
-               || repeat('16,', CAST(w2 // 64 AS INT))
-               || CASE WHEN w2 % 64 > 0
-                       THEN cast((16 * (w2 % 64)) // 64 AS VARCHAR) || ','
-                       ELSE '' END,
-               ',') AS profile
-  FROM ({_BURST_GEOM_SQL})
-"""
-
-_AUDIO_FP_SQL = f"""
-WITH prof AS ({_BURST_PROF_SQL})
-SELECT doc_id, g.gain, n_frames, profile, md5(profile) AS fingerprint
-FROM prof CROSS JOIN (VALUES (0), (1)) AS g(gain)
-ORDER BY doc_id, gain
-"""
-
-
-@register("audio_fingerprint_documents", _AUDIO_FP_SQL)
-def audio_fingerprint_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Acoustic dedup fingerprints over real synthesized PCM: every doc
-    rendered at two volumes (amp, amp·g with g in 2..4, kept inside
-    int16) must fingerprint identically — the audio analog of text
-    exact-dedup, robust to re-encoding gain. Single scan; the gain
-    fan-out is a map-side explode; two chained Arrow stages."""
-    from data_check_spark.operators import audio as _audio
-
-    pcm = _audio.synth_two_burst_pcm(_gain_variants(_docs_parallel(spark, sf_dir)))
-    fp = _audio.audio_fingerprint(pcm, frame_samples=64, keep=["doc_id", "gain"])
-    return fp.select(
-        "doc_id", "gain", "n_frames", "profile", "fingerprint"
-    ).orderBy("doc_id", "gain")
-
-
-def _gain_variants(docs: DataFrame) -> DataFrame:
-    """Each doc's two-burst geometry at gains 0/1 (amp, amp·g ≤ int16 max);
-    the map-side explode fan-out shared by the fingerprint and curation
-    queries — the ONLY Spark-side counterpart of _AUDIO_FP_SQL's CROSS JOIN."""
-    params = (
-        _burst_geometry(docs.select("doc_id"))
-        .withColumn("amp_base", F.lit(500) + _doc_h(":fa") % 7500)
-        .withColumn("g", F.lit(2) + _doc_h(":fg") % 3)
-        .withColumn("k", F.lit(4) + _doc_h(":sk") % 28)
-    )
-    return (
-        params.withColumn("gain", F.explode(F.array(F.lit(0), F.lit(1))))
-        .withColumn(
-            "amp",
-            F.when(F.col("gain") == 1, F.col("amp_base") * F.col("g"))
-            .otherwise(F.col("amp_base")),
-        )
-    )
-
-
-# End-to-end audio curation under one oracle: gain-duplicate removal
-# (first-wins on the acoustic fingerprint — cross-doc profile collisions
-# are kept faithfully, DuckDB replays the same group-min), voiced-span
-# measurement per surviving clip (closed form w1 + w2: segment spans are
-# frame-aligned at the start and sample-exact at the tail), then
-# duration-budget batch layout over survivors in id order.
-_AUDIO_CURATION_SQL = f"""
-WITH prof AS ({_BURST_PROF_SQL}),
-pairs AS (
-  SELECT doc_id, g.gain, profile, w1, w2
-  FROM prof CROSS JOIN (VALUES (0), (1)) AS g(gain)
-),
-surv AS (
-  SELECT doc_id, w1 + w2 AS voiced_samples
-  FROM (
-    SELECT doc_id, w1, w2,
-           row_number() OVER (PARTITION BY profile ORDER BY doc_id, gain) AS rn
-    FROM pairs
-  ) WHERE rn = 1
-),
-c AS (
-  SELECT doc_id, voiced_samples,
-         coalesce(CAST(sum(voiced_samples) OVER (
-             ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-         ) AS BIGINT), 0) AS before
-  FROM surv
-)
-SELECT doc_id, voiced_samples,
-       before // 50000 AS batch_id,
-       CAST(CASE WHEN voiced_samples > 0
-                  AND (before + voiced_samples - 1) // 50000 > before // 50000
-            THEN 1 ELSE 0 END AS INT) AS spans_boundary
-FROM c
-"""
-
-
-@register("audio_curation_documents", _AUDIO_CURATION_SQL)
-def audio_curation_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The audio analog of corpus_curation_documents, three stages in one
-    plan: (1) drop gain-duplicates by acoustic fingerprint (first-wins,
-    the fingerprint — 128 bits — is the only wide-ish thing shuffled);
-    (2) measure each survivor's voiced span from its segments; (3) lay
-    survivors into 50k-sample training batches via the distributed prefix
-    sum. The PCM is synthesized per python stage and never shuffled."""
-    from data_check_spark.operators import audio as _audio
-    from data_check_spark.operators.packing import pack_assignments
-
-    variants = _gain_variants(_docs_parallel(spark, sf_dir))
-    pcm = _audio.synth_two_burst_pcm(variants)
-    fp = _audio.audio_fingerprint(pcm, frame_samples=64, keep=["doc_id", "gain"])
-    w = Window.partitionBy("fingerprint").orderBy("doc_id", "gain")
-    surv = (
-        fp.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("doc_id", "gain")
-    )
-    segs = _audio.voiced_segments(pcm, frame_samples=64, keep=["doc_id", "gain"])
-    sv = (
-        segs.join(surv, ["doc_id", "gain"])
-        .groupBy("doc_id")
-        .agg(F.sum(F.col("end_sample") - F.col("start_sample")).alias("voiced_samples"))
-    )
-    out = pack_assignments(sv, budget=50_000, id_col="doc_id",
-                           n_tokens_col="voiced_samples")
-    return out.select(
-        "doc_id",
-        F.col("n_tokens").alias("voiced_samples"),
-        F.col("pack_id").alias("batch_id"),
-        "spans_boundary",
-    )
-
-
-# Cross-modal transcript↔audio consistency (operators/audio.py::speech_rate):
-# each doc gets a synthesized clip whose VOICED span has the closed form
-# w1 + w2 (the voiced_segments fixture), a md5-derived sample rate, and its
-# own text as the transcript; the rate band is tuned to the fixture's scale
-# so all of too_fast/ok/too_slow/untranscribed occur. DuckDB recomputes the
-# rate analytically — the Spark side measures it from the real framed decode.
-_SPEECH_RATE_MIN_MTPS = 1_000_000
-_SPEECH_RATE_MAX_MTPS = 20_000_000
-
-_SPEECH_RATE_SQL = rf"""
-WITH geom AS ({_BURST_GEOM_SQL}),
-v AS (
-  SELECT doc_id, w1 + w2 AS voiced_samples,
-         8000 * (1 + CAST(('0x' || substr(md5(doc_id || ':sr'), 1, 15)) AS BIGINT) % 5) AS sr_hz
-  FROM geom
-),
-t AS (
-  SELECT doc_id,
-         CASE WHEN trim(text) = '' THEN 0
-              ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_tokens
-  FROM documents
-),
-r AS (
-  SELECT v.doc_id, t.n_tokens, v.voiced_samples, v.sr_hz,
-         (coalesce(t.n_tokens, 0) * v.sr_hz * 1000) // v.voiced_samples AS rate_mtps
-  FROM v JOIN t USING (doc_id)
-)
-SELECT doc_id, n_tokens, voiced_samples, sr_hz, rate_mtps,
-       CASE WHEN coalesce(n_tokens, 0) = 0 THEN 'untranscribed'
-            WHEN rate_mtps > {_SPEECH_RATE_MAX_MTPS} THEN 'too_fast'
-            WHEN rate_mtps < {_SPEECH_RATE_MIN_MTPS} THEN 'too_slow'
-            ELSE 'ok' END AS status
-FROM r
-ORDER BY doc_id
-"""
-
-
-@register("speech_rate_documents", _SPEECH_RATE_SQL)
-def speech_rate_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-modal QC: transcript token count vs measured voiced duration
-    (tokens per voiced second, integer-exact). The full ASR-corpus screen
-    in one plan: synthesize PCM, segment voiced spans (real framed decode,
-    Arrow stages), aggregate per clip, join the transcript's whitespace
-    token count, and band the rate — mispaired transcripts surface as
-    too_fast, untranscribed speech as zero-token rows. The audio dies in
-    the python stage; only (doc_id, sr_hz, counts) shuffle."""
-    from data_check_spark.operators import audio as _audio
-
-    docs = _docs_parallel(spark, sf_dir)
-    params = (
-        _burst_geometry(docs.select("doc_id"))
-        .withColumn("amp", F.lit(1000) + _doc_h(":sa") % 31000)
-        .withColumn("k", F.lit(4) + _doc_h(":sk") % 28)
-        .withColumn("sr_hz", F.lit(8000) * (F.lit(1) + _doc_h(":sr") % 5))
-    )
-    pcm = _audio.synth_two_burst_pcm(params)
-    segs = _audio.voiced_segments(pcm, frame_samples=64, keep=["doc_id", "sr_hz"])
-    voiced = segs.groupBy("doc_id", "sr_hz").agg(
-        F.sum(F.col("end_sample") - F.col("start_sample")).alias("voiced_samples")
-    )
-    toks = _text.token_stats(docs).select("doc_id", "n_tokens")
-    rated = _audio.speech_rate(
-        voiced.join(toks, "doc_id"),
-        min_mtps=_SPEECH_RATE_MIN_MTPS,
-        max_mtps=_SPEECH_RATE_MAX_MTPS,
-    )
-    return rated.select(
-        "doc_id", "n_tokens", "voiced_samples", "sr_hz", "rate_mtps", "status"
-    ).orderBy("doc_id")
-
-
 _ROLLING_HOUR_SQL = """
 SELECT user_id, event_id,
        strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS ts_s,
@@ -3000,52 +2612,6 @@ def sequence_packing_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _docs_parallel: parallelize the tokenize phase across the session
     # parallelism (the single-file test parquet is one input split)
     return pack_assignments(_docs_parallel(spark, sf_dir), budget=2048)
-
-
-# Duration-budget batching for audio training (the packing operator with
-# dur_ms as the length unit): 60s batches over md5-derived clip durations,
-# same distributed prefix sum, same oracle replay with a windowed cumsum.
-_AUDIO_BATCH_SQL = """
-WITH t AS (
-  SELECT doc_id,
-         500 + CAST(('0x' || substr(md5(doc_id || ':dur'), 1, 15)) AS BIGINT) % 29500 AS dur_ms
-  FROM documents
-), c AS (
-  SELECT doc_id, dur_ms,
-         coalesce(CAST(sum(dur_ms) OVER (
-             ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-         ) AS BIGINT), 0) AS before
-  FROM t
-)
-SELECT doc_id, dur_ms,
-       before // 60000 AS batch_id,
-       before % 60000 AS batch_offset_ms,
-       CAST(CASE WHEN dur_ms > 0
-                  AND (before + dur_ms - 1) // 60000 > before // 60000
-            THEN 1 ELSE 0 END AS INT) AS spans_boundary
-FROM c
-"""
-
-
-@register("audio_batching_documents", _AUDIO_BATCH_SQL)
-def audio_batching_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duration-bucketed batch layout for audio training: clips (0.5-30s,
-    md5-derived) packed into 60-second batches in id order via the same
-    distributed prefix sum as token packing — no global window, the
-    shuffles move only (id, dur_ms) pairs."""
-    from data_check_spark.operators.packing import pack_assignments
-
-    clips = _docs_parallel(spark, sf_dir).select("doc_id").withColumn(
-        "dur_ms", F.lit(500) + _doc_h(":dur") % 29500
-    )
-    out = pack_assignments(clips, budget=60000, n_tokens_col="dur_ms")
-    return out.select(
-        "doc_id",
-        F.col("n_tokens").alias("dur_ms"),
-        F.col("pack_id").alias("batch_id"),
-        F.col("pack_offset").alias("batch_offset_ms"),
-        "spans_boundary",
-    )
 
 
 # Unigram corpus-frequency rarity (text.unigram_rarity): vocabulary head of
@@ -4095,104 +3661,6 @@ def ivf_ann_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("q_id", "rank")
 
 
-# Training-window planning (operators/audio.py::training_windows) under the
-# oracle: DuckDB tiles the closed-form voiced segments (two bursts per doc)
-# with the same window arithmetic — boundaries, per-segment indices, and the
-# short-tail drop rule are all value-compared against the real framed decode
-# + segmentation + tiling pipeline.
-_AUDIO_WINDOWS_W = 256
-_AUDIO_WINDOWS_MIN = 64
-
-_AUDIO_WINDOWS_SQL = f"""
-WITH segs AS ({_VOICED_SEGMENTS_SQL}),
-w AS (
-  SELECT doc_id, seg_idx,
-         CAST(i // {_AUDIO_WINDOWS_W} AS BIGINT) AS window_idx,
-         start_sample + i AS w_start,
-         least(start_sample + i + {_AUDIO_WINDOWS_W}, end_sample) AS w_end
-  FROM segs, unnest(range(0, end_sample - start_sample, {_AUDIO_WINDOWS_W})) t(i)
-)
-SELECT doc_id, seg_idx, window_idx, w_start, w_end,
-       w_end - w_start AS n_samples
-FROM w
-WHERE w_end - w_start >= {_AUDIO_WINDOWS_MIN}
-ORDER BY doc_id, seg_idx, window_idx
-"""
-
-
-@register("audio_windows_documents", _AUDIO_WINDOWS_SQL)
-def audio_windows_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Voiced-aware training-window plan over real synthesized PCM: decode →
-    segment → tile, returning (clip, offset) spans — the payload itself is
-    never rewritten."""
-    from data_check_spark.operators import audio as _audio
-
-    docs = _docs_parallel(spark, sf_dir).select("doc_id")
-    params = (
-        _burst_geometry(docs)
-        .withColumn("amp", F.lit(1000) + _doc_h(":sa") % 31000)
-        .withColumn("k", F.lit(4) + _doc_h(":sk") % 28)
-    )
-    pcm = _audio.synth_two_burst_pcm(params)
-    segs = _audio.voiced_segments(pcm, frame_samples=64, keep=["doc_id"])
-    return _audio.training_windows(
-        segs, window_samples=_AUDIO_WINDOWS_W, min_samples=_AUDIO_WINDOWS_MIN
-    ).orderBy("doc_id", "seg_idx", "window_idx")
-
-
-# Image decode path, oracle-checked (operators/multimodal.py image_stats):
-# deterministic P6 PPM payloads (w×h, per-channel base + pixel-index % 16
-# gradient — never wraps) go through the REAL header parser + channel-sum
-# decode; DuckDB states every stat analytically. Closed form: the gradient
-# contributes S(n) = (n div 16)·120 + r(r−1)/2 (r = n mod 16) to every
-# channel, so sum_c = n·c_base + S(n).
-_IMAGE_STATS_SQL = """
-WITH p AS (
-  SELECT doc_id,
-         8 + CAST(('0x' || substr(md5(doc_id || ':iw'), 1, 15)) AS BIGINT) % 32 AS w,
-         8 + CAST(('0x' || substr(md5(doc_id || ':ih'), 1, 15)) AS BIGINT) % 16 AS h,
-         CAST(('0x' || substr(md5(doc_id || ':ir'), 1, 15)) AS BIGINT) % 201 AS r_base,
-         CAST(('0x' || substr(md5(doc_id || ':ig'), 1, 15)) AS BIGINT) % 201 AS g_base,
-         CAST(('0x' || substr(md5(doc_id || ':ib'), 1, 15)) AS BIGINT) % 201 AS b_base
-  FROM documents
-), s AS (
-  SELECT doc_id, w, h, r_base, g_base, b_base, w * h AS n,
-         ((w * h) // 16) * 120
-         + ((w * h) % 16) * ((w * h) % 16 - 1) // 2 AS grad_sum
-  FROM p
-)
-SELECT doc_id,
-       w AS width, h AS height,
-       CAST(255 AS BIGINT) AS maxval,
-       n AS n_pixels,
-       n * r_base + grad_sum AS sum_r,
-       n * g_base + grad_sum AS sum_g,
-       n * b_base + grad_sum AS sum_b
-FROM s
-"""
-
-
-@register("image_stats_documents", _IMAGE_STATS_SQL)
-def image_stats_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer-exact image QC stats over real synthesized P6 PPM bytes —
-    the image sibling of audio_stats_documents: byte synthesis, strict
-    header parse, raster channel sums and the Arrow batch contract are all
-    value-checked without any codec library."""
-    from data_check_spark.operators import multimodal as _mm
-
-    docs = _docs_parallel(spark, sf_dir).select("doc_id")
-    params = docs.select(
-        "doc_id",
-        (F.lit(8) + _doc_h(":iw") % 32).alias("w"),
-        (F.lit(8) + _doc_h(":ih") % 16).alias("h"),
-        (_doc_h(":ir") % 201).alias("r_base"),
-        (_doc_h(":ig") % 201).alias("g_base"),
-        (_doc_h(":ib") % 201).alias("b_base"),
-    )
-    ppm = _mm.synth_ppm(params, keep=["doc_id"])
-    return _mm.image_stats(ppm, keep=["doc_id"])
-
-
 _EMBEDDING_QUALITY_SQL = """
 WITH bad AS (
   SELECT vec_id + 1000000 AS vec_id,
@@ -4271,221 +3739,6 @@ def embedding_quality_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CONTAINER_SNIFF_SQL = """
-WITH p AS (
-  SELECT doc_id,
-         CAST(('0x' || substr(md5(doc_id || ':cont'), 1, 15)) AS BIGINT) AS h
-  FROM documents
-), r AS (
-  SELECT doc_id, h,
-         (['wav','flac','ogg','jpeg','png','ppm','mp3','bin'])
-           [CAST(h % 8 AS INT) + 1] AS kind,
-         (['wav','flac','ogg','jpeg','png','ppm','mp3','bin'])
-           [CAST((h % 8 + CASE WHEN h % 11 = 0 THEN 1 ELSE 0 END) % 8 AS INT) + 1]
-           AS declared
-  FROM p
-)
-SELECT doc_id, declared,
-       CASE WHEN h % 97 = 0 THEN NULL
-            WHEN kind = 'bin' THEN 'unknown'
-            ELSE kind END AS sniffed,
-       CASE WHEN h % 97 = 0 THEN NULL
-            WHEN (CASE WHEN kind = 'bin' THEN 'unknown' ELSE kind END)
-                 = (CASE WHEN declared = 'bin' THEN 'unknown' ELSE declared END)
-              THEN NULL
-            WHEN kind = 'bin' THEN 'UNKNOWN_CONTAINER'
-            ELSE 'CODEC_HEADER_MISMATCH' END AS rule_id
-FROM r
-"""
-
-
-@register("container_sniff_documents", _CONTAINER_SNIFF_SQL)
-def container_sniff_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Codec/container header cross-check: REAL magic bytes (RIFF/WAVE,
-    fLaC, OggS, JPEG SOI, PNG, P6, ID3) are synthesized per doc from md5
-    arithmetic, pushed through the byte-level ``sniff_container`` JVM
-    expression, and compared to the (sometimes deliberately shifted)
-    declared codec — CODEC_HEADER_MISMATCH / UNKNOWN_CONTAINER rules.
-    DuckDB never parses bytes: it re-derives which header was planted
-    analytically, so the sniffing expression itself is value-checked."""
-    from data_check_spark.operators import multimodal as _mm
-
-    docs = _docs_parallel(spark, sf_dir).select("doc_id")
-    h = _doc_h(":cont")
-    karr = F.expr("array('wav','flac','ogg','jpeg','png','ppm','mp3','bin')")
-    ki = (h % 8).cast("int")
-    di = ((h % 8 + F.when(h % 11 == 0, 1).otherwise(0)) % 8).cast("int")
-    base = docs.select(
-        "doc_id",
-        h.alias("h"),
-        F.element_at(karr, ki + 1).alias("kind"),
-        F.element_at(karr, di + 1).alias("declared"),
-    )
-    filler = F.encode(
-        F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":fill"))), "UTF-8"
-    )
-    k = F.col("kind")
-    magic = (
-        F.when(k == "wav", F.concat(F.expr("X'52494646'"), F.expr("X'00000024'"),
-                                    F.expr("X'57415645'"), filler))
-        .when(k == "flac", F.concat(F.expr("X'664C6143'"), filler))
-        .when(k == "ogg", F.concat(F.expr("X'4F676753'"), filler))
-        .when(k == "jpeg", F.concat(F.expr("X'FFD8FFE0'"), filler))
-        .when(k == "png", F.concat(F.expr("X'89504E470D0A1A0A'"), filler))
-        .when(k == "ppm", F.concat(F.expr("X'50360A'"), filler))
-        .when(k == "mp3", F.concat(F.expr("X'494433'"), filler))
-        .otherwise(F.concat(F.expr("X'001122334455667788'"), filler))
-    )
-    payload = F.when(F.col("h") % 97 == 0, F.lit(None).cast("binary")).otherwise(magic)
-    staged = base.select("doc_id", "declared", payload.alias("payload"))
-    sniffed = _mm.sniff_container("payload")
-    expected = F.when(F.col("declared") == "bin", "unknown").otherwise(F.col("declared"))
-    rule = (
-        F.when(sniffed.isNull(), F.lit(None).cast("string"))
-        .when(sniffed == expected, F.lit(None).cast("string"))
-        .when(sniffed == "unknown", "UNKNOWN_CONTAINER")
-        .otherwise("CODEC_HEADER_MISMATCH")
-    )
-    return staged.select(
-        "doc_id", "declared", sniffed.alias("sniffed"), rule.alias("rule_id")
-    )
-
-
-_AUTOCORR_SQL = """
-WITH p AS (
-  SELECT doc_id,
-         800 + CAST(('0x' || substr(md5(doc_id || ':an'), 1, 15)) AS BIGINT) % 1600 AS n,
-         CAST(('0x' || substr(md5(doc_id || ':al'), 1, 15)) AS BIGINT) % 200 AS lead,
-         1000 + CAST(('0x' || substr(md5(doc_id || ':aa'), 1, 15)) AS BIGINT) % 31000 AS amp,
-         4 + CAST(('0x' || substr(md5(doc_id || ':ak'), 1, 15)) AS BIGINT) % 28 AS k
-  FROM documents
-),
-lags AS (
-  SELECT p.*, l.lag
-  FROM p, unnest([k, 2 * k, CAST(7 AS BIGINT)]) AS l(lag)
-),
-terms AS (
-  -- DISTINCT first: when k = 7 the lag list [k, 2k, 7] repeats a lag and
-  -- a plain GROUP BY over the duplicated rows would double-count every term
-  SELECT doc_id, lag,
-         sum((CASE WHEN i.i < lead THEN 0
-                   ELSE amp * (1 - 2 * (((i.i - lead) // k) % 2)) END)
-             * (CASE WHEN i.i + lag < lead THEN 0
-                     ELSE amp * (1 - 2 * (((i.i + lag - lead) // k) % 2)) END))
-           AS r
-  FROM (SELECT DISTINCT doc_id, lag, n, lead, amp, k FROM lags) d,
-       (SELECT unnest(range(0, 2400)) AS i) i
-  WHERE i.i < n - lag
-  GROUP BY doc_id, lag
-)
-SELECT l.doc_id, l.lag,
-       l.n AS n_samples,
-       (l.n - l.lead) * l.amp * l.amp AS r0,
-       CAST(t.r AS BIGINT) AS r_lag,
-       CAST(t.r AS BIGINT) * 10000 // ((l.n - l.lead) * l.amp * l.amp) AS ratio_bp
-FROM lags l JOIN terms t ON t.doc_id = l.doc_id AND t.lag = l.lag
-"""
-
-
-@register("autocorr_documents", _AUTOCORR_SQL)
-def autocorr_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Periodicity screen through the REAL decode path: md5-parameterized
-    square waves are synthesized as int16-LE bytes, decoded back by
-    operators/audio.autocorr_lags, and the integer autocorrelation at the
-    half period (antiphase, ratio ≈ −10⁴), the full period (ratio ≈ +10⁴
-    minus boundary terms) and a fixed off-period lag is value-checked
-    against DuckDB's direct integer replay of the same waveform."""
-    from data_check_spark.operators import audio as _audio
-
-    docs = _docs_parallel(spark, sf_dir).select("doc_id")
-    params = docs.select(
-        "doc_id",
-        (F.lit(800) + _doc_h(":an") % 1600).alias("n"),
-        (_doc_h(":al") % 200).alias("lead"),
-        (F.lit(1000) + _doc_h(":aa") % 31000).alias("amp"),
-        (F.lit(4) + _doc_h(":ak") % 28).alias("k"),
-    )
-    pcm = _audio.synth_square_pcm(params)
-    with_lags = pcm.withColumn(
-        "lags", F.array(F.col("k"), F.col("k") * 2, F.lit(7).cast("bigint"))
-    )
-    return _audio.autocorr_lags(with_lags, keep=["doc_id"]).select(
-        "doc_id", "lag", "n_samples", "r0", "r_lag", "ratio_bp"
-    )
-
-
-_COMPACTION_INV_SQL = """
-  SELECT printf('f%08d', doc_id) AS file_name,
-         printf('p%02d', CAST(CAST(('0x' || substr(md5(doc_id || ':cd'), 1, 15))
-                                   AS BIGINT) % 16 AS INT)) AS part_dir,
-         1024 + CAST(('0x' || substr(md5(doc_id || ':cs'), 1, 15)) AS BIGINT)
-                % 262144 AS file_size
-  FROM documents
-"""
-
-_COMPACTION_PLAN_SQL = f"""
-WITH inv AS ({_COMPACTION_INV_SQL})
-SELECT part_dir, file_name, file_size,
-       CASE WHEN file_size < 131072 THEN 'merge' ELSE 'keep' END AS action,
-       CAST(CASE WHEN file_size < 131072 THEN
-         coalesce(sum(CASE WHEN file_size < 131072 THEN file_size ELSE 0 END)
-                    OVER (PARTITION BY part_dir ORDER BY file_name
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         // 262144
-       END AS BIGINT) AS group_id
-FROM inv
-"""
-
-_COMPACTION_SUMMARY_SQL = f"""
-WITH plan AS ({_COMPACTION_PLAN_SQL})
-SELECT part_dir,
-       count(*) AS n_files,
-       CAST(sum(CASE WHEN action = 'merge' THEN 1 ELSE 0 END) AS BIGINT) AS n_small,
-       CAST(sum(CASE WHEN action = 'merge' THEN file_size ELSE 0 END) AS BIGINT)
-         AS bytes_small,
-       count(DISTINCT group_id) AS n_groups,
-       CAST(count(*) - sum(CASE WHEN action = 'merge' THEN 1 ELSE 0 END)
-         + count(DISTINCT group_id) AS BIGINT) AS n_files_after
-FROM plan
-GROUP BY part_dir
-"""
-
-
-def _compaction_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs_parallel(spark, sf_dir).select("doc_id")
-    return docs.select(
-        F.format_string("f%08d", F.col("doc_id")).alias("file_name"),
-        F.format_string("p%02d", (_doc_h(":cd") % 16).cast("int")).alias("part_dir"),
-        (F.lit(1024) + _doc_h(":cs") % 262144).alias("file_size"),
-    )
-
-
-@register("compaction_plan_documents", _COMPACTION_PLAN_SQL)
-def compaction_plan_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Small-files compaction plan (operators/compaction.py): per-dir
-    first-fit merge groups over a deterministic synthetic file inventory —
-    group_id = cumulative-small-bytes div target, healthy files kept.
-    The inventory is md5-derived so DuckDB replays the identical greedy
-    walk."""
-    from data_check_spark.operators import compaction as _cp
-
-    return _cp.compaction_plan(
-        _compaction_inventory(spark, sf_dir), target_bytes=262144
-    )
-
-
-@register("compaction_summary_documents", _COMPACTION_SUMMARY_SQL)
-def compaction_summary_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-dir compaction rollup: files/bytes before, merge groups, and
-    the projected post-rewrite file count."""
-    from data_check_spark.operators import compaction as _cp
-
-    plan = _cp.compaction_plan(
-        _compaction_inventory(spark, sf_dir), target_bytes=262144
-    )
-    return _cp.compaction_summary(plan)
-
-
 _NULL_CORRELATION_SQL = """
 WITH mut AS (
   SELECT CASE WHEN h % 7 = 0 THEN NULL ELSE o_custkey END AS o_custkey,
@@ -4548,63 +3801,6 @@ def null_correlation_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return null_correlation(
         mut, [("o_custkey", "o_orderpriority"), ("o_custkey", "o_orderstatus")]
-    )
-
-
-_LOUDNESS_GAIN_SQL = """
-WITH p AS (
-  SELECT doc_id,
-         800 + CAST(('0x' || substr(md5(doc_id || ':n'), 1, 15)) AS BIGINT) % 1600 AS n,
-         CAST(('0x' || substr(md5(doc_id || ':l'), 1, 15)) AS BIGINT) % 200 AS lead,
-         1000 + CAST(('0x' || substr(md5(doc_id || ':a'), 1, 15)) AS BIGINT) % 31000 AS amp
-  FROM documents
-), s AS (
-  SELECT doc_id, n AS n_samples, (n - lead) * amp * amp AS energy, amp AS peak_abs
-  FROM p
-), g AS (
-  SELECT *,
-    CAST(10000000 AS HUGEINT) * 100000000 * n_samples AS n_t,
-    CAST(floor(sqrt((CAST(10000000 AS HUGEINT) * 100000000 * n_samples)::DOUBLE
-                    / energy::DOUBLE)) AS BIGINT) AS c0
-  FROM s
-), g1 AS (
-  SELECT *, c0 + (CASE WHEN CAST(c0 + 1 AS HUGEINT) * (c0 + 1) * energy <= n_t
-                       THEN 1 ELSE 0 END) AS c1
-  FROM g
-), g2 AS (
-  SELECT *, c1 - (CASE WHEN CAST(c1 AS HUGEINT) * c1 * energy > n_t
-                       THEN 1 ELSE 0 END) AS gain_bp,
-         32767 * 10000 // peak_abs AS max_gain_bp
-  FROM g1
-)
-SELECT doc_id, n_samples, energy, peak_abs, gain_bp, max_gain_bp,
-       gain_bp > max_gain_bp AS would_clip,
-       least(gain_bp, max_gain_bp) AS capped_gain_bp
-FROM g2
-"""
-
-
-@register("loudness_gain_documents", _LOUDNESS_GAIN_SQL)
-def loudness_gain_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Loudness-normalization planning through the REAL decode path:
-    square-wave bytes → pcm_stats → normalization_gain (target mean square
-    10⁷ ≈ −20 dBFS). DuckDB recomputes energy/peak from the closed form
-    and replays the isqrt correction in HUGEINT, value-checking gain,
-    clip-safety cap, and the would_clip flag."""
-    from data_check_spark.operators import audio as _audio
-
-    docs = _docs_parallel(spark, sf_dir).select("doc_id")
-    params = docs.select(
-        "doc_id",
-        (F.lit(800) + _doc_h(":n") % 1600).alias("n"),
-        (_doc_h(":l") % 200).alias("lead"),
-        (F.lit(1000) + _doc_h(":a") % 31000).alias("amp"),
-        (F.lit(4) + _doc_h(":k") % 28).alias("k"),
-    )
-    stats = _audio.pcm_stats(_audio.synth_square_pcm(params), keep=["doc_id"])
-    return _audio.normalization_gain(stats, target_ms_q=10_000_000).select(
-        "doc_id", "n_samples", "energy", "peak_abs",
-        "gain_bp", "max_gain_bp", "would_clip", "capped_gain_bp",
     )
 
 
@@ -5252,75 +4448,6 @@ def novelty_rate_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Sustained-overdrive screen through the REAL decode path
-# (operators/audio.py::clipping_stats): a clip RATIO can't tell distortion
-# (consecutive full-scale samples) from isolated peaks — the run length can.
-# One doc band (h%5==0) gets an offset square wave whose POSITIVE half-period
-# exactly reaches full scale (1000 + 31767 = 32767; the negative half,
-# |1000 − 31767| = 30767, stays clean), so the closed forms are: clipped
-# samples = the positive-sample count of the alternation, max run = one half
-# period (or the whole wave if shorter).
-_CLIPPING_RUNS_SQL = """
-WITH p AS (
-  SELECT doc_id,
-         800 + CAST(('0x' || substr(md5(doc_id || ':cn'), 1, 15)) AS BIGINT) % 1600 AS n,
-         CAST(('0x' || substr(md5(doc_id || ':cl'), 1, 15)) AS BIGINT) % 200 AS lead,
-         4 + CAST(('0x' || substr(md5(doc_id || ':ck'), 1, 15)) AS BIGINT) % 28 AS k,
-         CAST(('0x' || substr(md5(doc_id || ':ca'), 1, 15)) AS BIGINT) % 5 = 0 AS hot
-  FROM documents
-),
-f AS (
-  SELECT doc_id, n, k, hot,
-         n - lead AS wl,
-         (n - lead) // k AS fb,
-         (n - lead) % k AS r
-  FROM p
-),
-c AS (
-  SELECT doc_id, n AS n_samples,
-         CASE WHEN hot
-              THEN k * ((fb + 1) // 2) + CASE WHEN fb % 2 = 0 THEN r ELSE 0 END
-              ELSE 0 END AS n_clipped,
-         CASE WHEN hot THEN least(k, wl) ELSE 0 END AS max_clip_run,
-         n
-  FROM f
-)
-SELECT doc_id, n_samples, n_clipped, max_clip_run,
-       (n_clipped * 1000000 + n // 2) // n AS clipped_ppm
-FROM c ORDER BY doc_id
-"""
-
-
-@register("clipping_runs_documents", _CLIPPING_RUNS_SQL)
-def clipping_runs_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sustained-overdrive detection through the real int16 byte decode:
-    md5-parameterized offset square waves (one band clips ONLY on the
-    positive half-period), decoded back by audio.clipping_stats, and the
-    clipped-sample count / longest consecutive clipped run / ppm are
-    value-checked against DuckDB's integer closed forms of the same
-    waveform geometry."""
-    from data_check_spark.operators import audio as _audio
-
-    docs = _docs_parallel(spark, sf_dir).select("doc_id")
-    hot = _doc_h(":ca") % 5 == F.lit(0)
-    params = docs.select(
-        "doc_id",
-        (F.lit(800) + _doc_h(":cn") % 1600).alias("n"),
-        (_doc_h(":cl") % 200).alias("lead"),
-        F.when(hot, F.lit(31767)).otherwise(F.lit(1000) + _doc_h(":ca") % 30000)
-            .cast("bigint").alias("amp"),
-        (F.lit(4) + _doc_h(":ck") % 28).alias("k"),
-        F.when(hot, F.lit(1000)).otherwise(F.lit(0)).cast("bigint").alias("off"),
-    )
-    pcm = _audio.synth_square_pcm(params, offset_col="off")
-    return (
-        _audio.clipping_stats(pcm, keep=["doc_id"])
-        .select("doc_id", "n_samples", "n_clipped", "max_clip_run", "clipped_ppm")
-        .orderBy("doc_id")
-    )
-
-
-# ---------------------------------------------------------------------------
 # Declared-vs-detected language mismatch: metadata-vs-content consistency
 # over a derived signal — a wrong lang tag silently poisons per-language
 # mixing/upsampling decisions even when every per-row format rule passes.
@@ -5802,46 +4929,6 @@ def corpus_rules_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Deterministic augmentation planning (operators/audio.py::augmentation_plan):
-# seed-free speed-perturb + noise-mix assignment per (clip, variant). DuckDB
-# re-derives every parameter from the same md5 closed forms — the plan is
-# auditable cross-engine, which is the point of not using rand().
-# ---------------------------------------------------------------------------
-
-_AUG_PLAN_SQL = """
-WITH v AS (
-  SELECT doc_id, unnest(range(0, 3)) AS variant FROM documents
-),
-h AS (
-  SELECT doc_id, variant,
-         CAST(('0x' || substr(md5(doc_id || ':aug:spd:' || variant), 1, 15)) AS BIGINT) AS hs,
-         CAST(('0x' || substr(md5(doc_id || ':aug:nk:' || variant), 1, 15)) AS BIGINT) AS hk,
-         CAST(('0x' || substr(md5(doc_id || ':aug:snr:' || variant), 1, 15)) AS BIGINT) AS hn
-  FROM v
-)
-SELECT doc_id, variant,
-       CASE WHEN variant = 0 THEN 1000
-            ELSE ([900, 1000, 1100])[CAST(hs % 3 AS INT) + 1] END AS speed_permille,
-       CASE WHEN variant = 0 THEN NULL
-            ELSE (['babble', 'music', 'street', 'white'])[CAST(hk % 4 AS INT) + 1]
-            END AS noise_kind,
-       CASE WHEN variant = 0 THEN NULL
-            ELSE CAST(5 + hn % 26 AS INT) END AS noise_snr_db
-FROM h
-"""
-
-
-@register("augmentation_plan_documents", _AUG_PLAN_SQL)
-def augmentation_plan_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-variant augmentation plan over the documents ids (clip stand-in):
-    pure projection + explode, no shuffle, no Python."""
-    from data_check_spark.operators.audio import augmentation_plan
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    return augmentation_plan(docs, id_col="doc_id", n_variants=3)
-
-
-# ---------------------------------------------------------------------------
 # Whole-table SLA gates (engine rule kind `agg_threshold`,
 # operators/profile.py::agg_threshold_violations): integer-ppm metrics vs
 # absolute contracts — one breaches, one passes, one guards a minimum.
@@ -6195,115 +5282,6 @@ def tar_roundtrip_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Transcript→audio alignment (audio.transcript_alignment): each document's
-# words laid out over the REAL decoded voiced timeline of its synthesized
-# two-burst clip. The burst geometry is md5-derived (closed forms), so
-# DuckDB re-derives the voiced spans analytically, replays the char-weight
-# prefix sums, and checks the exact start/end sample of every word —
-# including words straddling the interior silence gap.
-# ---------------------------------------------------------------------------
-
-_ALIGNMENT_SQL = f"""
-WITH geom AS ({_BURST_GEOM_SQL}),
-words AS (
-  SELECT doc_id,
-         CASE WHEN text IS NULL OR trim(text) = '' THEN []::varchar[]
-              ELSE regexp_split_to_array(trim(text), '\\s+') END AS l
-  FROM documents
-), tok AS (
-  SELECT doc_id, i AS idx1, l[i] AS tok
-  FROM words, unnest(range(1, len(l) + 1)) t(i)
-), cum AS (
-  SELECT doc_id, idx1, tok,
-         coalesce(sum(len(tok)) OVER (PARTITION BY doc_id ORDER BY idx1
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb,
-         sum(len(tok)) OVER (PARTITION BY doc_id ORDER BY idx1) AS ce,
-         sum(len(tok)) OVER (PARTITION BY doc_id) AS c
-  FROM tok
-), m AS (
-  SELECT cum.doc_id, idx1 - 1 AS token_idx, tok,
-         cb * (w1 + w2) // c AS s, ce * (w1 + w2) // c AS e,
-         lead, w1, gap
-  FROM cum JOIN geom ON cum.doc_id = geom.doc_id
-)
-SELECT doc_id,
-       CAST(token_idx AS INT) AS token_idx,
-       tok AS token,
-       CAST(CASE WHEN s < w1 THEN lead + s
-                 ELSE lead + w1 + gap + (s - w1) END AS BIGINT) AS start_sample,
-       CAST(CASE WHEN e <= w1 THEN lead + e
-                 ELSE lead + w1 + gap + (e - w1) END AS BIGINT) AS end_sample
-FROM m
-"""
-
-
-@register("transcript_alignment_documents", _ALIGNMENT_SQL)
-def transcript_alignment_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-word audio spans over the voiced timeline of real decoded PCM:
-    synth → voiced_segments → proportional char-weight alignment."""
-    from data_check_spark.operators import audio as _audio
-
-    docs = _docs_parallel(spark, sf_dir)
-    params = (
-        _burst_geometry(docs.select("doc_id"))
-        .withColumn("amp", F.lit(1000) + _doc_h(":sa") % 31000)
-        .withColumn("k", F.lit(4) + _doc_h(":sk") % 28)
-    )
-    pcm = _audio.synth_two_burst_pcm(params)
-    segs = _audio.voiced_segments(pcm, frame_samples=64, keep=["doc_id"])
-    return _audio.transcript_alignment(segs, docs.select("doc_id", "text"))
-
-
-# ---------------------------------------------------------------------------
-# Window transcript labeling (audio.window_transcripts): training_windows ∘
-# transcript_alignment — every fixed-size audio window learns which words it
-# contains. Both inputs' oracles already exist; this one composes them
-# (windows CTE ⋈ alignment CTE) so the overlap/zero-width conventions and
-# the empty-window contract are value-checked end to end.
-# ---------------------------------------------------------------------------
-
-_WINDOW_TRANSCRIPTS_SQL = f"""
-WITH w AS ({_AUDIO_WINDOWS_SQL}),
-a AS ({_ALIGNMENT_SQL})
-SELECT w.doc_id, w.seg_idx, w.window_idx, w.w_start, w.w_end,
-       CAST(count(a.token_idx) AS BIGINT) AS n_tokens,
-       CAST(min(a.token_idx) AS INT) AS first_token_idx,
-       CAST(max(a.token_idx) AS INT) AS last_token_idx
-FROM w LEFT JOIN a
-  ON a.doc_id = w.doc_id
- AND ((a.start_sample < w.w_end AND a.end_sample > w.w_start)
-      OR (a.start_sample = a.end_sample
-          AND a.start_sample >= w.w_start AND a.start_sample < w.w_end))
-GROUP BY w.doc_id, w.seg_idx, w.window_idx, w.w_start, w.w_end
-"""
-
-
-@register("window_transcripts_documents", _WINDOW_TRANSCRIPTS_SQL)
-def window_transcripts_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whisper-style window labeling over real decoded PCM: decode →
-    voiced segments → fixed windows → per-window transcript token slice."""
-    from data_check_spark.operators import audio as _audio
-
-    docs = _docs_parallel(spark, sf_dir)
-    params = (
-        _burst_geometry(docs.select("doc_id"))
-        .withColumn("amp", F.lit(1000) + _doc_h(":sa") % 31000)
-        .withColumn("k", F.lit(4) + _doc_h(":sk") % 28)
-    )
-    pcm = _audio.synth_two_burst_pcm(params)
-    segs = _audio.voiced_segments(pcm, frame_samples=64, keep=["doc_id"])
-    # localCheckpoint: windows and alignment both consume the decoded
-    # segments — materialize the narrow span frame once instead of running
-    # the synth+decode python stages twice
-    segs = segs.localCheckpoint()
-    windows = _audio.training_windows(
-        segs, window_samples=_AUDIO_WINDOWS_W, min_samples=_AUDIO_WINDOWS_MIN
-    )
-    tokens = _audio.transcript_alignment(segs, docs.select("doc_id", "text"))
-    return _audio.window_transcripts(windows, tokens)
-
-
 # The piece stream itself (bpe.bpe_tokenize): one row per BPE piece,
 # addressed (doc, word_idx, piece_idx) — DuckDB replays the 4-merge
 # dictionary and unnests the same pieces.
@@ -6389,28 +5367,6 @@ def normalize_width_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("text"),
     )
     return normalize_text(widened)
-
-
-# Window token-density QA (audio.window_density_screen): projection over the
-# composed window-labeling pipeline; thresholds replayed in SQL.
-_WINDOW_DENSITY_SQL = f"""
-WITH lab AS ({_WINDOW_TRANSCRIPTS_SQL})
-SELECT doc_id, seg_idx, window_idx, n_tokens,
-       CAST(n_tokens * 100000 // (w_end - w_start) AS BIGINT) AS density_pm,
-       CASE WHEN n_tokens = 0 THEN 'silent'
-            WHEN n_tokens * 100000 // (w_end - w_start) > 2000 THEN 'too_dense'
-            ELSE 'ok' END AS status
-FROM lab
-"""
-
-
-@register("window_density_documents", _WINDOW_DENSITY_SQL)
-def window_density_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token density per training window with silent/too-dense statuses."""
-    from data_check_spark.operators import audio as _audio
-
-    labeled = window_transcripts_documents(spark, sf_dir)
-    return _audio.window_density_screen(labeled)
 
 
 # ---------------------------------------------------------------------------
@@ -6691,9 +5647,9 @@ def scan_pruning_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 # batch-boundary-dependent internals (micro-batch splits, watermark
 # advancement, state store) are exercised for real, while the REGISTERED
 # outputs are chosen to be batch-boundary-INVARIANT so the oracle is exact:
-#   - stateful dedup: total emissions per key == total key count (every
-#     occurrence of a duplicated key is emitted exactly once, retroactive
-#     first included) regardless of how arrivals split into batches;
+#   - stateful dedup: a key seen n >= 2 times emits occurrence=1..n (every
+#     occurrence exactly once, retroactive first included) regardless of
+#     how arrivals split into batches;
 #   - windowed counts: append-mode emission == windows whose end <= final
 #     watermark (max event time minus the delay, reached via the trailing
 #     no-data micro-batch) — analytically computable, with the held-back
@@ -6781,10 +5737,13 @@ def _events_as_clip_waves(spark: SparkSession, sf_dir: str, in_dir: str, *, key:
 @register(
     "streaming_dedup_events",
     """
-    SELECT cast(user_id AS varchar) AS clip_id,
-           count(*) AS n_emitted,
-           count(DISTINCT event_type) AS n_partitions
-    FROM events GROUP BY user_id HAVING count(*) >= 2
+    SELECT clip_id, 'occurrence=' || CAST(k AS VARCHAR) AS observed
+    FROM (
+      SELECT CAST(user_id AS VARCHAR) AS clip_id,
+             row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS k,
+             count(*) OVER (PARTITION BY user_id) AS n
+      FROM events WHERE user_id IS NOT NULL
+    ) WHERE n >= 2
     """,
 )
 def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6792,8 +5751,9 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     applyInPandasWithState) replayed to completion: events keyed by user_id
     stream through 4 forced micro-batches; every occurrence of a key seen
     >= 2 times is emitted exactly once (the first retroactively when the
-    second arrives), so per-key emission totals equal the key's full count
-    — batch-boundary-invariant, hence exactly oracle-checkable."""
+    second arrives) as ``occurrence=<k>``, k = 1..n per key — the same
+    multiset however the batches split, hence exactly oracle-checkable
+    row by row."""
     from data_check_spark.streaming.incremental import stream_clips
     from data_check_spark.streaming.stateful import streaming_duplicate_violations
 
@@ -6813,14 +5773,7 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink = spark.read.schema(
         "rule_id string, clip_id string, partition string, observed string"
     ).parquet(out_dir)
-    return (
-        sink.groupBy("clip_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_emitted"),
-            F.count_distinct("partition").alias("n_partitions"),
-        )
-        .orderBy("clip_id")
-    )
+    return sink.select("clip_id", "observed").orderBy("clip_id", "observed")
 
 
 _STREAM_WINDOW_SQL = """

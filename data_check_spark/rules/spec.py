@@ -134,6 +134,8 @@ SET_KINDS = {
     "cardinality",
 }
 
+SEVERITIES = {"error", "warning"}
+
 
 @dataclass(frozen=True)
 class Rule:
@@ -159,6 +161,13 @@ class Rule:
     def __post_init__(self) -> None:
         if self.kind not in ROW_LOCAL_KINDS | SET_KINDS:
             raise ValueError(f"unknown rule kind: {self.kind!r} ({self.rule_id})")
+        # Only "warning" spares a partition; any other spelling would be
+        # counted as an error and fail partitions meant only to warn.
+        if self.severity not in SEVERITIES:
+            raise ValueError(
+                f"unknown severity: {self.severity!r} ({self.rule_id}); "
+                f"expected one of {sorted(SEVERITIES)}"
+            )
 
     @property
     def is_row_local(self) -> bool:

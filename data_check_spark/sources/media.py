@@ -2,8 +2,8 @@
 
 Audio/image/video corpora arrive as object-store trees of opaque files;
 ``spark.read.format("binaryFile")`` is the distributed path from that tree
-to the engine's MEDIA_SCHEMA table (operators/multimodal.py) — the step
-before any mapInPandas decode/feature stage runs. Reference analog: the aux
+to a one-row-per-file payload table — the step before any mapInPandas
+decode/feature stage runs. Reference analog: the aux
 file loaders (dekispart.py:1178-1289) pull whole small files driver-side;
 this is the executor-side equivalent for payloads that must never touch the
 driver.
@@ -55,7 +55,7 @@ def read_media_dir(
     glob: str | None = None,
     max_bytes: int = DEFAULT_MAX_BYTES,
 ) -> DataFrame:
-    """Directory of media files → MEDIA_SCHEMA-shaped DataFrame.
+    """Directory of media files → one row per file.
 
     Columns: ``media_id`` (filename stem), ``media_type`` (by extension,
     'unknown' otherwise), ``payload`` (bytes; NULL when oversize),

@@ -52,7 +52,10 @@ def streaming_duplicate_violations(
     Emits one row per duplicate occurrence; when the second occurrence of a
     key arrives, the (previously silent) first occurrence is emitted
     retroactively, so totals match the batch ``unique`` rule for keys whose
-    occurrences fall within the state TTL."""
+    occurrences fall within the state TTL. ``observed`` is the occurrence
+    ordinal ``occurrence=<k>`` (the retroactive first is 1), so a key seen
+    n times emits exactly ``occurrence=1..n`` however the micro-batches
+    split its arrivals."""
 
     def dedup(key, pdfs, state: GroupState):
         if state.hasTimedOut:
@@ -61,6 +64,7 @@ def streaming_duplicate_violations(
         (k,) = key
         prev, first_part = state.get if state.exists else (0, None)
         emit: list[object] = []
+        ordinals: list[int] = []
         for pdf in pdfs:
             parts = list(
                 pdf["partition"].astype(object).where(pd.notna(pdf["partition"]), None)
@@ -71,7 +75,9 @@ def streaming_duplicate_violations(
             if total >= 2:
                 if prev == 1:
                     emit.append(first_part)  # retroactive first occurrence
+                    ordinals.append(1)
                 emit.extend(parts)  # prev==0 case includes the in-batch first
+                ordinals.extend(range(prev + 1, total + 1))
             else:
                 first_part = parts[0]
             prev = total
@@ -84,7 +90,7 @@ def streaming_duplicate_violations(
                     "rule_id": "STREAM_DUP",
                     "clip_id": k,
                     "partition": pd.Series(emit, dtype=object),
-                    "observed": f"dup_count={prev}",
+                    "observed": [f"occurrence={n}" for n in ordinals],
                 }
             )
 

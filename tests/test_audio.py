@@ -185,42 +185,3 @@ def test_dead_air_rule_via_wide_pass(spark):
     fired = {(r.rule_id, r.clip_id) for r in res.violations.collect()}
     assert ("AUDIO_DEAD_AIR", "clip_0000000b") in fired
     assert ("AUDIO_DEAD_AIR", "clip_0000000a") not in fired
-
-
-def test_augmentation_plan_deterministic_and_shaped(spark):
-    from data_check_spark.operators.audio import augmentation_plan
-
-    clips = spark.createDataFrame([("clip_a",), ("clip_b",)], "clip_id string")
-    out = augmentation_plan(clips, n_variants=4).collect()
-    assert len(out) == 8
-    by_key = {(r["clip_id"], r["variant"]): r for r in out}
-    # variant 0 is the clean pass-through
-    for c in ("clip_a", "clip_b"):
-        r0 = by_key[(c, 0)]
-        assert r0["speed_permille"] == 1000
-        assert r0["noise_kind"] is None and r0["noise_snr_db"] is None
-    # perturbed variants draw from the declared domains
-    for (c, v), r in by_key.items():
-        if v == 0:
-            continue
-        assert r["speed_permille"] in (900, 1000, 1100)
-        assert r["noise_kind"] in ("babble", "music", "street", "white")
-        assert 5 <= r["noise_snr_db"] <= 30
-    # pure function of (id, variant): a rerun reproduces byte-identical rows
-    again = {(r["clip_id"], r["variant"]): (r["speed_permille"], r["noise_kind"], r["noise_snr_db"])
-             for r in augmentation_plan(clips, n_variants=4).collect()}
-    assert again == {k: (r["speed_permille"], r["noise_kind"], r["noise_snr_db"])
-                     for k, r in by_key.items()}
-    # no shuffle in the plan
-    plan = augmentation_plan(clips, n_variants=4)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-
-
-def test_augmentation_plan_guards(spark):
-    import pytest
-
-    from data_check_spark.operators.audio import augmentation_plan
-
-    clips = spark.createDataFrame([("c",)], "clip_id string")
-    with pytest.raises(ValueError):
-        augmentation_plan(clips, n_variants=0)

@@ -80,7 +80,7 @@ def test_docs_df_deterministic_with_planted_dups(spark):
     repartitioning, with the planted exact/near duplicate structure."""
     from pyspark.sql import functions as F
 
-    from data_check_spark.datagen import DOC_BUCKETS, docs_df
+    from tests.docs_corpus import DOC_BUCKETS, docs_df
 
     n = 4000
     a = docs_df(spark, n)

@@ -184,7 +184,7 @@ def test_minhash_recall_on_planted_docs_corpus(spark):
     recall, not just its estimate accuracy."""
     from pyspark.sql import functions as F
 
-    from data_check_spark.datagen import docs_df
+    from tests.docs_corpus import docs_df
 
     docs = docs_df(spark, 3000)
     found = {

@@ -7,6 +7,7 @@ rows-only-by-design entries (no DuckDB oracle possible) last. COVERAGE.md
 is the human ledger; this test keeps the machine side honest.
 """
 
+import ast
 import importlib.util
 import os
 
@@ -44,6 +45,7 @@ def test_queries_order_unchecked_then_green_then_rows_only():
 def test_oracle_sql_keys_subset_of_queries():
     mod = _entry_module()
     qs, osql = mod.queries(), mod.oracle_sql()
+    assert (len(qs), len(osql)) == (134, 130)
     assert set(osql) <= set(qs)
     # every oracle-capable entry IS oracle-backed: the only entries without
     # an oracle are the documented by-design set
@@ -61,3 +63,19 @@ def test_driver_green_names_exist_in_registry():
     qs = set(mod.queries())
     missing = sorted(set(mod._DRIVER_GREEN) - qs)
     assert not missing, f"_DRIVER_GREEN entries no longer registered: {missing}"
+
+
+def test_bench_sweep_names_exist_in_registry():
+    """bench.py's secondary sweep looks queries up by name; a name the
+    registry no longer has would fail the sweep mid-run. Parsed, not
+    imported: importing bench.py sets process env for its own run."""
+    tree = ast.parse(open(os.path.join(REPO, "bench.py"), encoding="utf-8").read())
+    sweep = next(
+        ast.literal_eval(node.value)
+        for node in tree.body
+        if isinstance(node, ast.Assign)
+        and any(isinstance(t, ast.Name) and t.id == "BENCH_QUERIES" for t in node.targets)
+    )
+    qs = set(_entry_module().queries())
+    missing = sorted(set(sweep) - qs)
+    assert not missing, f"bench.py BENCH_QUERIES names no registered query: {missing}"

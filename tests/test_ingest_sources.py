@@ -128,21 +128,6 @@ def test_binaryfile_oversize_is_reject_not_crash(spark, tmp_path):
             assert r.error is None and r.payload is not None
 
 
-def test_binaryfile_feeds_multimodal_features(spark, tmp_path):
-    # The ingest output plugs straight into the multimodal feature stage.
-    from data_check_spark.operators.multimodal import extract_features
-
-    path, _ = _write_media(tmp_path)
-    media = read_media_dir(spark, path).select(
-        "media_id", "media_type", "payload",
-        F.create_map(F.lit("src"), F.lit("test")).alias("meta"),
-        F.col("rel_dir").alias("partition"),
-    )
-    feats = extract_features(media)
-    got = {r.media_id: r.ok for r in feats.collect()}
-    assert got == {"a": True, "b": True, "c": True, "d": True}
-
-
 def test_provenance_multi_file_addresses(spark, tmp_path):
     """Each row's (src_file, src_row_index) must name the actual file and
     0-based physical position that holds it — verified against pyarrow

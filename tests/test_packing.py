@@ -52,20 +52,11 @@ def test_pack_assignments_null_and_blank_text(spark):
     assert got == {1: (3, 0, 0), 2: (0, 0, 3), 3: (0, 0, 3), 4: (2, 0, 3)}
 
 
-def test_pack_assignments_precounted_tokens(spark):
-    df = spark.createDataFrame(
-        [(1, 5), (2, 5), (3, 2)], "doc_id long, toks int"
-    )
-    got = {r.doc_id: (r.pack_id, r.pack_offset, r.spans_boundary) for r in
-           pack_assignments(df, budget=8, n_tokens_col="toks").collect()}
-    assert got == {1: (0, 0, 0), 2: (0, 5, 1), 3: (1, 2, 0)}
-
-
 def test_pack_stats(spark):
     df = spark.createDataFrame(
-        [(1, 5), (2, 5), (3, 2)], "doc_id long, toks int"
+        [(1, "a b c d e"), (2, "f g h i j"), (3, "k l")], "doc_id long, text string"
     )
-    assign = pack_assignments(df, budget=8, n_tokens_col="toks")
+    assign = pack_assignments(df, budget=8)
     got = {r.pack_id: (r.n_docs, r.n_tokens_started, r.n_spanning, r.fill_bp)
            for r in pack_stats(assign, budget=8).collect()}
     assert got == {0: (2, 10, 1, 10000), 1: (1, 2, 0, 2500)}

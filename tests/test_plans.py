@@ -148,46 +148,6 @@ def test_corpus_curation_single_scan(spark):
     assert plan.count("Scan parquet") == 1
 
 
-def test_audio_stats_chained_python_stages_no_shuffle(spark):
-    """synth -> decode are chained Arrow stages over ONE scan: no shuffle
-    between them (the binary column is born and dies inside the python
-    stages), no join anywhere (BENCH/PLANS.md audio_stats_documents)."""
-    from data_check_spark.queries import QUERIES
-
-    plan = _plan(QUERIES["audio_stats_documents"](spark, SF_DIR))
-    assert plan.count("MapInPandas") == 2
-    assert plan.count("Scan parquet") == 1
-    assert "Join" not in plan and "CartesianProduct" not in plan
-    # the only exchange is the _docs_parallel round-robin repartition,
-    # BEFORE both python stages — nothing shuffles between synth and decode
-    assert plan.count("Exchange") == 1
-    assert plan.index("Exchange") > plan.index("MapInPandas")  # plan prints top-down
-
-
-def test_media_feature_extract_single_python_stage(spark):
-    """Payload synthesis is pure JVM projection; ONE mapInPandas consumes it
-    over a single scan with no join (BENCH/PLANS.md media_feature_extract)."""
-    from data_check_spark.queries import QUERIES
-
-    plan = _plan(QUERIES["media_feature_extract"](spark, SF_DIR))
-    assert plan.count("MapInPandas") == 1
-    assert plan.count("Scan parquet") == 1
-    assert "Join" not in plan and "CartesianProduct" not in plan
-
-
-def test_voiced_segments_chained_python_stages(spark):
-    """synth -> segment are chained Arrow stages over ONE scan, like
-    audio_stats; the per-clip segment fan-out happens inside the second
-    python stage, never via a join or an extra shuffle. The final sort is
-    the query's deterministic output ORDER BY."""
-    from data_check_spark.queries import QUERIES
-
-    plan = _plan(QUERIES["voiced_segments_documents"](spark, SF_DIR))
-    assert plan.count("MapInPandas") == 2
-    assert plan.count("Scan parquet") == 1
-    assert "Join" not in plan and "CartesianProduct" not in plan
-
-
 def test_cardinality_child_folds_before_join(spark):
     """Cardinality: the child side must collapse to (key, count) with a
     map-side partial BEFORE its exchange — child rows never shuffle — and

@@ -295,6 +295,18 @@ def test_misconfigured_rules_raise(spark):
         compile_rule(Rule("L1", "length", "c", {}))
 
 
+@pytest.mark.parametrize("severity", ["warn", "Warning", "info", ""])
+def test_unknown_severity_is_rejected_at_load(severity):
+    """Only "warning" spares a partition; a misspelt severity must fail the
+    catalog load, not silently count as an error."""
+    from data_check_spark.rules.spec import load_catalog
+
+    rule = {"rule_id": "SR_WARN", "kind": "not_null", "column": "sr_hz", "severity": severity}
+    with pytest.raises(ValueError, match="SR_WARN"):
+        load_catalog([rule])
+    assert load_catalog([{**rule, "severity": "warning"}]).get("SR_WARN").severity == "warning"
+
+
 def test_every_rule_kind_round_trips_through_json(tmp_path):
     """Rules ship as data (--files rules.json): every registered kind must
     survive to_json -> load_catalog unchanged — a kind that only works when

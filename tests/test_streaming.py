@@ -178,7 +178,7 @@ def test_stateful_dedup_catches_cross_batch_duplicate(spark, tmp_path):
 
     rows = spark.read.parquet(out_dir).collect()
     got = sorted((r["clip_id"], r["partition"], r["observed"]) for r in rows)
-    assert got == [("cdup", "p0", "dup_count=2"), ("cdup", "p1", "dup_count=2")]
+    assert got == [("cdup", "p0", "occurrence=1"), ("cdup", "p1", "occurrence=2")]
     assert all(r["rule_id"] == "STREAM_DUP" for r in rows)
 
     # third occurrence -> one more violation for the new row only
@@ -187,7 +187,45 @@ def test_stateful_dedup_catches_cross_batch_duplicate(spark, tmp_path):
     q = start_stateful_dedup(spark, in_dir, out_dir, checkpoint_dir=ckpt,
                              trigger_once=True)
     q.awaitTermination(120)
-    assert spark.read.parquet(out_dir).filter("partition = 'p2'").count() == 1
+    third = spark.read.parquet(out_dir).filter("partition = 'p2'").collect()
+    assert [r["observed"] for r in third] == ["occurrence=3"]
+
+
+def test_stateful_dedup_observed_is_batch_invariant(spark, tmp_path):
+    """The same waves drained one file per micro-batch and as one batch
+    emit the same (clip_id, observed) multiset: observed is the occurrence
+    ordinal, not the running count at emit time."""
+    import datetime as dt
+
+    from data_check_spark.streaming.stateful import start_stateful_dedup
+
+    ts = dt.datetime(2026, 1, 1, 0, 0, 0)
+    in_dir = str(tmp_path / "in")
+    waves = [
+        [("a", "p0"), ("b", "p0"), ("a", "p0")],   # in-wave duplicate
+        [("a", "p1"), ("c", "p1")],
+        [("b", "p2"), ("a", "p2"), ("c", "p2"), ("d", "p2")],
+    ]
+    for i, wave in enumerate(waves):
+        _write_batch(spark, in_dir,
+                     [(k, 16000, 1000, "flac", "t", p, ts) for k, p in wave], i)
+
+    def drain(tag, max_files):
+        out_dir = str(tmp_path / f"out_{tag}")
+        q = start_stateful_dedup(spark, in_dir, out_dir,
+                                 checkpoint_dir=str(tmp_path / f"ckpt_{tag}"),
+                                 trigger_once=True, max_files_per_trigger=max_files)
+        assert q.awaitTermination(120)
+        return sorted((r["clip_id"], r["observed"])
+                      for r in spark.read.parquet(out_dir).collect())
+
+    per_file = drain("per_file", 1)
+    assert per_file == drain("one_batch", len(waves))
+    assert per_file == sorted(
+        [("a", f"occurrence={k}") for k in range(1, 5)]
+        + [("b", "occurrence=1"), ("b", "occurrence=2"),
+           ("c", "occurrence=1"), ("c", "occurrence=2")]
+    )
 
 
 def test_violation_sessions_gap_semantics(spark, tmp_path):

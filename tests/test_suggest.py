@@ -123,6 +123,57 @@ def test_suggest_then_curate_preflight_integration(spark, tmp_path, capsys):
     assert m2["rule_violations"].get("LANG_SET") == 1
 
 
+def test_suggest_then_validate_job_integration(spark, tmp_path, capsys):
+    """suggest_rules on a bytes-free clip table → JSON → validate_job
+    --rules: the learned catalog flags nothing on the data it was learned
+    from and catches a drifted row appended later."""
+    import json
+
+    from data_check_spark.rules.suggest import suggest_rules
+    from jobs import validate_job
+
+    # bytes-free: the payload column is present (the clip contract) but NULL
+    schema = ("clip_id string, bytes binary, sr_hz int, dur_ms int, codec string,"
+              " transcript string, partition string")
+    rows = [
+        (f"clip_{i:04d}", None, [16000, 22050][i % 2], 1000 + 10 * i,
+         ["flac", "opus"][i % 2], f"utterance number {i}", f"p{i % 4}")
+        for i in range(40)
+    ]
+    df = spark.createDataFrame(rows, schema)
+    clips = str(tmp_path / "clips")
+    df.write.parquet(clips)
+
+    cat = suggest_rules(df)
+    rules_path = str(tmp_path / "rules.json")
+    cat.save(rules_path)
+
+    out1 = str(tmp_path / "r1")
+    assert validate_job.main([
+        "--input", clips, "--rules", rules_path, "--output-dir", out1,
+        "--run-ts", "2026-01-01 00:00:00",
+    ]) == 0
+    m1 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert m1["rows_scanned"] == 40 and m1["total_violations"] == 0
+
+    drifted = rows + [("clip_9999", None, 8000, 1205, "mp3", "late arrival", "p1")]  # sr + codec drift
+    clips2 = str(tmp_path / "clips2")
+    spark.createDataFrame(drifted, schema).write.parquet(clips2)
+    out2 = str(tmp_path / "r2")
+    assert validate_job.main([
+        "--input", clips2, "--rules", rules_path, "--output-dir", out2,
+        "--run-ts", "2026-01-01 00:00:00",
+    ]) == 0
+    m2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert m2["rows_scanned"] == 41
+    fired = {
+        (r["rule_id"], r["clip_id"])
+        for r in spark.read.parquet(f"{out2}/violations").collect()
+    }
+    assert {("SR_HZ_RANGE", "clip_9999"), ("CODEC_SET", "clip_9999")} <= fired
+    assert {clip for _, clip in fired} == {"clip_9999"}
+
+
 def test_suggest_decimal_range_keeps_rendered_bounds(spark):
     from decimal import Decimal
 

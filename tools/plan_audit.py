@@ -62,13 +62,6 @@ AUDITED = [
      "keyed (group window + broadcast category totals) — the only cross "
      "join is the 1-row grand-total broadcast, and the scored frame stays "
      "at observed (group, category) pairs."),
-    ("audio_stats_documents",
-     "Two chained Arrow python stages (synth then decode) over one "
-     "repartitioned scan — no shuffle between them, no join, the binary "
-     "column is born and dies inside the python stages."),
-    ("media_feature_extract",
-     "Payload synthesis is pure JVM projection; one mapInPandas stage "
-     "consumes it — single scan, zero shuffles before the final sort."),
     ("heavy_hitters_orders",
      "Misra–Gries candidates from ONE bounded mapInPandas pass (≤ budget "
      "rows per partition), then an exact recount where only candidate keys "
@@ -91,15 +84,6 @@ AUDITED = [
      "One counts-only groupBy(day) pass with map-side partials; the "
      "trailing window then runs over the tiny per-day frame (365 rows/yr "
      "regardless of corpus size) — its single partition is deliberate."),
-    ("voiced_segments_documents",
-     "Two chained Arrow python stages (burst synth, then framed "
-     "segmentation) over one repartitioned scan — the segment fan-out "
-     "happens inside the second stage, no join, no shuffle between them; "
-     "the binary column is born and dies inside the python stages."),
-    ("audio_fingerprint_documents",
-     "Acoustic-dedup fingerprints: the two-gain fan-out is a map-side "
-     "explode in the scan projection (one scan, no self-join); synth and "
-     "fingerprint are chained Arrow stages with no shuffle between them."),
     ("token_budget_documents",
      "Token-budget curation with NO global sort: one counts-only "
      "(domain, score-bucket) aggregation plans the cut; the corpus is then "
@@ -123,18 +107,6 @@ AUDITED = [
      "over the scan (the quantized-norm fold excludes non-finite elements "
      "inside the expression) — no exchange, no Python, nothing but the "
      "scan before the output."),
-    ("container_sniff_documents",
-     "Container sniffing is substring+hex CASE inside the scan projection "
-     "— one pass, the binary payload is born and dies in the same stage, "
-     "no shuffle, no Python."),
-    ("autocorr_documents",
-     "Two chained Arrow python stages (square-wave synth, then integer "
-     "autocorrelation) over one repartitioned scan — the per-lag fan-out "
-     "happens inside the second stage; no join, no shuffle between them."),
-    ("compaction_plan_documents",
-     "Compaction planning touches only the file inventory (one row per "
-     "FILE): a single keyed exchange for the per-dir name-ordered window; "
-     "the data files themselves are never read by the planner."),
     ("reconcile_orders_lineitem",
      "Header↔detail reconciliation: the child side collapses to (key, "
      "partial cents) with a map-side partial aggregate BEFORE its exchange "
@@ -187,11 +159,6 @@ AUDITED = [
     ("transcript_wer_documents",
      "Word-level WER: one codegen'd projection (vocab sort + char encode + "
      "levenshtein DP all JVM-side) — zero Exchange, zero Python."),
-    ("transcript_alignment_documents",
-     "Transcript→audio alignment: token prefix sums via aggregate() HOFs "
-     "(NO per-doc Window), spans fold to one row per clip, one equi-join "
-     "keyed by doc_id; per-token span lookup is an array filter over the "
-     "clip's own spans."),
     ("tar_roundtrip_documents",
      "Tar import: binaryFile scan (one shard file = one task, glob-pruned) "
      "feeding ONE mapInPandas parse — members regroup to samples in-task, "

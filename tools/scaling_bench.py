@@ -109,13 +109,6 @@ def main() -> None:
         "",
         f"Recorded {time.strftime('%Y-%m-%d %H:%M:%S UTC', time.gmtime())}; "
         "harness: tools/scaling_bench.py; per-run JSON via bench.py.",
-        "",
-        "## Documents-pipeline scaling",
-        "",
-        "The same N-vs-4N protocol applied to the text/dedup operator family",
-        "(fused curation scan → exact dedup → MinHash-LSH → SimHash over a",
-        "deterministic synthetic corpus) is recorded in BENCH/DOCS_SCALING.md —",
-        "harness: tools/docs_scaling_bench.py.",
     ]
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     out_path = os.path.join(REPO, "BENCH", "BASELINE.md")
