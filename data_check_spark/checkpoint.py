@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_check_spark.schemas import CHECKPOINT_SCHEMA
+from data_check_spark.schemas import CHECKPOINT_SCHEMA, literal_frame
 
 # Sentinel "partition" recording that the owner batch (batch 0 of a
 # partition-batched run) finished its run-level duties: global-grain rules,
@@ -54,8 +54,8 @@ def write_checkpoint(
         F.current_timestamp().alias("completed_at"),
     )
     if owner_sentinel:
-        spark = verdicts.sparkSession
-        sentinel = spark.createDataFrame(
+        sentinel = literal_frame(
+            verdicts.sparkSession,
             [(OWNER_SENTINEL, "done", None, None, None, run_id)],
             "partition string, status string, rows_scanned long, "
             "violations long, wall_time_ms long, lineage string",
@@ -72,7 +72,7 @@ def mark_failed(spark: SparkSession, checkpoint_dir: str, partition: str, run_id
     # and lose the max_by(completed_at) ordering to an earlier 'done' row.
     now = _dt.datetime.now(_dt.timezone.utc)
     row = [(partition, "failed", None, None, None, run_id, now)]
-    spark.createDataFrame(row, CHECKPOINT_SCHEMA).write.mode("append").parquet(checkpoint_dir)
+    literal_frame(spark, row, CHECKPOINT_SCHEMA).write.mode("append").parquet(checkpoint_dir)
 
 
 def owner_complete(spark: SparkSession, checkpoint_dir: str) -> bool:

@@ -80,9 +80,12 @@ from data_check_spark.rules.compiler import (
     resolve_row_rules,
 )
 from data_check_spark.rules.spec import Rule, RuleCatalog
-from data_check_spark.schemas import CLIPS_SCHEMA, validate_schema
-
-_VIOLATION_SCHEMA = "rule_id string, clip_id string, partition string, observed string"
+from data_check_spark.schemas import (
+    CLIPS_SCHEMA,
+    VIOLATIONS_SCHEMA,
+    literal_frame,
+    validate_schema,
+)
 
 
 @dataclass
@@ -583,7 +586,7 @@ def run_validation(
     if synthetic or not parts:
         # Without parts (legal but empty catalog, no synthetic rows) this is
         # an empty violations frame, not a reduce() over an empty iterable.
-        parts.append(spark.createDataFrame(synthetic, _VIOLATION_SCHEMA))
+        parts.append(literal_frame(spark, synthetic, VIOLATIONS_SCHEMA))
     # localCheckpoint (lazy) rather than persist: a persisted plan compiles
     # non-adaptively (no runtime broadcast conversion) and measured 5x
     # slower; the checkpoint materializes through the normal AQE path on the
@@ -630,8 +633,8 @@ def run_validation(
         # always passes resume=True) could never report an empty table.
         fresh_run = not (resume and checkpoint_dir) and not exclude_partitions
         if fresh_run or not clips_full.select(partition_col).take(1):
-            empty_row = spark.createDataFrame(
-                [("EMPTY_INPUT", "N/A", None, "fact table has no rows")], _VIOLATION_SCHEMA
+            empty_row = literal_frame(
+                spark, [("EMPTY_INPUT", "N/A", None, "fact table has no rows")], VIOLATIONS_SCHEMA
             )
             violations = violations.unionByName(empty_row)
 
@@ -778,9 +781,9 @@ def reconcile_outputs(
             "fallback_lineage was given — nothing to reconcile against"
         )
     pair_df = F.broadcast(
-        spark.createDataFrame(
-            pairs or [(None, None)], "partition string, run_id string"
-        ).filter(F.col("partition").isNotNull())
+        literal_frame(spark, pairs, "partition string, run_id string").filter(
+            F.col("partition").isNotNull()
+        )
     )
     owner_rids = {s["lineage"] for s in sentinel} | (
         {fallback_lineage} if fallback_lineage is not None and not rows else set()

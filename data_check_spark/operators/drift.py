@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_check_spark.operators import tdigest as td
+from data_check_spark.schemas import BASELINE_STATS_SCHEMA, literal_frame
 
 GLOBAL_KEY = "__global__"
 
@@ -88,7 +89,7 @@ def _merge_partition_digests(chunks: DataFrame) -> DataFrame:
 
 
 def make_baseline(spark: SparkSession, df: DataFrame, columns: list[str]) -> DataFrame:
-    """Baseline snapshot table (BASELINE_STATS_SCHEMA): per-partition digests
+    """Baseline snapshot table (``BASELINE_STATS_SCHEMA``): per-partition digests
     for each column + one __global__ row, computed from a clean reference run.
 
     ONE multi-column chunk pass over the reference table serves both levels
@@ -115,8 +116,7 @@ def make_baseline(spark: SparkSession, df: DataFrame, columns: list[str]) -> Dat
         zero = (td.TDigest(np.empty(0), np.empty(0)), 0)
         g, n = rows.treeAggregate(zero, seq, comb, depth=2)
         globals_rows.append((GLOBAL_KEY, c, td.serialize(g), n))
-    gdf = spark.createDataFrame(globals_rows, _CHUNK_SCHEMA)
-    return out.unionByName(gdf)
+    return out.unionByName(literal_frame(spark, globals_rows, BASELINE_STATS_SCHEMA))
 
 
 def drift_violations_multi(
@@ -179,9 +179,8 @@ def drift_violations_multi(
     # One output row per (partition, rule): a broadcast join against the
     # tiny rules frame lets SEVERAL rules (e.g. warn + error thresholds)
     # monitor the same column — a per-column when-chain would be last-wins.
-    rules_df = scored.sparkSession.createDataFrame(
-        [(r_id, c, float(r_thr)) for r_id, c, r_thr in rules],
-        "rule_id string, column_name string, _thr double",
+    rules_df = literal_frame(
+        scored.sparkSession, rules, "rule_id string, column_name string, _thr double"
     )
     # NaN compares greater than any number in Spark SQL, so a sketch-less or
     # all-null partition (NaN w1) stays fail-closed → flagged.

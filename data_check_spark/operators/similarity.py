@@ -679,11 +679,6 @@ def ivf_add_batch(spark, path: str, new_vectors: DataFrame) -> None:
     )
 
 
-EMBEDDING_QUALITY_RULES = (
-    "EMB_NULL", "EMB_DIM", "EMB_NON_FINITE", "EMB_ZERO", "EMB_NORM_RANGE",
-)
-
-
 def embedding_quality(
     df: DataFrame,
     *,

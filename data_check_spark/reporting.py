@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_check_spark.rules.spec import RuleCatalog
+from data_check_spark.schemas import literal_frame
 
 
 def filter_violations(df: DataFrame, *, search: str | None = None) -> DataFrame:
@@ -55,9 +56,7 @@ def with_messages(violations: DataFrame, catalog: RuleCatalog) -> DataFrame:
     (user message > name > rule id — the reference's override chain)."""
     spark = violations.sparkSession
     rows = [(r.rule_id, catalog.message_for(r.rule_id), r.severity) for r in catalog]
-    msgs = F.broadcast(
-        spark.createDataFrame(rows, "rule_id string, message string, severity string")
-    )
+    msgs = F.broadcast(literal_frame(spark, rows, "rule_id string, message string, severity string"))
     # replace semantics: re-enriching an already-enriched frame is a no-op
     # rather than an AMBIGUOUS_REFERENCE error
     base = violations.drop("message", "severity")

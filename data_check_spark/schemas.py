@@ -14,7 +14,8 @@ physically partitioned by.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # --- input fact table -------------------------------------------------------
@@ -32,20 +33,6 @@ CLIPS_SCHEMA = T.StructType(
 )
 
 # --- dimension tables (broadcast-side) --------------------------------------
-
-TRANSCRIPTS_SCHEMA = T.StructType(
-    [
-        T.StructField("clip_id", T.StringType(), False),
-        T.StructField("transcript_ref", T.StringType(), True),
-    ]
-)
-
-CODEC_WHITELIST_SCHEMA = T.StructType(
-    [
-        T.StructField("codec", T.StringType(), False),
-        T.StructField("allowed", T.BooleanType(), False),
-    ]
-)
 
 BASELINE_STATS_SCHEMA = T.StructType(
     [
@@ -70,16 +57,6 @@ VIOLATIONS_SCHEMA = T.StructType(
     ]
 )
 
-PARTITION_VERDICTS_SCHEMA = T.StructType(
-    [
-        T.StructField("partition", T.StringType(), False),
-        T.StructField("passed", T.BooleanType(), False),
-        T.StructField("rows_scanned", T.LongType(), False),
-        T.StructField("violations", T.LongType(), False),
-        T.StructField("wall_time_ms", T.LongType(), True),
-    ]
-)
-
 CHECKPOINT_SCHEMA = T.StructType(
     [
         T.StructField("partition", T.StringType(), False),
@@ -91,6 +68,28 @@ CHECKPOINT_SCHEMA = T.StructType(
         T.StructField("completed_at", T.TimestampType(), True),
     ]
 )
+
+
+def literal_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType | str) -> DataFrame:
+    """A small frame of driver-side rows, built as JVM Column algebra.
+
+    ``spark.createDataFrame(<list>)`` scans a Python RDD: each of its tasks
+    starts a Python worker that runs no UDF, yet imports pyspark from the
+    uncached ``pyspark.zip`` and holds a task slot meanwhile. Here each
+    column is an array of literals, zipped into rows, cast once to the
+    schema and exploded over a one-row range, so no Python runs at
+    execution time. Each cell costs one py4j call on the driver (~0.2 ms);
+    a per-cell cast or a per-row struct costs ~1 ms more. Columns come out
+    nullable."""
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    if not rows:
+        return spark.range(0).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+        )
+    arrays = [F.array(*map(F.lit, column)) for column in zip(*rows, strict=True)]
+    nullable = T.StructType([T.StructField(f.name, f.dataType) for f in schema.fields])
+    return spark.range(1).select(F.inline(F.arrays_zip(*arrays).cast(T.ArrayType(nullable))))
 
 
 def validate_schema(df: DataFrame, expected: T.StructType, *, strict_nullability: bool = False) -> list[str]:

@@ -53,8 +53,12 @@ _BASE_CONF: dict[str, str] = {
 # most 75% of RAM and leaves the rest to the OS and page cache. Out of that
 # share come the JVM's off-heap memory (direct buffers, metaspace, code
 # cache, thread stacks: measured ~1.7 GB at 1M clips on local[4], with both
-# an 8g and an 11g heap) and the Python workers (~100 MB each at 1M clips;
-# about 2 per task thread plus the driver and the daemon — 10 at local[4]).
+# an 8g and an 11g heap) and the Python workers (~100 MB each at 1M clips).
+# Polling the PySpark daemon's children through one cold perfbench
+# validation (20k and 50k clips, local[4]) counts at most one worker per
+# task thread: 4, down from 8 once the literal tables stopped scanning a
+# Python RDD. The reserve still counts 2 per task thread plus the driver
+# and the daemon (10 at local[4]) until a 1M-clip run re-measures it.
 # The driver heap gets the rest, capped at 16g.
 _HEAP_CAP_MB = 16 * 1024
 _HEAP_FLOOR_MB = 512

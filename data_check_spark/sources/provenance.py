@@ -20,9 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: provenance columns appended by :func:`read_parquet_with_provenance`
-PROVENANCE_COLS = ("src_file", "src_file_size", "src_row_index")
-
 
 def read_parquet_with_provenance(spark: SparkSession, path: str) -> DataFrame:
     """Parquet scan with ``(src_file, src_file_size, src_row_index)``

@@ -30,7 +30,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def read_tar_shards(spark: SparkSession, path: str, *, payloads: dict[str, str]) -> DataFrame:

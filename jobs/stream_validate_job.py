@@ -127,8 +127,9 @@ def main(argv: list[str] | None = None) -> int:
 
     from data_check_spark.rules.compiler import resolve_row_rules
     from data_check_spark.rules.spec import RuleCatalog
+    from data_check_spark.schemas import literal_frame
 
-    probe = spark.createDataFrame([], schema)
+    probe = literal_frame(spark, [], schema)
     dropped = {}
     for r, exc in resolve_row_rules(probe, catalog.row_local, run_ts)[1]:
         if not isinstance(exc, AnalysisException) or isinstance(exc, ParseException):

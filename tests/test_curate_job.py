@@ -1,7 +1,10 @@
 """Corpus-curation spark-submit entry point: end-to-end wiring through main()."""
 
 import json
+import os
 import sys
+
+JOBS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs")
 
 
 def _write_docs(spark, path, rows):
@@ -9,7 +12,7 @@ def _write_docs(spark, path, rows):
 
 
 def test_curate_job_end_to_end(spark, tmp_path, capsys):
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS)
     import curate_job
 
     good = "the quick brown fox jumps over the lazy dog near the river bank today"
@@ -56,7 +59,7 @@ def test_curate_job_end_to_end(spark, tmp_path, capsys):
 
 
 def test_curate_job_near_dup_keeps_best_copy(spark, tmp_path, capsys):
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS)
     import curate_job
 
     base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
@@ -84,7 +87,7 @@ def test_curate_job_near_dup_keeps_best_copy(spark, tmp_path, capsys):
 def test_curate_job_history_chain_drops_previously_shipped(spark, tmp_path, capsys):
     """Release 2 passes release 1's fingerprints as --history: re-ingested
     content is dropped as seen_before, genuinely new docs ship."""
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS)
     import curate_job
 
     r1_rows = [(i, f"release one document {i} " + "alpha beta gamma " * 5, "en", "s0")
@@ -119,7 +122,7 @@ def test_curate_job_history_chain_drops_previously_shipped(spark, tmp_path, caps
 
 
 def test_curate_job_percentile_cut_and_dry_run(spark, tmp_path, capsys):
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS)
     import curate_job
 
     # quality strictly increases with length band (distinct tokens, no punct)
@@ -148,7 +151,7 @@ def test_curate_job_percentile_cut_and_dry_run(spark, tmp_path, capsys):
 
 
 def test_curate_job_preflight_rules_and_token_budget(spark, tmp_path, capsys):
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS)
     import curate_job
 
     from data_check_spark.rules.catalog_corpus import corpus_catalog
@@ -194,7 +197,7 @@ def test_curate_job_preflight_rules_and_token_budget(spark, tmp_path, capsys):
 
 
 def test_curate_job_quarantine_audit_trail(spark, tmp_path, capsys):
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS)
     import curate_job
 
     rows = [(i, " ".join(f"t{i}w{j}" for j in range(30)), "en", "s0") for i in range(6)]
@@ -216,7 +219,7 @@ def test_curate_job_quarantine_audit_trail(spark, tmp_path, capsys):
 
 
 def test_curate_job_semantic_dedup_keeps_best_copy(spark, tmp_path, capsys):
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS)
     import curate_job
 
     # docs 1 and 2: different text, near-identical embeddings (semantic dups;
@@ -254,7 +257,7 @@ def test_curate_job_semantic_dedup_keeps_best_copy(spark, tmp_path, capsys):
 def test_curate_job_empty_release_is_graceful_and_chainable(spark, tmp_path, capsys):
     """Incremental run where history covers the entire batch: kept_rows 0,
     exit 0, no corpus dir, and the (empty) fingerprint store still chains."""
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS)
     import curate_job
 
     rows = [(i, f"doc number {i} " + "tok " * 20, "en", "s0") for i in range(6)]
@@ -290,7 +293,7 @@ def test_curate_job_empty_release_is_graceful_and_chainable(spark, tmp_path, cap
 
 
 def test_curate_job_union_history_store_is_self_contained(spark, tmp_path, capsys):
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS)
     import curate_job
 
     r1 = [(i, f"first wave doc {i} " + "a " * 20, "en", "s0") for i in range(3)]
@@ -329,7 +332,7 @@ def test_curate_job_union_history_store_is_self_contained(spark, tmp_path, capsy
 def test_curate_job_null_id_rows_are_tallied_not_lost(spark, tmp_path, capsys):
     """A NULL id never equi-joins; it must surface as drop_reason null_id,
     not vanish from the manifest arithmetic."""
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS)
     import curate_job
 
     rows = [(1, "fine document " + "tok " * 20, "en", "s0"),
@@ -352,7 +355,7 @@ def test_curate_job_null_id_rows_are_tallied_not_lost(spark, tmp_path, capsys):
 def test_curate_job_tar_export(spark, tmp_path, capsys):
     import tarfile
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS)
     import curate_job
 
     rows = [(i, f"tar doc {i} " + "tok " * 20, "en", "s0") for i in range(9)]

@@ -8,9 +8,10 @@ no execution — runs in seconds, no Spark session) and fails if any output
 column's type falls outside the hash-safe allowlist.
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def test_all_oracle_outputs_hash_safe():

@@ -230,3 +230,33 @@ def test_ivf_add_batch_assignment_no_join_no_shuffle(spark):
     plan = _plan(portable_ivf_assign(emb, cents))
     assert "Join" not in plan
     assert "Exchange" not in plan
+
+
+def test_literal_frame_is_jvm_only(spark):
+    """Driver-side literal rows scan no RDD: a Python-RDD scan would start a
+    Python worker per task that runs no UDF."""
+    from data_check_spark.schemas import VIOLATIONS_SCHEMA, literal_frame
+
+    for rows in ([("R", None, "p0", "x"), ("S", "c1", None, None)], []):
+        plan = _plan(literal_frame(spark, rows, VIOLATIONS_SCHEMA))
+        assert "ExistingRDD" not in plan and "PythonRDD" not in plan
+        assert "Python" not in plan and "Pandas" not in plan
+
+
+def test_drift_plan_scans_no_python_rdd(spark, tmp_path):
+    """The drift rule table joins in as JVM literals: the only Python in the
+    plan is the two t-digest stages over the table itself."""
+    from pyspark.sql import functions as F
+
+    from data_check_spark.operators.drift import drift_violations_multi, make_baseline
+
+    current = spark.range(1200).select(
+        F.concat(F.lit("p"), (F.col("id") % 6).cast("string")).alias("partition"),
+        (F.col("id") * 7 % 1000).cast("double").alias("dur_ms"),
+    )
+    path = str(tmp_path / "baseline")
+    make_baseline(spark, current, ["dur_ms"]).write.parquet(path)
+    rules = [("DRIFT", "dur_ms", 0.25), ("DRIFT_WARN", "dur_ms", 0.1)]
+    plan = _plan(drift_violations_multi(current, spark.read.parquet(path), rules))
+    assert "ExistingRDD" not in plan and "PythonRDD" not in plan
+    assert plan.count("MapInPandas") == 2 and plan.count("FlatMapGroupsInPandas") == 1

@@ -14,12 +14,17 @@ of a package function or method that no reached call sets has one value in
 use, so it is a constant, not an option. Delete it, or, if it belongs to a
 ``KEEP`` definition, names a resource outside the program, or switches on
 a check of outside input, add it to ``KEEP_OPTIONS`` with the reason.
+
+The constant audit flags a module-level UPPER_CASE name of the package that
+no file (package, roots or ``tests/``) reads; being assigned is not a read.
+``KEEP`` is the escape hatch here too.
 """
 
 from __future__ import annotations
 
 import ast
 import os
+import re
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "data_check_spark"
@@ -108,7 +113,7 @@ class _Module:
                 while isinstance(cur, ast.Attribute):
                     chain.append(cur.attr)
                     cur = cur.value
-                if not isinstance(cur, ast.Name):
+                if not isinstance(cur, ast.Name) or isinstance(node.ctx, ast.Store):
                     continue
                 head = self.binds.get(cur.id, f"{self.name}.{cur.id}")
                 out.add(".".join([head] + chain[::-1]))
@@ -120,15 +125,12 @@ def _is_register(dec: ast.AST) -> bool:
     return isinstance(fn, ast.Name) and fn.id == "register"
 
 
-def _walk():
-    """Parse the package and the roots and follow every use from the roots.
-    Returns the package modules by name, the reached ``module`` and
-    ``module.def`` names, and every (module, nodes) the walk read."""
-    pkg = {m.name: m for m in map(_Module, _py_files(PKG))}
-    roots = [_Module(p) for rel in ROOT_PATHS for p in _py_files(rel)]
+def _resolver(pkg: dict[str, _Module], names):
+    """``resolve(dotted)``: follow a dotted name through re-exports to
+    ``module.name`` for a ``name`` in ``names(module)``, else to the
+    innermost package ``module``, else None."""
 
     def resolve(dotted: str, seen=()) -> str | None:
-        """Follow a dotted name to ``module.def`` or ``module`` in the package."""
         parts = dotted.split(".")
         for i in range(len(parts), 0, -1):
             mod = pkg.get(".".join(parts[:i]))
@@ -137,13 +139,24 @@ def _walk():
             rest = parts[i:]
             if not rest:
                 return mod.name
-            if rest[0] in mod.defs:
+            if rest[0] in names(mod):
                 return f"{mod.name}.{rest[0]}"
             target = mod.binds.get(rest[0])
             if target and target not in seen:
                 return resolve(".".join([target] + rest[1:]), seen + (target,))
             return mod.name
         return None
+
+    return resolve
+
+
+def _walk():
+    """Parse the package and the roots and follow every use from the roots.
+    Returns the package modules by name, the reached ``module`` and
+    ``module.def`` names, and every (module, nodes) the walk read."""
+    pkg = {m.name: m for m in map(_Module, _py_files(PKG))}
+    roots = [_Module(p) for rel in ROOT_PATHS for p in _py_files(rel)]
+    resolve = _resolver(pkg, lambda mod: mod.defs)
 
     reached: set[str] = set()
     todo: list[tuple[_Module, list]] = [(r, [r.tree]) for r in roots]
@@ -187,6 +200,26 @@ def unreached() -> list[str]:
             continue
         dead += [f"{mod.name}.{d}" for d in mod.defs if f"{mod.name}.{d}" not in reached]
     return sorted(dead)
+
+
+def unreferenced_constants() -> list[str]:
+    """``module.NAME`` for each module-level UPPER_CASE assignment in the
+    package that no file loads; the assignment's own target is not a load."""
+    pkg = {m.name: m for m in map(_Module, _py_files(PKG))}
+    consts = {
+        name: {
+            t.id
+            for node in mod.tree.body
+            if isinstance(node, (ast.Assign, ast.AnnAssign))
+            for t in (node.targets if isinstance(node, ast.Assign) else [node.target])
+            if isinstance(t, ast.Name) and re.fullmatch(r"_?[A-Z][A-Z0-9_]*", t.id)
+        }
+        for name, mod in pkg.items()
+    }
+    resolve = _resolver(pkg, lambda mod: consts[mod.name])
+    readers = list(pkg.values()) + [_Module(p) for rel in ROOT_PATHS + ["tests"] for p in _py_files(rel)]
+    used = {resolve(d) for mod in readers for d in mod.loads([mod.tree])}
+    return sorted(f"{m}.{c}" for m, names in consts.items() for c in names if f"{m}.{c}" not in used)
 
 
 def _defaulted(fn) -> list[str]:
@@ -301,6 +334,14 @@ def test_every_package_definition_is_reachable_from_an_entry_point():
     assert not dead, (
         f"{len(dead)} definitions in {PKG}/ are reached by no entry point "
         f"({', '.join(ROOT_PATHS)}, @register queries); delete them:\n  " + "\n  ".join(dead)
+    )
+
+
+def test_every_package_constant_is_referenced():
+    dead = [c for c in unreferenced_constants() if c not in KEEP]
+    assert not dead, (
+        f"{len(dead)} module-level constants in {PKG}/ are read by no file; "
+        "delete them:\n  " + "\n  ".join(dead)
     )
 
 

@@ -5,6 +5,8 @@ Mirrors the reference's test strategy: a parameter table of
 whitespace/full-width rows (reference: tests/test_chk_0005.py:8-23,
 tests/test_chk_0008.py:11-20)."""
 
+import os
+
 import pytest
 
 from data_check_spark.rules.compiler import apply_row_rules, compile_row_rules
@@ -172,7 +174,9 @@ def test_shipped_rules_json_matches_catalog():
     from data_check_spark.rules.catalog_audio import audio_catalog
     from data_check_spark.rules.spec import load_catalog
 
-    shipped = load_catalog("/root/repo/rules/audio_rules.json")
+    shipped = load_catalog(
+        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "rules", "audio_rules.json")
+    )
     default = audio_catalog()
     assert [r.to_dict() for r in shipped] == [r.to_dict() for r in default]
 

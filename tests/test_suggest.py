@@ -1,6 +1,8 @@
 """Rule suggestion: profile → proposed catalog → rules hold on the profiled
 data and catch planted deviations on a drifted copy."""
 
+import os
+
 import pytest
 
 
@@ -97,7 +99,7 @@ def test_suggest_then_curate_preflight_integration(spark, tmp_path, capsys):
     rules_path = str(tmp_path / "rules.json")
     cat.save(rules_path)
 
-    _sys.path.insert(0, "/root/repo/jobs")
+    _sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs"))
     import curate_job
 
     out1 = str(tmp_path / "r1")

@@ -1,7 +1,10 @@
 """spark-submit entry point: end-to-end arg wiring through main()."""
 
 import json
+import os
 import sys
+
+JOBS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs")
 
 
 def test_validate_job_end_to_end(spark, tmp_path, capsys):
@@ -9,7 +12,7 @@ def test_validate_job_end_to_end(spark, tmp_path, capsys):
     verdicts + checkpoint, prints one JSON summary line."""
     from data_check_spark import datagen
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS)
     import validate_job
 
     clips = str(tmp_path / "clips")

@@ -18,7 +18,7 @@ os.environ["DATA_CHECK_ORACLE_PATH_TEMPLATED"] = "1"
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -63,7 +63,7 @@ def main():
     if unknown_flags:
         sys.exit(f"unknown flags: {unknown_flags}")
     only = set(args)
-    spark = get_spark("oracle_check", master="local[8]")
+    spark = get_spark("oracle_check")
     con = duckdb.connect()
     # Disk guard: a runaway oracle plan (e.g. an uncapped shingle self-join)
     # must fail ITS query, not fill the VM's root disk for everyone.
