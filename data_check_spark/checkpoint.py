@@ -75,19 +75,29 @@ def mark_failed(spark: SparkSession, checkpoint_dir: str, partition: str, run_id
     literal_frame(spark, row, CHECKPOINT_SCHEMA).write.mode("append").parquet(checkpoint_dir)
 
 
+def _latest_done(cp: DataFrame) -> DataFrame:
+    """(partition, lineage, completed_at) of each partition whose LATEST
+    checkpoint row says done — a later ``failed`` row (mark_failed)
+    un-does an earlier ``done``."""
+    return (
+        cp.groupBy("partition")
+        .agg(
+            F.max_by(
+                F.struct("status", "lineage", "completed_at"), F.col("completed_at")
+            ).alias("w")
+        )
+        .filter(F.col("w.status") == "done")
+        .select("partition", "w.lineage", "w.completed_at")
+    )
+
+
 def owner_complete(spark: SparkSession, checkpoint_dir: str) -> bool:
     """True iff a previous attempt's owner batch completed (sentinel row
     present with latest status done)."""
     cp = read_checkpoint(spark, checkpoint_dir)
     if cp is None:
         return False
-    latest = (
-        cp.filter(F.col("partition") == OWNER_SENTINEL)
-        .groupBy("partition")
-        .agg(F.max_by("status", F.col("completed_at")).alias("status"))
-        .filter(F.col("status") == "done")
-    )
-    return bool(latest.take(1))
+    return bool(_latest_done(cp.filter(F.col("partition") == OWNER_SENTINEL)).take(1))
 
 
 def read_checkpoint(spark: SparkSession, checkpoint_dir: str) -> DataFrame | None:
@@ -113,14 +123,8 @@ def completed_partitions(spark: SparkSession, checkpoint_dir: str) -> list[str]:
     cp = read_checkpoint(spark, checkpoint_dir)
     if cp is None:
         return []
-    latest = (
-        cp.filter(
-            F.col("partition").isNotNull()
-            & (F.col("partition") != OWNER_SENTINEL)
-        )
-        .groupBy("partition")
-        .agg(F.max_by("status", F.col("completed_at")).alias("status"))
-        .filter(F.col("status") == "done")
+    latest = _latest_done(
+        cp.filter(F.col("partition").isNotNull() & (F.col("partition") != OWNER_SENTINEL))
     )
     return [r["partition"] for r in latest.select("partition").collect()]
 

@@ -23,7 +23,10 @@ Plan shape (scale rationale):
   regardless of rule count.
 - Set-oriented rules each contribute their own (shuffle-bearing) subplan:
   salted two-phase uniqueness, broadcast/SMJ referential joins, sketch-only
-  drift shuffle — all reading the narrow cache, never the wide scan. What
+  drift shuffle — all reading the narrow cache, never the wide scan. The
+  FK-anti, orphan and transcript-match rules on one dimension key share
+  ONE join (``fused_dim_checks``) in every run mode — fresh, resumed,
+  owner or member batch — and there is no per-rule path for them. What
   each kind emits, how it takes its gate, its resume/batch grain, its slot
   in the fused dim join and the dims it reads live in ONE table,
   ``SET_RULE_KINDS``; ``run_validation`` derives everything from it.
@@ -49,7 +52,6 @@ from data_check_spark.operators.audio import (
     SNR_COL,
     prepare_clips,
     snr_column_violations,
-    transcript_match_violations,
     transcript_wer_violations,
 )
 from data_check_spark.operators.drift import (
@@ -61,10 +63,8 @@ from data_check_spark.operators.drift import (
 from data_check_spark.operators.funcdep import func_dep_violations
 from data_check_spark.operators.profile import agg_threshold_violations, outlier_violations
 from data_check_spark.operators.referential import (
-    anti_join_violations,
     cardinality_rule_violations,
     fused_dim_checks,
-    orphan_violations,
     reconcile_violations,
     semi_join_violations,
 )
@@ -130,7 +130,7 @@ def _ref_key(rule: Rule) -> tuple[str, str, str]:
 
 
 def _text_key(rule: Rule) -> tuple[str, str, str]:
-    # params["dim_key"] is the join key on BOTH sides, fused or standalone
+    # params["dim_key"] is the join key on BOTH sides
     key = rule.params.get("dim_key", "clip_id")
     return rule.params["dim"], key, key
 
@@ -153,12 +153,14 @@ class SetKind:
     """What the engine knows about one set-oriented rule kind.
 
     ``emit(rule, clips, dims, gate, partition_col, dups)`` builds the
-    violations (None: the kind runs in a shared pass of its own);
+    violations (None: the kind runs in a shared pass — the drift sketches
+    or the dim join);
     ``gate(rule)`` is one of the GATE_* values above; ``global_grain(rule,
     partition_col)``: the result depends on rows outside a partition, so a
     resume run evaluates it over the full table and member batches skip it;
-    ``fuse(rule)``: (slot, (dim, fact_key, dim_key)) in the one full-outer
-    join per dim (``fused_dim_checks``); ``dims(rule)``: dimensions read;
+    ``fuse(rule)``: (slot, (dim, fact_key, dim_key)) in the one join per
+    dim (``fused_dim_checks``) — a rule with a slot never runs alone;
+    ``dims(rule)``: dimensions read;
     ``dup_key(rule)``: key column whose duplicate-key set siblings share."""
 
     emit: Callable[..., DataFrame] | None
@@ -170,25 +172,21 @@ class SetKind:
 
 
 def _referential(rule, clips, dims, gate, partition_col, dups):
-    dim, fact_key, dim_key = _ref_key(rule)
-    keys = dict(fact_key=fact_key, dim_key=dim_key)
-    if _mode(rule) == "orphan":
-        return orphan_violations(clips, dims[dim], rule.rule_id, **keys)
-    join = {"anti": anti_join_violations, "semi": semi_join_violations}.get(_mode(rule))
-    if join is None:
+    # anti and orphan rules have a slot in the dim join (``fuse``)
+    if _mode(rule) != "semi":
         raise ValueError(f"unknown referential mode {_mode(rule)!r} ({rule.rule_id})")
-    return join(clips, dims[dim], rule.rule_id, gate=gate, partition_col=partition_col, **keys)
+    dim, fact_key, dim_key = _ref_key(rule)
+    return semi_join_violations(clips, dims[dim], rule.rule_id, fact_key=fact_key,
+                                dim_key=dim_key, gate=gate, partition_col=partition_col)
 
 
-def _transcript(operator, *names):
-    def emit(rule, clips, dims, gate, partition_col, dups):
-        dim, fact_key, dim_key = _text_key(rule)
-        fact_text, ref_text = _text_cols(rule)
-        return operator(clips, dims[dim], rule.rule_id, fact_key=fact_key, dim_key=dim_key,
-                        fact_text=fact_text, ref_text=ref_text, partition_col=partition_col,
-                        **_opts(rule, *names))
-
-    return emit
+def _transcript_wer(rule, clips, dims, gate, partition_col, dups):
+    dim, fact_key, dim_key = _text_key(rule)
+    fact_text, ref_text = _text_cols(rule)
+    return transcript_wer_violations(
+        clips, dims[dim], rule.rule_id, fact_key=fact_key, dim_key=dim_key,
+        fact_text=fact_text, ref_text=ref_text, partition_col=partition_col,
+        **_opts(rule, "max_wer_bp"))
 
 
 SET_RULE_KINDS: dict[str, SetKind] = {
@@ -265,10 +263,8 @@ SET_RULE_KINDS: dict[str, SetKind] = {
             **_opts(r, "min_children", "max_children")),
         global_grain=_always(True)),
     "transcript_match": SetKind(
-        _transcript(transcript_match_violations),
-        gate=_always(GATE_NONE), fuse=lambda r: ("match", _text_key(r))),
-    "transcript_wer": SetKind(_transcript(transcript_wer_violations, "max_wer_bp"),
-                              gate=_always(GATE_NONE)),
+        None, gate=_always(GATE_NONE), fuse=lambda r: ("match", _text_key(r))),
+    "transcript_wer": SetKind(_transcript_wer, gate=_always(GATE_NONE)),
 }
 
 
@@ -504,23 +500,37 @@ def run_validation(
             )
         )
 
-    # Fuse FK-anti + orphan + byte-match rules that target the same dim into
-    # ONE full-outer join (3 joins -> 1). Resume runs keep the per-rule path
-    # because the orphan rule is global-grain there (full key scan).
-    fused_ids: set[str] = set()
-    if not done:
-        by_dim: dict[tuple[str, str, str], dict[str, Rule]] = {}
-        for r in catalog.set_oriented:
-            if fused := SET_RULE_KINDS[r.kind].fuse(r):
-                slot, key = fused
-                by_dim.setdefault(key, {})[slot] = r
-        for (dim_name, fact_key, dim_key), group in by_dim.items():
-            if len(group) < 2:
-                continue
-            anti = group.get("anti")
-            orphan = group.get("orphan")
-            match = group.get("match")
-            fact_text, ref_text = _text_cols(match) if match else (None, None)
+    # Member batches never run global-grain rules: the owner batch scans
+    # the full key set ONCE and emits every partition's rows (K× full-table
+    # key scans was the dominant batching overhead at scale). Decided apart
+    # from `done`: a member with no exclusions and an empty checkpoint must
+    # still skip, or it double-reports against the owner.
+    active = [
+        r for r in catalog.set_oriented
+        if not (batch_member and SET_RULE_KINDS[r.kind].global_grain(r, partition_col))
+    ]
+
+    # FK-anti, orphan and byte-match rules on one (dim, fact_key, dim_key)
+    # share ONE join (fused_dim_checks) in every run mode: full outer with
+    # an orphan rule, left outer from the fact side without. A slot already
+    # taken (two anti rules with different gates) starts another group. In
+    # a pruned run the orphan rule still needs the full key set: the keys
+    # of the pruned partitions join as rows this run does not own.
+    groups: list[tuple[tuple[str, str, str], dict[str, Rule]]] = []
+    for r in active:
+        if fused := SET_RULE_KINDS[r.kind].fuse(r):
+            slot, key = fused
+            group = next((g for k, g in groups if k == key and slot not in g), None)
+            if group is None:
+                groups.append((key, group := {}))
+            group[slot] = r
+    for (dim_name, fact_key, dim_key), group in groups:
+        anti, orphan, match = (group.get(s) for s in ("anti", "orphan", "match"))
+        fact_text, ref_text = _text_cols(match) if match else (None, None)
+        try:
+            pruned_keys = None
+            if orphan and done:
+                pruned_keys = clips_full.filter(F.col(partition_col).isin(done)).select(fact_key)
             parts.append(
                 fused_dim_checks(
                     prepared,
@@ -535,15 +545,18 @@ def run_validation(
                     match_rule=match.rule_id if match else None,
                     fact_text=fact_text,
                     ref_text=ref_text,
+                    pruned_keys=pruned_keys,
                 )
             )
-            fused_ids.update(r.rule_id for r in group.values())
+        except Exception as e:  # noqa: BLE001 — per-rule degradation, per group
+            for r in group.values():
+                rule_error(r, e)
 
     # Row-grain and value-grain uniqueness on the same column share ONE
     # duplicate-key computation (lazily checkpointed: computed by the first
     # consumer, reused by the second). Gated rules keep their own.
     dup_cols = [
-        k for r in catalog.set_oriented
+        k for r in active
         if not r.gate and (k := SET_RULE_KINDS[r.kind].dup_key(r))
     ]
     uniq_src = clips_full if done else prepared
@@ -552,19 +565,11 @@ def run_validation(
         for col in set(dup_cols) if dup_cols.count(col) > 1
     }
 
-    for rule in catalog.set_oriented:
+    for rule in active:
         kind = SET_RULE_KINDS[rule.kind]
-        if kind.emit is None or rule.rule_id in fused_ids:
+        if kind.emit is None or kind.fuse(rule):
             continue
         global_grain = kind.global_grain(rule, partition_col)
-        if global_grain and batch_member:
-            # Member batches never run global-grain rules: the owner batch
-            # scans the full key set ONCE and emits every partition's rows
-            # (K× full-table key scans was the dominant batching overhead
-            # at scale). Hoisted OUT of the `done` check: a member with no
-            # exclusions and an empty checkpoint must still skip, or it
-            # double-reports against the owner.
-            continue
         # Full-table key scan (column-pruned; never touches bytes).
         src = clips_full if done and global_grain else prepared
         dups = None if rule.gate else shared_dups.get(kind.dup_key(rule))
@@ -700,31 +705,33 @@ def reconcile_outputs(
     cpdf = cp.read_checkpoint(spark, checkpoint_dir)
     if cpdf is None:
         raise ValueError(f"no checkpoint at {checkpoint_dir!r} — nothing to reconcile")
-    latest = (
-        cpdf.groupBy("partition")
-        .agg(
-            F.max_by(
-                F.struct("status", "lineage", "completed_at"), F.col("completed_at")
-            ).alias("w")
-        )
-        .select("partition", "w.status", "w.lineage", "w.completed_at")
-        .filter(F.col("status") == "done")
-    )
-    rows = latest.collect()  # bounded by the partition count by contract
-    sentinel = [r for r in rows if r["partition"] == cp.OWNER_SENTINEL]
+    # Lazily checkpointed: the first action below computes it once, and the
+    # output plans then read the stored rows instead of aggregating the
+    # checkpoint again for each consumer.
+    latest = cp._latest_done(cpdf).localCheckpoint(eager=False)
     # (partition -> latest-done lineage) pairs, NOT a flat run_id set: a
     # partition re-validated under a second checkpointed lineage (e.g.
     # mark_failed + relaunch) has rows under BOTH run_ids in the output,
     # and only its latest-done attempt's rows may survive. The owner
     # sentinel's lineage is additionally valid for EVERY partition: the
     # owner emits member partitions' global-grain rows under its own
-    # run_id, exactly once (a relaunched owner runs as a member).
-    pairs = [
-        (r["partition"], r["lineage"])
-        for r in rows
-        if r["partition"] != cp.OWNER_SENTINEL
-    ]
-    if sentinel:
+    # run_id, exactly once (a relaunched owner runs as a member). The pairs
+    # stay a Spark frame; the driver collects only what it decides on.
+    pair_df = F.broadcast(
+        latest.filter(
+            F.col("partition").isNotNull() & (F.col("partition") != cp.OWNER_SENTINEL)
+        ).select("partition", F.col("lineage").alias("run_id"))
+    )
+    # One row: the owner sentinel's latest-done lineage (one latest row per
+    # partition, so at most one) and the newest done lineage (NULL iff the
+    # checkpoint holds no done row).
+    facts = latest.agg(
+        F.max(F.when(F.col("partition") == cp.OWNER_SENTINEL, F.col("lineage"))).alias("owner"),
+        F.max_by("lineage", "completed_at").alias("newest"),
+    ).first()
+    owner_rids: list[str] = []
+    if facts["owner"] is not None:
+        owner_rids = [facts["owner"]]
         # Detect the one shape this reader cannot reconcile: an OWNER-batch
         # partition repaired via mark_failed + relaunch in the SAME
         # checkpoint dir. Its latest-done lineage is the repair attempt,
@@ -735,29 +742,23 @@ def reconcile_outputs(
         # The checkpoint alone reveals the shape: a non-sentinel partition
         # with a done row under the owner lineage whose latest-done row is
         # a different lineage. Raise with the remedy rather than return a
-        # silently-duplicated multiset. Bounded collect: distinct owner-
-        # batch partitions only.
-        _owner_lineages = sorted({s["lineage"] for s in sentinel})
-        _owner_done_parts = {
+        # silently-duplicated multiset. The collect is bounded by the
+        # conflicted partitions.
+        owner_parts = cpdf.filter(
+            (F.col("status") == "done")
+            & F.col("lineage").isin(owner_rids)
+            & (F.col("partition") != cp.OWNER_SENTINEL)
+        ).select("partition")
+        conflicted = sorted(
             r["partition"]
-            for r in cpdf.filter(
-                (F.col("status") == "done")
-                & F.col("lineage").isin(_owner_lineages)
-                & (F.col("partition") != cp.OWNER_SENTINEL)
-            )
-            .select("partition")
-            .distinct()
+            for r in pair_df.filter(~F.col("run_id").isin(owner_rids))
+            .join(owner_parts, "partition", "left_semi")
             .collect()
-        }
-        _conflicted = sorted(
-            p
-            for p, rid in pairs
-            if p in _owner_done_parts and rid not in _owner_lineages
         )
-        if _conflicted:
+        if conflicted:
             raise ValueError(
                 "cannot reconcile exactly-once: partition(s) "
-                f"{_conflicted} were validated by the OWNER batch and later "
+                f"{conflicted} were validated by the OWNER batch and later "
                 "re-validated under a different lineage (mark_failed + "
                 "relaunch into the same checkpoint dir). Owner-lineage rows "
                 "cannot be split by grain, so the reconciled view would "
@@ -765,29 +766,21 @@ def reconcile_outputs(
                 "partitions with a fresh --checkpoint-dir (and a fresh "
                 "output dir) instead."
             )
-        null_rid = sentinel[0]["lineage"]
-    elif rows:
-        null_rid = max(rows, key=lambda r: r["completed_at"])["lineage"]
+        null_rid = facts["owner"]
+    elif facts["newest"] is not None:
+        null_rid = facts["newest"]
     elif fallback_lineage is not None:
         # A checkpoint dir with zero done rows is legal: an empty-input run
         # writes run-level rows (EMPTY_INPUT) and a zero-row checkpoint.
         # The caller's own run_id anchors those rows; without it there is
         # no lineage to reconcile against.
         null_rid = fallback_lineage
-        pairs = []
+        owner_rids = [fallback_lineage]
     else:
         raise ValueError(
             f"checkpoint at {checkpoint_dir!r} has no completed rows and no "
             "fallback_lineage was given — nothing to reconcile against"
         )
-    pair_df = F.broadcast(
-        literal_frame(spark, pairs, "partition string, run_id string").filter(
-            F.col("partition").isNotNull()
-        )
-    )
-    owner_rids = {s["lineage"] for s in sentinel} | (
-        {fallback_lineage} if fallback_lineage is not None and not rows else set()
-    )
 
     def _attributed_ok(df: DataFrame) -> DataFrame:
         """non-NULL-partition rows valid under their partition's latest-done
@@ -797,7 +790,7 @@ def reconcile_outputs(
             return by_pair.unionByName(
                 df.join(pair_df, ["partition", "run_id"], "left_anti").filter(
                     F.col("partition").isNotNull()
-                    & F.col("run_id").isin(sorted(owner_rids))
+                    & F.col("run_id").isin(owner_rids)
                 )
             )
         return by_pair

@@ -48,10 +48,9 @@ def is_present(c: Column | str) -> Column:
 
 def bytes_differ(a: Column | str, b: Column | str) -> Column:
     """UTF-8 byte inequality with NULL coerced to '' (the engine-wide blank
-    coercion): NULL vs '' compares equal, NULL vs 'text' differs. ONE shared
-    predicate for the transcript-match rule — the fused join branch
-    (referential.fused_dim_checks) and the standalone operator
-    (audio.transcript_match_violations) must never drift apart."""
+    coercion): NULL vs '' compares equal, NULL vs 'text' differs. The
+    transcript-match rule's predicate, evaluated in its one plan: the match
+    branch of ``referential.fused_dim_checks``."""
     return F.encode(F.coalesce(_col(a), F.lit("")), "UTF-8") != F.encode(
         F.coalesce(_col(b), F.lit("")), "UTF-8"
     )

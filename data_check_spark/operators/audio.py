@@ -132,45 +132,6 @@ def snr_column_violations(
     )
 
 
-def transcript_match_violations(
-    df: DataFrame,
-    transcripts: DataFrame,
-    rule_id: str,
-    *,
-    fact_key: str = "clip_id",
-    dim_key: str = "clip_id",
-    fact_text: str = "transcript",
-    ref_text: str = "transcript_ref",
-    partition_col: str | None = "partition",
-) -> DataFrame:
-    """Byte-equality of the clip transcript vs the reference transcript dim.
-
-    Missing dim rows are NOT flagged here (that's the referential rule);
-    this rule fires for joined rows whose UTF-8 encodings differ, with a
-    NULL on either side comparing as the empty string (the engine-wide
-    blank coercion, ``blank.bytes_differ``) — so NULL vs '' is equal,
-    NULL vs 'text' fires. Null-presence itself is the not_null family's
-    job. Blank fact keys are exempt (same convention as every referential
-    operator and the fused join path — a fresh run and a resume run must
-    emit identical violations).
-    """
-    from data_check_spark.functions.blank import bytes_differ, is_present
-
-    dim = transcripts.select(F.col(dim_key).alias("_dk"), F.col(ref_text).alias("_ref"))
-    part = F.col(partition_col) if partition_col else F.lit(None).cast("string")
-    fact = df.filter(is_present(fact_key))
-    return (
-        fact.join(dim, fact[fact_key] == F.col("_dk"), "inner")
-        .filter(bytes_differ(F.col(fact_text), F.col("_ref")))
-        .select(
-            F.lit(rule_id).alias("rule_id"),
-            F.col(fact_key).cast("string").alias("clip_id"),
-            part.alias("partition"),
-            F.substring(F.coalesce(F.col(fact_text), F.lit("<null>")), 1, 64).alias("observed"),
-        )
-    )
-
-
 def transcript_wer_violations(
     df: DataFrame,
     transcripts: DataFrame,
@@ -183,15 +144,16 @@ def transcript_wer_violations(
     max_wer_bp: int = 2500,
     partition_col: str | None = "partition",
 ) -> DataFrame:
-    """WER-tolerance sibling of :func:`transcript_match_violations`.
+    """WER-tolerance sibling of the ``transcript_match`` rule.
 
-    Byte equality is the reference's contract (innosite transcript checks);
+    Byte equality is the reference's contract (innosite transcript checks,
+    run by ``referential.fused_dim_checks``);
     real ASR re-transcriptions legitimately differ by a few words, so this
     rule fires only when the exact word-level edit distance (in basis
     points of the reference length, ``text.word_edit_distance``) exceeds
-    ``max_wer_bp``. Same join/blank conventions as transcript_match: inner
-    join (missing dim rows are the referential rule's job), blank fact keys
-    exempt. Unevaluable pairs breach rather than silently pass (the
+    ``max_wer_bp``. Same join/blank conventions as transcript_match: only
+    joined rows are judged (missing dim rows are the referential rule's
+    job), blank fact keys exempt. Unevaluable pairs breach rather than silently pass (the
     ``agg_threshold`` NULL-metric convention): an empty reference with a
     non-empty hypothesis fires ``wer_bp=undefined_ref``, a pair whose
     combined vocabulary overflows the 255-word alphabet fires

@@ -4,6 +4,9 @@ Reference analogs: membership anti-join CHK_0032 (dekispart.py:494-501),
 semi-join CHK_0033 (503-510), and the semi∘anti composition CHK_0060
 ("id in source A and not in source B", dekispart.py:968-988). The reference
 materializes Python sets on the driver; here both sides stay distributed.
+The engine's FK-anti, orphan and transcript-match rules share one join per
+dimension (``fused_dim_checks``); ``semi_join_violations`` and
+``orphan_violations`` are the single-rule forms.
 
 Join-strategy selection (north_rule: "broadcast or sort-merge depending on
 dimension size"): the plans carry no hint. AQE broadcasts the dimension key
@@ -18,53 +21,6 @@ from pyspark.sql import functions as F
 
 from data_check_spark.functions.blank import bytes_differ, is_present
 
-def _membership_violations(
-    df: DataFrame,
-    dim: DataFrame,
-    rule_id: str,
-    how: str,
-    *,
-    fact_key: str,
-    dim_key: str,
-    id_col: str,
-    partition_col: str | None,
-    gate,
-) -> DataFrame:
-    """Shared body of the anti (key absent) / semi (key present) rules —
-    one implementation so the two directions can't drift apart."""
-    dim_keys = dim.select(F.col(dim_key).alias("_dk")).dropDuplicates()
-    fact = df.filter(is_present(fact_key))
-    if gate is not None:
-        fact = fact.filter(gate)
-    part = F.col(partition_col) if partition_col else F.lit(None).cast("string")
-    return (
-        fact.join(dim_keys, fact[fact_key] == F.col("_dk"), how)
-        .select(
-            F.lit(rule_id).alias("rule_id"),
-            F.col(id_col).cast("string").alias("clip_id"),
-            part.alias("partition"),
-            F.col(fact_key).cast("string").alias("observed"),
-        )
-    )
-
-
-def anti_join_violations(
-    df: DataFrame,
-    dim: DataFrame,
-    rule_id: str,
-    *,
-    fact_key: str = "clip_id",
-    dim_key: str = "clip_id",
-    partition_col: str | None = "partition",
-    gate=None,
-) -> DataFrame:
-    """Fact rows whose key has NO match in the dimension (FK violation)."""
-    return _membership_violations(
-        df, dim, rule_id, "left_anti",
-        fact_key=fact_key, dim_key=dim_key, id_col="clip_id",
-        partition_col=partition_col, gate=gate,
-    )
-
 
 def semi_join_violations(
     df: DataFrame,
@@ -78,10 +34,19 @@ def semi_join_violations(
     gate=None,
 ) -> DataFrame:
     """Fact rows whose key IS in the (forbidden) dimension set."""
-    return _membership_violations(
-        df, dim, rule_id, "left_semi",
-        fact_key=fact_key, dim_key=dim_key, id_col=id_col,
-        partition_col=partition_col, gate=gate,
+    dim_keys = dim.select(F.col(dim_key).alias("_dk")).dropDuplicates()
+    fact = df.filter(is_present(fact_key))
+    if gate is not None:
+        fact = fact.filter(gate)
+    part = F.col(partition_col) if partition_col else F.lit(None).cast("string")
+    return (
+        fact.join(dim_keys, fact[fact_key] == F.col("_dk"), "left_semi")
+        .select(
+            F.lit(rule_id).alias("rule_id"),
+            F.col(id_col).cast("string").alias("clip_id"),
+            part.alias("partition"),
+            F.col(fact_key).cast("string").alias("observed"),
+        )
     )
 
 
@@ -97,6 +62,8 @@ def orphan_violations(
 
     The big side is the anti-join *probe* here, so no broadcast of the fact
     table is ever attempted; Catalyst plans dim-anti-fact as shuffle/SMJ.
+    The engine's orphan rules run in ``fused_dim_checks`` instead; this is
+    the registry's standalone form (``orphan_parts``).
     """
     fact_keys = df.filter(is_present(fact_key)).select(F.col(fact_key).alias("_fk")).dropDuplicates()
     return (
@@ -123,42 +90,79 @@ def fused_dim_checks(
     match_rule: str | None = None,
     fact_text: str | None = None,
     ref_text: str | None = None,
+    pruned_keys: DataFrame | None = None,
 ) -> DataFrame:
     """FK-missing + orphan + byte-equality against ONE dimension in ONE join.
 
-    The naive plan joins the fact table against the dim three times (anti,
-    reverse-anti, inner). One full-outer join + a classify/explode projection
-    produces all three violation families — at 10^12 rows that's one shuffle
-    of each side instead of three. Semantics match the standalone operators:
-    blank fact keys are exempt, the anti rule honors its gate, orphans are
-    dim rows with no (present-key) fact match, and the byte-equality rule
-    fires only where both sides exist.
+    The engine's only plan for these three rule families, in every run
+    mode. The naive plan joins the fact table against the dim three times
+    (anti, reverse-anti, inner). One join + a classify/explode projection
+    produces all three violation families — at 10^12 rows that's one
+    shuffle of each side instead of three. Blank fact keys are exempt, the
+    anti rule honors its gate, orphans are dim rows with no (present-key)
+    fact match, and the byte-equality rule fires only where both sides
+    exist. An anti row names the fact row's ``clip_id`` and observes the
+    missing key; an orphan row names the dim key, a match row the join key.
+
+    The join type follows the rules: full outer when there is an orphan
+    rule, otherwise a left outer join from the fact side, which AQE turns
+    into a broadcast hash join when the dimension is small. With no anti
+    or match rule only the distinct fact keys reach the join.
+
+    ``pruned_keys``: the ``fact_key`` column of the partitions a resumed or
+    batched run pruned from ``fact``. Its distinct keys join as rows this
+    run does not own: they clear orphans, and the anti and match rules
+    never fire on them.
     """
-    f_cols = [
-        F.col(fact_key).alias("_fk"),
-        (F.col(partition_col) if partition_col else F.lit(None).cast("string")).alias("_part"),
-    ]
-    if match_rule:
-        f_cols.append(F.col(fact_text).alias("_ftxt"))
-    if anti_gate is not None:
-        f_cols.append(F.coalesce(anti_gate, F.lit(False)).alias("_gate"))
+
+    def keys(df: DataFrame) -> DataFrame:
+        return df.filter(is_present(fact_key)).select(F.col(fact_key).alias("_fk"))
+
+    def owned(cond: F.Column) -> F.Column:
+        # the per-row (anti, match) branches fire on this run's rows only
+        return cond & F.col("_own") if pruned_keys is not None else cond
+
+    anti_id = "_fk"
+    if anti_rule or match_rule:
+        f_cols = [
+            F.col(fact_key).alias("_fk"),
+            (F.col(partition_col) if partition_col else F.lit(None).cast("string")).alias("_part"),
+        ]
+        if match_rule:
+            f_cols.append(F.col(fact_text).alias("_ftxt"))
+        if anti_rule and fact_key != "clip_id":
+            # an anti row names its clip; the key it lacks is the observed value
+            f_cols.append(F.col("clip_id").alias("_id"))
+            anti_id = "_id"
+        if anti_gate is not None:
+            f_cols.append(F.coalesce(anti_gate, F.lit(False)).alias("_gate"))
+        else:
+            f_cols.append(F.lit(True).alias("_gate"))
+        f = fact.filter(is_present(fact_key)).select(*f_cols)
+        if pruned_keys is not None:
+            f = f.withColumn("_own", F.lit(True)).unionByName(
+                keys(pruned_keys).dropDuplicates().withColumn("_own", F.lit(False)),
+                allowMissingColumns=True,
+            )
     else:
-        f_cols.append(F.lit(True).alias("_gate"))
-    f = fact.filter(is_present(fact_key)).select(*f_cols)
+        f = keys(fact)
+        if pruned_keys is not None:
+            f = f.unionByName(keys(pruned_keys))
+        f = f.dropDuplicates()
     d_cols = [F.col(dim_key).alias("_dk")]
     if match_rule:
         d_cols.append(F.col(ref_text).alias("_rtxt"))
     d = dim.select(*d_cols)
 
-    j = f.join(d, F.col("_fk") == F.col("_dk"), "full_outer")
+    j = f.join(d, F.col("_fk") == F.col("_dk"), "full_outer" if orphan_rule else "left")
     branches = []
     if anti_rule:
         branches.append(
             F.when(
-                F.col("_dk").isNull() & F.col("_fk").isNotNull() & F.col("_gate"),
+                owned(F.col("_dk").isNull() & F.col("_fk").isNotNull() & F.col("_gate")),
                 F.struct(
                     F.lit(anti_rule).alias("rule_id"),
-                    F.col("_fk").cast("string").alias("clip_id"),
+                    F.col(anti_id).cast("string").alias("clip_id"),
                     F.col("_part").alias("partition"),
                     F.col("_fk").cast("string").alias("observed"),
                 ),
@@ -179,9 +183,11 @@ def fused_dim_checks(
     if match_rule:
         branches.append(
             F.when(
-                F.col("_fk").isNotNull()
-                & F.col("_dk").isNotNull()
-                & bytes_differ(F.col("_ftxt"), F.col("_rtxt")),
+                owned(
+                    F.col("_fk").isNotNull()
+                    & F.col("_dk").isNotNull()
+                    & bytes_differ(F.col("_ftxt"), F.col("_rtxt"))
+                ),
                 F.struct(
                     F.lit(match_rule).alias("rule_id"),
                     F.col("_fk").cast("string").alias("clip_id"),

@@ -1,5 +1,6 @@
 """PCM decode + SNR allclose (graft analog of the reference's arithmetic
-consistency check, innosite.py:263-312) and transcript byte-equality."""
+consistency check, innosite.py:263-312) and transcript byte-equality (the
+match branch of the fused dim join)."""
 
 import numpy as np
 
@@ -7,8 +8,8 @@ from data_check_spark.functions.pcm import ref_freq, snr_db, synth_wave
 from data_check_spark.operators.audio import (
     prepare_clips,
     snr_column_violations,
-    transcript_match_violations,
 )
+from data_check_spark.operators.referential import fused_dim_checks
 
 CAP_MS = 100
 
@@ -85,7 +86,10 @@ def test_transcript_match(spark):
         [("a", "こんにちは"), ("b", "HELLO"), ("zz", "orphan text")],
         "clip_id string, transcript_ref string",
     )
-    out = transcript_match_violations(clips, dim, "TM").collect()
+    out = fused_dim_checks(
+        clips, dim, fact_key="clip_id", dim_key="clip_id",
+        match_rule="TM", fact_text="transcript", ref_text="transcript_ref",
+    ).collect()
     # only b mismatches; c has no dim row (referential rule's job, not this one)
     assert {r["clip_id"] for r in out} == {"b"}
 

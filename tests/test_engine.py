@@ -215,13 +215,17 @@ def test_broken_rule_degrades_to_violation_row(spark):
         Rule("BAD_REGEX", "format", "clip_id", {"pattern": "(["}),
         Rule("BAD_DIM_KEY", "referential", "clip_id",
              {"dim": "d", "dim_key": "missing_key", "mode": "anti"}),
+        # same dim join as BAD_DIM_KEY: the whole group degrades, the run
+        # does not fail
+        Rule("BAD_ORPHAN_KEY", "referential", "clip_id",
+             {"dim": "d", "dim_key": "missing_key", "mode": "orphan"}),
     ])
     dims = {"d": spark.createDataFrame([("a",)], "clip_id string")}
     res = run_validation(spark, df, dims, catalog, run_ts="2026-01-01 00:00:00")
     rules = {r["rule_id"] for r in res.violations.collect()}
     assert "X_NEGATIVE" in rules  # healthy rule still ran
     assert {"RULE_ERROR_BAD_COLUMN", "RULE_ERROR_BAD_REGEX",
-            "RULE_ERROR_BAD_DIM_KEY"} <= rules
+            "RULE_ERROR_BAD_DIM_KEY", "RULE_ERROR_BAD_ORPHAN_KEY"} <= rules
 
 
 def test_gate_on_ungateable_kind_is_rule_error(spark):
@@ -247,9 +251,9 @@ def test_gate_on_ungateable_kind_is_rule_error(spark):
 
 
 def test_transcript_match_standalone_honors_column_and_key(spark):
-    """A lone transcript_match rule (not fused — no sibling referential rule)
-    must compare rule.column joined on params['dim_key'], exactly like the
-    fused path, not the operator defaults ('transcript' / 'clip_id')."""
+    """A lone transcript_match rule (a dim join of its own — no sibling
+    referential rule) must compare rule.column joined on params['dim_key'],
+    not the defaults ('transcript' / 'clip_id')."""
     df = spark.createDataFrame(
         [("t1", "hello", "p"), ("t2", "world", "p")],
         "tid string, subtitle string, partition string",

@@ -16,8 +16,9 @@ from data_check_spark.schemas import (
 _NOW = dt.datetime(2026, 3, 29, 1, 30, 15, 123456, tzinfo=dt.timezone.utc)
 
 # (schema, rows) for each call site: synthetic violations and EMPTY_INPUT,
-# the reconcile pair table, the drift rule table and baseline globals, the
-# owner sentinel, mark_failed's row and the with_messages table.
+# the drift rule table and baseline globals, the owner sentinel,
+# mark_failed's row and the with_messages table; plus a plain DDL-string
+# schema of two string columns.
 CASES = {
     "violations": (VIOLATIONS_SCHEMA, [
         ("SCHEMA_CHECK", None, None, "missing column: codec"),

@@ -73,7 +73,7 @@ def test_referential_no_count_job_when_size_unknown(spark, monkeypatch):
     per rule per run at cluster scale)."""
     from pyspark.sql import DataFrame
 
-    from data_check_spark.operators.referential import anti_join_violations
+    from data_check_spark.operators.referential import fused_dim_checks
 
     fact = spark.createDataFrame([("a", "p")], "clip_id string, partition string")
     dim = spark.createDataFrame([("a",)], "clip_id string")
@@ -82,7 +82,8 @@ def test_referential_no_count_job_when_size_unknown(spark, monkeypatch):
         raise AssertionError("count() called during referential plan build")
 
     monkeypatch.setattr(DataFrame, "count", boom)
-    anti_join_violations(fact, dim, "FK")  # plan build only — must not count
+    fused_dim_checks(fact, dim, fact_key="clip_id", dim_key="clip_id",
+                     anti_rule="FK")  # plan build only — must not count
 
 
 def test_wide_pass_single_python_stage(spark, tmp_path):
@@ -260,3 +261,38 @@ def test_drift_plan_scans_no_python_rdd(spark, tmp_path):
     plan = _plan(drift_violations_multi(current, spark.read.parquet(path), rules))
     assert "ExistingRDD" not in plan and "PythonRDD" not in plan
     assert plan.count("MapInPandas") == 2 and plan.count("FlatMapGroupsInPandas") == 1
+
+
+def test_owner_batch_plans_one_dim_join(spark, tmp_path, monkeypatch):
+    """An owner batch (partitions excluded) runs the FK-anti, orphan and
+    transcript-match rules in ONE join that reads the transcripts dim once;
+    the excluded partitions' keys join only to clear orphans."""
+    from data_check_spark.engine import run_validation
+    from data_check_spark.rules.spec import Rule, RuleCatalog
+
+    clips = spark.createDataFrame(
+        [("a", "t", "p0"), ("b", "t", "p1"), ("c", "x", "p0")],
+        "clip_id string, transcript string, partition string",
+    )
+    # Keep the violations plan inspectable: the engine checkpoints it.
+    monkeypatch.setattr(type(clips), "localCheckpoint", lambda self, eager=True: self)
+    path = str(tmp_path / "transcripts")
+    spark.createDataFrame(
+        [("a", "t"), ("b", "t"), ("z", "t")], "clip_id string, transcript_ref string"
+    ).write.parquet(path)
+    catalog = RuleCatalog([
+        Rule("FK", "referential", "clip_id", {"dim": "transcripts", "mode": "anti"}),
+        Rule("ORPHAN", "referential", "clip_id", {"dim": "transcripts", "mode": "orphan"}),
+        Rule("MATCH", "transcript_match", "transcript",
+             {"dim": "transcripts", "ref_column": "transcript_ref"}),
+    ])
+    res = run_validation(
+        spark, clips, {"transcripts": spark.read.parquet(path)}, catalog,
+        run_ts="2026-01-01 00:00:00", exclude_partitions=["p1"],
+    )
+    plan = res.violations._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Join ") == 1 and "Join FullOuter" in plan
+    assert plan.count("parquet") == 1  # the dim, read once
+    got = {(r["rule_id"], r["clip_id"]) for r in res.violations.collect()
+           if not r["rule_id"].startswith("SCHEMA")}
+    assert got == {("FK", "c"), ("ORPHAN", "z")}

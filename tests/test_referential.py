@@ -1,11 +1,12 @@
 """Referential operators: anti / semi / orphan / semi∘anti composition
 (reference analogs: CHK_0032 dekispart.py:494-501, CHK_0033 503-510,
-CHK_0060 968-988)."""
+CHK_0060 968-988). The engine's anti rule runs as the anti branch of
+``fused_dim_checks``."""
 
 from pyspark.sql import functions as F
 
 from data_check_spark.operators.referential import (
-    anti_join_violations,
+    fused_dim_checks,
     orphan_violations,
     semi_anti_violations,
     semi_join_violations,
@@ -21,8 +22,13 @@ def _dim(spark, keys):
     return spark.createDataFrame([(k,) for k in keys], "clip_id string")
 
 
+def _anti(fact, dim, gate=None):
+    return fused_dim_checks(fact, dim, fact_key="clip_id", dim_key="clip_id",
+                            anti_rule="FK", anti_gate=gate)
+
+
 def test_anti(spark):
-    out = anti_join_violations(_fact(spark), _dim(spark, ["a", "b"]), "FK").collect()
+    out = _anti(_fact(spark), _dim(spark, ["a", "b"])).collect()
     # c missing from dim; blanks exempt
     assert {(r["clip_id"], r["partition"]) for r in out} == {("c", "p1")}
 
@@ -47,17 +53,16 @@ def test_semi_anti_composition(spark):
 
 
 def test_anti_with_gate(spark):
-    out = anti_join_violations(
-        _fact(spark), _dim(spark, ["a"]), "FK", gate=F.col("partition") == "p0"
-    ).collect()
+    out = _anti(_fact(spark), _dim(spark, ["a"]), gate=F.col("partition") == "p0").collect()
     assert {r["clip_id"] for r in out} == {"b"}
 
 
 def test_broadcast_strategy_in_plan(spark):
-    # no hint: a small dim's anti join runs as a broadcast hash join, AQE's
-    # choice under spark.sql.autoBroadcastJoinThreshold (north_rule's
+    # no hint: a small dim's anti join (a left outer join — no orphan rule
+    # in the group) runs as a broadcast hash join, AQE's choice under
+    # spark.sql.autoBroadcastJoinThreshold (north_rule's
     # broadcast-vs-sort-merge by dimension size)
-    plan_df = anti_join_violations(_fact(spark), _dim(spark, ["a"]), "FK")
+    plan_df = _anti(_fact(spark), _dim(spark, ["a"]))
     plan_df.collect()
     plan = plan_df._jdf.queryExecution().executedPlan().toString()
     final, initial = plan.split("== Initial Plan ==")
@@ -67,11 +72,8 @@ def test_broadcast_strategy_in_plan(spark):
 
 
 def test_transcript_match_blank_keys_exempt(spark):
-    """Blank fact keys are exempt from the match rule in BOTH the standalone
-    operator and the fused join path — fresh and resume runs must agree."""
-    from data_check_spark.operators.audio import transcript_match_violations
-    from data_check_spark.operators.referential import fused_dim_checks
-
+    """Blank fact keys are exempt from the match rule, whose one plan is
+    the match branch of the fused dim join."""
     fact = spark.createDataFrame(
         [("", "a", "p0"), ("c1", "b", "p0")],
         "clip_id string, transcript string, partition string",
@@ -80,13 +82,36 @@ def test_transcript_match_blank_keys_exempt(spark):
         [("", "DIFFERENT"), ("c1", "b")],
         "clip_id string, transcript_ref string",
     )
-    standalone = transcript_match_violations(fact, dim, "M").collect()
-    assert standalone == []  # blank key exempt; c1 matches
     fused = fused_dim_checks(
         fact, dim, fact_key="clip_id", dim_key="clip_id",
         match_rule="M", fact_text="transcript", ref_text="transcript_ref",
     ).collect()
-    assert [r for r in fused if r["rule_id"] == "M"] == []
+    assert fused == []  # blank key exempt; c1 matches
+
+
+def test_pruned_keys_only_clear_orphans(spark):
+    """Keys of pruned partitions join as rows the run does not own: they
+    clear the orphan rule, and the anti and match rules never fire on them."""
+    fact = spark.createDataFrame(
+        [("a", "x", "p0"), ("c", "x", "p0")],
+        "clip_id string, transcript string, partition string",
+    )
+    pruned = spark.createDataFrame([("b",), ("b",), ("zz",), ("",)], "clip_id string")
+    dim = spark.createDataFrame(
+        [("a", "x"), ("b", "DIFFERENT"), ("ghost", "x")],
+        "clip_id string, transcript_ref string",
+    )
+    out = fused_dim_checks(
+        fact, dim, fact_key="clip_id", dim_key="clip_id",
+        anti_rule="FK", orphan_rule="O", match_rule="M",
+        fact_text="transcript", ref_text="transcript_ref", pruned_keys=pruned,
+    ).collect()
+    # c: owned, no dim row; ghost: no fact key anywhere. b is referenced
+    # only by a pruned partition (no orphan, no match row); zz has no dim
+    # row but is not this run's (no anti row).
+    assert sorted((r["rule_id"], r["clip_id"], r["partition"]) for r in out) == [
+        ("FK", "c", "p0"), ("O", "ghost", None),
+    ]
 
 
 def test_cardinality_violations(spark):

@@ -340,37 +340,53 @@ def test_batched_union_equals_single_run(spark, batch_data, tmp_path):
 
 
 # One rule of every set-oriented kind (referential in each mode, outlier
-# grouped both ways): the batched union must equal the single run, which
-# pins each kind's grain — a global-grain kind the engine treated as
-# partition grain would report batch 0's partitions only.
+# grouped both ways), plus two multi-rule dim joins: the batched union must
+# equal the single run, which pins each kind's grain — a global-grain kind
+# the engine treated as partition grain would report batch 0's partitions
+# only.
 KIND_CASES = {
-    "unique": Rule("K", "unique", "clip_id"),
-    "aggregate_unique": Rule("K", "aggregate_unique", "clip_id"),
-    "referential_anti": Rule("K", "referential", "clip_id",
-                             {"dim": "transcripts", "mode": "anti"}),
-    "referential_semi": Rule("K", "referential", "clip_id",
-                             {"dim": "transcripts", "mode": "semi"}),
-    "referential_orphan": Rule("K", "referential", "clip_id",
-                               {"dim": "transcripts", "mode": "orphan"}),
-    "drift": Rule("K", "drift", "dur_ms", {"threshold": 0.25}),
-    "cat_drift": Rule("K", "cat_drift", "codec", {"threshold_bp": 1000, "min_rows": 1}),
-    "rate_drift": Rule("K", "rate_drift", None,
-                       {"predicate": "sr_hz < 0", "threshold_bp": 100, "min_rows": 1}),
-    "volume_drift": Rule("K", "volume_drift", None, {"threshold_bp": 2000}),
-    "audio_decode": Rule("K", "audio_decode", "bytes", {"snr_db_min": 30.0}),
-    "agg_threshold": Rule("K", "agg_threshold", None,
-                          {"metric_expr": "count(1)", "max_value": 1}),
-    "outlier_by_partition": Rule("K", "outlier", "dur_ms"),
-    "outlier_by_codec": Rule("K", "outlier", "dur_ms", {"group_by": "codec"}),
-    "func_dep": Rule("K", "func_dep", "sr_hz", {"determinant": ["codec"]}),
-    "reconcile": Rule("K", "reconcile", "total",
-                      {"dim": "transcripts", "amount_col": "amount"}),
-    "cardinality": Rule("K", "cardinality", None,
-                        {"dim": "transcripts", "min_children": 1, "max_children": 1}),
-    "transcript_match": Rule("K", "transcript_match", "transcript",
-                             {"dim": "transcripts", "ref_column": "transcript_ref"}),
-    "transcript_wer": Rule("K", "transcript_wer", "transcript",
-                           {"dim": "transcripts", "max_wer_bp": 1000}),
+    "unique": [Rule("K", "unique", "clip_id")],
+    "aggregate_unique": [Rule("K", "aggregate_unique", "clip_id")],
+    "referential_anti": [Rule("K", "referential", "clip_id",
+                              {"dim": "transcripts", "mode": "anti"})],
+    "referential_semi": [Rule("K", "referential", "clip_id",
+                              {"dim": "transcripts", "mode": "semi"})],
+    "referential_orphan": [Rule("K", "referential", "clip_id",
+                                {"dim": "transcripts", "mode": "orphan"})],
+    "drift": [Rule("K", "drift", "dur_ms", {"threshold": 0.25})],
+    "cat_drift": [Rule("K", "cat_drift", "codec", {"threshold_bp": 1000, "min_rows": 1})],
+    "rate_drift": [Rule("K", "rate_drift", None,
+                        {"predicate": "sr_hz < 0", "threshold_bp": 100, "min_rows": 1})],
+    "volume_drift": [Rule("K", "volume_drift", None, {"threshold_bp": 2000})],
+    "audio_decode": [Rule("K", "audio_decode", "bytes", {"snr_db_min": 30.0})],
+    "agg_threshold": [Rule("K", "agg_threshold", None,
+                           {"metric_expr": "count(1)", "max_value": 1})],
+    "outlier_by_partition": [Rule("K", "outlier", "dur_ms")],
+    "outlier_by_codec": [Rule("K", "outlier", "dur_ms", {"group_by": "codec"})],
+    "func_dep": [Rule("K", "func_dep", "sr_hz", {"determinant": ["codec"]})],
+    "reconcile": [Rule("K", "reconcile", "total",
+                       {"dim": "transcripts", "amount_col": "amount"})],
+    "cardinality": [Rule("K", "cardinality", None,
+                         {"dim": "transcripts", "min_children": 1, "max_children": 1})],
+    "transcript_match": [Rule("K", "transcript_match", "transcript",
+                              {"dim": "transcripts", "ref_column": "transcript_ref"})],
+    "transcript_wer": [Rule("K", "transcript_wer", "transcript",
+                            {"dim": "transcripts", "max_wer_bp": 1000})],
+    # one dim join: a gated anti rule, the orphan rule and the match rule
+    "dim_group": [
+        Rule("K", "referential", "clip_id", {"dim": "transcripts", "mode": "anti"},
+             gate="codec = 'wav'"),
+        Rule("K_ORPHAN", "referential", "clip_id", {"dim": "transcripts", "mode": "orphan"}),
+        Rule("K_MATCH", "transcript_match", "transcript",
+             {"dim": "transcripts", "ref_column": "transcript_ref"}),
+    ],
+    # two rules for one slot: the second starts a dim join of its own
+    "two_anti_gates": [
+        Rule("K", "referential", "clip_id", {"dim": "transcripts", "mode": "anti"},
+             gate="codec = 'wav'"),
+        Rule("K2", "referential", "clip_id", {"dim": "transcripts", "mode": "anti"},
+             gate="sr_hz < 0"),
+    ],
 }
 
 
@@ -406,11 +422,11 @@ def kinds_data(spark):
 @pytest.mark.parametrize("case", sorted(KIND_CASES))
 def test_batched_union_equals_single_run_every_kind(spark, kinds_data, tmp_path, case):
     clips, dims = kinds_data
-    catalog = RuleCatalog([KIND_CASES[case]])
+    catalog = RuleCatalog(KIND_CASES[case])
     single = _vset(run_validation(spark, clips, dims, catalog, run_ts="2026-01-01 00:00:00")
                    .violations)
     if case != "audio_decode":  # a bytes-free table has no SNR to breach
-        assert any(k[0] == "K" for k in single), single
+        assert {r.rule_id for r in catalog} <= {k[0] for k in single}, single
     chunks = [["p0"], ["p1", "p2"]]
     got = sum(
         (_vset(_validate(
