@@ -77,32 +77,31 @@ def _clips_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # If the driver samples a subset of the registry, dict order decides what it
 # sees — so never-yet-driver-checked entries go FIRST (registry order), the
 # already-green ones after, and the rows-only-by-design entries (no DuckDB
-# analog possible: synthetic clip table with real float PCM decode; MLlib
-# KMeans quantizer) LAST, since rows-only is already their max achievable
-# check and r01 recorded it. COVERAGE.md is the per-query ledger. Every
-# oracle-backed entry (130/130) is green in CORRECTNESS_r05 or earlier.
+# analog possible: synthetic clip table with real float PCM decode) LAST,
+# since rows-only is already their max achievable check and r01 recorded
+# it. COVERAGE.md is the per-query ledger. Every oracle-backed entry
+# (118/118) is green in CORRECTNESS_r05 or earlier.
 _DRIVER_GREEN: frozenset[str] = frozenset({
     # r05 green (CORRECTNESS_r05.json). streaming_dedup_events is left out:
     # round 6 changed its output to per-occurrence (clip_id, observed) rows,
     # so it ranks first until a CORRECTNESS round re-checks it.
-    "ivf_incremental_embeddings", "streaming_row_rules_events",
-    "streaming_sessions_events", "streaming_window_counts_events",
+    "streaming_row_rules_events", "streaming_sessions_events",
+    "streaming_window_counts_events",
     # r04 green (CORRECTNESS_r04.json):
     "agg_sla_orders", "benford_orders", "bpe_merges_documents",
     "bpe_segment_documents", "bpe_tokenize_documents", "calendar_gaps_events",
     "cardinality_orders_lineitem", "categorical_drift_orders",
     "cluster_representatives_documents", "corpus_rules_documents",
     "correlation_lineitem", "dataset_card_documents",
-    "embedding_drift_embeddings", "embedding_quality_embeddings",
     "extraction_quality_documents", "format_masks_customer",
     "freshness_events", "incremental_dedup_documents",
-    "label_centroids_embeddings", "label_conflict_documents",
-    "lang_mismatch_documents", "normalize_width_documents",
-    "novelty_rate_events", "null_correlation_orders", "out_of_order_events",
-    "partition_profile_orders", "quantization_plan_embeddings",
-    "rate_drift_orders", "reconcile_orders_lineitem",
-    "rule_suggestions_orders", "scan_pruning_lineitem",
-    "split_leakage_documents", "tar_roundtrip_documents",
+    "label_conflict_documents", "lang_mismatch_documents",
+    "normalize_width_documents", "novelty_rate_events",
+    "null_correlation_orders", "out_of_order_events",
+    "partition_profile_orders", "rate_drift_orders",
+    "reconcile_orders_lineitem", "rule_suggestions_orders",
+    "scan_pruning_lineitem", "split_leakage_documents",
+    "tar_roundtrip_documents",
     "token_drift_documents", "transcript_wer_documents",
     "violation_delta_orders", "vocab_coverage_documents",
     "volume_drift_orders", "watermark_plan_events",
@@ -113,9 +112,10 @@ _DRIVER_GREEN: frozenset[str] = frozenset({
     "corpus_shuffle_documents", "daily_volume_anomaly_events",
     "decontamination_documents", "events_hourly_rolling", "func_dep_lineitem",
     "fuzzy_decontamination_documents", "heavy_hitters_orders",
-    "histogram_totalprice_orders", "iqr_outliers_events", "ivf_ann_embeddings",
+    "histogram_totalprice_orders", "iqr_outliers_events",
     "jsonl_ingest_documents", "mix_documents", "pack_stats_documents",
-    "pii_scan_documents", "provenance_documents", "quantile_drift_lineitem",
+    "pii_scan_documents",
+    "provenance_documents", "quantile_drift_lineitem",
     "repetition_stats_documents", "sequence_gaps_orders",
     "sequence_packing_documents", "skew_report_orders", "snapshot_diff_orders",
     "span_dedup_documents", "stratified_sample_documents",
@@ -124,22 +124,18 @@ _DRIVER_GREEN: frozenset[str] = frozenset({
     "unigram_rarity_documents", "upsample_documents",
     "violation_examples_orders", "weighted_sample_documents",
     # r01/r02 green:
-    "ann_cosine_topk", "asof_latest_order_per_event",
-    "clips_validate_portable", "column_stats_orders",
-    "corpus_curation_documents", "date_parse_orders",
+    "asof_latest_order_per_event", "clips_validate_portable",
+    "column_stats_orders", "corpus_curation_documents", "date_parse_orders",
     "dedup_clusters_documents", "dedup_exact_documents",
     "distinct_customers_by_status", "doc_fingerprints", "dup_rows_orders",
-    "dup_values_lineitem", "edit_distance_pairs_documents",
-    "embedding_near_dup_pairs", "embedding_norms", "events_daily",
+    "dup_values_lineitem", "edit_distance_pairs_documents", "events_daily",
     "lang_id_documents", "lapsed_customers_except", "latest_event_per_user",
-    "lsh_ann_embeddings", "lsh_embedding_near_dup",
     "minhash_near_dup_documents", "multi_field_lineitem",
     "ngram_jaccard_documents", "numeric_quantiles_lineitem", "orphan_parts",
     "q1_pricing_summary", "quality_score_documents", "quarantine_clean_orders",
     "range_join_repeat_orders", "region_nation_rollup", "region_revenue",
     "rolling_hash_documents", "row_rules_orders", "search_violations_orders",
-    "semantic_dedup_embeddings", "semi_anti_customers",
-    "semi_negative_balance_orders", "sessionize_events",
+    "semi_anti_customers", "semi_negative_balance_orders", "sessionize_events",
     "simhash_near_dup_documents", "sorted_date_violations",
     "status_by_priority_pivot", "summary_rules_orders",
     "token_stats_documents", "top5_rules_orders", "topk_open_orders",

@@ -1,7 +1,7 @@
 """Bench harness: one JSON line with the headline metric + per-query secs.
 
 Headline: validated clips/sec — the full audio rule-set pass (row-local
-single-pass rules, salted uniqueness, referential joins, t-digest drift,
+single-pass rules, two-phase uniqueness, referential joins, t-digest drift,
 pandas-UDF PCM SNR) over a deterministic synthetic clip table at the scale
 factor implied by $SPARK_GRAFT_SF_DIR (BASELINE.json north-star metric,
 SF=0.1 → 1M clips).
@@ -52,7 +52,7 @@ BENCH_QUERIES = [
     "sessionize_events",
     "asof_latest_order_per_event",
     "range_join_repeat_orders",
-    # LLM-pipeline operators (dedup / text / similarity) so regressions in
+    # LLM-pipeline operators (dedup / text) so regressions in
     # them are visible round-over-round in BENCH_r{N}.json
     "dedup_exact_documents",
     "incremental_dedup_documents",
@@ -87,20 +87,11 @@ BENCH_QUERIES = [
     "top_terms_documents",
     "fuzzy_decontamination_documents",
     "snapshot_diff_orders",
-    "embedding_quality_embeddings",
     "null_correlation_orders",
-    "embedding_drift_embeddings",
     "token_drift_documents",
     "func_dep_lineitem",
     "summary_regression_orders",
     "clips_validate_portable",
-    "ann_cosine_topk",
-    "lsh_ann_embeddings",
-    "lsh_embedding_near_dup",
-    "semantic_dedup_embeddings",
-    "label_centroids_embeddings",
-    "ivf_ann_embeddings",
-    "ivf_fast_ann_embeddings",
     "corpus_curation_documents",
     # tokenizer induction + transcript QA (round 2, session 7)
     "bpe_merges_documents",
@@ -143,7 +134,6 @@ BENCH_QUERIES = [
     "lang_mismatch_documents",
     "violation_delta_orders",
     "correlation_lineitem",
-    "quantization_plan_embeddings",
     # round 3
     "rule_suggestions_orders",
     "partition_profile_orders",
@@ -153,7 +143,6 @@ BENCH_QUERIES = [
     "streaming_dedup_events",
     "streaming_window_counts_events",
     "streaming_row_rules_events",
-    "ivf_incremental_embeddings",
     "streaming_sessions_events",
 ]
 
@@ -383,7 +372,7 @@ def main() -> None:
     query_runs: dict[str, list[float]] = {}
     if os.environ.get("BENCH_SKIP_QUERIES") != "1":
         # Share the n-gram candidate-pair frame across its five consumers
-        # (mirrors jobs/curate_job.py, which builds it once and checkpoints)
+        # (queries._ngram_pairs builds it once and reads it back as parquet)
         # instead of rebuilding ~5s of identical work per query. Opt-out
         # with BENCH_SHARE_PAIRS=0 to time every query fully independent.
         os.environ.setdefault("BENCH_SHARE_PAIRS", "1")

@@ -16,10 +16,10 @@ Architecture (Spark-first, NOT a port):
                     evaluated in ONE projection pass (array-of-structs →
                     filter → explode), so N rules != N scans.
 - ``operators``   — set-oriented rules that need more than a projection:
-                    salted two-phase uniqueness, broadcast/sort-merge
+                    two-phase uniqueness, broadcast/sort-merge
                     referential joins, t-digest distribution drift, vectorized
                     audio decode/SNR (one mapInPandas pass), plus training-data-pipeline
-                    operators (dedup, similarity search, text analysis).
+                    operators (dedup, text analysis).
 - ``engine``      — orchestrates a full validation run: violations DataFrame,
                     per-partition pass/fail verdicts, summary, checkpoint.
 - ``datagen``     — deterministic, distributed synthetic clip-table generator

@@ -22,7 +22,7 @@ Plan shape (scale rationale):
   (array-of-structs → explode), so per-row rule work is a single pass
   regardless of rule count.
 - Set-oriented rules each contribute their own (shuffle-bearing) subplan:
-  salted two-phase uniqueness, broadcast/SMJ referential joins, sketch-only
+  two-phase uniqueness, broadcast/SMJ referential joins, sketch-only
   drift shuffle — all reading the narrow cache, never the wide scan. The
   FK-anti, orphan and transcript-match rules on one dimension key share
   ONE join (``fused_dim_checks``) in every run mode — fresh, resumed,

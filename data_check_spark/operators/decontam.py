@@ -46,14 +46,7 @@ def word_ngrams(text_col: str, n: int) -> Column:
     return F.array_distinct(grams)
 
 
-def decontaminate(
-    train: DataFrame,
-    eval_df: DataFrame,
-    *,
-    n: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def decontaminate(train: DataFrame, eval_df: DataFrame, *, n: int = 4) -> DataFrame:
     """Per-training-doc contamination report.
 
     Returns one row per training doc that shares ≥1 word n-gram with the
@@ -63,13 +56,13 @@ def decontaminate(
     the result proportional to contamination, not corpus size).
     """
     eval_grams = (
-        eval_df.select(F.explode(word_ngrams(text_col, n)).alias("g")).distinct()
+        eval_df.select(F.explode(word_ngrams("text", n)).alias("g")).distinct()
     )
     train_grams = train.select(
-        F.col(id_col), F.explode(word_ngrams(text_col, n)).alias("g")
+        F.col("doc_id"), F.explode(word_ngrams("text", n)).alias("g")
     )
     hits = train_grams.join(F.broadcast(eval_grams), "g", "left_semi")
-    return hits.groupBy(id_col).agg(F.count("*").alias("n_shared_ngrams"))
+    return hits.groupBy("doc_id").agg(F.count("*").alias("n_shared_ngrams"))
 
 
 def fuzzy_decontaminate(

@@ -35,7 +35,6 @@ from data_check_spark.operators.text import fingerprints
 # ---------------------------------------------------------------------------
 
 
-
 def _bucket_pairs(
     members: "DataFrame",
     key_cols: list[str],
@@ -84,9 +83,7 @@ def _bucket_pairs(
     )
 
 
-def exact_duplicate_groups(
-    df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def exact_duplicate_groups(df: DataFrame) -> DataFrame:
     """(fingerprint, n_docs, keep_id): one row per duplicated content value.
 
     keep_id = min doc id (first-wins, reference: dekispart.py:1088-1092).
@@ -94,11 +91,11 @@ def exact_duplicate_groups(
     and is excluded — otherwise the rows view, whose equi-join can never
     match a NULL key, would disagree with the groups view on totals.
     """
-    fp = fingerprints(df, id_col=id_col, text_col=text_col)
+    fp = fingerprints(df)
     return (
         fp.filter(F.col("fingerprint").isNotNull())
         .groupBy("fingerprint")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min(id_col).alias("keep_id"))
+        .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("keep_id"))
         .filter(F.col("n_docs") > 1)
     )
 
@@ -222,13 +219,7 @@ def _shingles_expr(text_col: str, k: int) -> Column:
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    portable: bool = False,
-) -> DataFrame:
+def minhash_signatures(df: DataFrame, *, portable: bool = False) -> DataFrame:
     """(id, signature array<long>[NUM_PERM]) over ``SHINGLE_K``-shingles —
     fully JVM-side MinHash.
 
@@ -238,28 +229,22 @@ def minhash_signatures(
     hash per (shingle, permutation) — costs NUM_PERM string passes and
     measured ~15x slower at NUM_PERM=64. ``portable`` only swaps the leaf:
     xxhash64 (fast, JVM-only) vs md5 prefix (DuckDB-evaluable)."""
-    sh = _shingles_expr(text_col, SHINGLE_K)
+    sh = _shingles_expr("text", SHINGLE_K)
     if portable:
         leaf = F.transform(sh, lambda s: _portable_hash60(s) % PORTABLE_PRIME)
     else:
         leaf = F.transform(sh, lambda s: F.pmod(F.xxhash64(s), F.lit(PORTABLE_PRIME)))
-    base = df.select(F.col(id_col), leaf.alias("_hs"))
+    base = df.select(F.col("doc_id"), leaf.alias("_hs"))
     sig = F.array(
         *[
             F.array_min(F.transform(F.col("_hs"), _affine(a, b)))
             for a, b in portable_perm_table(NUM_PERM)
         ]
     )
-    return base.select(F.col(id_col), sig.alias("signature"))
+    return base.select(F.col("doc_id"), sig.alias("signature"))
 
 
-def banded_signatures(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    portable: bool = False,
-) -> DataFrame:
+def banded_signatures(df: DataFrame, *, portable: bool = False) -> DataFrame:
     """MinHash signatures exploded into LSH band buckets:
     ``(_id, signature, band, bh)`` — the shared candidate-generation frame
     for intra-corpus pairing (minhash_lsh_pairs) and cross-corpus fuzzy
@@ -272,9 +257,9 @@ def banded_signatures(
             return F.concat_ws(",", F.transform(sl, lambda v: v.cast("string")))
         return F.xxhash64(sl.cast("string"))
 
-    sigs = minhash_signatures(df, id_col=id_col, text_col=text_col, portable=portable)
+    sigs = minhash_signatures(df, portable=portable)
     return sigs.select(
-        F.col(id_col).alias("_id"),
+        F.col("doc_id").alias("_id"),
         F.col("signature"),
         F.explode(
             F.transform(
@@ -288,8 +273,6 @@ def banded_signatures(
 def minhash_lsh_pairs(
     df: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.5,
     portable: bool = False,
 ) -> DataFrame:
@@ -303,9 +286,7 @@ def minhash_lsh_pairs(
     64 hit exact decimal-rounding ties (k ≡ 2 mod 4), where Java HALF_UP and
     C half-even disagree — integer quantization is tie-free (CLAUDE.md).
     """
-    banded = banded_signatures(
-        df, id_col=id_col, text_col=text_col, portable=portable,
-    )
+    banded = banded_signatures(df, portable=portable)
 
     # Bucket members capped: a pathological bucket (empty docs, boilerplate)
     # is truncated deterministically by id order (shared _bucket_pairs).
@@ -695,13 +676,7 @@ def span_dedup(df: DataFrame, *, span_tokens: int = 32) -> DataFrame:
     )
 
 
-def incremental_exact_dedup(
-    new_docs: DataFrame,
-    store_fps: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def incremental_exact_dedup(new_docs: DataFrame, store_fps: DataFrame) -> DataFrame:
     """Batch-vs-history exact dedup: flag new documents whose content
     fingerprint already exists in the historical fingerprint store —
     the daily-ingest question ("which of today's docs have we EVER seen")
@@ -730,7 +705,7 @@ def incremental_exact_dedup(
     from data_check_spark.operators.bloom import build_bloom, might_contain
 
     fps = new_docs.select(
-        F.col(id_col), F.md5(F.col(text_col)).alias("fingerprint")
+        F.col("doc_id"), F.md5(F.col("text")).alias("fingerprint")
     )
     bitmap = build_bloom(fps, "fingerprint")
     candidates = (
@@ -743,7 +718,7 @@ def incremental_exact_dedup(
     return (
         fps.join(candidates, fps["fingerprint"] == candidates["_sfp"], "left")
         .select(
-            id_col,
+            "doc_id",
             "fingerprint",
             F.coalesce(F.col("_hit"), F.lit(0)).cast("int").alias("is_dup"),
         )

@@ -42,12 +42,12 @@ DEFAULT_MAX_ITER = 30
 # Below this many (deduplicated, directed) edges the transitive closure runs
 # as driver-side union-find instead of iterative joins: each distributed
 # round costs ~2 fixed-latency jobs regardless of size, so a 2k-edge graph
-# paid ~4.5s of pure scheduling for microseconds of actual work (measured on
-# semantic_dedup at sf0.1: clusters 6.2s vs pairs 1.65s). 100k edges
-# collect as PySpark Row objects — ~tens of MB of CPython objects, safely
-# inside driver headroom even beside a pinned engine heap (this host
-# charges heavily for first-touch allocation, CLAUDE.md) — while bigger
-# near-dup graphs keep the all-distributed path.
+# paid ~4.5s of pure scheduling for microseconds of actual work (measured
+# on an embedding near-dup graph at sf0.1: clusters 6.2s vs pairs 1.65s).
+# 100k edges collect as PySpark Row objects — ~tens of MB of CPython
+# objects, safely inside driver headroom even beside a pinned engine heap
+# (this host charges heavily for first-touch allocation, CLAUDE.md) — while
+# bigger near-dup graphs keep the all-distributed path.
 SMALL_GRAPH_MAX_EDGES = 100_000
 
 
@@ -158,13 +158,7 @@ def dedup_clusters(pairs: DataFrame) -> DataFrame:
     )
 
 
-def select_representatives(
-    clusters: DataFrame,
-    scored: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    score_col: str = "quality_q4",
-) -> DataFrame:
+def select_representatives(clusters: DataFrame, scored: DataFrame) -> DataFrame:
     """Best-copy selection per duplicate cluster: ``is_kept = 1`` for the
     member with the highest score, ties broken by smallest id.
 
@@ -181,12 +175,12 @@ def select_representatives(
     window partitions are cluster-sized (bounded by the pair emitters' bucket
     caps upstream), never corpus-sized.
     """
-    w = Window.partitionBy("cluster_id").orderBy(F.col(score_col).desc(), F.col(id_col))
-    joined = clusters.join(scored.select(F.col(id_col), F.col(score_col)), id_col)
+    w = Window.partitionBy("cluster_id").orderBy(F.col("quality_q4").desc(), F.col("doc_id"))
+    joined = clusters.join(scored.select(F.col("doc_id"), F.col("quality_q4")), "doc_id")
     return joined.select(
-        id_col,
+        "doc_id",
         "cluster_id",
         "cluster_size",
-        score_col,
+        "quality_q4",
         (F.row_number().over(w) == 1).cast("int").alias("is_kept"),
     )

@@ -44,33 +44,33 @@ def _tokens(text_col: str) -> Column:
 BPE_ISH_PATTERN = r"'(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\s]+"
 
 
-def token_stats(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    toks = _tokens(text_col)
+def token_stats(df: DataFrame) -> DataFrame:
+    toks = _tokens("text")
     n_tokens = F.size(toks)
-    n_chars = F.length(F.col(text_col))
+    n_chars = F.length(F.col("text"))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_tokens.alias("n_tokens"),
         n_chars.alias("n_chars_calc"),
         F.when(n_tokens > 0, (n_chars.cast("double") / n_tokens)).otherwise(F.lit(0.0)).alias(
             "chars_per_token"
         ),
         F.size(F.array_distinct(toks)).alias("n_distinct_tokens"),
-        (F.length(F.col(text_col)) - F.length(F.regexp_replace(text_col, r"[.,!?;:]", ""))).alias(
+        (F.length(F.col("text")) - F.length(F.regexp_replace("text", r"[.,!?;:]", ""))).alias(
             "n_punct"
         ),
-        F.regexp_count(F.col(text_col), F.lit(BPE_ISH_PATTERN)).alias("n_bpe_tokens"),
+        F.regexp_count(F.col("text"), F.lit(BPE_ISH_PATTERN)).alias("n_bpe_tokens"),
     )
 
 
-def quality_score(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """Heuristic quality in [0,1]: length band, type/token ratio, punct density.
 
     Integer-count inputs → double arithmetic identical across engines.
     """
-    stats = token_stats(df, id_col=id_col, text_col=text_col)
+    stats = token_stats(df)
     return stats.select(
-        id_col, "n_tokens", "n_distinct_tokens",
+        "doc_id", "n_tokens", "n_distinct_tokens",
         _quality_q4(
             F.col("n_tokens"), F.col("n_distinct_tokens"),
             F.col("n_chars_calc"), F.col("n_punct"),
@@ -250,10 +250,10 @@ def repetition_stats(df: DataFrame) -> DataFrame:
     )
 
 
-def fingerprints(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def fingerprints(df: DataFrame) -> DataFrame:
     """Engine-portable content fingerprint (md5 of UTF-8 text)."""
     return df.select(
-        F.col(id_col), F.md5(F.encode(F.col(text_col), "UTF-8")).alias("fingerprint")
+        F.col("doc_id"), F.md5(F.encode(F.col("text"), "UTF-8")).alias("fingerprint")
     )
 
 
@@ -624,9 +624,8 @@ def token_drift(
     k: int = 20,
     threshold_ppm: int = 1000,
 ) -> DataFrame:
-    """Top-k token-share drift between two corpus slices — the text
-    analog of similarity.embedding_drift (tokenizer / scraper / upstream
-    filter changes move head-token shares immediately).
+    """Top-k token-share drift between two corpus slices (tokenizer /
+    scraper / upstream filter changes move head-token shares immediately).
 
     One counts pass over the union (side-tagged conditional sums, map-side
     partials), TakeOrdered head by combined count (deterministic count-desc
@@ -689,12 +688,7 @@ REPLACEMENT_CHAR_PATTERN = r"\x{FFFD}"
 CONTROL_CHAR_PATTERN = r"[\x00-\x08\x0B\x0C\x0E-\x1F]"
 
 
-def extraction_quality(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def extraction_quality(df: DataFrame) -> DataFrame:
     """Text-extraction QC: flag docs whose HTML→text conversion failed.
 
     A web-scale corpus arrives through an extractor (trafilatura-style);
@@ -714,12 +708,12 @@ def extraction_quality(
     - ``status`` — ``mojibake`` > ``markup_residue`` (residue_bp above
       500) > ``light_markup`` > ``clean``, first match wins.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     stripped = F.regexp_replace(
         F.regexp_replace(t, MARKUP_TAG_PATTERN, ""), MARKUP_ENTITY_PATTERN, ""
     )
     out = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.regexp_count(t, F.lit(MARKUP_TAG_PATTERN)).alias("n_tags"),
         F.regexp_count(t, F.lit(MARKUP_ENTITY_PATTERN)).alias("n_entities"),
         F.regexp_count(t, F.lit(REPLACEMENT_CHAR_PATTERN)).alias("n_replacement"),

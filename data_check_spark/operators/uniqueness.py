@@ -1,5 +1,5 @@
-"""Salted two-phase uniqueness (north_rule: "salted hash-aggregate + two-phase
-dedup").
+"""Two-phase uniqueness (north_rule: "salted hash-aggregate + two-phase
+dedup"): the two phases are Spark's partial and final hash aggregate.
 
 Reference semantics (dekispart.py:234-245 + precompute at 1067): a non-blank
 key appearing more than once violates, one violation per ROW; blank keys are
@@ -7,13 +7,15 @@ exempt (tests/test_chk_0008.py:11-20). The school variant emits one violation
 per duplicated VALUE instead (dekispart_school.py:204-208) —
 ``aggregate_unique_violations``.
 
-Scale design: phase 1 groups by (key, salt) where salt = spark_partition_id()
-— an explicit map-side combine that bounds any single reducer's input for a
-pathologically hot key (the planted ``clip_00000000deadbeef``) to at most
-one row per (input partition × key). Phase 2 merges the partial counts per
-key. The duplicate-key set is tiny relative to the table, so the join back to
-rows is effectively a broadcast (AQE converts it at runtime); at 10^12 rows
-nothing in this plan materializes more than |distinct keys| intermediate rows.
+Scale design: one ``groupBy(key).count()``. Its map-side partial aggregate
+combines each task's rows per key before the single exchange, so a
+pathologically hot key (the planted ``clip_00000000deadbeef``) reaches its
+reducer as at most one row per map task; a (key, spark_partition_id())
+salt stage would add a second exchange and no tighter bound. The final
+aggregate merges the partial counts per key. The duplicate-key set is tiny
+relative to the table, so the join back to rows is effectively a broadcast
+(AQE converts it at runtime); at 10^12 rows nothing in this plan
+materializes more than |distinct keys| intermediate rows.
 """
 
 from __future__ import annotations
@@ -25,16 +27,11 @@ from data_check_spark.functions.blank import is_present
 
 
 def duplicate_keys(df: DataFrame, key_col: str) -> DataFrame:
-    """Two-phase salted duplicate detection → DataFrame(key, dup_count)."""
-    keyed = df.filter(is_present(key_col)).select(F.col(key_col).alias("_k"))
-    partial = (
-        keyed.withColumn("_salt", F.spark_partition_id())
-        .groupBy("_k", "_salt")
-        .agg(F.count(F.lit(1)).alias("_partial"))
-    )
+    """Partial/final hash-aggregate duplicate detection → DataFrame(key, dup_count)."""
     return (
-        partial.groupBy("_k")
-        .agg(F.sum("_partial").alias("dup_count"))
+        df.filter(is_present(key_col))
+        .groupBy(F.col(key_col).alias("_k"))
+        .agg(F.count(F.lit(1)).alias("dup_count"))
         .filter(F.col("dup_count") > 1)
         .select(F.col("_k").alias(key_col), "dup_count")
     )

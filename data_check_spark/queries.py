@@ -1,7 +1,7 @@
 """Driver-contract query registry: Spark queries + DuckDB oracle SQL.
 
 Every entry exercises one operator family from SURVEY.md §2 (rule compiler,
-salted uniqueness, referential joins, summary aggregation, window dedup,
+two-phase uniqueness, referential joins, summary aggregation, window dedup,
 broadcast-join enrichment, …) against the driver-generated TPC-H-ish parquet
 tables, paired with ANSI SQL the DuckDB oracle runs on the same files.
 
@@ -154,7 +154,7 @@ def row_rules_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 2. Uniqueness — salted two-phase dedup, both variants
+# 2. Uniqueness — partial/final aggregate dedup, both variants
 #    (reference: CHK_0008 dekispart.py:234-245; dekispart_school.py:204-208)
 # ---------------------------------------------------------------------------
 
@@ -456,13 +456,12 @@ def topk_open_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 6. Training-data pipeline ops over `documents` / `embeddings`
-#    (dedup, text analysis, similarity search — first-class engine surface)
+# 6. Training-data pipeline ops over `documents`
+#    (dedup, text analysis — first-class engine surface)
 # ---------------------------------------------------------------------------
 
 from data_check_spark.operators import dedup as _dedup  # noqa: E402
 from data_check_spark.operators import graph as _graph  # noqa: E402
-from data_check_spark.operators import similarity as _sim  # noqa: E402
 from data_check_spark.operators import text as _text  # noqa: E402
 
 
@@ -614,8 +613,7 @@ WHERE cast(i.n_inter AS double) / cast(sa.n + sb.n - i.n_inter AS double) >= 0.3
 # Opt-in shared candidate-pair frame (BENCH_SHARE_PAIRS=1, set by bench.py's
 # sweep): five queries consume the IDENTICAL n-gram Jaccard pair set
 # (ngram_jaccard, dedup_clusters, edit_distance_pairs, cluster_split,
-# cluster_representatives). In the real pipeline jobs/curate_job.py builds
-# it once and checkpoints; in the bench sweep each query rebuilt it (~5s a
+# cluster_representatives). In the bench sweep each query rebuilt it (~5s a
 # piece of duplicated work). With the flag on, the first consumer builds +
 # eagerly localCheckpoints it and the rest reuse; without the flag (driver
 # correctness runs) every query stays fully independent.
@@ -733,44 +731,6 @@ def edit_distance_pairs_documents(spark: SparkSession, sf_dir: str) -> DataFrame
     docs = _docs_parallel(spark, sf_dir)
     pairs = _ngram_pairs(spark, sf_dir, threshold=0.3)
     return _dedup.edit_distance_verify(pairs, docs)
-
-
-@register(
-    "embedding_norms",
-    """
-    SELECT vec_id, len(embedding) AS dim,
-           printf('%.4f', sqrt(list_aggregate(
-               list_transform(embedding::DOUBLE[], x -> x * x), 'sum'))) AS l2_norm
-    FROM embeddings
-    """,
-)
-def embedding_norms_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _sim.embedding_norms(_t(spark, sf_dir, "embeddings"))
-
-
-@register(
-    "ann_cosine_topk",
-    """
-    WITH q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv
-               FROM embeddings WHERE vec_id < 3)
-    SELECT q.qid AS q_id,
-           row_number() OVER (
-               PARTITION BY q.qid
-               ORDER BY list_cosine_similarity(q.qv, e.embedding::DOUBLE[]) DESC,
-                        e.vec_id) AS rank,
-           e.vec_id,
-           printf('%.4f', list_cosine_similarity(q.qv, e.embedding::DOUBLE[])) AS cosine
-    FROM q, embeddings e
-    WHERE e.vec_id <> q.qid
-    QUALIFY rank <= 10
-    """,
-)
-def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    return _sim.cosine_topk(emb, queries_df, k=10)
 
 
 # --- MinHash / SimHash in engine-portable hash mode (oracle-checked) --------
@@ -905,76 +865,6 @@ def simhash_near_dup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
-def _lsh_ann_oracle_sql() -> str:
-    """DuckDB mirror of lsh_ann_topk(portable_dim=64): per-table integer-
-    exact signatures (same inlined weight table), query-side multiprobe,
-    exact cosine re-rank + row_number top-k."""
-    k, n_planes, multiprobe, n_tables, dim = 10, 4, 4, 4, 64
-    w = _sim.portable_plane_table(n_tables * n_planes, dim)
-    scale = _sim.QUANT_SCALE
-
-    def _sig(t: int) -> str:
-        return "\n      + ".join(
-            f"(CASE WHEN list_aggregate(list_transform(range(1, {dim + 1}), "
-            f"i -> xq[i::int] * ([{','.join(map(str, w[t * n_planes + p]))}])[i::int]), 'sum') > 0 "
-            f"THEN {1 << p} ELSE 0 END)"
-            for p in range(n_planes)
-        )
-
-    sig_union = "\n  UNION ALL\n".join(
-        f"  SELECT vec_id, {t} AS tbl, {_sig(t)} AS sig FROM xqv" for t in range(n_tables)
-    )
-    probe_list = ", ".join(["sig"] + [f"xor(sig, {1 << p})" for p in range(multiprobe)])
-    return f"""
-WITH xqv AS (
-  SELECT vec_id,
-         list_transform(embedding::DOUBLE[],
-                        x -> cast(floor(x * {scale} + 0.5) AS bigint)) AS xq
-  FROM embeddings
-),
-sigs AS (
-{sig_union}
-),
-probes AS (
-  SELECT vec_id AS qid, tbl, unnest(list_distinct([{probe_list}])) AS sig
-  FROM sigs WHERE vec_id < 3
-),
-cand AS (
-  SELECT DISTINCT p.qid, s.vec_id AS vid
-  FROM sigs s JOIN probes p ON s.tbl = p.tbl AND s.sig = p.sig
-  WHERE s.vec_id <> p.qid
-),
-scored AS (
-  SELECT c.qid, c.vid,
-         list_cosine_similarity(q.embedding::DOUBLE[], v.embedding::DOUBLE[]) AS sim
-  FROM cand c
-  JOIN embeddings q ON q.vec_id = c.qid
-  JOIN embeddings v ON v.vec_id = c.vid
-)
-SELECT qid AS q_id,
-       row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vid) AS rank,
-       vid AS vec_id, printf('%.4f', sim) AS cosine
-FROM scored
-QUALIFY rank <= {k}
-ORDER BY q_id, rank
-"""
-
-
-@register("lsh_ann_embeddings", _lsh_ann_oracle_sql())
-def lsh_ann_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    # Recall-tuned for this corpus (weakly-similar random vectors): short
-    # 4-bit signatures x 4 tables + multiprobe -> measured recall@10 >= 0.9
-    # vs cosine_topk (tests/test_similarity_ops.py harness). Portable
-    # integer-exact signatures so the oracle checks the full pipeline.
-    return _sim.lsh_ann_topk(
-        emb, queries_df, k=10, n_planes=4, multiprobe=4, n_tables=4, portable_dim=64
-    ).orderBy("q_id", "rank")
-
-
 _CURATION_SQL = f"""
 WITH q AS ({_quality_sql()}),
 fp AS (SELECT doc_id, md5(text) AS fingerprint FROM documents),
@@ -1004,31 +894,13 @@ def corpus_curation_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("ivf_fast_ann_embeddings")
-def ivf_fast_ann_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-flat ANN, perf-mode quantizer (MLlib k-means + xxhash) — the
-    inverted-file scale path beside LSH. No DuckDB analog for the KMeans
-    fit, so this sibling is rows-only; the canonical ``ivf_ann_embeddings``
-    (portable deterministic quantizer) value-checks the same inverted-file
-    machinery end-to-end. Probe ratio is high here because the synthetic
-    corpus is isotropic (no cluster structure for the quantizer to
-    exploit); recall ≥ 0.9 harness-asserted."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    return _sim.ivf_ann_topk(
-        emb, queries_df, k=10, n_lists=8, n_probe=6
-    ).orderBy("q_id", "rank")
-
-
 # --- the ENGINE itself under the oracle -------------------------------------
 # The three clips_* queries can't be value-checked by the driver (their
 # synthesized input has no DuckDB view), so this query rebuilds a clip-shaped
 # table PORTABLY (every column is md5-prefix arithmetic over documents.doc_id,
 # with violation bands planted the same way datagen plants them), runs the
 # REAL engine (engine.run_validation: wide pass, one-projection row rules,
-# shared salted uniqueness, fused anti+match dim join, verdict machinery) over
+# shared two-phase uniqueness, fused anti+match dim join, verdict machinery) over
 # it with a bytes-free catalog, and has DuckDB re-derive the exact violation
 # multiset from first principles. This puts the engine's END-TO-END
 # composition — dispatch, rule fusion, blank-key exemptions, emission formats
@@ -1320,9 +1192,7 @@ def quarantine_clean_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 8. Beyond-reference analytics: rollup aggregation and brute-force
-#    embedding near-duplicate pairs (the LSH path is the scale route; this
-#    exact variant is the oracle-checkable baseline).
+# 8. Beyond-reference analytics: rollup aggregation.
 # ---------------------------------------------------------------------------
 
 
@@ -1358,133 +1228,6 @@ def region_nation_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("r_name"), F.lit("<all>")).alias("region"),
             "n_customers",
             "total_balance",
-        )
-    )
-
-
-@register(
-    "embedding_near_dup_pairs",
-    """
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           printf('%.4f', list_cosine_similarity(a.embedding::DOUBLE[],
-                                                 b.embedding::DOUBLE[])) AS cosine
-    FROM embeddings a, embeddings b
-    WHERE a.vec_id < b.vec_id
-      AND list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.3
-    """,
-)
-def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine near-duplicate pairs (embedding-space dedup baseline;
-    corpus-size guarded — the LSH-bucketed variant is the scale route)."""
-    return _sim.exact_cosine_pairs(_t(spark, sf_dir, "embeddings"), threshold=0.3)
-
-
-def _lsh_embedding_oracle_sql(*, order: bool = True) -> str:
-    """DuckDB mirror of lsh_near_dup_pairs(portable_dim=64): integer-exact
-    signatures from the SAME inlined md5-derived weight table, identical
-    multiprobe/bucket-cap/pairing, exact cosine re-rank."""
-    n_planes, multiprobe, max_bucket, threshold, dim = 8, 4, 256, 0.3, 64
-    w = _sim.portable_plane_table(n_planes, dim)
-    scale = _sim.QUANT_SCALE
-    bit_terms = "\n    + ".join(
-        f"(CASE WHEN list_aggregate(list_transform(range(1, {dim + 1}), "
-        f"i -> xq[i::int] * ([{','.join(map(str, w[p]))}])[i::int]), 'sum') > 0 "
-        f"THEN {1 << p} ELSE 0 END)"
-        for p in range(n_planes)
-    )
-    probe_list = ", ".join(["sig"] + [f"xor(sig, {1 << p})" for p in range(multiprobe)])
-    return f"""
-WITH xqv AS (
-  SELECT vec_id,
-         list_transform(embedding::DOUBLE[],
-                        x -> cast(floor(x * {scale} + 0.5) AS bigint)) AS xq
-  FROM embeddings
-),
-sigs AS (
-  SELECT vec_id, {bit_terms} AS sig FROM xqv
-),
-bk AS (
-  SELECT vec_id, unnest(list_distinct([{probe_list}])) AS bucket FROM sigs
-),
-buckets AS (
-  SELECT list_sort(list(vec_id))[1:{max_bucket}] AS m
-  FROM bk GROUP BY bucket HAVING count(*) > 1
-),
-cand AS (
-  SELECT DISTINCT x AS id_a, y AS id_b
-  FROM buckets, unnest(m) t1(x), unnest(m) t2(y) WHERE x < y
-)
-SELECT c.id_a, c.id_b,
-       printf('%.4f', list_cosine_similarity(a.embedding::DOUBLE[],
-                                             b.embedding::DOUBLE[])) AS cosine
-FROM cand c
-JOIN embeddings a ON a.vec_id = c.id_a
-JOIN embeddings b ON b.vec_id = c.id_b
-WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= {threshold}
-{"ORDER BY id_a, id_b" if order else ""}
-"""
-
-
-@register("lsh_embedding_near_dup", _lsh_embedding_oracle_sql())
-def lsh_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale route for embedding near-dup: LSH buckets + exact cosine
-    re-rank (no all-pairs join in the plan — asserted in test_plans).
-    Portable integer-exact signatures so the oracle checks the full
-    pipeline (testdata embeddings are 64-dim)."""
-    return _sim.lsh_near_dup_pairs(
-        _t(spark, sf_dir, "embeddings"), threshold=0.3, portable_dim=64
-    ).orderBy("id_a", "id_b")
-
-
-# SemDeDup-style semantic dedup: the full embedding-space curation
-# composition — LSH-bucketed near-dup pairs (never all-pairs) → transitive
-# closure → keep ONE canonical copy per semantic cluster; every corpus
-# vector gets a row (singletons are their own kept cluster of size 1).
-# The DuckDB oracle re-derives the identical result from first principles:
-# the portable-signature pair CTE nested inside the recursive-CTE closure.
-_SEMANTIC_DEDUP_SQL = f"""
-WITH RECURSIVE pairs AS ({_lsh_embedding_oracle_sql(order=False)}),
-edges AS (
-  SELECT id_a AS a, id_b AS b FROM pairs
-  UNION ALL
-  SELECT id_b AS a, id_a AS b FROM pairs
-),
-walk(node, lbl) AS (
-  SELECT a, a FROM edges GROUP BY a
-  UNION
-  SELECT e.b, w.lbl FROM walk w JOIN edges e ON e.a = w.node
-),
-cc AS (SELECT node, min(lbl) AS cluster_id FROM walk GROUP BY node),
-sizes AS (SELECT cluster_id, count(*) AS cluster_size FROM cc GROUP BY cluster_id)
-SELECT e.vec_id,
-       coalesce(cc.cluster_id, e.vec_id) AS cluster_id,
-       coalesce(s.cluster_size, 1) AS cluster_size,
-       CAST(cc.node IS NULL OR cc.node = cc.cluster_id AS INT) AS kept
-FROM embeddings e
-LEFT JOIN cc ON cc.node = e.vec_id
-LEFT JOIN sizes s ON s.cluster_id = cc.cluster_id
-"""
-
-
-@register("semantic_dedup_embeddings", _SEMANTIC_DEDUP_SQL)
-def semantic_dedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-space (semantic) dedup, end to end: LSH near-dup pairs →
-    connected components → first-wins survivor per cluster, joined back to
-    the corpus so singletons surface as kept clusters of size 1. The scale
-    shape is inherited: pair generation is bucketed (no nested-loop join),
-    the closure iterates over only the near-dup subset, and the join-back
-    broadcasts the (small) cluster frame under AQE."""
-    emb = _t(spark, sf_dir, "embeddings")
-    pairs = _sim.lsh_near_dup_pairs(emb, threshold=0.3, portable_dim=64)
-    clusters = _graph.dedup_clusters(pairs.select("id_a", "id_b"))
-    return (
-        emb.select("vec_id")
-        .join(clusters, F.col("vec_id") == F.col("doc_id"), "left")
-        .select(
-            "vec_id",
-            F.coalesce(F.col("cluster_id"), F.col("vec_id")).alias("cluster_id"),
-            F.coalesce(F.col("cluster_size"), F.lit(1)).alias("cluster_size"),
-            F.coalesce(F.col("is_canonical"), F.lit(1)).alias("kept"),
         )
     )
 
@@ -2032,27 +1775,6 @@ def vocab_coverage_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _text.vocab_coverage(
         _t(spark, sf_dir, "documents"), vocab_sizes=(5, 20, 100)
     )
-
-
-_LABEL_CENTROIDS_SQL = """
-SELECT e.label, p.i AS pos, count(*) AS n_vecs,
-       CAST(sum(cast(floor(e.embedding[p.i]::DOUBLE * 1000000 + 0.5) AS BIGINT))
-           AS BIGINT) AS sum_q,
-       CAST(sum(cast(floor(e.embedding[p.i]::DOUBLE * 1000000 + 0.5) AS BIGINT)) // count(*)
-           AS BIGINT) AS centroid_q
-FROM embeddings e, (SELECT unnest(range(1, 65)) AS i) p
-WHERE e.label IS NOT NULL AND e.embedding IS NOT NULL
-GROUP BY e.label, p.i
-"""
-
-
-@register("label_centroids_embeddings", _LABEL_CENTROIDS_SQL)
-def label_centroids_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label embedding centroids (class prototypes for semantic
-    search / cluster QC) — integer-exact element sums; the map-side
-    partial aggregate means the shuffle carries labels×dim rows, not
-    n×dim (testdata embeddings are 64-dim)."""
-    return _sim.label_centroids(_t(spark, sf_dir, "embeddings"))
 
 
 @register("iqr_outliers_events", _IQR_OUTLIERS_SQL)
@@ -3569,176 +3291,6 @@ def provenance_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.select("doc_id", "src_file", "src_row_index")
 
 
-def _ivf_portable_oracle_sql(*, n_lists: int = 16, n_probe: int = 4, lloyd_iters: int = 0) -> str:
-    """DuckDB mirror of portable_ivf_topk: md5-seeded centroids, optional
-    integer-exact Lloyd refinements (truncating division — DuckDB ``//``
-    and Spark ``div`` agree), integer quantized squared-distance
-    assignment/probe (ties by cell), float cosine re-rank — the whole
-    inverted-file build AND search replayed value-for-value."""
-    k, dim = 10, 64
-    scale = _sim.QUANT_SCALE
-
-    def _assign(name: str, cents: str, where: str = "", rn: str = "rn = 1") -> str:
-        sq = (
-            f"list_aggregate(list_transform(range(1, {dim + 1}), "
-            "i -> (x.q[i::int] - s.cq[i::int]) * (x.q[i::int] - s.cq[i::int])), 'sum')"
-        )
-        return f"""{name} AS (
-  SELECT vec_id, v, q, cell FROM (
-    SELECT x.vec_id, x.v, x.q, s.cell,
-           row_number() OVER (PARTITION BY x.vec_id ORDER BY {sq}, s.cell) AS rn
-    FROM xq x CROSS JOIN {cents} s {where}
-  ) WHERE {rn}
-)"""
-
-    stages = [
-        f"""xq AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v,
-         list_transform(embedding::DOUBLE[],
-                        x -> cast(floor(x * {scale} + 0.5) AS bigint)) AS q
-  FROM embeddings
-)""",
-        f"""c0 AS (
-  SELECT cell, q AS cq FROM (
-    SELECT row_number() OVER (ORDER BY md5(cast(vec_id AS varchar)), vec_id) - 1 AS cell, q
-    FROM xq
-  ) WHERE cell < {n_lists}
-)""",
-    ]
-    for j in range(lloyd_iters):
-        stages.append(_assign(f"a{j}", f"c{j}"))
-        stages.append(
-            f"""c{j + 1} AS (
-  SELECT cell, list(m ORDER BY i) AS cq FROM (
-    SELECT cell, i, cast(sum(q[i::int]) // count(*) AS bigint) AS m
-    FROM a{j}, unnest(range(1, {dim + 1})) t(i)
-    GROUP BY cell, i
-  ) GROUP BY cell
-)"""
-        )
-    final_c = f"c{lloyd_iters}"
-    stages.append(_assign("af", final_c))
-    stages.append(
-        _assign("pr", final_c, where="WHERE x.vec_id < 3", rn=f"rn <= {n_probe}")
-    )
-    stages.append(
-        """cand AS (
-  SELECT DISTINCT p.vec_id AS qid, p.v AS qv, a.vec_id AS vid, a.v AS vv
-  FROM pr p JOIN af a ON a.cell = p.cell
-  WHERE a.vec_id <> p.vec_id
-)"""
-    )
-    body = ",\n".join(stages)
-    return f"""
-WITH {body}
-SELECT qid AS q_id,
-       row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vid) AS rank,
-       vid AS vec_id, printf('%.4f', sim) AS cosine
-FROM (SELECT qid, vid, list_cosine_similarity(qv, vv) AS sim FROM cand)
-QUALIFY rank <= {k}
-ORDER BY q_id, rank
-"""
-
-
-@register(
-    "ivf_ann_embeddings",
-    _ivf_portable_oracle_sql(n_lists=8, n_probe=6, lloyd_iters=2),
-)
-def ivf_ann_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canonical IVF ANN: deterministic integer-exact coarse quantizer
-    (md5-seeded + 2 integer-Lloyd refinements) — unlike the MLlib-KMeans
-    perf sibling (``ivf_fast_ann_embeddings``, rows-only), cell seeding,
-    Lloyd re-centering, Voronoi
-    assignment, probe routing, candidate join and top-k re-rank are all
-    value-checked cross-engine. Probe ratio 6/8 keeps recall@10 >= 0.9 on
-    the isotropic corpus (harness-asserted)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    return _sim.portable_ivf_topk(
-        emb, queries_df, k=10, n_lists=8, n_probe=6, lloyd_iters=2
-    ).orderBy("q_id", "rank")
-
-
-_EMBEDDING_QUALITY_SQL = """
-WITH bad AS (
-  SELECT vec_id + 1000000 AS vec_id,
-         CASE (vec_id // 97) % 4
-           WHEN 0 THEN embedding[1:32]
-           WHEN 1 THEN list_concat(['nan'::FLOAT], embedding[2:])
-           WHEN 2 THEN list_transform(embedding, x -> 0.0::FLOAT)
-           ELSE list_transform(embedding, x -> cast(x::DOUBLE * 10 AS FLOAT))
-         END AS embedding
-  FROM embeddings WHERE vec_id % 97 = 0
-),
-all_rows AS (
-  SELECT vec_id, embedding FROM embeddings
-  UNION ALL SELECT vec_id, embedding FROM bad
-),
-feat AS (
-  SELECT vec_id, embedding,
-         len(embedding) AS dim,
-         len(list_filter(embedding, x -> isnan(x) OR isinf(x))) AS n_bad,
-         cast(coalesce(list_sum(list_transform(
-             list_filter(embedding, x -> NOT (isnan(x) OR isinf(x))),
-             x -> cast(floor(x::DOUBLE * 1000000 + 0.5) AS BIGINT)
-                  * cast(floor(x::DOUBLE * 1000000 + 0.5) AS BIGINT))), 0)
-           AS BIGINT) AS normsq_q
-  FROM all_rows
-),
-flagged AS (
-  SELECT vec_id,
-    CASE WHEN embedding IS NULL THEN 'EMB_NULL'
-         WHEN dim <> 64 THEN 'EMB_DIM'
-         WHEN n_bad > 0 THEN 'EMB_NON_FINITE'
-         WHEN normsq_q = 0 THEN 'EMB_ZERO'
-         WHEN normsq_q < 900000000000 OR normsq_q > 1100000000000
-           THEN 'EMB_NORM_RANGE'
-    END AS rule_id,
-    CASE WHEN embedding IS NULL THEN 'null'
-         WHEN dim <> 64 THEN cast(dim AS VARCHAR)
-         WHEN n_bad > 0 THEN cast(n_bad AS VARCHAR)
-         WHEN normsq_q = 0 THEN 'zero'
-         ELSE cast(normsq_q AS VARCHAR)
-    END AS observed
-  FROM feat
-)
-SELECT vec_id, rule_id, observed FROM flagged WHERE rule_id IS NOT NULL
-"""
-
-
-@register("embedding_quality_embeddings", _EMBEDDING_QUALITY_SQL)
-def embedding_quality_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-table validation gate: NULL / dim-mismatch / non-finite /
-    all-zero / norm-out-of-band rules in one shuffle-free JVM projection
-    (operators/similarity.py::embedding_quality). Bad rows are planted
-    deterministically from the table itself (one mutated copy per vec_id
-    divisible by 97: truncated dim, NaN element, zeroed, x10 scaled) so both
-    engines derive the identical defect set; the real rows must all pass —
-    the norm band brackets the unit-normalized corpus (quantized norm²
-    ~1e12 observed at every sf)."""
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cls = (F.expr("vec_id div 97") % 4).cast("int")
-    nan_f = F.lit(float("nan")).cast("float")
-    bad = emb.filter(F.col("vec_id") % 97 == 0).select(
-        (F.col("vec_id") + 1000000).alias("vec_id"),
-        F.when(cls == 0, F.expr("slice(embedding, 1, 32)"))
-        .when(cls == 1, F.concat(F.array(nan_f), F.expr("slice(embedding, 2, size(embedding) - 1)")))
-        .when(cls == 2, F.transform("embedding", lambda x: F.lit(0.0).cast("float")))
-        .otherwise(
-            F.transform("embedding", lambda x: (x.cast("double") * 10).cast("float"))
-        )
-        .alias("embedding"),
-    )
-    return _sim.embedding_quality(
-        emb.unionByName(bad),
-        expected_dim=64,
-        normsq_q_lo=900_000_000_000,
-        normsq_q_hi=1_100_000_000_000,
-    )
-
-
 _NULL_CORRELATION_SQL = """
 WITH mut AS (
   SELECT CASE WHEN h % 7 = 0 THEN NULL ELSE o_custkey END AS o_custkey,
@@ -3804,53 +3356,6 @@ def null_correlation_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EMBEDDING_DRIFT_SQL = """
-WITH pos AS (SELECT unnest(range(1, 65)) AS i),
-cur AS (
-  SELECT p.i AS pos, count(*) AS n_cur,
-         sum(cast(floor((e.embedding[p.i]::DOUBLE +
-               CASE WHEN p.i <= 8 THEN 0.05 ELSE 0 END) * 1000000 + 0.5)
-             AS BIGINT)) AS sum_q
-  FROM embeddings e, pos p
-  WHERE e.vec_id % 2 = 1 AND e.embedding IS NOT NULL
-  GROUP BY p.i
-),
-base AS (
-  SELECT p.i AS pos, count(*) AS n_base,
-         sum(cast(floor(e.embedding[p.i]::DOUBLE * 1000000 + 0.5) AS BIGINT))
-           AS sum_q
-  FROM embeddings e, pos p
-  WHERE e.vec_id % 2 = 0 AND e.embedding IS NOT NULL
-  GROUP BY p.i
-)
-SELECT c.pos, c.n_cur, b.n_base,
-       CAST(c.sum_q // c.n_cur AS BIGINT) AS mean_cur_q,
-       CAST(b.sum_q // b.n_base AS BIGINT) AS mean_base_q,
-       CAST(c.sum_q // c.n_cur - b.sum_q // b.n_base AS BIGINT) AS delta_q,
-       abs(c.sum_q // c.n_cur - b.sum_q // b.n_base) > 20000 AS drifted
-FROM cur c JOIN base b ON b.pos = c.pos
-"""
-
-
-@register("embedding_drift_embeddings", _EMBEDDING_DRIFT_SQL)
-def embedding_drift_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-dimension embedding mean drift (similarity.embedding_drift):
-    the encoder-version tripwire. The 'current' slice (odd vec_ids) is
-    deterministically shifted +0.05 on dims 1-8, the baseline (even ids)
-    is untouched — exactly those dims must flag at threshold_q=20000.
-    Both engines quantize AFTER the identical double-precision shift, so
-    the drift frame hash-compares exactly."""
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    shift = F.transform(
-        "embedding",
-        lambda x, i: x.cast("double")
-        + F.when(i < 8, F.lit(0.05)).otherwise(F.lit(0.0)),
-    )
-    current = emb.filter(F.col("vec_id") % 2 == 1).select(shift.alias("embedding"))
-    baseline = emb.filter(F.col("vec_id") % 2 == 0).select("embedding")
-    return _sim.embedding_drift(current, baseline, threshold_q=20000)
-
-
 _TOKEN_DRIFT_SQL = r"""
 WITH cur AS (
   SELECT regexp_replace(text, '\bjoin\b', 'zzdrift', 'g') AS text
@@ -3897,8 +3402,7 @@ FROM shared
 @register("token_drift_documents", _TOKEN_DRIFT_SQL)
 def token_drift_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Head-token share drift between corpus slices (text.token_drift) —
-    the tokenizer/scraper-change tripwire, text sibling of
-    embedding_drift_embeddings. The 'current' slice (odd doc_ids) has the
+    the tokenizer/scraper-change tripwire. The 'current' slice (odd doc_ids) has the
     token 'join' rewritten to 'zzdrift', so exactly that pair moves ≈3.5%
     of token mass in opposite directions and flags at the 1% threshold;
     the 31-token vocab fits the k=32 head, and even/odd slice noise stays
@@ -4630,55 +4134,6 @@ def correlation_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         [("l_quantity", "l_extendedprice"), ("l_quantity", "l_discount")],
         scales={"l_quantity": 1.0, "l_extendedprice": 0.01, "l_discount": 100.0},
     ).orderBy("col_x", "col_y")
-
-
-# ---------------------------------------------------------------------------
-# Int8 quantization plan (operators/similarity.py::quantization_plan): the
-# "is int8 safe for this encoder?" query — per dim, the symmetric scale
-# (absmax) and the worst reconstruction error of the planned codec, all
-# non-negative integer arithmetic (floor==trunc in every engine).
-_QUANT_PLAN_SQL = """
-WITH pos AS (
-  SELECT i - 1 AS dim,
-         CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS q
-  FROM (
-    SELECT embedding, unnest(range(1, len(embedding) + 1)) AS i
-    FROM embeddings WHERE embedding IS NOT NULL
-  )
-  WHERE NOT isnan(embedding[i]) AND NOT isinf(embedding[i])
-),
-am AS (
-  SELECT dim, count(*) AS n_values, max(abs(q)) AS absmax_q
-  FROM pos GROUP BY dim
-),
-err AS (
-  SELECT p.dim,
-         max(abs(abs(p.q)
-             - (2 * ((2 * abs(p.q) * 127 + a.absmax_q) // (2 * a.absmax_q))
-                  * a.absmax_q + 127) // (2 * 127))) AS max_err_q
-  FROM pos p JOIN am a USING (dim)
-  WHERE a.absmax_q > 0
-  GROUP BY p.dim
-)
-SELECT a.dim, a.n_values, a.absmax_q,
-       coalesce(e.max_err_q, 0) AS max_err_q,
-       CASE WHEN a.absmax_q > 0
-            THEN (coalesce(e.max_err_q, 0) * 1000000 + a.absmax_q // 2)
-                 // a.absmax_q END AS err_ppm
-FROM am a LEFT JOIN err e ON a.dim = e.dim
-ORDER BY a.dim
-"""
-
-
-@register("quantization_plan_embeddings", _QUANT_PLAN_SQL)
-def quantization_plan_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-dimension int8 plan for the embeddings table: absmax scale,
-    worst reconstruction error, and err_ppm — the re-quantize tripwire
-    after an encoder change. Two map-side-combined passes over the
-    exploded pairs; the 64-row absmax frame broadcasts back."""
-    from data_check_spark.operators.similarity import quantization_plan
-
-    return quantization_plan(_t(spark, sf_dir, "embeddings")).orderBy("dim")
 
 
 # ---------------------------------------------------------------------------
@@ -5913,104 +5368,6 @@ def streaming_row_rules_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rule_id string, clip_id string, partition string, observed string, "
         "event_ts timestamp"
     ).parquet(out_dir).orderBy("rule_id", "clip_id")
-
-
-# ---------------------------------------------------------------------------
-# Incremental IVF index maintenance (operators/similarity.py::ivf_add_batch):
-# train the deterministic coarse quantizer on the BASE corpus, persist the
-# index, then assign an arriving batch against the persisted centroids
-# WITHOUT retraining. The oracle replays centroid training over the base
-# and a single full assignment of base+batch — append-after-add-batch must
-# equal it row-for-row (assignment is a pure function of vector+centroids).
-# ---------------------------------------------------------------------------
-
-
-def _ivf_incremental_oracle_sql() -> str:
-    """DuckDB mirror: md5-seeded centroids + integer Lloyd over the BASE
-    subset (vec_id % 4 != 0), then integer-exact assignment of ALL vectors
-    to those fixed centroids — exactly what base-build + add-batch leaves
-    in the cell store."""
-    n_lists, dim, lloyd_iters = 8, 64, 1
-    scale = _sim.QUANT_SCALE
-    sq = (
-        f"list_aggregate(list_transform(range(1, {dim + 1}), "
-        "i -> (x.q[i::int] - s.cq[i::int]) * (x.q[i::int] - s.cq[i::int])), 'sum')"
-    )
-    stages = [
-        f"""xq AS (
-  SELECT vec_id, list_transform(embedding::DOUBLE[],
-                                x -> cast(floor(x * {scale} + 0.5) AS bigint)) AS q
-  FROM embeddings
-)""",
-        """xb AS (SELECT * FROM xq WHERE vec_id % 4 <> 0)""",
-        f"""c0 AS (
-  SELECT cell, q AS cq FROM (
-    SELECT row_number() OVER (ORDER BY md5(cast(vec_id AS varchar)), vec_id) - 1 AS cell, q
-    FROM xb
-  ) WHERE cell < {n_lists}
-)""",
-    ]
-    for j in range(lloyd_iters):
-        stages.append(
-            f"""a{j} AS (
-  SELECT vec_id, q, cell FROM (
-    SELECT x.vec_id, x.q, s.cell,
-           row_number() OVER (PARTITION BY x.vec_id ORDER BY {sq}, s.cell) AS rn
-    FROM xb x CROSS JOIN c{j} s
-  ) WHERE rn = 1
-)"""
-        )
-        stages.append(
-            f"""c{j + 1} AS (
-  SELECT cell, list(m ORDER BY i) AS cq FROM (
-    SELECT cell, i, cast(sum(q[i::int]) // count(*) AS bigint) AS m
-    FROM a{j}, unnest(range(1, {dim + 1})) t(i)
-    GROUP BY cell, i
-  ) GROUP BY cell
-)"""
-        )
-    stages.append(
-        f"""af AS (
-  SELECT vec_id, cell FROM (
-    SELECT x.vec_id, s.cell,
-           row_number() OVER (PARTITION BY x.vec_id ORDER BY {sq}, s.cell) AS rn
-    FROM xq x CROSS JOIN c{lloyd_iters} s
-  ) WHERE rn = 1
-)"""
-    )
-    body = ",\n".join(stages)
-    return f"""
-WITH {body}
-SELECT vec_id, CAST(cell AS INT) AS cell,
-       CAST(vec_id % 4 = 0 AS INT) AS added
-FROM af ORDER BY vec_id
-"""
-
-
-@register("ivf_incremental_embeddings", _ivf_incremental_oracle_sql())
-def ivf_incremental_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental IVF maintenance end-to-end: train on base (vec_id % 4
-    != 0, md5 seeds + 1 integer Lloyd pass), persist the index
-    (cell-partitioned inverted file + quantized centroid table), add-batch
-    the remaining quarter against the PERSISTED centroids, read the store
-    back. Output = every vector's final cell + whether it arrived via
-    add-batch; value-identical to a single full assignment, which is what
-    the oracle computes analytically."""
-    in_dir, _out, _ck = _stream_workspace("ivf_incr")
-    emb = _t(spark, sf_dir, "embeddings")
-    base = emb.filter(F.col("vec_id") % 4 != 0)
-    new = emb.filter(F.col("vec_id") % 4 == 0)
-    cents = _sim.portable_ivf_train(base, n_lists=8, lloyd_iters=1)
-    _sim.save_portable_ivf_index(
-        _sim.portable_ivf_assign(base, cents), cents, in_dir
-    )
-    _sim.ivf_add_batch(spark, in_dir, new)
-    cells, _ = _sim.load_portable_ivf_index(spark, in_dir)
-    return cells.select(
-        F.col("_vid").alias("vec_id"),
-        F.col("_cell").cast("int").alias("cell"),
-        (F.col("_vid") % 4 == 0).cast("int").alias("added"),
-    ).orderBy("vec_id")
 
 
 _STREAM_SESSIONS_SQL = """

@@ -8,8 +8,8 @@ ONE projection pass (``rules.compiler.apply_row_rules`` with
 ``id_col="doc_id"``) — the rule engine is table-agnostic; only the catalog
 changes.
 
-All rules here are row-local so the catalog drops straight into a curation
-pre-flight (jobs/curate_job.py) or a standalone scan; corpus-level checks
+All rules here are row-local so the catalog drops straight into a
+``validate_job --rules`` file or a standalone scan; corpus-level checks
 (uniqueness, dedup, drift) live in the operator modules and the driver
 queries that exercise them.
 """

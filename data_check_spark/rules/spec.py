@@ -39,7 +39,7 @@ Row-local kinds (compiled into the single-pass projection):
 
 Set-oriented kinds (dispatched to operators, not the projection):
 
-- ``unique``              — salted two-phase duplicate detection
+- ``unique``              — two-phase (partial/final) duplicate detection
 - ``referential``         — semi/anti join against a dimension table
 - ``aggregate_unique``    — one violation per duplicate *value* (reference:
                             dekispart_school.py:204-208)

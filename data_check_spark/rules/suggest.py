@@ -6,8 +6,7 @@ check_definitions.json): profile the table once, then propose the rules the
 current data already satisfies — a reviewable starting catalog, not an
 auto-deployed one. Suggested rules are exactly the compiler kinds
 (rules/compiler.py), so the output drops straight into ``apply_row_rules``,
-``run_validation``, a ``validate_job --rules`` file, or a curate-job
-``--preflight-rules`` file.
+``run_validation``, or a ``validate_job --rules`` file.
 
 Heuristics (all evidence-based, each rule true of the profiled data):
 

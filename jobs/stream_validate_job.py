@@ -18,6 +18,10 @@ Launch (same packaging as the batch job):
         --checkpoint-dir s3://bucket/stream_ckpt/ \\
         --once
 
+Local run from a checkout (``-m`` puts the repository root on
+``sys.path``): ``python -m jobs.stream_validate_job --input <dir>
+--output-dir <out> --checkpoint-dir <ckpt> --once``.
+
 Semantics that make this safe to operate:
 - the streaming checkpoint IS the resume contract: relaunch with the same
   args continues from the last committed micro-batch (files processed

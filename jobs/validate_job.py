@@ -14,6 +14,12 @@ Cluster launch (BASELINE.json north_rule):
         --checkpoint-dir s3://bucket/validation_ckpt/ \\
         --resume
 
+Local run from a checkout (``-m`` puts the repository root, and so the
+``data_check_spark`` package, on ``sys.path``; ``python jobs/validate_job.py``
+does not):
+
+    python -m jobs.validate_job --input <clips> --output-dir <out> [...]
+
 Writes ``<output>/violations`` + ``<output>/verdicts`` (parquet, partitioned
 by run) and appends the per-partition checkpoint table; prints a one-line
 JSON summary to stdout. ``--resume`` anti-joins partitions already marked

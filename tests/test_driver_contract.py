@@ -45,13 +45,12 @@ def test_queries_order_unchecked_then_green_then_rows_only():
 def test_oracle_sql_keys_subset_of_queries():
     mod = _entry_module()
     qs, osql = mod.queries(), mod.oracle_sql()
-    assert (len(qs), len(osql)) == (134, 130)
+    assert (len(qs), len(osql)) == (121, 118)
     assert set(osql) <= set(qs)
     # every oracle-capable entry IS oracle-backed: the only entries without
     # an oracle are the documented by-design set
     rows_only = set(qs) - set(osql)
     assert rows_only == {
-        "ivf_fast_ann_embeddings",
         "clips_validate_full",
         "clips_partition_verdicts",
         "clips_rule_summary",
@@ -66,16 +65,19 @@ def test_driver_green_names_exist_in_registry():
 
 
 def test_bench_sweep_names_exist_in_registry():
-    """bench.py's secondary sweep looks queries up by name; a name the
-    registry no longer has would fail the sweep mid-run. Parsed, not
-    imported: importing bench.py sets process env for its own run."""
-    tree = ast.parse(open(os.path.join(REPO, "bench.py"), encoding="utf-8").read())
-    sweep = next(
-        ast.literal_eval(node.value)
-        for node in tree.body
-        if isinstance(node, ast.Assign)
-        and any(isinstance(t, ast.Name) and t.id == "BENCH_QUERIES" for t in node.targets)
-    )
+    """bench.py's secondary sweep and tools/plan_audit.py's AUDITED list look
+    queries up by name; a name the registry no longer has would fail them
+    mid-run. Parsed, not imported: importing bench.py sets process env for
+    its own run."""
     qs = set(_entry_module().queries())
-    missing = sorted(set(sweep) - qs)
-    assert not missing, f"bench.py BENCH_QUERIES names no registered query: {missing}"
+    for rel, var in (("bench.py", "BENCH_QUERIES"), ("tools/plan_audit.py", "AUDITED")):
+        tree = ast.parse(open(os.path.join(REPO, rel), encoding="utf-8").read())
+        listed = next(
+            ast.literal_eval(node.value)
+            for node in tree.body
+            if isinstance(node, ast.Assign)
+            and any(isinstance(t, ast.Name) and t.id == var for t in node.targets)
+        )
+        names = {n if isinstance(n, str) else n[0] for n in listed}
+        missing = sorted(names - qs)
+        assert not missing, f"{rel} {var} names no registered query: {missing}"

@@ -47,6 +47,24 @@ def test_dup_values_has_partial_aggregation(spark):
     assert plan.index("HashAggregate") < plan.index("Exchange")
 
 
+def test_duplicate_keys_one_exchange(spark):
+    """Uniqueness is one hash aggregate: the map-side partial count and the
+    final merge sit around ONE exchange, with no separate salt stage."""
+    from pyspark.sql import functions as F
+
+    from data_check_spark.operators.uniqueness import duplicate_keys
+
+    df = spark.range(1000).select((F.col("id") % 400).cast("string").alias("clip_id"))
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        plan = _plan(duplicate_keys(df, "clip_id"))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert plan.count("Exchange") == 1
+    assert plan.count("HashAggregate") == 2
+
+
 def test_row_rules_single_scan(spark):
     from data_check_spark.queries import QUERIES
 
@@ -105,29 +123,6 @@ def test_text_and_dedup_stay_jvm_side(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     assert "EvalPython" not in _plan(quality_score(docs))
     assert "EvalPython" not in _plan(minhash_signatures(docs))
-
-
-def test_ann_broadcasts_queries(spark):
-    from pyspark.sql import functions as F
-
-    from data_check_spark.operators.similarity import cosine_topk
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 2).selectExpr("vec_id as q_id", "embedding as q_vec")
-    plan = _plan(cosine_topk(emb, q, k=5))
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-
-
-def test_lsh_near_dup_pairs_no_all_pairs_join(spark):
-    """The LSH embedding-pair route must never plan an all-pairs join; the
-    guarded exact baseline is the only O(n^2) surface and it refuses large
-    corpora."""
-    from data_check_spark.operators.similarity import lsh_near_dup_pairs
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    plan = _plan(lsh_near_dup_pairs(emb, threshold=0.3))
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
 
 
 def test_date_parse_single_scan(spark):
@@ -214,23 +209,6 @@ def test_cluster_representatives_window_keyed_by_cluster(spark):
     # the row_number window must be partitioned by cluster_id (never a
     # single-partition global window over the corpus)
     assert "windowspecdefinition(cluster_id" in plan
-
-
-def test_ivf_add_batch_assignment_no_join_no_shuffle(spark):
-    """Incremental IVF maintenance must never join the batch against the
-    corpus: assignment against fixed centroids is a pure projection
-    (centroid array literals, codegen'd distance fold) — one scan of the
-    arriving batch, zero exchanges, zero joins."""
-    from data_check_spark.operators.similarity import (
-        portable_ivf_assign,
-        portable_ivf_train,
-    )
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    cents = portable_ivf_train(emb, n_lists=4, lloyd_iters=0)
-    plan = _plan(portable_ivf_assign(emb, cents))
-    assert "Join" not in plan
-    assert "Exchange" not in plan
 
 
 def test_literal_frame_is_jvm_only(spark):

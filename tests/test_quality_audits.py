@@ -1,4 +1,5 @@
-"""Benford screen, duplicate-label conflicts, split-leakage audit."""
+"""Benford screen, duplicate-label conflicts, split-leakage, freshness and
+novelty audits."""
 
 import math
 

@@ -1,8 +1,6 @@
 """Rule suggestion: profile → proposed catalog → rules hold on the profiled
 data and catch planted deviations on a drifted copy."""
 
-import os
-
 import pytest
 
 
@@ -79,50 +77,6 @@ def test_suggest_rules_json_roundtrip(spark, tmp_path):
     cat.save(path)
     assert load_catalog(path).to_json() == cat.to_json()
     assert len(json.load(open(path))) == len(cat.rules)
-
-
-def test_suggest_then_curate_preflight_integration(spark, tmp_path, capsys):
-    """suggest_rules on a table → JSON → curate_job --preflight-rules: the
-    learned catalog quarantines nothing on the data it was learned from and
-    catches a drifted row appended later."""
-    import json
-    import sys as _sys
-
-    from data_check_spark.rules.suggest import suggest_rules
-
-    rows = [(i, f"doc body {i} " + "tok " * 15, "en", f"src{i % 4}") for i in range(30)]
-    df = spark.createDataFrame(rows, "doc_id long, text string, lang string, source string")
-    docs = str(tmp_path / "docs")
-    df.write.parquet(docs)
-
-    cat = suggest_rules(df)
-    rules_path = str(tmp_path / "rules.json")
-    cat.save(rules_path)
-
-    _sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs"))
-    import curate_job
-
-    out1 = str(tmp_path / "r1")
-    assert curate_job.main([
-        "--input", docs, "--output-dir", out1,
-        "--preflight-rules", rules_path, "--skip-near-dup", "--shards", "2",
-    ]) == 0
-    m1 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert "rule_violation" not in m1["dropped"] and m1["kept_rows"] == 30
-
-    drifted = rows + [(99, "body", "xx", "weird-source")]   # lang + source drift
-    docs2 = str(tmp_path / "docs2")
-    spark.createDataFrame(
-        drifted, "doc_id long, text string, lang string, source string"
-    ).write.parquet(docs2)
-    out2 = str(tmp_path / "r2")
-    assert curate_job.main([
-        "--input", docs2, "--output-dir", out2,
-        "--preflight-rules", rules_path, "--skip-near-dup", "--shards", "2",
-    ]) == 0
-    m2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert m2["dropped"]["rule_violation"] == 1
-    assert m2["rule_violations"].get("LANG_SET") == 1
 
 
 def test_suggest_then_validate_job_integration(spark, tmp_path, capsys):

@@ -16,12 +16,10 @@ def exported(spark, tmp_path):
         # surface the sample with a NULL column (from its remaining member)
         F.when(F.col("id") != 7, F.concat(F.lit("text of "), F.col("id"))).alias("text"),
         F.encode(F.concat(F.lit("pcm"), F.col("id")), "UTF-8").alias("bytes"),
-        F.col("id").alias("pos"),
     )
     out = str(tmp_path / "tars")
     write_tar_shards(
-        df, out, key_col="key", payloads={"text": "txt", "bytes": "wav"},
-        order_col="pos",
+        df, out, key_col="key", payloads={"text": "txt", "bytes": "wav"}
     ).collect()
     return df, out
 

@@ -25,7 +25,7 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+TABLES = "region nation customer supplier part orders lineitem events documents".split()
 
 # Types the driver's value hasher is known to canonicalize identically to the
 # Spark result (CORRECTNESS_r02/r03 evidence). HUGEINT and DECIMAL are the

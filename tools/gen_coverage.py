@@ -33,10 +33,11 @@ sampling driver picks them up next). Regenerate with
 `python tools/gen_coverage.py` whenever a CORRECTNESS file lands.
 
 Round 6 retired the synthesized-PCM training-prep, multimodal and
-compaction entries listed at the end with their operators. The remaining
-registry (130 oracle-backed + 4 rows-only) value-checks green under
+compaction entries, then the embedding (ANN, IVF, LSH, embedding QC)
+entries; all are listed at the end. The remaining registry (118
+oracle-backed + 3 rows-only) value-checks green under
 `tools/check_oracle.py` at sf0.01. Every oracle-backed entry has a
-hash-green CORRECTNESS row (130/130 after CORRECTNESS_r05.json). Round 6
+hash-green CORRECTNESS row (118/118 after CORRECTNESS_r05.json). Round 6
 changed `streaming_dedup_events` to per-occurrence `(clip_id, observed)`
 rows, so `queries()` puts it first until a CORRECTNESS round re-checks the
 new shape.
@@ -45,10 +46,11 @@ new shape.
 |---|---|---|---|
 """
 
-# Registry entries retired in round 6 with the training-prep operators they
-# exercised (synthesized-PCM audio prep, multimodal features, compaction
-# planning). Listed in COVERAGE.md so an older CORRECTNESS file that still
-# names them reads as a scope cut, not a lost query.
+# Registry entries retired in round 6 with the operators they exercised:
+# synthesized-PCM audio prep, multimodal features and compaction planning,
+# then embedding search/QC (operators/similarity.py). Listed in COVERAGE.md
+# so an older CORRECTNESS file that still names them reads as a scope cut,
+# not a lost query.
 RETIRED = (
     "audio_stats_documents", "voiced_segments_documents",
     "audio_fingerprint_documents", "audio_curation_documents",
@@ -59,6 +61,12 @@ RETIRED = (
     "clipping_runs_documents", "autocorr_documents", "media_feature_extract",
     "image_stats_documents", "container_sniff_documents",
     "compaction_plan_documents", "compaction_summary_documents",
+    "embedding_norms", "ann_cosine_topk", "lsh_ann_embeddings",
+    "embedding_near_dup_pairs", "lsh_embedding_near_dup",
+    "semantic_dedup_embeddings", "label_centroids_embeddings",
+    "ivf_ann_embeddings", "embedding_quality_embeddings",
+    "embedding_drift_embeddings", "quantization_plan_embeddings", "ivf_incremental_embeddings",
+    "ivf_fast_ann_embeddings",
 )
 
 
@@ -101,24 +109,15 @@ def main() -> None:
     n_rows = len(lines) - 1
     lines.append(
         "\n## Rows-only entries — why, and what pins them instead\n\n"
-        "- `ivf_fast_ann_embeddings` — PERMANENTLY rows-only: the MLlib\n"
-        "  KMeans coarse quantizer iterates in floating point inside the JVM\n"
-        "  and cannot be replayed in DuckDB (similarity.py documents the\n"
-        "  seam). Value backing:\n"
-        "  tests/test_similarity_ops.py::"
-        "test_ivf_fast_agrees_with_portable_on_registered_probes pins its\n"
-        "  top-10 ids on the registered probes against both the exact scan\n"
-        "  (recall@10 >= 0.9) and the oracle-green portable IVF (>= 8/10\n"
-        "  agreement per query).\n"
         "- `clips_validate_full` / `clips_partition_verdicts` /\n"
         "  `clips_rule_summary` — the synthetic clip table with real float\n"
         "  PCM decode has no DuckDB analog; pinned by\n"
         "  tests/test_golden_multiset.py (exact violation multiset) and the\n"
         "  expected-violation sentinels (CLAUDE.md).\n"
-        "\n## Retired entries (round 6 scope cut)\n\n"
-        "Not carried: retired training-prep scope. These names left the\n"
-        "registry with their operators; earlier CORRECTNESS files still\n"
-        "record them.\n\n"
+        "\n## Retired entries (round 6 scope cuts)\n\n"
+        "Not carried: retired training-prep and corpus scope. These names\n"
+        "left the registry with their operators; earlier CORRECTNESS files\n"
+        "still record them.\n\n"
     )
     lines += [f"- `{name}`\n" for name in RETIRED]
     with open(os.path.join(REPO, "COVERAGE.md"), "w") as f:

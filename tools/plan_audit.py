@@ -25,7 +25,7 @@ AUDITED = [
      "filter/column pruning pushed to the scan (ReadSchema lists only rule "
      "columns)."),
     ("dup_values_lineitem",
-     "Two-phase uniqueness: partial_count by (key, salt) before the exchange "
+     "Two-phase uniqueness: partial_count by key before the one exchange "
      "(map-side combine), merge after — the shuffle moves partial counts, "
      "never rows."),
     ("region_revenue",
@@ -37,9 +37,6 @@ AUDITED = [
     ("ngram_jaccard_documents",
      "Inverted-index self-join AFTER the document-frequency cutoff "
      "(stop-shingle removal) — candidate volume is Σ min(df, cap)², not Σ df²."),
-    ("lsh_embedding_near_dup",
-     "Bucketed candidate generation (signature equi-join) + exact re-rank: "
-     "no BroadcastNestedLoopJoin / CartesianProduct anywhere."),
     ("dedup_clusters_documents",
      "Iterative min-label propagation: per-round lineage is cut by "
      "localCheckpoint, so the displayed plan reads from materialized RDD "
@@ -102,11 +99,6 @@ AUDITED = [
      "it with map-side partials; scoring joins are keyed (AQE broadcasts at "
      "test scale, sort-merge at corpus scale — both correct), and the final "
      "per-doc aggregate is the only other exchange."),
-    ("embedding_quality_embeddings",
-     "Embedding QC gate: one codegen'd JVM projection + filter directly "
-     "over the scan (the quantized-norm fold excludes non-finite elements "
-     "inside the expression) — no exchange, no Python, nothing but the "
-     "scan before the output."),
     ("reconcile_orders_lineitem",
      "Header↔detail reconciliation: the child side collapses to (key, "
      "partial cents) with a map-side partial aggregate BEFORE its exchange "
@@ -133,12 +125,6 @@ AUDITED = [
      "as exact dedup — one shuffle keyed by the 128-bit fingerprint, "
      "collect_set bounded by the label domain, raw text never shuffles "
      "past the first projection."),
-    ("ivf_ann_embeddings",
-     "Deterministic IVF: centroid seeding is TakeOrdered + an n_lists-row "
-     "collect; each Lloyd pass shuffles only (cell, dim, partial-sum) rows; "
-     "search broadcasts the probe side (queries x n_probe) into the "
-     "cell-keyed corpus join, and the top-k window is WindowGroupLimit — "
-     "no CartesianProduct / BroadcastNestedLoopJoin anywhere."),
     ("extraction_quality_documents",
      "Extraction QC: ONE parquet scan, all markup/mojibake counters in a "
      "single codegen'd regexp projection — no exchange, no python stage."),

@@ -80,7 +80,7 @@ def main() -> None:
         f"Input: {args.rows:,} synthetic clips (SF-scaled stand-in for the 10^12-clip",
         "design point), identical parquet input for every run, full audio rule",
         "catalog (26 rules: single-pass row rules, pandas-UDF PCM SNR, fused",
-        "t-digest drift, salted two-phase uniqueness, fused referential joins).",
+        "t-digest drift, two-phase uniqueness, fused referential joins).",
         "Fresh JVM per parallelism level; untimed warm-up then best of 3",
         "in-process repeats (steady state of a long-lived executor).",
         "",

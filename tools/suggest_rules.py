@@ -2,8 +2,7 @@
 
     python tools/suggest_rules.py --input /data/docs.parquet --out rules.json
     # review, edit, then:
-    #   spark-submit jobs/validate_job.py --rules rules.json ...
-    #   spark-submit jobs/curate_job.py --preflight-rules rules.json ...
+    #   python -m jobs.validate_job --rules rules.json ...
 """
 
 from __future__ import annotations
