@@ -71,7 +71,6 @@ BENCH_QUERIES = [
     "heavy_hitters_orders",
     "bloom_semi_lineitem",
     "sequence_gaps_orders",
-    "sequence_packing_documents",
     "unigram_rarity_documents",
     "bigram_coherence_documents",
     "provenance_documents",
@@ -83,7 +82,6 @@ BENCH_QUERIES = [
     "corpus_rules_documents",
     "agg_sla_orders",
     "daily_volume_anomaly_events",
-    "pack_stats_documents",
     "top_terms_documents",
     "fuzzy_decontamination_documents",
     "snapshot_diff_orders",
@@ -93,14 +91,11 @@ BENCH_QUERIES = [
     "summary_regression_orders",
     "clips_validate_portable",
     "corpus_curation_documents",
-    # tokenizer induction + transcript QA (round 2, session 7)
-    "bpe_merges_documents",
-    "bpe_segment_documents",
-    "bpe_tokenize_documents",
+    # transcript QA (round 2, session 7)
     "transcript_wer_documents",
     "normalize_width_documents",
     "tar_roundtrip_documents",
-    # profiling / drift / sampling family (round 2)
+    # profiling / drift family (round 2)
     "column_stats_orders",
     "numeric_quantiles_lineitem",
     "quantile_drift_lineitem",
@@ -110,21 +105,12 @@ BENCH_QUERIES = [
     "volume_drift_orders",
     "quarantine_clean_orders",
     "events_hourly_rolling",
-    "stratified_sample_documents",
-    "weighted_sample_documents",
-    "mix_documents",
-    "temperature_mix_documents",
-    "upsample_documents",
-    "cluster_split_documents",
     "rolling_hash_documents",
-    "token_budget_documents",
-    "corpus_shuffle_documents",
     # late round-2 additions
     "reconcile_orders_lineitem",
     "out_of_order_events",
     "benford_orders",
     "label_conflict_documents",
-    "split_leakage_documents",
     "freshness_events",
     "calendar_gaps_events",
     "format_masks_customer",

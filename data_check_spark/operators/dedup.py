@@ -88,8 +88,7 @@ def exact_duplicate_groups(df: DataFrame) -> DataFrame:
 
     keep_id = min doc id (first-wins, reference: dekispart.py:1088-1092).
     NULL text (no content → NULL fingerprint) is not "duplicated content"
-    and is excluded — otherwise the rows view, whose equi-join can never
-    match a NULL key, would disagree with the groups view on totals.
+    and is excluded.
     """
     fp = fingerprints(df)
     return (
@@ -97,30 +96,6 @@ def exact_duplicate_groups(df: DataFrame) -> DataFrame:
         .groupBy("fingerprint")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("keep_id"))
         .filter(F.col("n_docs") > 1)
-    )
-
-
-def exact_duplicate_rows(df: DataFrame) -> DataFrame:
-    """(doc_id, fingerprint, keep_id): every non-canonical duplicate row.
-
-    ONE scan: group stats come from window functions over the fingerprint
-    partition instead of joining a separate aggregation back to a second
-    scan of the corpus (the text column is the dominant IO at scale)."""
-    from pyspark.sql.window import Window
-
-    fp = fingerprints(df).filter(
-        F.col("fingerprint").isNotNull()
-    )
-    w = Window.partitionBy("fingerprint")
-    return (
-        fp.select(
-            F.col("doc_id"),
-            "fingerprint",
-            F.count(F.lit(1)).over(w).alias("_n"),
-            F.min("doc_id").over(w).alias("keep_id"),
-        )
-        .filter((F.col("_n") > 1) & (F.col("doc_id") != F.col("keep_id")))
-        .select("doc_id", "fingerprint", "keep_id")
     )
 
 
@@ -592,7 +567,7 @@ def edit_distance_verify(pairs: DataFrame, docs: DataFrame) -> DataFrame:
 def span_dedup(df: DataFrame, *, span_tokens: int = 32) -> DataFrame:
     """Cross-document duplicate-SPAN removal — sub-document dedup.
 
-    Whole-doc dedup (``exact_duplicate_rows``) misses the dominant failure
+    Whole-doc dedup (``exact_duplicate_groups``) misses the dominant failure
     mode of web corpora: distinct pages sharing long boilerplate runs
     (license headers, navigation text, quoted passages). Exact substring
     dedup (MassiveText/RefinedWeb) needs a corpus-wide suffix array — not a
@@ -600,7 +575,7 @@ def span_dedup(df: DataFrame, *, span_tokens: int = 32) -> DataFrame:
     into NON-overlapping ``span_tokens``-token spans, fingerprint each span,
     and keep only the globally-first occurrence of any duplicated span
     (first-wins by ``(id, span index)``, the same keep rule as
-    ``exact_duplicate_rows``). Partial tail spans (< ``span_tokens`` tokens)
+    ``exact_duplicate_groups``). Partial tail spans (< ``span_tokens`` tokens)
     are never dropped — they are doc-specific remainders, and deduping short
     spans over-fires.
 

@@ -611,8 +611,8 @@ WHERE cast(i.n_inter AS double) / cast(sa.n + sb.n - i.n_inter AS double) >= 0.3
 
 
 # Opt-in shared candidate-pair frame (BENCH_SHARE_PAIRS=1, set by bench.py's
-# sweep): five queries consume the IDENTICAL n-gram Jaccard pair set
-# (ngram_jaccard, dedup_clusters, edit_distance_pairs, cluster_split,
+# sweep): four queries consume the IDENTICAL n-gram Jaccard pair set
+# (ngram_jaccard, dedup_clusters, edit_distance_pairs,
 # cluster_representatives). In the bench sweep each query rebuilt it (~5s a
 # piece of duplicated work). With the flag on, the first consumer builds +
 # eagerly localCheckpoints it and the rest reuse; without the flag (driver
@@ -1789,43 +1789,6 @@ def iqr_outliers_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SAMPLE_RATES = {"en": 0.5, "zh": 0.125, "de": 0.25, "fr": 0.25, "es": 0.25}
-
-
-def _sample_case_sql() -> str:
-    from data_check_spark.operators.sampling import _rate_threshold
-
-    branches = "\n        ".join(
-        f"WHEN '{k}' THEN '{_rate_threshold(v)}'" for k, v in sorted(_SAMPLE_RATES.items())
-    )
-    return f"""
-SELECT doc_id, lang
-FROM documents
-WHERE substring(md5('cur1:' || CAST(doc_id AS VARCHAR)), 1, 8) <
-      CASE lang {branches} ELSE '00000000' END
-ORDER BY doc_id
-"""
-
-
-@register("stratified_sample_documents", _sample_case_sql())
-def stratified_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic per-language downsampling (seeded md5-threshold): the
-    sample is a pure function of (seed, doc_id), reproducible across runs,
-    engines and repartitioning — rand()-based sampling is none of those.
-    Plan: single map-side filter; sampling 100 TB costs one scan, zero
-    shuffle."""
-    from data_check_spark.operators.sampling import stratified_sample
-
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        stratified_sample(
-            docs, id_col="doc_id", strata_col="lang", rates=_SAMPLE_RATES, seed="cur1"
-        )
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
-    )
-
-
 _HISTOGRAM_SQL = """
 -- exact integer floor division (mirrors profile.value_histogram): subtract
 -- the positive modulus, then integer-divide the exact multiple — no double
@@ -2297,45 +2260,6 @@ def heavy_hitters_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Sequence packing (operators/packing.py): the distributed prefix sum must
-# reproduce DuckDB's single global window exactly — same offsets, same pack
-# boundaries, same spanning flags.
-_PACKING_SQL = r"""
-WITH t AS (
-  SELECT doc_id,
-         CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-              ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_tokens
-  FROM documents
-), c AS (
-  SELECT doc_id, n_tokens,
-         coalesce(CAST(sum(n_tokens) OVER (
-             ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-         ) AS BIGINT), 0) AS before
-  FROM t
-)
-SELECT doc_id, n_tokens,
-       before // 2048 AS pack_id,
-       before % 2048 AS pack_offset,
-       CAST(CASE WHEN n_tokens > 0
-                  AND (before + n_tokens - 1) // 2048 > before // 2048
-            THEN 1 ELSE 0 END AS INT) AS spans_boundary
-FROM c
-"""
-
-
-@register("sequence_packing_documents", _PACKING_SQL)
-def sequence_packing_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-budget pack assignment (budget 2048) for the whole corpus in
-    doc_id order — computed with the distributed prefix sum, never a global
-    single-partition window."""
-    from data_check_spark.operators.packing import pack_assignments
-
-    # _docs_parallel: parallelize the tokenize phase across the session
-    # parallelism (the single-file test parquet is one input split)
-    return pack_assignments(_docs_parallel(spark, sf_dir), budget=2048)
-
-
 # Unigram corpus-frequency rarity (text.unigram_rarity): vocabulary head of
 # the 20 most frequent lowercased tokens (ties broken by token), then exact
 # integer OOV / frequency-mass statistics per document.
@@ -2486,29 +2410,6 @@ def daily_volume_anomaly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_check_spark.operators.anomaly import daily_volume_anomaly
 
     return daily_volume_anomaly(_t(spark, sf_dir, "events"))
-
-
-_PACK_STATS_SQL = (
-    "WITH assign AS (" + _PACKING_SQL + ")\n"
-    + """
-SELECT pack_id,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(n_tokens) AS BIGINT) AS n_tokens_started,
-       CAST(sum(spans_boundary) AS BIGINT) AS n_spanning,
-       CAST(least(sum(n_tokens), 2048) * 10000 // 2048 AS BIGINT) AS fill_bp
-FROM assign GROUP BY pack_id
-"""
-)
-
-
-@register("pack_stats_documents", _PACK_STATS_SQL)
-def pack_stats_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-pack fill summary of the 2048-token packing layout."""
-    from data_check_spark.operators.packing import pack_assignments, pack_stats
-
-    return pack_stats(
-        pack_assignments(_docs_parallel(spark, sf_dir), budget=2048), budget=2048
-    )
 
 
 # TF-IDF-style top terms (text.top_terms_per_doc): the integer relevance
@@ -2745,305 +2646,6 @@ def summary_regression_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
     )
     return summary_regression(old, new, threshold_bp=1000)
-
-
-# Weighted deterministic sampling (operators/sampling.py::weighted_sample):
-# keep-probability is a per-row function of doc_id, and the keep decision
-# integer-compares md5 bits against floor(w * 2^32) — DuckDB reproduces
-# both ends exactly.
-_WEIGHTED_SAMPLE_SQL = """
-SELECT doc_id, lang
-FROM documents
-WHERE cast(('0x' || substring(md5('wq1:' || cast(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-      < cast(floor(((doc_id % 101) / 100.0) * 4294967296.0) AS BIGINT)
-ORDER BY doc_id
-"""
-
-
-@register("weighted_sample_documents", _WEIGHTED_SAMPLE_SQL)
-def weighted_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-weighted curation sample: each doc kept with probability =
-    its own score ((doc_id % 101)/100 stands in for a quality model),
-    deterministic in (seed, doc_id). Map-side filter, zero shuffle."""
-    from data_check_spark.operators.sampling import weighted_sample
-
-    docs = _t(spark, sf_dir, "documents").withColumn(
-        "_w", (F.col("doc_id") % 101) / F.lit(100.0)
-    )
-    return (
-        weighted_sample(docs, id_col="doc_id", weight_col="_w", seed="wq1")
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
-    )
-
-
-# Domain mixing (operators/sampling.py::mix_domains): all-integer plan
-# (T = min(n_d*10000//w_d), threshold (k_d<<32)//n_d with 128-bit
-# intermediates) so DuckDB recomputes counts, plan and filter verbatim.
-_MIX_DOMAINS_SQL = """
-WITH cnt AS (
-  SELECT lang, CAST(count(*) AS BIGINT) AS n
-  FROM documents WHERE lang IN ('en', 'de', 'fr') GROUP BY lang
-),
-w(lang, bp) AS (VALUES ('en', 5000), ('de', 3000), ('fr', 2000)),
-t AS (SELECT min(n * 10000 // bp) AS tot FROM cnt JOIN w USING (lang)),
-thr AS (
-  SELECT w.lang,
-         (CAST(bp * (SELECT tot FROM t) // 10000 AS HUGEINT) * 4294967296) // n AS thr
-  FROM w JOIN cnt USING (lang)
-)
-SELECT d.doc_id, d.lang
-FROM documents d JOIN thr ON d.lang = thr.lang
-WHERE cast(('0x' || substring(md5('mix1:' || cast(d.doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-      < thr.thr
-ORDER BY d.doc_id
-"""
-
-
-# Temperature mixing: weights are the corpus's own counts^alpha. alpha=0.5
-# = ONE integer square root per domain; DuckDB recovers exact isqrt from
-# the correctly-rounded float sqrt with a +/-1 correction (floor(sqrt(n))
-# is off by at most one; both corrections can never apply at once).
-_TEMPERATURE_MIX_SQL = """
-WITH cnt AS (
-  SELECT lang, CAST(count(*) AS BIGINT) AS n
-  FROM documents WHERE lang IS NOT NULL GROUP BY lang
-),
-r0 AS (SELECT lang, n, CAST(floor(sqrt(n::DOUBLE)) AS BIGINT) AS t FROM cnt),
-w AS (
-  SELECT lang, n,
-         t - (CASE WHEN t*t > n THEN 1 ELSE 0 END)
-           + (CASE WHEN (t+1)*(t+1) <= n THEN 1 ELSE 0 END) AS wgt
-  FROM r0
-),
-tot AS (SELECT min(n * 10000 // wgt) AS tot FROM w),
-thr AS (
-  SELECT w.lang,
-         (CAST(w.wgt * (SELECT tot FROM tot) // 10000 AS HUGEINT) * 4294967296)
-             // w.n AS thr
-  FROM w
-)
-SELECT d.doc_id, d.lang
-FROM documents d JOIN thr ON d.lang = thr.lang
-WHERE cast(('0x' || substring(md5('temp1:' || cast(d.doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-      < thr.thr
-ORDER BY d.doc_id
-"""
-
-
-@register("temperature_mix_documents", _TEMPERATURE_MIX_SQL)
-def temperature_mix_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-scaled rebalancing (proportions ∝ count^0.5): flattens
-    the language distribution without a hand-written weight table — every
-    domain participates, the scarcest is kept whole. Integer-exact end to
-    end (isqrt weights, HUGEINT thresholds); the sample never shuffles the
-    corpus."""
-    from data_check_spark.operators.sampling import temperature_mix
-
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        temperature_mix(docs, id_col="doc_id", domain_col="lang",
-                        alpha=0.5, seed="temp1")
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
-    )
-
-
-@register("mix_documents", _MIX_DOMAINS_SQL)
-def mix_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pretraining data mixing: largest corpus achievable at exactly
-    50/30/20 en/de/fr (scarcest domain caps the total); other languages
-    dropped. One tiny groupBy plans the rates; the sample itself never
-    shuffles the corpus."""
-    from data_check_spark.operators.sampling import mix_domains
-
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        mix_domains(docs, id_col="doc_id", domain_col="lang",
-                    weights_bp={"en": 5000, "de": 3000, "fr": 2000}, seed="mix1")
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
-    )
-
-
-# Contamination-safe split (operators/sampling.py::cluster_safe_split):
-# docs assigned train/eval by hashing their near-dup cluster
-# representative (connected components over the exact n-gram Jaccard pair
-# set) so a training doc's near-duplicate can never land in eval. DuckDB
-# recomputes components (recursive CTE) and the md5 side rule.
-_CLUSTER_SPLIT_SQL = f"""
--- MATERIALIZED for the same reason as _DEDUP_CLUSTERS_SQL: plain CTEs are
--- re-inlined into every recursive iteration.
-WITH RECURSIVE pairs AS MATERIALIZED ({_NGRAM_SQL}),
-edges AS MATERIALIZED (
-  SELECT id_a AS a, id_b AS b FROM pairs
-  UNION ALL
-  SELECT id_b AS a, id_a AS b FROM pairs
-),
-walk(node, lbl) AS (
-  SELECT a, a FROM edges GROUP BY a
-  UNION
-  SELECT e.b, w.lbl FROM walk w JOIN edges e ON e.a = w.node
-),
-cc AS (SELECT node, min(lbl) AS cluster_id FROM walk GROUP BY node),
-rep AS (
-  SELECT d.doc_id, coalesce(cc.cluster_id, d.doc_id) AS cluster_rep
-  FROM documents d LEFT JOIN cc ON cc.node = d.doc_id
-)
-SELECT doc_id, cluster_rep,
-       CASE WHEN substring(md5('sp1:' || cast(cluster_rep AS VARCHAR)), 1, 8)
-                 < '40000000'
-            THEN 'eval' ELSE 'train' END AS side
-FROM rep
-ORDER BY doc_id
-"""
-
-
-@register("cluster_split_documents", _CLUSTER_SPLIT_SQL)
-def cluster_split_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train/eval split where near-duplicate clusters move as one unit
-    (eval_rate=0.25): the anti-leakage split an eval-decontaminated
-    pipeline needs. Pairs: exact n-gram Jaccard >= 0.3."""
-    from data_check_spark.operators.graph import connected_components
-    from data_check_spark.operators.sampling import cluster_safe_split
-
-    pairs = _ngram_pairs(spark, sf_dir, threshold=0.3)
-    cc = connected_components(pairs.select("id_a", "id_b"))
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        cluster_safe_split(docs, cc, id_col="doc_id", eval_rate=0.25, seed="sp1")
-        .select("doc_id", "cluster_rep", "side")
-        .orderBy("doc_id")
-    )
-
-
-# Repeat-epoch upsampling (operators/sampling.py::upsample_domains):
-# whole copies + one hash-chosen fractional copy, all-integer — DuckDB
-# replays the CASE, the md5 threshold and the range() fan-out exactly.
-_UPSAMPLE_SQL = """
-WITH base AS (
-  SELECT doc_id, lang,
-         CASE lang WHEN 'fr' THEN 30000 WHEN 'zh' THEN 12500
-                   ELSE 10000 END AS f
-  FROM documents
-),
-n AS (
-  SELECT doc_id, lang,
-         f // 10000
-         + CASE WHEN cast(('0x' || substring(md5('up1:' || cast(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-                     < ((f % 10000) * 4294967296) // 10000
-                THEN 1 ELSE 0 END AS n_copies
-  FROM base
-)
-SELECT doc_id, lang, CAST(unnest(range(n_copies)) AS INT) AS epoch
-FROM n WHERE n_copies >= 1
-ORDER BY doc_id, epoch
-"""
-
-
-@register("upsample_documents", _UPSAMPLE_SQL)
-def upsample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scarce-domain oversampling for a pretraining mix: fr repeated 3x,
-    zh 1.25x (the fractional copy chosen deterministically by hash),
-    everything else passed through once, each copy tagged with its epoch.
-    Map-side explode — no shuffle, no join."""
-    from data_check_spark.operators.sampling import upsample_domains
-
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        upsample_domains(docs, id_col="doc_id", domain_col="lang",
-                         factors_bp={"fr": 30000, "zh": 12500}, seed="up1")
-        .select("doc_id", "lang", "epoch")
-        .orderBy("doc_id", "epoch")
-    )
-
-
-# Token-budget curation (operators/sampling.py::token_budget_select): the
-# driver-side bucket walk is a windowed cumulative sum in SQL — whole
-# buckets below budget keep threshold 2^32, the single boundary bucket a
-# fractional HUGEINT threshold, the rest 0. All-integer, replayed exactly.
-_TOKEN_BUDGET_SQL = """
-WITH clean AS (
-  SELECT doc_id, lang, doc_id % 8 AS score, CAST(n_chars AS BIGINT) AS toks
-  FROM documents
-  WHERE n_chars IS NOT NULL AND n_chars > 0 AND lang IN ('en', 'de')
-),
-b(lang, budget) AS (VALUES ('en', 30000), ('de', 50000)),
-agg AS (SELECT lang, score, sum(toks) AS btoks FROM clean GROUP BY lang, score),
-walk AS (
-  SELECT lang, score, btoks,
-         sum(btoks) OVER (PARTITION BY lang ORDER BY score DESC
-                          ROWS UNBOUNDED PRECEDING) AS cum
-  FROM agg
-),
-thr AS (
-  SELECT w.lang, w.score,
-         CASE WHEN cum <= budget THEN CAST(4294967296 AS HUGEINT)
-              WHEN cum - btoks < budget
-                THEN (CAST(budget - (cum - btoks) AS HUGEINT) * 4294967296) // btoks
-              ELSE 0 END AS thr
-  FROM walk w JOIN b ON w.lang = b.lang
-)
-SELECT c.doc_id, c.lang, CAST(c.score AS BIGINT) AS score
-FROM clean c JOIN thr ON c.lang = thr.lang AND c.score = thr.score
-WHERE cast(('0x' || substring(md5('tbq1:' || cast(c.doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-      < thr.thr
-ORDER BY c.doc_id
-"""
-
-
-@register("token_budget_documents", _TOKEN_BUDGET_SQL)
-def token_budget_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """'Select the best N tokens per domain' curation: fill en/de token
-    budgets best-score-first (score = doc_id % 8 stands in for a quality
-    model, n_chars for the token count). No global sort — a counts-only
-    bucket aggregation plans driver-side, then a broadcast rule join
-    filters the corpus map-side."""
-    from data_check_spark.operators.sampling import token_budget_select
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .withColumn("score", F.col("doc_id") % 8)
-        .select("doc_id", "lang", "score", "n_chars")
-    )
-    out = token_budget_select(
-        docs, id_col="doc_id", domain_col="lang", score_col="score",
-        token_col="n_chars", budgets={"en": 30000, "de": 50000}, seed="tbq1",
-    )
-    return out.select("doc_id", "lang", "score").orderBy("doc_id")
-
-
-# Deterministic corpus shuffle (operators/sampling.py::corpus_shuffle):
-# shard = (hash32 * n) >> 32 and pos = rank within shard are pure integer
-# functions of (seed, doc_id) — DuckDB reproduces the full shard layout.
-_CORPUS_SHUFFLE_SQL = """
-WITH h AS (
-  SELECT doc_id, lang,
-         cast(('0x' || substring(md5('shq1:' || cast(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS hv
-  FROM documents
-)
-SELECT doc_id, lang,
-       (hv * 8) // 4294967296 AS shard,
-       row_number() OVER (PARTITION BY (hv * 8) // 4294967296
-                          ORDER BY hv, doc_id) AS pos
-FROM h
-ORDER BY shard, pos
-"""
-
-
-@register("corpus_shuffle_documents", _CORPUS_SHUFFLE_SQL)
-def corpus_shuffle_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reproducible training-order shuffle into 8 shards: every doc gets a
-    (shard, pos) that is a pure function of (seed, doc_id) — retries,
-    engines and input partitionings all agree. One keyed exchange; each
-    reducer sorts only its shard, never the whole corpus."""
-    from data_check_spark.operators.sampling import corpus_shuffle
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
-    return (
-        corpus_shuffle(docs, id_col="doc_id", n_shards=8, seed="shq1")
-        .orderBy("shard", "pos")
-    )
 
 
 # Bloom-filter membership (operators/bloom.py): the bloom layer only
@@ -3610,81 +3212,6 @@ def label_conflict_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return duplicate_label_conflicts(
         docs, id_col="doc_id", text_col="text", label_col="lang"
     ).orderBy("fingerprint")
-
-
-# ---------------------------------------------------------------------------
-# Split-leakage audit (operators/sampling.py::split_leakage_audit): audit an
-# EXISTING train/eval split against a duplicate-pair set. The split here is
-# a deliberately naive per-doc hash split (NOT cluster_safe_split), so the
-# planted duplicate groups straddle it — exactly the contamination the
-# audit exists to catch. eval threshold: md5 32-bit prefix < round(0.1*2^32).
-_SPLIT_LEAKAGE_SQL = """
-WITH src AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 20 < 2
-              THEN 'PLANTED DUP TEXT ' || CAST(doc_id % 5 AS VARCHAR)
-              ELSE text END AS text
-  FROM documents
-),
-fp AS (SELECT doc_id, md5(text) AS fingerprint FROM src WHERE text IS NOT NULL),
-g AS (
-  SELECT fingerprint, min(doc_id) AS keep_id
-  FROM fp GROUP BY 1 HAVING count(*) > 1
-),
-pairs AS (
-  SELECT g.keep_id AS doc_a, f.doc_id AS doc_b
-  FROM fp f JOIN g USING (fingerprint)
-  WHERE f.doc_id <> g.keep_id
-),
-asg AS (
-  SELECT doc_id,
-         CASE WHEN CAST(('0x' || substring(md5('split1:' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-                   < 429496730
-              THEN 'eval' ELSE 'train' END AS side
-  FROM src
-),
-j AS (
-  SELECT p.doc_a, p.doc_b, a.side AS side_a, b.side AS side_b
-  FROM pairs p
-  LEFT JOIN asg a ON p.doc_a = a.doc_id
-  LEFT JOIN asg b ON p.doc_b = b.doc_id
-)
-SELECT doc_a, doc_b, side_a, side_b,
-       CASE WHEN side_a IS NULL OR side_b IS NULL THEN 'unassigned'
-            WHEN side_a <> side_b THEN 'leak' END AS status
-FROM j
-WHERE side_a IS NULL OR side_b IS NULL OR side_a <> side_b
-ORDER BY doc_b
-"""
-
-
-@register("split_leakage_documents", _SPLIT_LEAKAGE_SQL)
-def split_leakage_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train/eval contamination audit: exact-duplicate pairs (canonical ↔
-    copy) joined against a naive per-doc hash split; every cross-side pair
-    is an eval example with a training twin. Two keyed joins of the small
-    pair set against the (id, side) projection — the corpus text never
-    shuffles."""
-    from data_check_spark.operators.dedup import exact_duplicate_rows
-    from data_check_spark.operators.sampling import sample_mark, split_leakage_audit
-
-    docs = _t(spark, sf_dir, "documents").withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % 20 < 2,
-            F.concat(F.lit("PLANTED DUP TEXT "), (F.col("doc_id") % 5).cast("string")),
-        ).otherwise(F.col("text")),
-    )
-    pairs = exact_duplicate_rows(docs).select(
-        F.col("keep_id").alias("doc_a"), F.col("doc_id").alias("doc_b")
-    )
-    assignments = docs.select(
-        "doc_id",
-        F.when(sample_mark("doc_id", 0.1, seed="split1"), F.lit("eval"))
-        .otherwise(F.lit("train"))
-        .alias("side"),
-    )
-    return split_leakage_audit(pairs, assignments).orderBy("doc_b")
 
 
 # ---------------------------------------------------------------------------
@@ -4440,136 +3967,6 @@ def agg_sla_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# BPE tokenizer induction (operators/bpe.py): the corpus collapses ONCE to a
-# (word, freq) dictionary; every merge iteration runs vocabulary-sized. The
-# oracle replays 4 full merge rounds — pair counting, deterministic argmax,
-# and the pinned padded-replace rewrite — entirely in SQL, so the WHOLE
-# training loop is value-checked cross-engine, not just the word counts.
-# ---------------------------------------------------------------------------
-
-_BPE_N_MERGES = 4
-
-_BPE_WORDS_CTE = r"""
-WITH toks AS (
-  SELECT doc_id, lower(t.tok) AS word
-  FROM documents,
-       unnest(CASE WHEN text IS NULL OR trim(text) = '' THEN []::varchar[]
-                   ELSE regexp_split_to_array(trim(text), '\s+') END) t(tok)
-), w0 AS (
-  SELECT word, trim(regexp_replace(word, '(.)', '\1 ', 'g')) AS syms,
-         count(*) AS freq
-  FROM toks GROUP BY word
-), p1 AS (
-  SELECT l[i] AS lhs, l[i + 1] AS rhs, sum(freq) AS pair_freq
-  FROM (SELECT string_split(syms, ' ') AS l, freq FROM w0) s,
-       unnest(range(1, len(l))) t(i)
-  GROUP BY 1, 2
-), b1 AS (SELECT lhs, rhs, pair_freq FROM p1 ORDER BY pair_freq DESC, lhs, rhs LIMIT 1),
-w1 AS (
-  SELECT word,
-         trim(replace(' ' || syms || ' ',
-                      ' ' || (SELECT lhs FROM b1) || ' ' || (SELECT rhs FROM b1) || ' ',
-                      ' ' || (SELECT lhs || rhs FROM b1) || ' ')) AS syms,
-         freq
-  FROM w0
-), p2 AS (
-  SELECT l[i] AS lhs, l[i + 1] AS rhs, sum(freq) AS pair_freq
-  FROM (SELECT string_split(syms, ' ') AS l, freq FROM w1) s,
-       unnest(range(1, len(l))) t(i)
-  GROUP BY 1, 2
-), b2 AS (SELECT lhs, rhs, pair_freq FROM p2 ORDER BY pair_freq DESC, lhs, rhs LIMIT 1),
-w2 AS (
-  SELECT word,
-         trim(replace(' ' || syms || ' ',
-                      ' ' || (SELECT lhs FROM b2) || ' ' || (SELECT rhs FROM b2) || ' ',
-                      ' ' || (SELECT lhs || rhs FROM b2) || ' ')) AS syms,
-         freq
-  FROM w1
-), p3 AS (
-  SELECT l[i] AS lhs, l[i + 1] AS rhs, sum(freq) AS pair_freq
-  FROM (SELECT string_split(syms, ' ') AS l, freq FROM w2) s,
-       unnest(range(1, len(l))) t(i)
-  GROUP BY 1, 2
-), b3 AS (SELECT lhs, rhs, pair_freq FROM p3 ORDER BY pair_freq DESC, lhs, rhs LIMIT 1),
-w3 AS (
-  SELECT word,
-         trim(replace(' ' || syms || ' ',
-                      ' ' || (SELECT lhs FROM b3) || ' ' || (SELECT rhs FROM b3) || ' ',
-                      ' ' || (SELECT lhs || rhs FROM b3) || ' ')) AS syms,
-         freq
-  FROM w2
-), p4 AS (
-  SELECT l[i] AS lhs, l[i + 1] AS rhs, sum(freq) AS pair_freq
-  FROM (SELECT string_split(syms, ' ') AS l, freq FROM w3) s,
-       unnest(range(1, len(l))) t(i)
-  GROUP BY 1, 2
-), b4 AS (SELECT lhs, rhs, pair_freq FROM p4 ORDER BY pair_freq DESC, lhs, rhs LIMIT 1),
-w4 AS (
-  SELECT word,
-         trim(replace(' ' || syms || ' ',
-                      ' ' || (SELECT lhs FROM b4) || ' ' || (SELECT rhs FROM b4) || ' ',
-                      ' ' || (SELECT lhs || rhs FROM b4) || ' ')) AS syms,
-         freq
-  FROM w3
-)
-"""
-
-_BPE_MERGES_SQL = (
-    _BPE_WORDS_CTE
-    + r"""
-SELECT CAST(1 AS INT) AS merge_rank, lhs, rhs, CAST(pair_freq AS BIGINT) AS pair_freq,
-       lhs || rhs AS new_symbol FROM b1
-UNION ALL SELECT 2, lhs, rhs, CAST(pair_freq AS BIGINT), lhs || rhs FROM b2
-UNION ALL SELECT 3, lhs, rhs, CAST(pair_freq AS BIGINT), lhs || rhs FROM b3
-UNION ALL SELECT 4, lhs, rhs, CAST(pair_freq AS BIGINT), lhs || rhs FROM b4
-"""
-)
-
-
-@register("bpe_merges_documents", _BPE_MERGES_SQL)
-def bpe_merges_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The first 4 BPE merges learned from the corpus (rank, pair, freq)."""
-    from data_check_spark.operators.bpe import bpe_merges_df, bpe_train
-
-    merges, _ = bpe_train(_docs_parallel(spark, sf_dir), n_merges=_BPE_N_MERGES)
-    return bpe_merges_df(spark, merges)
-
-
-_BPE_SEGMENT_SQL = (
-    _BPE_WORDS_CTE
-    + r"""
-, seg AS (
-  SELECT dt.doc_id,
-         count(*) AS n_words,
-         sum(len(string_split(w.syms, ' '))) AS n_pieces,
-         sum(len(dt.word)) AS n_word_chars
-  FROM toks dt JOIN w4 w USING (word)
-  GROUP BY dt.doc_id
-)
-SELECT d.doc_id,
-       CAST(coalesce(s.n_words, 0) AS BIGINT) AS n_words,
-       CAST(coalesce(s.n_pieces, 0) AS BIGINT) AS n_pieces,
-       CAST(coalesce(s.n_word_chars, 0) AS BIGINT) AS n_word_chars,
-       CAST(CASE WHEN coalesce(s.n_pieces, 0) > 0
-                 THEN s.n_word_chars * 10000 // s.n_pieces
-                 ELSE 0 END AS BIGINT) AS chars_per_piece_bp
-FROM documents d LEFT JOIN seg s USING (doc_id)
-"""
-)
-
-
-@register("bpe_segment_documents", _BPE_SEGMENT_SQL)
-def bpe_segment_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Segment the corpus with the 4-merge dictionary: per-document piece
-    counts and the chars-per-piece fertility ratio (training-cost sizing)."""
-    from data_check_spark.operators.bpe import bpe_segment, bpe_train
-
-    docs = _docs_parallel(spark, sf_dir)
-    _, dictionary = bpe_train(docs, n_merges=_BPE_N_MERGES)
-    return bpe_segment(docs, dictionary)
-
-
-# ---------------------------------------------------------------------------
 # Word-level transcript WER (text.word_edit_distance): ASR-transcript QA.
 # The hypothesis is a planted mutation of each document's text (substitute /
 # delete / duplicate one word, chosen by doc_id arithmetic both engines
@@ -4735,43 +4132,6 @@ def tar_roundtrip_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         "shard_file",
         "text",
     )
-
-
-# The piece stream itself (bpe.bpe_tokenize): one row per BPE piece,
-# addressed (doc, word_idx, piece_idx) — DuckDB replays the 4-merge
-# dictionary and unnests the same pieces.
-_BPE_TOKENIZE_SQL = (
-    _BPE_WORDS_CTE
-    + r"""
-, doctoks AS (
-  SELECT doc_id, i - 1 AS word_idx, l[i] AS word
-  FROM (
-    SELECT doc_id,
-           CASE WHEN text IS NULL OR trim(text) = '' THEN []::varchar[]
-                ELSE regexp_split_to_array(trim(text), '\s+') END AS l
-    FROM documents
-  ) s, unnest(range(1, len(l) + 1)) t(i)
-), pieced AS (
-  SELECT dt.doc_id, dt.word_idx, string_split(w.syms, ' ') AS p
-  FROM doctoks dt JOIN w4 w ON lower(dt.word) = w.word
-)
-SELECT doc_id, CAST(word_idx AS INT) AS word_idx,
-       CAST(j - 1 AS INT) AS piece_idx, p[j] AS piece
-FROM pieced, unnest(range(1, len(p) + 1)) u(j)
-"""
-)
-
-
-@register("bpe_tokenize_documents", _BPE_TOKENIZE_SQL)
-def bpe_tokenize_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The corpus tokenized with the 4-merge dictionary: the actual piece
-    stream, (doc, word_idx, piece_idx)-addressed so no global position
-    window is ever needed."""
-    from data_check_spark.operators.bpe import bpe_tokenize, bpe_train
-
-    docs = _docs_parallel(spark, sf_dir)
-    _, dictionary = bpe_train(docs, n_merges=_BPE_N_MERGES)
-    return bpe_tokenize(docs, dictionary)
 
 
 # ---------------------------------------------------------------------------

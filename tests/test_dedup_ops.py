@@ -5,7 +5,6 @@ import pytest
 from data_check_spark.operators import dedup
 from data_check_spark.operators.dedup import (
     exact_duplicate_groups,
-    exact_duplicate_rows,
     minhash_lsh_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
@@ -38,8 +37,6 @@ def test_exact_groups(docs):
     assert len(groups) == 1
     assert groups[0]["n_docs"] == 2
     assert groups[0]["keep_id"] == 1
-    rows = exact_duplicate_rows(docs).collect()
-    assert [(r["doc_id"], r["keep_id"]) for r in rows] == [(2, 1)]
 
 
 def test_minhash_signature_shape(docs):

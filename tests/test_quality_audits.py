@@ -1,5 +1,4 @@
-"""Benford screen, duplicate-label conflicts, split-leakage, freshness and
-novelty audits."""
+"""Benford screen, duplicate-label conflicts, freshness and novelty audits."""
 
 import math
 
@@ -7,7 +6,6 @@ from pyspark.sql import functions as F
 
 from data_check_spark.operators.dedup import duplicate_label_conflicts
 from data_check_spark.operators.profile import BENFORD_PPM, benford_screen
-from data_check_spark.operators.sampling import split_leakage_audit
 
 
 # ---------------------------------------------------------------------------
@@ -76,28 +74,6 @@ def test_duplicate_label_conflicts(spark):
     assert r["n_labels"] == 2
     assert r["labels"] == "de|en"
     assert (r["first_id"], r["last_id"]) == (1, 3)
-
-
-# ---------------------------------------------------------------------------
-# Split-leakage audit
-
-
-def test_split_leakage_audit(spark):
-    pairs = spark.createDataFrame(
-        [(1, 2), (1, 3), (4, 5), (6, 7)], "doc_a long, doc_b long"
-    )
-    asg = spark.createDataFrame(
-        [(1, "train"), (2, "eval"), (3, "train"), (4, "eval"), (5, "eval"), (6, "train")],
-        "doc_id long, side string",
-    )
-    out = {(r["doc_a"], r["doc_b"]): r for r in split_leakage_audit(pairs, asg).collect()}
-    # (1,2) straddles; (1,3) same side; (4,5) same side; (6,7) has an
-    # unassigned member
-    assert set(out) == {(1, 2), (6, 7)}
-    assert out[(1, 2)]["status"] == "leak"
-    assert out[(1, 2)]["side_a"] == "train" and out[(1, 2)]["side_b"] == "eval"
-    assert out[(6, 7)]["status"] == "unassigned"
-    assert out[(6, 7)]["side_b"] is None
 
 
 # ---------------------------------------------------------------------------
@@ -217,15 +193,6 @@ def test_format_masks_truncates_long_values(spark):
     out = {r["mask"]: r for r in format_masks(df, ["s"]).collect()}
     assert set(out) == {"a" * 64 + "+", "aa99"}
     assert out["a" * 64 + "+"]["n"] == 1
-
-
-def test_split_leakage_audit_clobber_guard(spark):
-    import pytest as _pytest
-
-    pairs = spark.createDataFrame([(1, 2, "x")], "doc_a long, doc_b long, status string")
-    asg = spark.createDataFrame([(1, "train")], "doc_id long, side string")
-    with _pytest.raises(ValueError):
-        split_leakage_audit(pairs, asg)
 
 
 # ---------------------------------------------------------------------------

@@ -67,6 +67,11 @@ RETIRED = (
     "ivf_ann_embeddings", "embedding_quality_embeddings",
     "embedding_drift_embeddings", "quantization_plan_embeddings", "ivf_incremental_embeddings",
     "ivf_fast_ann_embeddings",
+    "stratified_sample_documents", "weighted_sample_documents",
+    "temperature_mix_documents", "mix_documents", "cluster_split_documents",
+    "upsample_documents", "token_budget_documents", "corpus_shuffle_documents",
+    "split_leakage_documents", "bpe_merges_documents", "bpe_segment_documents",
+    "bpe_tokenize_documents", "sequence_packing_documents", "pack_stats_documents",
 )
 
 

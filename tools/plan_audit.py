@@ -64,11 +64,6 @@ AUDITED = [
      "rows per partition), then an exact recount where only candidate keys "
      "shuffle — the full distinct-key set never exchanges. The final rank "
      "window runs on the ≤ budget-row result."),
-    ("sequence_packing_documents",
-     "Distributed prefix sum: per-partition windows keyed by partition id "
-     "(NO Exchange SinglePartition anywhere — the global-window layout "
-     "this replaces), partition offsets broadcast, text tokenized once "
-     "behind the checkpoint."),
     ("unigram_rarity_documents",
      "Vocabulary head via TakeOrderedAndProject (per-partition top-k, no "
      "global sort); scoring is a BroadcastHashJoin of the ≤ k-row head "
@@ -81,11 +76,6 @@ AUDITED = [
      "One counts-only groupBy(day) pass with map-side partials; the "
      "trailing window then runs over the tiny per-day frame (365 rows/yr "
      "regardless of corpus size) — its single partition is deliberate."),
-    ("token_budget_documents",
-     "Token-budget curation with NO global sort: one counts-only "
-     "(domain, score-bucket) aggregation plans the cut; the corpus is then "
-     "filtered through a BroadcastHashJoin against the tiny rule frame — "
-     "no SortMergeJoin, no per-domain single-reducer running sum."),
     ("span_dedup_documents",
      "Sub-document span dedup: the span tiling is materialized ONCE "
      "(localCheckpoint — eligible and tail branches read it, the corpus "
@@ -136,12 +126,6 @@ AUDITED = [
      "Best-copy selection: the row_number window is keyed by cluster_id "
      "over the near-dup subset only — partitions are cluster-sized, never "
      "corpus-sized; no global (unpartitioned) window."),
-    ("bpe_segment_documents",
-     "BPE: training collapses the corpus ONCE to the (word, freq) "
-     "dictionary (map-side partial counts); every merge iteration reads "
-     "the localCheckpointed dictionary, never the corpus. Segmentation is "
-     "a BroadcastHashJoin of the word→pieces dictionary against the "
-     "exploded corpus — no SortMergeJoin, no Python stage."),
     ("transcript_wer_documents",
      "Word-level WER: one codegen'd projection (vocab sort + char encode + "
      "levenshtein DP all JVM-side) — zero Exchange, zero Python."),
