@@ -80,7 +80,7 @@ def _clips_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # analog possible: synthetic clip table with real float PCM decode) LAST,
 # since rows-only is already their max achievable check and r01 recorded
 # it. COVERAGE.md is the per-query ledger. Every oracle-backed entry
-# (104/104) is green in CORRECTNESS_r05 or earlier.
+# (92/92) is green in CORRECTNESS_r05 or earlier.
 _DRIVER_GREEN: frozenset[str] = frozenset({
     # r05 green (CORRECTNESS_r05.json). streaming_dedup_events is left out:
     # round 6 changed its output to per-occurrence (clip_id, observed) rows,
@@ -90,8 +90,7 @@ _DRIVER_GREEN: frozenset[str] = frozenset({
     # r04 green (CORRECTNESS_r04.json):
     "agg_sla_orders", "benford_orders", "calendar_gaps_events",
     "cardinality_orders_lineitem", "categorical_drift_orders",
-    "cluster_representatives_documents", "corpus_rules_documents",
-    "correlation_lineitem", "dataset_card_documents",
+    "corpus_rules_documents", "correlation_lineitem",
     "extraction_quality_documents", "format_masks_customer",
     "freshness_events", "incremental_dedup_documents",
     "label_conflict_documents", "lang_mismatch_documents",
@@ -99,33 +98,28 @@ _DRIVER_GREEN: frozenset[str] = frozenset({
     "null_correlation_orders", "out_of_order_events",
     "partition_profile_orders", "rate_drift_orders",
     "reconcile_orders_lineitem", "rule_suggestions_orders",
-    "scan_pruning_lineitem", "tar_roundtrip_documents",
-    "token_drift_documents", "transcript_wer_documents",
-    "violation_delta_orders", "vocab_coverage_documents",
-    "volume_drift_orders", "watermark_plan_events",
+    "scan_pruning_lineitem", "token_drift_documents",
+    "transcript_wer_documents", "violation_delta_orders",
+    "vocab_coverage_documents", "volume_drift_orders", "watermark_plan_events",
     # r03 green (CORRECTNESS_r03.json):
-    "bigram_coherence_documents", "binaryfile_ingest_documents",
-    "bloom_anti_orders", "bloom_semi_lineitem", "chunk_documents_corpus",
-    "clips_validate_batched", "daily_volume_anomaly_events",
-    "decontamination_documents", "events_hourly_rolling", "func_dep_lineitem",
-    "fuzzy_decontamination_documents", "heavy_hitters_orders",
-    "histogram_totalprice_orders", "iqr_outliers_events",
-    "jsonl_ingest_documents", "pii_scan_documents",
-    "provenance_documents", "quantile_drift_lineitem",
-    "repetition_stats_documents", "sequence_gaps_orders",
-    "skew_report_orders", "snapshot_diff_orders",
-    "span_dedup_documents", "summary_regression_orders",
-    "top_bigrams_documents", "top_terms_documents",
-    "unigram_rarity_documents", "violation_examples_orders",
+    "bigram_coherence_documents", "bloom_anti_orders", "bloom_semi_lineitem",
+    "chunk_documents_corpus", "clips_validate_batched",
+    "daily_volume_anomaly_events", "events_hourly_rolling",
+    "func_dep_lineitem", "heavy_hitters_orders", "histogram_totalprice_orders",
+    "iqr_outliers_events", "quantile_drift_lineitem",
+    "repetition_stats_documents", "sequence_gaps_orders", "skew_report_orders",
+    "snapshot_diff_orders", "span_dedup_documents",
+    "summary_regression_orders", "top_bigrams_documents",
+    "top_terms_documents", "unigram_rarity_documents",
+    "violation_examples_orders",
     # r01/r02 green:
     "asof_latest_order_per_event", "clips_validate_portable",
     "column_stats_orders", "corpus_curation_documents", "date_parse_orders",
-    "dedup_clusters_documents", "dedup_exact_documents",
-    "distinct_customers_by_status", "doc_fingerprints", "dup_rows_orders",
-    "dup_values_lineitem", "edit_distance_pairs_documents", "events_daily",
-    "lang_id_documents", "lapsed_customers_except", "latest_event_per_user",
-    "minhash_near_dup_documents", "multi_field_lineitem",
-    "ngram_jaccard_documents", "numeric_quantiles_lineitem", "orphan_parts",
+    "dedup_exact_documents", "distinct_customers_by_status",
+    "doc_fingerprints", "dup_rows_orders", "dup_values_lineitem",
+    "events_daily", "lang_id_documents", "lapsed_customers_except",
+    "latest_event_per_user", "minhash_near_dup_documents",
+    "multi_field_lineitem", "numeric_quantiles_lineitem", "orphan_parts",
     "q1_pricing_summary", "quality_score_documents", "quarantine_clean_orders",
     "range_join_repeat_orders", "region_nation_rollup", "region_revenue",
     "rolling_hash_documents", "row_rules_orders", "search_violations_orders",

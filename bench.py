@@ -57,33 +57,25 @@ BENCH_QUERIES = [
     "dedup_exact_documents",
     "incremental_dedup_documents",
     "span_dedup_documents",
-    "ngram_jaccard_documents",
-    "dedup_clusters_documents",
-    "edit_distance_pairs_documents",
     "minhash_near_dup_documents",
     "simhash_near_dup_documents",
     "token_stats_documents",
     "quality_score_documents",
     "lang_id_documents",
-    "jsonl_ingest_documents",
-    "binaryfile_ingest_documents",
     "skew_report_orders",
     "heavy_hitters_orders",
     "bloom_semi_lineitem",
     "sequence_gaps_orders",
     "unigram_rarity_documents",
     "bigram_coherence_documents",
-    "provenance_documents",
     "vocab_coverage_documents",
     "chunk_documents_corpus",
     "top_bigrams_documents",
     "extraction_quality_documents",
-    "dataset_card_documents",
     "corpus_rules_documents",
     "agg_sla_orders",
     "daily_volume_anomaly_events",
     "top_terms_documents",
-    "fuzzy_decontamination_documents",
     "snapshot_diff_orders",
     "null_correlation_orders",
     "token_drift_documents",
@@ -94,7 +86,6 @@ BENCH_QUERIES = [
     # transcript QA (round 2, session 7)
     "transcript_wer_documents",
     "normalize_width_documents",
-    "tar_roundtrip_documents",
     # profiling / drift family (round 2)
     "column_stats_orders",
     "numeric_quantiles_lineitem",
@@ -304,9 +295,9 @@ def _unpersist_except(spark, keep: frozenset[int]) -> None:
     caching, per CLAUDE.md); a completed query never touches those blocks
     again, but the JVM keeps them until the session dies. Inside a 122-query
     sweep that churn measured 5-7x inflation on later similarity queries.
-    Only the ``keep`` ids (the shared pair frame) survive — unpersisting a
-    localCheckpointed RDD that might still be consumed would be data loss,
-    so callers must keep anything cross-query."""
+    Only the ``keep`` ids survive — unpersisting a localCheckpointed RDD
+    that might still be consumed would be data loss, so callers must keep
+    anything cross-query."""
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     for entry in list(jmap.entrySet().toArray()):
         if int(entry.getKey()) not in keep:
@@ -357,37 +348,12 @@ def main() -> None:
     query_secs: dict[str, float] = {}
     query_runs: dict[str, list[float]] = {}
     if os.environ.get("BENCH_SKIP_QUERIES") != "1":
-        # Share the n-gram candidate-pair frame across its five consumers
-        # (queries._ngram_pairs builds it once and reads it back as parquet)
-        # instead of rebuilding ~5s of identical work per query. Opt-out
-        # with BENCH_SHARE_PAIRS=0 to time every query fully independent.
-        os.environ.setdefault("BENCH_SHARE_PAIRS", "1")
         from data_check_spark.queries import QUERIES
 
-        # The round-3 sweep was unattributable in both directions: the
-        # shared pair-frame build cost was recorded NOWHERE (the first
-        # consumer paid it on repeat 1, best-of-2 recorded the repeat-2
-        # cache hit), while leaked localCheckpoint blocks from the 122
-        # sessions' worth of queries (engine runs, per-round graph
-        # checkpoints) accumulated in the pinned heap and inflated later
-        # similarity queries 5-7x vs standalone. Fixes: (a) the engine
-        # headline's leaked blocks are freed before the sweep; (b) the
-        # shared pair frame is built and timed as its OWN line
-        # (ngram_pair_frame_build) and its blocks are the only ones kept;
-        # (c) after every query, blocks leaked by that query are freed;
-        # (d) every repeat is recorded (query_runs), not just the best.
+        # Every repeat is recorded (query_runs), not just the best, and the
+        # blocks each query leaks (and the engine headline's) are freed
+        # before the next one, so no query pays for an earlier one's heap.
         _unpersist_except(spark, frozenset())
-        if os.environ["BENCH_SHARE_PAIRS"] == "1":
-            from data_check_spark.queries import _ngram_pairs
-
-            t0 = time.monotonic()
-            _ngram_pairs(spark, sf_dir, threshold=0.3).count()
-            query_secs["ngram_pair_frame_build"] = round(time.monotonic() - t0, 3)
-        # The shared pair frame is parquet-backed (queries._ngram_pairs), so
-        # NOTHING needs to survive in block storage — the build's own
-        # intermediates (shingle-index checkpoint) are freed here too.
-        keep: frozenset[int] = frozenset()
-        _unpersist_except(spark, keep)
 
         # Best-of-N per query (CLAUDE.md: never single-run on this host —
         # round-over-round comparisons of single runs are machine noise).
@@ -398,7 +364,7 @@ def main() -> None:
                 t0 = time.monotonic()
                 QUERIES[name](spark, sf_dir).count()
                 runs_q.append(round(time.monotonic() - t0, 3))
-                _unpersist_except(spark, keep)
+                _unpersist_except(spark, frozenset())
             query_runs[name] = runs_q
             query_secs[name] = min(runs_q)
     query_secs["clip_validation_full"] = round(headline["wall_sec"], 3)

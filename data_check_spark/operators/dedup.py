@@ -1,6 +1,6 @@
 """Deduplication operators for training-data pipelines over `documents`.
 
-Four families, each a scale-path design:
+Three families, each a scale-path design:
 
 - ``exact_duplicate_groups`` — md5 fingerprint → two-phase hash aggregate.
   One shuffle keyed by a 128-bit fingerprint (never the raw text); map-side
@@ -17,8 +17,6 @@ Four families, each a scale-path design:
   pandas UDF over the long[] hash array (numpy bit unpacking, no per-row
   Python loops over bits). Near-pairs block on 16-bit chunks (any equal
   chunk → candidate, catches all pairs with hamming ≤ 3 by pigeonhole).
-- ``ngram_jaccard_pairs`` — exact n-gram Jaccard for candidate pairs via a
-  shingle-inverted-index join; the O(pairs) work is bounded by blocking keys.
 """
 
 from __future__ import annotations
@@ -221,9 +219,8 @@ def minhash_signatures(df: DataFrame, *, portable: bool = False) -> DataFrame:
 
 def banded_signatures(df: DataFrame, *, portable: bool = False) -> DataFrame:
     """MinHash signatures exploded into LSH band buckets:
-    ``(_id, signature, band, bh)`` — the shared candidate-generation frame
-    for intra-corpus pairing (minhash_lsh_pairs) and cross-corpus fuzzy
-    matching (decontam.fuzzy_decontaminate)."""
+    ``(_id, signature, band, bh)`` — the candidate-generation frame of
+    minhash_lsh_pairs."""
     rows = NUM_PERM // LSH_BANDS
 
     def _band_hash(b: Column) -> Column:
@@ -390,177 +387,6 @@ def simhash_near_pairs(df: DataFrame, *, max_hamming: int = 3, portable: bool = 
         pairs.withColumn("hamming", ham)
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Exact n-gram Jaccard (inverted-index join; SQL-expressible for the oracle)
-# ---------------------------------------------------------------------------
-
-
-MAX_SHINGLE_DF = 128  # stop-shingle cutoff: document frequency above this
-                      # drops the shingle from CANDIDATE GENERATION only
-
-
-def ngram_jaccard_pairs(df: DataFrame, *, threshold: float = 0.5) -> DataFrame:
-    """Exact Jaccard over distinct ``SHINGLE_K``-shingles of ``text`` for
-    ``doc_id`` pairs sharing ≥1 RARE shingle.
-
-    Candidate generation (unchanged contract): explode distinct shingles →
-    drop shingles with document frequency > ``MAX_SHINGLE_DF`` (stop-shingle
-    removal) → self-join the pruned inverted index. The posting-list cap
-    bounds the self-join at Σ min(df, MAX_SHINGLE_DF)² instead of Σ df².
-
-    Verification (count-based, no per-pair set arrays): the exact
-    intersection size splits as |A∩B| = shared_rare + shared_common.
-    ``shared_rare`` falls out of the SAME index self-join as a groupBy count
-    (free — it replaces the dropDuplicates). ``shared_common`` comes from
-    per-doc BITMAPS over the global common-shingle dictionary:
-    popcount(bm_A & bm_B). Set sizes |A|,|B| are rare+common per-doc counts.
-    Jaccard = I / (|A| + |B| − I), exact — no estimate, no rescore pass.
-
-    Why bitmaps: the naive verify join ships each candidate pair two
-    ~|set|-element arrays (measured 15s for 2.2M candidates at sf0.1); the
-    bitmap is ceil(C/64) longs where C = #distinct common shingles. C is
-    bounded: Σ df ≤ total shingle instances, so #shingles with df >
-    MAX_SHINGLE_DF ≤ instances/MAX_SHINGLE_DF. At cluster scale set the cap
-    as a corpus FRACTION (boilerplate = "appears in > x% of docs") and the
-    dictionary stays ≤ avg_set_size/x entries regardless of corpus size.
-
-    One tiny driver action (count of the aggregated df frame, ~|dictionary|
-    rows) fixes the bitmap width at plan-build time."""
-    sh = df.select(
-        F.col("doc_id").alias("_id"), F.explode(_shingles_expr("text", SHINGLE_K)).alias("s")
-    )
-    dfs = (
-        sh.groupBy("s")
-        .agg(F.count(F.lit(1)).alias("_df"))
-        .localCheckpoint(eager=True)  # ≤ #distinct shingles rows; reused 3×
-    )
-    commons = (
-        dfs.filter(F.col("_df") > MAX_SHINGLE_DF)
-        .select(
-            "s",
-            # Unpartitioned window is intentional: this frame is the common-
-            # shingle dictionary, bounded at instances/max_df rows (see
-            # docstring), so the single-partition row_number is O(dictionary).
-            (F.row_number().over(Window.orderBy(F.desc("_df"), F.col("s"))) - 1).alias("cid"),
-        )
-    )
-    n_common = commons.count()
-    width = (n_common + 63) // 64
-
-    rare_idx = sh.join(dfs.filter(F.col("_df") <= MAX_SHINGLE_DF).select("s"), "s")
-    a = rare_idx.alias("a")
-    b = rare_idx.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a._id") < F.col("b._id")))
-        .groupBy(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("_c_rare"))
-    )
-    rare_cnt = rare_idx.groupBy("_id").agg(F.count(F.lit(1)).alias("_n_rare"))
-
-    if n_common == 0:
-        sides = rare_cnt.select("_id", F.col("_n_rare").alias("_sz"))
-        pa = sides.select(F.col("_id").alias("id_a"), F.col("_sz").alias("_sza"))
-        pb = sides.select(F.col("_id").alias("id_b"), F.col("_sz").alias("_szb"))
-        inter = F.col("_c_rare")
-        scored = pairs.join(pa, "id_a").join(pb, "id_b")
-    else:
-        # (doc, cid) rows → per-word OR-fold → fixed-width bitmap array.
-        cidx = sh.join(F.broadcast(commons), "s").select(
-            "_id",
-            (F.col("cid") / 64).cast("int").alias("_w"),
-            # F.shiftleft needs a literal numBits (CLAUDE.md) — SQL form
-            # accepts a column expression.
-            F.expr("shiftleft(cast(1 as bigint), cast(cid % 64 as int))").alias("_bit"),
-        )
-        words = cidx.groupBy("_id", "_w").agg(
-            F.bit_or("_bit").alias("_word"), F.count(F.lit(1)).alias("_n")
-        )
-        bitmaps = words.groupBy("_id").agg(
-            F.map_from_entries(F.collect_list(F.struct("_w", "_word"))).alias("_m"),
-            F.sum("_n").alias("_n_common"),
-        ).select(
-            "_id",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(width - 1)),
-                lambda w: F.coalesce(F.element_at(F.col("_m"), w), F.lit(0).cast("long")),
-            ).alias("_bm"),
-            "_n_common",
-        )
-        sides = (
-            rare_cnt.join(bitmaps, "_id", "full")
-            .select(
-                "_id",
-                (F.coalesce(F.col("_n_rare"), F.lit(0)) + F.coalesce(F.col("_n_common"), F.lit(0))).alias("_sz"),
-                F.coalesce(
-                    F.col("_bm"),
-                    F.array_repeat(F.lit(0).cast("long"), width),
-                ).alias("_bm"),
-            )
-        )
-        pa = sides.select(F.col("_id").alias("id_a"), F.col("_sz").alias("_sza"), F.col("_bm").alias("_bma"))
-        pb = sides.select(F.col("_id").alias("id_b"), F.col("_sz").alias("_szb"), F.col("_bm").alias("_bmb"))
-        c_common = F.aggregate(
-            F.zip_with(F.col("_bma"), F.col("_bmb"), lambda x, y: F.bit_count(x.bitwiseAND(y))),
-            F.lit(0),
-            lambda acc, v: acc + v,
-        )
-        inter = F.col("_c_rare") + c_common
-        scored = pairs.join(pa, "id_a").join(pb, "id_b")
-
-    union = (F.col("_sza") + F.col("_szb") - inter).cast("double")
-    jac = inter.cast("double") / union
-    # Output contract: integer-quantized jac_q4 = round_half_up(jac * 10000),
-    # computed as floor((I*20000 + U) / (2U)) — exact in any engine. A
-    # %.4f-formatted double would hit decimal-halfway ties here (jaccard is a
-    # ratio of small integers, e.g. 17/32 = 0.53125) where Java HALF_UP and C
-    # half-even disagree (CLAUDE.md).
-    jac_q4 = F.floor((inter.cast("double") * 20000 + union) / (2 * union)).cast("long")
-    return (
-        scored.filter(jac >= threshold)
-        .select("id_a", "id_b", jac_q4.alias("jac_q4"))
-    )
-
-
-def edit_distance_verify(pairs: DataFrame, docs: DataFrame) -> DataFrame:
-    """Exact edit-distance verification of near-dup CANDIDATE pairs — the
-    final filter of a dedup pipeline. Approximate emitters (MinHash bands,
-    SimHash chunks, shingle Jaccard) admit false positives by design;
-    Levenshtein over the candidate texts is the ground-truth similarity,
-    affordable precisely because it runs on the (small) pair set, never
-    all-pairs.
-
-    Returns ``(id_a, id_b, edit_dist, dist_bp)`` — ``dist_bp`` is the
-    distance in integer basis points of the longer text (0 = identical,
-    10000 = nothing shared), truncating division so both engines agree.
-
-    Plan shape: two equi-joins keyed by doc id re-read ONLY the candidate
-    texts (at corpus scale the pair set is orders of magnitude smaller than
-    the corpus, so AQE broadcasts the pair side and the corpus is never
-    shuffled). Levenshtein is the JVM built-in — O(len_a·len_b) per pair,
-    in codegen, zero Python.
-    """
-    a = docs.select(F.col("doc_id").alias("id_a"), F.col("text").alias("_ta"))
-    b = docs.select(F.col("doc_id").alias("id_b"), F.col("text").alias("_tb"))
-    return (
-        pairs.select("id_a", "id_b")
-        .join(a, "id_a")
-        .join(b, "id_b")
-        # levenshtein once per pair (projection barrier), then derive bp
-        .select(
-            "id_a",
-            "id_b",
-            F.levenshtein("_ta", "_tb").alias("edit_dist"),
-            F.greatest(F.length("_ta"), F.length("_tb")).alias("_longer"),
-        )
-        .select(
-            "id_a",
-            "id_b",
-            "edit_dist",
-            F.expr("edit_dist * 10000L div greatest(_longer, 1)").alias("dist_bp"),
-        )
     )
 
 

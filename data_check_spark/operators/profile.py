@@ -958,52 +958,6 @@ def numeric_correlation(
     )
 
 
-def dataset_card(df: DataFrame) -> DataFrame:
-    """Dataset-card summary: the headline numbers a corpus release ships with
-    (model/data cards à la Datasheets for Datasets), as (metric, value)
-    bigint rows.
-
-    Metrics: ``n_docs``, ``n_sources``, ``n_langs``, ``total_chars``,
-    ``total_tokens`` (whitespace grain), ``n_blank_docs``, ``dup_docs`` /
-    ``dup_groups`` (exact md5-fingerprint duplicates — docs in a >1 group
-    and the group count).
-
-    Plan shape: ONE full scan feeds a single global aggregate (map-side
-    partials, 1-row result); the duplicate tally is the standard two-phase
-    fingerprint groupBy (the shuffle carries 128-bit fingerprints, never
-    text). The two distinct counts are exact (oracle-checkable). The two
-    1-row frames cross-join (trivial) and unpivot via ``stack`` — output is
-    8 rows regardless of corpus size.
-    """
-    t = F.trim(F.col("text"))
-    n_tokens = F.when(t == "", F.lit(0)).otherwise(F.size(F.split(t, r"\s+")))
-    base = df.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.count_distinct(F.col("source")).alias("n_sources"),
-        F.count_distinct(F.col("lang")).alias("n_langs"),
-        F.sum(F.length(F.col("text"))).alias("total_chars"),
-        F.sum(n_tokens).alias("total_tokens"),
-        F.count_if(t == "").alias("n_blank_docs"),
-    )
-    groups = (
-        df.groupBy(F.md5(F.col("text")).alias("_fp"))
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > 1)
-    )
-    dups = groups.agg(
-        F.coalesce(F.sum("_n"), F.lit(0)).alias("dup_docs"),
-        F.count(F.lit(1)).alias("dup_groups"),
-    )
-    metrics = [
-        "n_docs", "n_sources", "n_langs", "total_chars",
-        "total_tokens", "n_blank_docs", "dup_docs", "dup_groups",
-    ]
-    stack_args = ", ".join(f"'{m}', cast({m} as bigint)" for m in metrics)
-    return base.crossJoin(dups).selectExpr(
-        f"stack({len(metrics)}, {stack_args}) AS (metric, value)"
-    )
-
-
 def agg_threshold_violations(
     df: DataFrame,
     rule_id: str,

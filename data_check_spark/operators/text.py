@@ -679,9 +679,9 @@ def token_drift(
 
 
 # --- Extraction-quality screen (web-scale ingest QC) -----------------------
-# Patterns live in the Java∩RE2 common subset (same discipline as
-# operators/pii.py) so the DuckDB oracle evaluates the identical language:
-# no backrefs, no lookarounds, \x{...} codepoint escapes.
+# Patterns live in the Java∩RE2 common subset so the DuckDB oracle
+# evaluates the identical language: no backrefs, no lookarounds, \x{...}
+# codepoint escapes.
 MARKUP_TAG_PATTERN = r"<[^>]*>"
 MARKUP_ENTITY_PATTERN = r"&[A-Za-z]+;|&#[0-9]+;"
 REPLACEMENT_CHAR_PATTERN = r"\x{FFFD}"

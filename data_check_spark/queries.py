@@ -461,7 +461,6 @@ def topk_open_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 from data_check_spark.operators import dedup as _dedup  # noqa: E402
-from data_check_spark.operators import graph as _graph  # noqa: E402
 from data_check_spark.operators import text as _text  # noqa: E402
 
 
@@ -569,168 +568,6 @@ def _lang_sql() -> str:
 @register("lang_id_documents", _lang_sql())
 def lang_id_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _text.lang_id(_t(spark, sf_dir, "documents"))
-
-
-_NGRAM_SQL = """
-WITH sh AS (
-  SELECT DISTINCT doc_id, substr(text, i, 8) AS s
-  FROM (SELECT doc_id, text,
-               unnest(range(1, greatest(length(text) - 7, 1) + 1)) AS i
-        FROM documents)
-),
-rare AS (SELECT s FROM sh GROUP BY s HAVING count(*) <= 128),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-  WHERE a.s IN (SELECT s FROM rare)
-),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
--- Exact intersections only over docs that appear in a candidate pair: the
--- unrestricted shingle self-join materializes count^2 rows per COMMON
--- shingle (the df cap above only prunes candidate GENERATION), which at
--- sf0.1 spilled >60 GB of DuckDB temp. Near-dup docs are rare, so this
--- mirrors the Spark operator's shape (dedup.py: candidates from the
--- df-capped index, exact n_inter over candidate docs' full shingle sets)
--- and leaves every emitted pair's n_inter unchanged.
-cdocs AS (SELECT id_a AS doc_id FROM cand UNION SELECT id_b AS doc_id FROM cand),
-shc AS (SELECT * FROM sh WHERE doc_id IN (SELECT doc_id FROM cdocs)),
-inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-  FROM shc a JOIN shc b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
-SELECT c.id_a, c.id_b,
-       cast(floor((i.n_inter * 20000.0 + (sa.n + sb.n - i.n_inter))
-                  / (2.0 * (sa.n + sb.n - i.n_inter))) AS bigint) AS jac_q4
-FROM cand c
-JOIN inter i ON c.id_a = i.id_a AND c.id_b = i.id_b
-JOIN sizes sa ON c.id_a = sa.doc_id
-JOIN sizes sb ON c.id_b = sb.doc_id
-WHERE cast(i.n_inter AS double) / cast(sa.n + sb.n - i.n_inter AS double) >= 0.3
-"""
-
-
-# Opt-in shared candidate-pair frame (BENCH_SHARE_PAIRS=1, set by bench.py's
-# sweep): four queries consume the IDENTICAL n-gram Jaccard pair set
-# (ngram_jaccard, dedup_clusters, edit_distance_pairs,
-# cluster_representatives). In the bench sweep each query rebuilt it (~5s a
-# piece of duplicated work). With the flag on, the first consumer builds +
-# eagerly localCheckpoints it and the rest reuse; without the flag (driver
-# correctness runs) every query stays fully independent.
-_NGRAM_PAIRS_CACHE: dict[tuple[str, float], DataFrame] = {}
-
-
-def _ngram_pairs(spark: SparkSession, sf_dir: str, threshold: float = 0.3) -> DataFrame:
-    import os as _os
-
-    if _os.environ.get("BENCH_SHARE_PAIRS") != "1":
-        return _dedup.ngram_jaccard_pairs(
-            _docs_parallel(spark, sf_dir), threshold=threshold
-        )
-    # applicationId in the key: the cache dies with its session, so a
-    # restarted SparkSession must rebuild, not serve a stale frame. The
-    # shared frame is PARQUET-backed (not localCheckpoint): heap blocks
-    # pinned for a whole sweep — including the build's internal
-    # shingle-index checkpoint, which has no unpersist handle — are exactly
-    # the leaked-block pressure the sweep fights, while this host reads
-    # small parquet through the OS page cache essentially for free
-    # (CLAUDE.md: reliable .checkpoint() beat localCheckpoint here).
-    import os as _os
-
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, threshold)
-    df = _NGRAM_PAIRS_CACHE.get(key)
-    if df is None:
-        # hashlib, not hash(): the name must be stable within the process
-        # regardless of PYTHONHASHSEED (hash() isn't, and the applicationId
-        # prefix is what actually scopes it to this session). Write to a
-        # tmp dir + atomic rename so a crashed/interrupted build can never
-        # leave a partial parquet dir at the final path poisoning every
-        # later consumer; trust the final path only if Spark's _SUCCESS
-        # commit marker is present. Dirs are removed at interpreter exit.
-        import atexit as _atexit
-        import hashlib as _hashlib
-        import shutil as _shutil
-
-        digest = _hashlib.md5(f"{sf_dir}|{threshold}".encode()).hexdigest()[:16]
-        path = f"/tmp/dcs_shared_pairs_{app}_{digest}.parquet"
-        if not _os.path.isfile(_os.path.join(path, "_SUCCESS")):
-            _shutil.rmtree(path, ignore_errors=True)
-            tmp = f"{path}.tmp-{_os.getpid()}"
-            _shutil.rmtree(tmp, ignore_errors=True)
-            _dedup.ngram_jaccard_pairs(
-                _docs_parallel(spark, sf_dir), threshold=threshold
-            ).write.mode("overwrite").parquet(tmp)
-            _os.rename(tmp, path)
-            _atexit.register(_shutil.rmtree, path, ignore_errors=True)
-        df = spark.read.parquet(path)
-        _NGRAM_PAIRS_CACHE[key] = df
-    return df
-
-
-@register("ngram_jaccard_documents", _NGRAM_SQL)
-def ngram_jaccard_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ngram_pairs(spark, sf_dir, threshold=0.3)
-
-
-# Transitive closure of the SAME pair set: DuckDB expresses it as a
-# recursive CTE (min label = min over all reachable nodes, since pair
-# edges are undirected), Spark as iterative min-label propagation
-# (operators/graph.py) — an inherently iterative operator that still
-# gets full value-level oracle coverage.
-_DEDUP_CLUSTERS_SQL = f"""
--- pairs/edges MATERIALIZED: DuckDB inlines plain CTEs into every recursive
--- iteration, so without the hint each walk step recomputed the ENTIRE
--- n-gram pair pipeline (at sf0.1 that spilled 37+ GB of temp before dying).
-WITH RECURSIVE pairs AS MATERIALIZED ({_NGRAM_SQL}),
-edges AS MATERIALIZED (
-  SELECT id_a AS a, id_b AS b FROM pairs
-  UNION ALL
-  SELECT id_b AS a, id_a AS b FROM pairs
-),
-walk(node, lbl) AS (
-  SELECT a, a FROM edges GROUP BY a
-  UNION
-  SELECT e.b, w.lbl FROM walk w JOIN edges e ON e.a = w.node
-),
-cc AS (SELECT node, min(lbl) AS cluster_id FROM walk GROUP BY node),
-sizes AS (SELECT cluster_id, count(*) AS cluster_size FROM cc GROUP BY cluster_id)
-SELECT cc.node AS doc_id, cc.cluster_id, sizes.cluster_size,
-       CAST(cc.node = cc.cluster_id AS INT) AS is_canonical
-FROM cc JOIN sizes ON cc.cluster_id = sizes.cluster_id
-"""
-
-
-@register("dedup_clusters_documents", _DEDUP_CLUSTERS_SQL)
-def dedup_clusters_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = _ngram_pairs(spark, sf_dir, threshold=0.3)
-    return _graph.dedup_clusters(pairs.select("id_a", "id_b"))
-
-
-# Ground-truth verification of the SAME candidate pair set: exact
-# Levenshtein over the candidate texts (JVM built-in ↔ DuckDB levenshtein —
-# both the classic character-grain DP distance), distance reported in
-# integer basis points of the longer text.
-_EDIT_DISTANCE_SQL = f"""
-WITH pairs AS ({_NGRAM_SQL})
-SELECT p.id_a, p.id_b, levenshtein(a.text, b.text) AS edit_dist,
-       levenshtein(a.text, b.text) * 10000
-           // greatest(greatest(length(a.text), length(b.text)), 1) AS dist_bp
-FROM pairs p
-JOIN documents a ON a.doc_id = p.id_a
-JOIN documents b ON b.doc_id = p.id_b
-"""
-
-
-@register("edit_distance_pairs_documents", _EDIT_DISTANCE_SQL)
-def edit_distance_pairs_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact edit-distance verify of near-dup candidates — the final
-    precision filter after approximate pair generation (false positives
-    from banded/bucketed emitters get ground-truthed here, on the small
-    pair set only, never all-pairs)."""
-    docs = _docs_parallel(spark, sf_dir)
-    pairs = _ngram_pairs(spark, sf_dir, threshold=0.3)
-    return _dedup.edit_distance_verify(pairs, docs)
 
 
 # --- MinHash / SimHash in engine-portable hash mode (oracle-checked) --------
@@ -1915,97 +1752,8 @@ def volume_drift_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# LLM-pipeline hygiene: PII scan/redaction, repetition signals,
-# benchmark decontamination (operators/pii.py, text.py, decontam.py).
+# Repetition signals (operators/text.py).
 # ---------------------------------------------------------------------------
-
-# Deterministic PII augmentation: the synthetic corpus carries no PII, so the
-# query plants class instances derived from doc_id — identically expressible
-# on both engines — and the operator must find exactly those.
-_PII_SQL = r"""
-WITH aug AS (
-  SELECT doc_id,
-         text
-         || (CASE WHEN doc_id % 5 = 0
-                  THEN ' contact user' || cast(doc_id AS varchar) || '@example.com now'
-                  ELSE '' END)
-         || (CASE WHEN doc_id % 7 = 0
-                  THEN ' call 555-' || lpad(cast(doc_id % 1000 AS varchar), 3, '0') || '-0199'
-                  ELSE '' END)
-         || (CASE WHEN doc_id % 11 = 0
-                  THEN ' host 10.0.' || cast(doc_id % 256 AS varchar) || '.1'
-                  ELSE '' END) AS text
-  FROM documents
-)
--- staged like operators/pii.py pii_counts: each class counted on text with
--- the PRIOR classes tokenized, so nested spans count once; IP octets are
--- range-checked 0-255
-, s1 AS (
-  SELECT doc_id,
-         len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_email,
-         regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g') AS t1
-  FROM aug
-), s2 AS (
-  SELECT doc_id, n_email,
-         len(regexp_extract_all(t1, '\b\d{3}-\d{3}-\d{4}\b')) AS n_phone,
-         regexp_replace(t1, '\b\d{3}-\d{3}-\d{4}\b', '<PHONE>', 'g') AS t2
-  FROM s1
-)
-SELECT doc_id, n_email, n_phone,
-       len(regexp_extract_all(t2,
-           '\b(?:25[0-5]|2[0-4]\d|1\d\d|[1-9]?\d)\.(?:25[0-5]|2[0-4]\d|1\d\d|[1-9]?\d)\.(?:25[0-5]|2[0-4]\d|1\d\d|[1-9]?\d)\.(?:25[0-5]|2[0-4]\d|1\d\d|[1-9]?\d)\b')) AS n_ip,
-       md5(regexp_replace(t2,
-           '\b(?:25[0-5]|2[0-4]\d|1\d\d|[1-9]?\d)\.(?:25[0-5]|2[0-4]\d|1\d\d|[1-9]?\d)\.(?:25[0-5]|2[0-4]\d|1\d\d|[1-9]?\d)\.(?:25[0-5]|2[0-4]\d|1\d\d|[1-9]?\d)\b',
-           '<IP>', 'g')) AS redacted_fp
-FROM s2
-"""
-
-
-def _pii_augment(df: DataFrame) -> DataFrame:
-    """Plant doc_id-derived PII instances (email / phone / IPv4)."""
-    d = F.col("doc_id")
-    return df.select(
-        d.alias("doc_id"),
-        F.concat(
-            F.col("text"),
-            F.when(
-                d % 5 == 0,
-                F.concat(F.lit(" contact user"), d.cast("string"), F.lit("@example.com now")),
-            ).otherwise(F.lit("")),
-            F.when(
-                d % 7 == 0,
-                F.concat(
-                    F.lit(" call 555-"),
-                    F.lpad((d % 1000).cast("string"), 3, "0"),
-                    F.lit("-0199"),
-                ),
-            ).otherwise(F.lit("")),
-            F.when(
-                d % 11 == 0,
-                F.concat(F.lit(" host 10.0."), (d % 256).cast("string"), F.lit(".1")),
-            ).otherwise(F.lit("")),
-        ).alias("text"),
-    )
-
-
-@register("pii_scan_documents", _PII_SQL)
-def pii_scan_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII detect + redact (operators/pii.py): pure regexp_count /
-    regexp_replace projection, no shuffle; output ships count + redacted-text
-    fingerprint, never the text. Reference analog: the forbidden-keyword scan
-    family (SURVEY §2.3 forbidden-substring, dekispart keyword checks)."""
-    from data_check_spark.operators.pii import pii_scan
-
-    aug = _pii_augment(_t(spark, sf_dir, "documents"))
-    out = pii_scan(aug)
-    return out.select(
-        "doc_id",
-        F.col("n_email").cast("long"),
-        F.col("n_phone").cast("long"),
-        F.col("n_ip").cast("long"),
-        "redacted_fp",
-    )
-
 
 _REPETITION_SQL = r"""
 WITH toks AS (
@@ -2050,164 +1798,6 @@ def repetition_stats_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold — zero shuffle, where the naive groupBy-per-bigram would exchange
     the whole corpus."""
     return _text.repetition_stats(_t(spark, sf_dir, "documents"))
-
-
-_DECONTAM_SQL = r"""
-WITH toks AS (
-  SELECT doc_id,
-         CASE WHEN trim(text) = '' THEN []::varchar[]
-              ELSE regexp_split_to_array(trim(text), '\s+') END AS toks
-  FROM documents
-),
-grams AS (
-  SELECT DISTINCT doc_id, array_to_string(toks[i:i+3], ' ') AS g
-  FROM toks, unnest(range(1, len(toks) - 2)) t(i)
-  WHERE len(toks) >= 4
-),
-eval_g AS (SELECT DISTINCT g FROM grams WHERE doc_id % 50 = 0)
-SELECT g.doc_id, count(*) AS n_shared_ngrams
-FROM grams g JOIN eval_g e USING (g)
-WHERE g.doc_id % 50 <> 0
-GROUP BY g.doc_id
-"""
-
-
-@register("decontamination_documents", _DECONTAM_SQL)
-def decontamination_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination (operators/decontam.py): training docs
-    sharing any word 4-gram with the eval subset (doc_id % 50 == 0 stands in
-    for the benchmark table). Eval n-gram set is broadcast — the training
-    corpus is never shuffled; plan-asserted in tests/test_decontam_pii.py."""
-    from data_check_spark.operators.decontam import decontaminate
-
-    docs = _t(spark, sf_dir, "documents")
-    eval_df = docs.filter(F.col("doc_id") % 50 == 0)
-    train = docs.filter(F.col("doc_id") % 50 != 0)
-    return decontaminate(train, eval_df, n=4)
-
-
-# ---------------------------------------------------------------------------
-# 9. Ingestion sources under the oracle (sources/jsonl.py, sources/media.py):
-#    both fixtures are derived portably from documents.doc_id (md5-prefix
-#    arithmetic, the _portable_hash60 family), written to a local staging
-#    dir by the query itself, and read back through the REAL distributed
-#    source — so DuckDB can recompute analytically what the ingest path
-#    must produce, including the corrupt-line / unknown-extension routing.
-
-def _fixture_dir(sf_dir: str, kind: str) -> str:
-    import hashlib as _hl
-
-    return f"/tmp/dcs_fixture_{kind}_{_hl.md5(sf_dir.encode()).hexdigest()[:8]}"
-
-
-# Clean rows must round-trip doc_id/lang/text EXACTLY through to_json →
-# text file → from_json; lines in the corrupt band (h % 23 == 0, written as
-# the non-JSON line 'CORRUPT <id>') must come back as all-NULL data columns
-# with the raw line preserved in the reject column.
-_JSONL_INGEST_SQL = """
-WITH p AS (
-  SELECT doc_id, lang, text,
-         CAST(('0x' || substr(md5(doc_id || ':jl'), 1, 15)) AS BIGINT) % 23 = 0 AS bad
-  FROM documents
-)
-SELECT doc_id, lang, text, true AS ok, CAST(NULL AS VARCHAR) AS raw
-FROM p WHERE NOT bad
-UNION ALL
-SELECT CAST(NULL AS BIGINT), CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR),
-       false, 'CORRUPT ' || doc_id
-FROM p WHERE bad
-"""
-
-
-@register("jsonl_ingest_documents", _JSONL_INGEST_SQL)
-def jsonl_ingest_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSONL corpus ingest end-to-end: documents serialized to a JSONL
-    staging dir (corrupt lines planted per the md5 band), read back through
-    sources/jsonl.read_jsonl (splittable text + from_json, PERMISSIVE),
-    value-checking both the clean round-trip and the error-as-data reject
-    routing."""
-    from data_check_spark.sources.jsonl import DEFAULT_CORRUPT_COL, read_jsonl
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    sid = F.col("doc_id").cast("string")
-    bad = _dedup._portable_hash60(F.concat(sid, F.lit(":jl"))) % 23 == 0
-    line = F.when(bad, F.concat(F.lit("CORRUPT "), sid)).otherwise(
-        F.to_json(F.struct("doc_id", "lang", "text"))
-    )
-    staging = _fixture_dir(sf_dir, "jsonl")
-    docs.select(line.alias("value")).write.mode("overwrite").text(staging)
-
-    df = read_jsonl(spark, staging, "doc_id bigint, lang string, text string")
-    return df.select(
-        "doc_id",
-        "lang",
-        "text",
-        F.col(DEFAULT_CORRUPT_COL).isNull().alias("ok"),
-        F.col(DEFAULT_CORRUPT_COL).alias("raw"),
-    ).orderBy("doc_id", "raw")
-
-
-# One file per doc: shard dir s<h%4>, name d<doc_id>.<jpg|wav|mp4 by h%3>,
-# content 'blob_' + a 5..32-char md5-hex prefix — so media_type (extension
-# mapping), payload bytes, n_bytes (listing length column) and the shard
-# dir all have DuckDB closed forms.
-_BINARYFILE_INGEST_SQL = """
-WITH m AS (
-  SELECT doc_id,
-         md5(doc_id || ':bf') AS hx,
-         CAST(('0x' || substr(md5(doc_id || ':bf'), 1, 15)) AS BIGINT) AS h
-  FROM documents
-)
-SELECT 'd' || doc_id AS media_id,
-       CASE h % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS media_type,
-       'blob_' || substr(hx, 1, CAST(5 + h % 28 AS INT)) AS content,
-       10 + h % 28 AS n_bytes,
-       's' || CAST(h % 4 AS VARCHAR) AS shard
-FROM m
-"""
-
-
-@register("binaryfile_ingest_documents", _BINARYFILE_INGEST_SQL)
-def binaryfile_ingest_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """binaryFile media ingest end-to-end: one staged file per doc (sharded
-    subdirs, mixed extensions), read back through sources/media.read_media_dir
-    (recursive listing, extension→type mapping, lazy payload), every output
-    column value-checked against the md5 closed forms. The fixture WRITE is
-    driver-side (it materializes local files — not an operator path); the
-    read is the real distributed source."""
-    import hashlib as _hl
-    import os as _os
-
-    from data_check_spark.sources.media import read_media_dir
-
-    root = _fixture_dir(sf_dir, "media")
-    ids = [r[0] for r in _t(spark, sf_dir, "documents").select("doc_id").collect()]
-    marker = _os.path.join(root, "_DONE")
-    stamp = f"v1:{len(ids)}"
-    fresh = True
-    if _os.path.exists(marker):
-        with open(marker) as f:
-            fresh = f.read() != stamp
-    if fresh:
-        exts = ["jpg", "wav", "mp4"]
-        for i in ids:
-            hx = _hl.md5(f"{i}:bf".encode()).hexdigest()
-            h = int(hx[:15], 16)
-            sub = _os.path.join(root, f"s{h % 4}")
-            _os.makedirs(sub, exist_ok=True)
-            with open(_os.path.join(sub, f"d{i}.{exts[h % 3]}"), "wb") as f:
-                f.write(b"blob_" + hx[: 5 + h % 28].encode())
-        with open(marker, "w") as f:
-            f.write(stamp)
-
-    df = read_media_dir(spark, root)
-    return df.select(
-        "media_id",
-        "media_type",
-        F.decode("payload", "UTF-8").alias("content"),
-        "n_bytes",
-        F.col("rel_dir").alias("shard"),
-    ).orderBy("media_id")
 
 
 # Hot-key measurement feeding the salting decision (north_rule skew
@@ -2444,67 +2034,6 @@ def top_terms_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_check_spark.operators.text import top_terms_per_doc
 
     return top_terms_per_doc(_docs_parallel(spark, sf_dir), top_k=3)
-
-
-# Fuzzy (MinHash-LSH) decontamination (decontam.fuzzy_decontaminate):
-# training docs near-duplicating an eval doc. Portable signatures — DuckDB
-# re-runs the ENTIRE pipeline (shingles, permutations, banding, eval-bucket
-# cap, agreement estimate) verbatim.
-def _fuzzy_decontam_oracle_sql() -> str:
-    k, num_perm, bands = _dedup.SHINGLE_K, _dedup.NUM_PERM, _dedup.LSH_BANDS
-    threshold, max_eval_bucket, eval_mod = 0.3, 64, 20
-    rows = num_perm // bands
-    return f"""
-WITH {_minhash_sig_ctes(k=k, num_perm=num_perm)},
-bk AS (
-  SELECT doc_id, b, array_to_string(sig[b*{rows}+1 : b*{rows}+{rows}], ',') AS bkey
-  FROM sigs, unnest(range(0, {bands})) t(b)
-),
-ev AS (
-  SELECT doc_id, b, bkey FROM (
-    SELECT doc_id, b, bkey,
-           row_number() OVER (PARTITION BY b, bkey ORDER BY doc_id) AS rn
-    FROM bk WHERE doc_id % {eval_mod} = 0
-  ) WHERE rn <= {max_eval_bucket}
-),
-tr AS (
-  SELECT doc_id, b, bkey FROM bk WHERE doc_id % {eval_mod} <> 0
-),
-cand AS (
-  SELECT DISTINCT t.doc_id AS tid, e.doc_id AS eid
-  FROM tr t JOIN ev e USING (b, bkey)
-),
-agree AS (
-  SELECT c.tid, c.eid,
-         cast(len(list_filter(range(1, {num_perm + 1}),
-                              i -> sa.sig[i::int] = sb.sig[i::int])) AS bigint) AS n_agree
-  FROM cand c
-  JOIN sigs sa ON sa.doc_id = c.tid
-  JOIN sigs sb ON sb.doc_id = c.eid
-)
-SELECT tid AS doc_id,
-       CAST(count(*) AS BIGINT) AS n_eval_matches,
-       CAST(max(n_agree) AS BIGINT) AS best_n_agree,
-       CAST((max(n_agree) * 10000 + {num_perm // 2}) // {num_perm} AS BIGINT)
-           AS best_est_q4,
-       CAST(min(eid) AS BIGINT) AS first_eval_id
-FROM agree
-WHERE cast(n_agree AS double) / {num_perm} >= {threshold}
-GROUP BY tid
-"""
-
-
-@register("fuzzy_decontamination_documents", _fuzzy_decontam_oracle_sql())
-def fuzzy_decontamination_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training docs whose estimated shingle-Jaccard vs any eval doc
-    (doc_id % 20 == 0 stands in for the benchmark) is ≥ 0.3 — the fuzzy
-    sibling of `decontamination_documents`."""
-    from data_check_spark.operators.decontam import fuzzy_decontaminate
-
-    docs = _docs_parallel(spark, sf_dir)
-    ev = docs.filter(F.col("doc_id") % 20 == 0)
-    train = docs.filter(F.col("doc_id") % 20 != 0)
-    return fuzzy_decontaminate(train, ev, threshold=0.3, portable=True)
 
 
 # Snapshot diff (operators/diff.py): two deterministic snapshots derived
@@ -2867,30 +2396,6 @@ def bigram_coherence_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_check_spark.operators.text import bigram_coherence
 
     return bigram_coherence(_docs_parallel(spark, sf_dir))
-
-
-# Provenance-stamped scan (sources/provenance.py): Spark's _metadata struct
-# gives every row its physical (file, row offset) address. The driver's
-# documents table is ONE id-ordered parquet file (asserted by the multi-file
-# unit test + this oracle), so DuckDB can state the expected address in
-# closed form: file name is constant, row_index is the id-ordered row number.
-# A wrong/shuffled _metadata wiring on the Spark side breaks the value hash.
-_PROVENANCE_SQL = """
-SELECT doc_id,
-       'documents.parquet' AS src_file,
-       CAST(row_number() OVER (ORDER BY doc_id) - 1 AS BIGINT) AS src_row_index
-FROM documents
-"""
-
-
-@register("provenance_documents", _PROVENANCE_SQL)
-def provenance_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Physical row addresses for the documents table via the zero-cost
-    ``_metadata`` scan columns."""
-    from data_check_spark.sources.provenance import read_parquet_with_provenance
-
-    df = read_parquet_with_provenance(spark, f"{sf_dir}/documents.parquet")
-    return df.select("doc_id", "src_file", "src_row_index")
 
 
 _NULL_CORRELATION_SQL = """
@@ -3664,39 +3169,6 @@ def correlation_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Best-copy representative selection per near-dup cluster
-# (operators/graph.py::select_representatives): the curation keep rule
-# upgraded from first-wins (min id) to best-quality-wins — real pipelines
-# keep the cleanest extraction, not the earliest arrival. The oracle
-# re-derives clusters (recursive CTE), scores (quality q4), and the window
-# pick end-to-end.
-# ---------------------------------------------------------------------------
-
-_CLUSTER_REPS_SQL = f"""
-WITH clus AS ({_DEDUP_CLUSTERS_SQL}),
-q AS ({_quality_sql()})
-SELECT c.doc_id, c.cluster_id, c.cluster_size, q.quality_q4,
-       CAST(row_number() OVER (PARTITION BY c.cluster_id
-                               ORDER BY q.quality_q4 DESC, c.doc_id) = 1 AS INT)
-           AS is_kept
-FROM clus c JOIN q ON q.doc_id = c.doc_id
-"""
-
-
-@register("cluster_representatives_documents", _CLUSTER_REPS_SQL)
-def cluster_representatives_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup clusters (n-gram Jaccard pairs → connected components) with
-    the kept copy chosen by quality score instead of arrival order. The
-    window runs over the near-dup subset only — partitions are cluster-sized."""
-    pairs = _ngram_pairs(spark, sf_dir, threshold=0.3)
-    clusters = _graph.dedup_clusters(pairs.select("id_a", "id_b"))
-    scored = _text.quality_score(_t(spark, sf_dir, "documents")).select(
-        "doc_id", "quality_q4"
-    )
-    return _graph.select_representatives(clusters, scored)
-
-
-# ---------------------------------------------------------------------------
 # Extraction-quality screen (operators/text.py::extraction_quality): residual
 # markup / mojibake / control chars from a failed HTML→text conversion. The
 # synthetic corpus is clean, so the query plants failure modes derived from
@@ -3769,48 +3241,6 @@ def extraction_quality_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("residue_bp").cast("long"),
         "status",
     )
-
-
-# ---------------------------------------------------------------------------
-# Dataset-card rollup (operators/profile.py::dataset_card): the corpus
-# release headline numbers as (metric, value) rows — one global aggregate
-# plus the two-phase fingerprint dup tally.
-# ---------------------------------------------------------------------------
-
-_DATASET_CARD_SQL = r"""
-WITH base AS (
-  SELECT count(*) AS n_docs,
-         count(DISTINCT source) AS n_sources,
-         count(DISTINCT lang) AS n_langs,
-         sum(length(text)) AS total_chars,
-         sum(CASE WHEN trim(text) = '' THEN 0
-                  ELSE len(regexp_split_to_array(trim(text), '\s+')) END)
-             AS total_tokens,
-         sum(CASE WHEN trim(text) = '' THEN 1 ELSE 0 END) AS n_blank_docs
-  FROM documents
-),
-g AS (SELECT count(*) AS n FROM documents GROUP BY md5(text) HAVING count(*) > 1),
-d AS (SELECT coalesce(sum(n), 0) AS dup_docs, count(*) AS dup_groups FROM g)
-SELECT metric, CAST(value AS bigint) AS value FROM (
-  SELECT 'n_docs' AS metric, n_docs AS value FROM base
-  UNION ALL SELECT 'n_sources', n_sources FROM base
-  UNION ALL SELECT 'n_langs', n_langs FROM base
-  UNION ALL SELECT 'total_chars', total_chars FROM base
-  UNION ALL SELECT 'total_tokens', total_tokens FROM base
-  UNION ALL SELECT 'n_blank_docs', n_blank_docs FROM base
-  UNION ALL SELECT 'dup_docs', dup_docs FROM d
-  UNION ALL SELECT 'dup_groups', dup_groups FROM d
-)
-"""
-
-
-@register("dataset_card_documents", _DATASET_CARD_SQL)
-def dataset_card_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus dataset-card metrics: ONE scan feeds the global aggregate;
-    the dup tally shuffles fingerprints only. Output is 8 rows always."""
-    from data_check_spark.operators.profile import dataset_card
-
-    return dataset_card(_t(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -4072,66 +3502,6 @@ def transcript_wer_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "ref_text", "hyp_text")
     )
     return word_edit_distance(pairs, threshold_bp=_WER_THRESHOLD_BP)
-
-
-# ---------------------------------------------------------------------------
-# WebDataset tar round trip (sources/tar.py + sinks.write_tar_shards): the
-# corpus is EXPORTED to tar shards and READ BACK inside the query, and the
-# result must value-match the original table — so the oracle checks the
-# whole write→read path (member naming, utf-8 encode/decode, NULL-payload
-# skip, shard assignment), not a simulation of it.
-# ---------------------------------------------------------------------------
-
-_TAR_ROUNDTRIP_SQL = r"""
-SELECT doc_id,
-       printf('shard-%06d.tar', doc_id % 8) AS shard_file,
-       text
-FROM documents
-WHERE text IS NOT NULL
-"""
-
-
-# One export dir per (session, sf_dir): bench repeats (warmup + best-of-N)
-# re-read the same shards instead of accumulating full-corpus tar copies in
-# /tmp on every invocation; atexit removes them (round-2 advisor fix).
-_TAR_ROUNDTRIP_DIRS: dict[str, str] = {}
-
-
-def _tar_roundtrip_dir(spark: SparkSession, sf_dir: str) -> str:
-    out = _TAR_ROUNDTRIP_DIRS.get(sf_dir)
-    if out is not None and __import__("os").path.isdir(out):
-        return out
-    import atexit
-    import shutil
-    import tempfile
-
-    from data_check_spark.sinks import write_tar_shards
-
-    docs = _t(spark, sf_dir, "documents").select(
-        (F.col("doc_id") % 8).alias("shard"),
-        F.col("doc_id").cast("string").alias("key"),
-        "text",
-    )
-    out = tempfile.mkdtemp(prefix="tar_roundtrip_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    write_tar_shards(docs, out, key_col="key", payloads={"text": "txt"}).collect()
-    _TAR_ROUNDTRIP_DIRS[sf_dir] = out
-    return out
-
-
-@register("tar_roundtrip_documents", _TAR_ROUNDTRIP_SQL)
-def tar_roundtrip_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Export documents to 8 tar shards, read them back, return the
-    reconstructed rows (doc_id, shard_file, text)."""
-    from data_check_spark.sources.tar import read_tar_shards
-
-    out = _tar_roundtrip_dir(spark, sf_dir)
-    back = read_tar_shards(spark, out, payloads={"txt": "text"})
-    return back.select(
-        F.col("key").cast("bigint").alias("doc_id"),
-        "shard_file",
-        "text",
-    )
 
 
 # ---------------------------------------------------------------------------

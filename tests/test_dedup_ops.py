@@ -1,4 +1,4 @@
-"""Dedup operators: exact, MinHash-LSH, SimHash, n-gram Jaccard."""
+"""Dedup operators: exact, MinHash-LSH, SimHash, span and incremental."""
 
 import pytest
 
@@ -7,7 +7,6 @@ from data_check_spark.operators.dedup import (
     exact_duplicate_groups,
     minhash_lsh_pairs,
     minhash_signatures,
-    ngram_jaccard_pairs,
     simhash_64,
     simhash_near_pairs,
 )
@@ -95,59 +94,34 @@ def test_simhash_portable_mode(docs):
     assert pairs.get((1, 2)) == 0
 
 
-def test_ngram_jaccard(docs):
-    pairs = {(p["id_a"], p["id_b"]): p["jac_q4"] / 10000
-             for p in ngram_jaccard_pairs(docs, threshold=0.5).collect()}
-    assert pairs[(1, 2)] == 1.0
-    assert (1, 3) in pairs  # one-word swap keeps most 8-shingles
-    assert not any({a, b} == {4, 5} for a, b in pairs)
-
-
 def test_lsh_scales_not_quadratic(docs):
     """Bucket cap bounds pair fan-out: plan contains no cartesian join."""
     plan = minhash_lsh_pairs(docs)._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
 
 
-def test_ngram_stop_shingle_cap(spark, monkeypatch):
-    """A boilerplate shingle shared by every doc must not explode candidate
-    generation; genuinely similar pairs are still found with EXACT jaccard
-    (common shingles still count in intersection/union)."""
-    import hashlib
-
-    boiler = "HEADER-BOILERPLATE-TEXT "
-    rows = [
-        (i, boiler + hashlib.sha256(f"u{i}".encode()).hexdigest())
-        for i in range(60)
-    ]
-    # one planted near-dup pair sharing rare content shingles
-    rows.append((100, boiler + "abcdefghijklmnopqrstuvwxyz0123456789"))
-    rows.append((101, boiler + "abcdefghijklmnopqrstuvwxyz0123456788"))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    monkeypatch.setattr(dedup, "MAX_SHINGLE_DF", 16)
-    pairs = ngram_jaccard_pairs(docs, threshold=0.3).collect()
-    got = {(p["id_a"], p["id_b"]): p["jac_q4"] / 10000 for p in pairs}
-    # Only the planted pair survives: every other doc pair shares ONLY the
-    # boilerplate shingles, which are df-capped out of candidate generation.
-    assert set(got) == {(100, 101)}
-    # Jaccard is exact over FULL sets: recompute brute force.
-    def shingles(t):
-        return {t[i:i + 8] for i in range(len(t) - 7)}
-    a, b = shingles(rows[-2][1]), shingles(rows[-1][1])
-    expected = len(a & b) / len(a | b)
-    assert abs(got[(100, 101)] - expected) <= 5e-5  # q4 rounding half-step
-
-
 def test_minhash_estimate_error_vs_exact_jaccard(spark):
     """Quantified quality gate for the MinHash path: on candidate pairs the
     64-permutation estimate must track the exact n-gram Jaccard closely
-    (expected std ~ sqrt(j(1-j)/64) ~ 0.06)."""
+    (expected std ~ sqrt(j(1-j)/64) ~ 0.06). The exact reference is plain
+    Python over the same distinct ``SHINGLE_K``-char shingles the signatures
+    hash (a text shorter than k is its own single shingle)."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    exact = {(r["id_a"], r["id_b"]): r["jac_q4"] / 10000
-             for r in ngram_jaccard_pairs(docs, threshold=0.05).collect()}
     est = {(r["id_a"], r["id_b"]): float(r["est_jaccard"])
            for r in minhash_lsh_pairs(docs, threshold=0.05).collect()}
+    k = dedup.SHINGLE_K
+
+    def shingles(t):
+        return {t} if len(t) < k else {t[i:i + k] for i in range(len(t) - k + 1)}
+
+    sets = {r["doc_id"]: shingles(r["text"])
+            for r in docs.select("doc_id", "text").collect() if r["text"] is not None}
+    exact = {}
+    for a, b in est:
+        if a in sets and b in sets:
+            j = len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+            if j >= 0.05:
+                exact[(a, b)] = j
     common = set(exact) & set(est)
     assert len(common) >= 5, f"too few overlapping pairs to judge: {len(common)}"
     errs = [abs(exact[p] - est[p]) for p in common]
@@ -212,20 +186,6 @@ def test_minhash_recall_on_planted_docs_corpus(spark):
     assert exact_pairs <= found
     near_recall = len(near_pairs & found) / len(near_pairs)
     assert near_recall >= 0.9, near_recall
-
-
-def test_edit_distance_verify_hand_computed(spark):
-    from data_check_spark.operators.dedup import edit_distance_verify
-
-    docs = spark.createDataFrame(
-        [(1, "kitten"), (2, "sitting"), (3, "kitten")],
-        "doc_id long, text string",
-    )
-    pairs = spark.createDataFrame([(1, 2), (1, 3)], "id_a long, id_b long")
-    out = {(r["id_a"], r["id_b"]): r for r in edit_distance_verify(pairs, docs).collect()}
-    assert out[(1, 2)]["edit_dist"] == 3  # classic kitten→sitting
-    assert out[(1, 2)]["dist_bp"] == 3 * 10000 // 7  # longer side = 7 chars
-    assert out[(1, 3)]["edit_dist"] == 0 and out[(1, 3)]["dist_bp"] == 0
 
 
 def test_span_dedup_first_wins_and_tails(spark):

@@ -45,7 +45,7 @@ def test_queries_order_unchecked_then_green_then_rows_only():
 def test_oracle_sql_keys_subset_of_queries():
     mod = _entry_module()
     qs, osql = mod.queries(), mod.oracle_sql()
-    assert (len(qs), len(osql)) == (107, 104)
+    assert (len(qs), len(osql)) == (95, 92)
     assert set(osql) <= set(qs)
     # every oracle-capable entry IS oracle-backed: the only entries without
     # an oracle are the documented by-design set

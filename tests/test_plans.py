@@ -190,27 +190,6 @@ def test_extraction_quality_single_scan_no_shuffle(spark):
     assert "Python" not in plan and "BatchEvalPython" not in plan
 
 
-def test_dataset_card_bounded_plan(spark):
-    from data_check_spark.queries import QUERIES
-
-    plan = _plan(QUERIES["dataset_card_documents"](spark, SF_DIR))
-    # global aggregate has a map-side partial phase; the 1-row x 1-row
-    # cross join is a nested loop over two single-row frames (bounded);
-    # no corpus-sized window appears anywhere
-    assert "HashAggregate" in plan or "SortAggregate" in plan
-    assert "Window" not in plan
-    assert plan.index("Aggregate") < plan.index("Exchange")
-
-
-def test_cluster_representatives_window_keyed_by_cluster(spark):
-    from data_check_spark.queries import QUERIES
-
-    plan = _plan(QUERIES["cluster_representatives_documents"](spark, SF_DIR))
-    # the row_number window must be partitioned by cluster_id (never a
-    # single-partition global window over the corpus)
-    assert "windowspecdefinition(cluster_id" in plan
-
-
 def test_literal_frame_is_jvm_only(spark):
     """Driver-side literal rows scan no RDD: a Python-RDD scan would start a
     Python worker per task that runs no UDF."""

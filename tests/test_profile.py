@@ -514,29 +514,3 @@ def test_numeric_correlation_null_nan_rows_excluded_pairwise(spark):
     (r,) = numeric_correlation(df, [("x", "y")]).collect()
     assert r["n"] == 3                      # only pairwise-complete rows
     assert r["r2_ppm"] == 1_000_000         # y = 2x exactly on those
-
-
-def test_dataset_card_metrics(spark):
-    from data_check_spark.operators.profile import dataset_card
-
-    rows = [
-        (1, "alpha beta", "s1", "en"),
-        (2, "alpha beta", "s1", "en"),   # exact dup of 1
-        (3, "gamma", "s2", "fr"),
-        (4, "gamma", "s2", "fr"),        # exact dup of 3
-        (5, "gamma", "s2", "fr"),        # exact dup of 3 (group of 3)
-        (6, "   ", "s3", "en"),          # blank (whitespace-only trims empty)
-        (7, "delta eps zeta", "s1", "de"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string, source string, lang string")
-    got = {r["metric"]: r["value"] for r in dataset_card(df).collect()}
-    assert got == {
-        "n_docs": 7,
-        "n_sources": 3,
-        "n_langs": 3,
-        "total_chars": sum(len(t) for _, t, _, _ in rows),
-        "total_tokens": 2 + 2 + 1 + 1 + 1 + 0 + 3,
-        "n_blank_docs": 1,
-        "dup_docs": 5,     # both members of the pair + all three of the triple
-        "dup_groups": 2,
-    }

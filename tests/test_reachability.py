@@ -44,12 +44,7 @@ KEEP_OPTIONS = {
     # KEEP definition: the reference decoder reads any sheet of a workbook.
     "data_check_spark.sources.xlsx.read_xlsx_df(sheet)",
     "data_check_spark.sources.xlsx.read_xlsx_rows(sheet)",
-    # Deployment setting: which files of an outside media directory to load.
-    "data_check_spark.sources.media.read_media_dir(glob)",
-    # Checks of outside input: a per-file size cap, the columns a JSONL feed
-    # must carry, and nullability drift in an incoming table.
-    "data_check_spark.sources.media.read_media_dir(max_bytes)",
-    "data_check_spark.sources.jsonl.read_jsonl(required_columns)",
+    # Check of outside input: nullability drift in an incoming table.
     "data_check_spark.schemas.validate_schema(strict_nullability)",
 }
 

@@ -33,11 +33,13 @@ sampling driver picks them up next). Regenerate with
 `python tools/gen_coverage.py` whenever a CORRECTNESS file lands.
 
 Round 6 retired the synthesized-PCM training-prep, multimodal and
-compaction entries, then the embedding (ANN, IVF, LSH, embedding QC)
-entries; all are listed at the end. The remaining registry (118
-oracle-backed + 3 rows-only) value-checks green under
+compaction entries, then the embedding (ANN, IVF, LSH, embedding QC),
+sampling, tokenizer and packing entries, then the release-pipeline
+(decontamination, PII, ingest, tar, provenance, dataset card) and n-gram
+pair/cluster entries; all are listed at the end. The remaining registry
+(92 oracle-backed + 3 rows-only) value-checks green under
 `tools/check_oracle.py` at sf0.01. Every oracle-backed entry has a
-hash-green CORRECTNESS row (118/118 after CORRECTNESS_r05.json). Round 6
+hash-green CORRECTNESS row (92/92 after CORRECTNESS_r05.json). Round 6
 changed `streaming_dedup_events` to per-occurrence `(clip_id, observed)`
 rows, so `queries()` puts it first until a CORRECTNESS round re-checks the
 new shape.
@@ -48,7 +50,10 @@ new shape.
 
 # Registry entries retired in round 6 with the operators they exercised:
 # synthesized-PCM audio prep, multimodal features and compaction planning,
-# then embedding search/QC (operators/similarity.py). Listed in COVERAGE.md
+# then embedding search/QC (operators/similarity.py), sampling, tokenizer
+# and packing, then the corpus release pipeline and the n-gram pair and
+# cluster family (operators/{decontam,pii,graph}.py, sources/, sinks.py).
+# Listed in COVERAGE.md
 # so an older CORRECTNESS file that still names them reads as a scope cut,
 # not a lost query.
 RETIRED = (
@@ -72,6 +77,12 @@ RETIRED = (
     "upsample_documents", "token_budget_documents", "corpus_shuffle_documents",
     "split_leakage_documents", "bpe_merges_documents", "bpe_segment_documents",
     "bpe_tokenize_documents", "sequence_packing_documents", "pack_stats_documents",
+    "decontamination_documents", "fuzzy_decontamination_documents",
+    "pii_scan_documents", "tar_roundtrip_documents", "jsonl_ingest_documents",
+    "binaryfile_ingest_documents", "provenance_documents",
+    "dataset_card_documents", "ngram_jaccard_documents",
+    "dedup_clusters_documents", "edit_distance_pairs_documents",
+    "cluster_representatives_documents",
 )
 
 

@@ -34,13 +34,6 @@ AUDITED = [
     ("semi_anti_customers",
      "Semi then anti join over distinct key projections; dims broadcast "
      "under the size boundary, AQE converts at runtime otherwise."),
-    ("ngram_jaccard_documents",
-     "Inverted-index self-join AFTER the document-frequency cutoff "
-     "(stop-shingle removal) — candidate volume is Σ min(df, cap)², not Σ df²."),
-    ("dedup_clusters_documents",
-     "Iterative min-label propagation: per-round lineage is cut by "
-     "localCheckpoint, so the displayed plan reads from materialized RDD "
-     "scans, not a 2^rounds join tree."),
     ("quantile_drift_lineitem",
      "Exact per-group quantiles via one sort-based aggregation; the drift "
      "comparison is a broadcast join against the tiny baseline frame."),
@@ -118,21 +111,9 @@ AUDITED = [
     ("extraction_quality_documents",
      "Extraction QC: ONE parquet scan, all markup/mojibake counters in a "
      "single codegen'd regexp projection — no exchange, no python stage."),
-    ("dataset_card_documents",
-     "Dataset card: one global aggregate with map-side partials (1-row "
-     "result) plus the two-phase fingerprint dup tally; the 1-row × 1-row "
-     "cross join is bounded; output is 8 rows at any corpus size."),
-    ("cluster_representatives_documents",
-     "Best-copy selection: the row_number window is keyed by cluster_id "
-     "over the near-dup subset only — partitions are cluster-sized, never "
-     "corpus-sized; no global (unpartitioned) window."),
     ("transcript_wer_documents",
      "Word-level WER: one codegen'd projection (vocab sort + char encode + "
      "levenshtein DP all JVM-side) — zero Exchange, zero Python."),
-    ("tar_roundtrip_documents",
-     "Tar import: binaryFile scan (one shard file = one task, glob-pruned) "
-     "feeding ONE mapInPandas parse — members regroup to samples in-task, "
-     "zero shuffle."),
     ("partition_profile_orders",
      "Per-group profile: ONE grouped aggregation over one scan (map-side "
      "partials); the per-column unpivot explodes the aggregated rows only "
