@@ -37,6 +37,18 @@ def _tokens(text_col: str) -> Column:
     return F.when(t == "", F.array().cast("array<string>")).otherwise(F.split(t, r"\s+"))
 
 
+def word_ngrams(text_col: str, n: int) -> Column:
+    """Space-joined word n-grams of ``_tokens(text_col)`` in text order, as
+    array<string> (JVM higher-order functions; empty below ``n`` tokens)."""
+    toks = _tokens(text_col)
+    return F.when(F.size(toks) < n, F.array().cast("array<string>")).otherwise(
+        F.transform(
+            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
+        )
+    )
+
+
 # GPT-2-style pre-tokenizer pattern, restricted to the Java∩RE2 subset so the
 # DuckDB oracle evaluates it verbatim: contraction suffixes, space-prefixed
 # letter runs, digit runs, and other-symbol runs (whitespace itself is not a
@@ -204,12 +216,7 @@ def repetition_stats(df: DataFrame) -> DataFrame:
     """
     toks = _tokens("text")
     n_tokens = F.size(toks)
-    bigrams = F.when(n_tokens < 2, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), n_tokens - 1),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, 2)),
-        )
-    )
+    bigrams = word_ngrams("text", 2)
     # Max run of equal adjacent elements in the sorted array == max bigram
     # multiplicity. Initial prev="" never matches a real bigram (tokens from
     # \s+ split of non-blank text are non-empty).
@@ -416,21 +423,10 @@ def top_ngrams(df: DataFrame, *, top_n: int = 20) -> DataFrame:
     ``orderBy().limit(n)`` → TakeOrderedAndProject. The rank window runs on
     ≤ ``top_n`` rows.
     """
-    toks = _tokens("text")
-    n = F.coalesce(F.size(toks), F.lit(0))
-    grams = F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.concat_ws(
-                " ", F.element_at(toks, i), F.element_at(toks, i + 1)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     from pyspark.sql.window import Window
 
     top = (
-        df.select(F.explode(grams).alias("bigram"))
+        df.select(F.explode(word_ngrams("text", 2)).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("n_occurrences"))
         .orderBy(F.desc("n_occurrences"), F.asc("bigram"))

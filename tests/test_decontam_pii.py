@@ -1,45 +1,10 @@
-"""PII scan/redaction, repetition stats, and decontamination operators.
+"""Word n-gram and repetition-statistics operators (operators/text.py).
 
-Reference analogs: forbidden-keyword scan family (SURVEY §2.3
-forbidden-substring); the rest are LLM-pipeline hygiene stages with no
-reference counterpart (SURVEY §2.5 additions).
+The decontamination and PII operators this file also covered are retired;
+its two remaining tests keep their ids.
 """
 
-from pyspark.sql import functions as F
-
-from data_check_spark.operators.decontam import decontaminate, word_ngrams
-from data_check_spark.operators.pii import pii_scan, redact
-from data_check_spark.operators.text import repetition_stats
-
-
-def test_pii_scan_counts_and_redacts(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "mail me at jo.doe+x@sub.example.co.uk or call 555-123-4567"),
-            (2, "server at 192.168.0.1 and 10.0.0.255 no mail"),
-            (3, "clean text with no pii at all"),
-            (4, ""),
-        ],
-        "doc_id int, text string",
-    )
-    rows = {r["doc_id"]: r for r in pii_scan(df).collect()}
-    assert (rows[1]["n_email"], rows[1]["n_phone"], rows[1]["n_ip"]) == (1, 1, 0)
-    assert (rows[2]["n_email"], rows[2]["n_phone"], rows[2]["n_ip"]) == (0, 0, 2)
-    assert (rows[3]["n_email"], rows[3]["n_phone"], rows[3]["n_ip"]) == (0, 0, 0)
-    # Identical redacted text → identical fingerprint; different → different.
-    red = df.select("doc_id", redact(F.col("text")).alias("r")).collect()
-    red = {r["doc_id"]: r["r"] for r in red}
-    assert red[1] == "mail me at <EMAIL> or call <PHONE>"
-    assert red[2] == "server at <IP> and <IP> no mail"
-    assert red[3] == "clean text with no pii at all"
-
-
-def test_pii_email_redacted_before_phone_overlap(spark):
-    # A phone-shaped domain must be consumed by the email redaction, not
-    # split by a partial <PHONE> match: order (email first) is load-bearing.
-    df = spark.createDataFrame([(1, "x a@555-123-4567.co y")], "doc_id int, text string")
-    out = df.select(redact(F.col("text")).alias("r")).collect()[0]["r"]
-    assert out == "x <EMAIL> y"
+from data_check_spark.operators.text import repetition_stats, word_ngrams
 
 
 def test_repetition_stats_hand_computed(spark):
@@ -74,77 +39,3 @@ def test_word_ngrams_expr(spark):
     assert got[1]["g"] == []
     assert got[2]["g"] == []
 
-
-def test_decontaminate_matches_bruteforce(spark):
-    train = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "completely unrelated words here only"),
-            (3, "quick brown fox jumps somewhere else entirely"),
-        ],
-        "doc_id int, text string",
-    )
-    eval_df = spark.createDataFrame(
-        [(100, "a quick brown fox jumps high")], "doc_id int, text string"
-    )
-    out = {r["doc_id"]: r["n_shared_ngrams"] for r in decontaminate(train, eval_df, n=4).collect()}
-    # eval 4-grams: {a quick brown fox, quick brown fox jumps, brown fox jumps high}
-    # doc 1 shares exactly "quick brown fox jumps"; doc 3 the same; doc 2 none.
-    assert out == {1: 1, 3: 1}
-
-
-def test_decontaminate_broadcasts_eval_side(spark):
-    train = spark.range(200).select(
-        F.col("id").alias("doc_id"),
-        F.concat_ws(" ", F.lit("tok"), F.col("id").cast("string"), F.lit("a b c d e")).alias(
-            "text"
-        ),
-    )
-    eval_df = train.filter(F.col("doc_id") % 50 == 0)
-    plan = decontaminate(train, eval_df, n=4)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
-def test_fuzzy_decontaminate_catches_edited_leak(spark):
-    from pyspark.sql import functions as F
-
-    from data_check_spark.operators.decontam import fuzzy_decontaminate
-
-    base = "the quick brown fox jumps over the lazy dog while the band plays on and on"
-    edited = base.replace("lazy", "sleepy")  # lightly-edited benchmark leak
-    train_rows = [(0, edited)] + [
-        (i, f"totally unrelated document number {i} with its own words {i * 7}")
-        for i in range(1, 30)
-    ]
-    train = spark.createDataFrame(train_rows, "doc_id long, text string")
-    ev = spark.createDataFrame([(1000, base)], "doc_id long, text string")
-    got = fuzzy_decontaminate(train, ev, threshold=0.3).collect()
-    assert [r.doc_id for r in got] == [0]
-    r = got[0]
-    assert r.n_eval_matches == 1 and r.first_eval_id == 1000
-    assert r.best_est_q4 >= 3000
-    # the exact n-gram test with a long n misses this leak; the fuzzy one is
-    # the complement, not a replacement
-    from data_check_spark.operators.decontam import decontaminate
-
-    exact = decontaminate(train, ev, n=12).collect()
-    assert all(x.doc_id != 0 or x.n_shared_ngrams < 3 for x in exact)
-
-
-def test_fuzzy_decontaminate_broadcasts_eval_side(spark):
-    from data_check_spark.operators.decontam import fuzzy_decontaminate
-
-    train = spark.createDataFrame(
-        [(i, f"doc {i} words words words") for i in range(10)],
-        "doc_id long, text string",
-    )
-    ev = spark.createDataFrame([(99, "doc 3 words words words")], "doc_id long, text string")
-    plan = (
-        fuzzy_decontaminate(train, ev, threshold=0.3)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    # the candidate join must broadcast the (capped) eval band rows — the
-    # training corpus is never shuffled to meet the benchmark
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan

@@ -7,7 +7,6 @@ from data_check_spark.operators.text import (
     fingerprints,
     lang_id,
     quality_score,
-    repetition_stats,
     token_stats,
 )
 
@@ -479,28 +478,3 @@ def test_normalize_text_width_fold(spark):
     assert out[2]["text_norm"] == "plain ascii stays" and out[2]["n_folded"] == 0
     assert out[3]["text_norm"] is None and out[3]["n_folded"] == 0
     assert out[4]["text_norm"] == "mixEd width!" and out[4]["n_folded"] == 4
-
-
-def test_repetition_stats_hand_computed(spark):
-    df = spark.createDataFrame(
-        [
-            # bigrams: "a b","b a","a b","b c" → top "a b" ×2 of 4 → 5000 q4
-            (1, "a b a b c"),
-            # all tokens distinct, each bigram unique
-            (2, "w x y z"),
-            (3, "solo"),  # 1 token → 0 bigrams
-            (4, ""),  # blank → all zero
-            (5, "q q q q"),  # bigram "q q" ×3 of 3 → 10000 q4
-        ],
-        "doc_id int, text string",
-    )
-    rows = {r["doc_id"]: r for r in repetition_stats(df).collect()}
-    assert (rows[1]["n_bigrams"], rows[1]["top_bigram_count"]) == (4, 2)
-    assert rows[1]["top_bigram_frac_q4"] == 5000
-    # 5 tokens, 3 distinct → dup frac 2/5
-    assert rows[1]["dup_token_frac_q4"] == 4000
-    assert (rows[2]["top_bigram_count"], rows[2]["top_bigram_frac_q4"]) == (1, 3333)
-    assert (rows[3]["n_bigrams"], rows[3]["top_bigram_count"]) == (0, 0)
-    assert (rows[4]["n_bigrams"], rows[4]["dup_token_frac_q4"]) == (0, 0)
-    assert (rows[5]["top_bigram_count"], rows[5]["top_bigram_frac_q4"]) == (3, 10000)
-    assert rows[5]["dup_token_frac_q4"] == 7500
